@@ -1,6 +1,12 @@
 package graft.audit
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,7 +28,7 @@ object Auditing {
 
   /** Append audit rows partitioned by `date_updated` (ref: auditing.py:33-38,
     * 122-131 — the reference coalesces to 1 file per append to keep audit
-    * tables small-file-friendly; same here).
+    * tables small-file-friendly; here one file per date partition).
     *
     * Concurrent-append-safe by construction: `runAll` appends from 7 threads
     * at once, and Spark's plain `mode("append")` shares one `_temporary`
@@ -30,47 +36,97 @@ object Auditing {
     * in-flight task files (the reference wraps Delta commits in a ≤60-retry
     * loop for its version of this race, ref: spark_helpers.py:459-486).
     * Here each append writes to its own dot-prefixed staging directory
-    * (invisible to readers) and then renames the produced parquet files into
-    * the table under write-unique names — renames are atomic per file, no
-    * shared temp state exists, so no retry is needed and readers never see a
-    * partial file.
+    * (invisible to readers, [[appendStaged]]) and then renames the produced
+    * parquet files into the table under write-unique names — renames are
+    * atomic per file, no shared temp state exists, so no retry is needed
+    * and readers never see a partial file.
     */
-  def appendAudit(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val table = new org.apache.hadoop.fs.Path(path)
+  def appendAudit(df: DataFrame, path: String): Unit =
+    appendStaged(df.sparkSession, path)(writeRows(df, _))
+
+  /** Write an append's rows into `<staging>/date_updated=<d>/` from the
+    * driver, with Spark's own parquet writer (`prepareWrite` ->
+    * `OutputWriterFactory`), so codec, timestamp encoding and the Spark
+    * row-schema footer come out exactly as a Spark write makes them.
+    * An audit append is a handful of rows: collecting a `Seq(...).toDF`
+    * frame runs no Spark job (its plan is a local relation), and neither
+    * does this write — a distributed write job per append would cost more
+    * driver time than the business rules of a small submission. The
+    * partition value is `to_date(updated_at)` in the session time zone, as
+    * a partitioned Spark write computes it.
+    */
+  private def writeRows(df: DataFrame, staging: Path): Unit = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val dataSchema = df.schema
+    val rows = df.select(col("*"), to_date(col("updated_at")).cast("string")).collect()
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+    val jobId = java.util.UUID.randomUUID().toString // part-file naming, as a Spark job's
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID(jobId, 0), TaskType.MAP, 0), 0))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(dataSchema)
+    val n = dataSchema.length
+    rows.groupBy(r => r.getString(n)).foreach { case (date, part) =>
+      val dir = new Path(staging, ExternalCatalogUtils.getPartitionPathString("date_updated", date))
+      val file = new Path(dir, s"part-00000-$jobId.c000${factory.getFileExtension(ctx)}")
+      val writer = factory.newInstance(file.toString, dataSchema, ctx)
+      try part.foreach { r =>
+        writer.write(toInternal(Row.fromSeq(r.toSeq.take(n))).asInstanceOf[InternalRow])
+      } finally writer.close()
+    }
+  }
+
+  /** One append to the table at `path`: `write` fills a fresh dot-prefixed
+    * staging dir inside it (invisible to readers), whose files are then
+    * published ([[publishStaged]]). Shared by the audit appends and the
+    * per-stage message sink ([[graft.report.ErrorSink.writeFeedbackErrors]]).
+    * Returns the table's filesystem, the table and the append's writeId.
+    */
+  private[graft] def appendStaged(spark: org.apache.spark.sql.SparkSession, path: String)(
+      write: Path => Unit): (FileSystem, Path, String) = {
+    val table = new Path(path)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val writeId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(table, s".staging-$writeId")
-    df.withColumn("date_updated", to_date(col("updated_at")))
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("date_updated").parquet(staging.toString)
-    // All-or-nothing publish: if any rename fails, the files already
-    // renamed in are rolled back (they carry this writeId, so they are
-    // identifiable), staging is removed, and the error surfaces — a caller
-    // retry then re-appends the WHOLE frame exactly once instead of
-    // duplicating the half that had landed. Rollback deletes are
-    // best-effort but never silent: a file that cannot be removed is
-    // logged with its path so duplicates are traceable by writeId.
-    val renamed = Seq.newBuilder[org.apache.hadoop.fs.Path]
+    val staging = new Path(table, s".staging-$writeId")
+    write(staging)
+    publishStaged(fs, staging, table, writeId)
+    (fs, table, writeId)
+  }
+
+  /** Publish every data file under `staging` into `table` (keeping its
+    * Hive-style `col=value` partition subdirectory, if any) as
+    * `<writeId>-<name>`, then drop `staging`.
+    *
+    * All-or-nothing: if any rename fails, the files already renamed in are
+    * rolled back (they carry this writeId, so they are identifiable),
+    * staging is removed, and the error surfaces — a caller retry then
+    * re-appends the WHOLE frame exactly once instead of duplicating the half
+    * that had landed. Rollback deletes are best-effort but never silent: a
+    * file that cannot be removed is logged with its path so duplicates are
+    * traceable by writeId.
+    */
+  private def publishStaged(fs: FileSystem, staging: Path, table: Path,
+                            writeId: String): Unit = {
+    // an empty frame can leave no staging dir at all: nothing to publish
+    if (!fs.exists(staging)) return
+    val renamed = Seq.newBuilder[Path]
     try {
       val files = fs.listFiles(staging, true)
       while (files.hasNext) {
         val f = files.next()
         val name = f.getPath.getName
-        if (name.endsWith(".parquet")) {
-          val partName = f.getPath.getParent.getName // date_updated=YYYY-MM-DD
-          val destDir =
-            if (partName.startsWith("date_updated=")) new org.apache.hadoop.fs.Path(table, partName)
-            else table
+        if (!name.startsWith(".") && !name.startsWith("_")) {
+          val parent = f.getPath.getParent
+          val destDir = if (parent.getName.contains("=")) new Path(table, parent.getName) else table
           fs.mkdirs(destDir)
-          val dest = new org.apache.hadoop.fs.Path(destDir, s"$writeId-$name")
+          val dest = new Path(destDir, s"$writeId-$name")
           val ok =
             try fs.rename(f.getPath, dest)
             catch { case e: java.io.IOException =>
-              throw new java.io.IOException(s"audit append rename failed: ${f.getPath} -> $dest", e)
+              throw new java.io.IOException(s"staged publish rename failed: ${f.getPath} -> $dest", e)
             }
           if (!ok)
-            throw new java.io.IOException(s"audit append rename failed: ${f.getPath} -> $dest")
+            throw new java.io.IOException(s"staged publish rename failed: ${f.getPath} -> $dest")
           renamed += dest
         }
       }
@@ -127,39 +183,12 @@ object Auditing {
     * of mutate-in-place protocols on eventually-consistent stores.
     */
   def appendAuditCommitted(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val table = new org.apache.hadoop.fs.Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val writeId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(table, s".staging-$writeId")
-    df.withColumn("date_updated", to_date(col("updated_at")))
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("date_updated").parquet(staging.toString)
-    val files = fs.listFiles(staging, true)
-    while (files.hasNext) {
-      val f = files.next()
-      val name = f.getPath.getName
-      if (name.endsWith(".parquet")) {
-        val partName = f.getPath.getParent.getName
-        val destDir =
-          if (partName.startsWith("date_updated=")) new org.apache.hadoop.fs.Path(table, partName)
-          else table
-        fs.mkdirs(destDir)
-        val dest = new org.apache.hadoop.fs.Path(destDir, s"$writeId-$name")
-        // pre-marker moves need no atomicity: the file is invisible until
-        // the marker lands, so a torn copy is just ignorable garbage
-        if (!fs.rename(f.getPath, dest))
-          throw new java.io.IOException(s"audit publish failed: ${f.getPath} -> $dest")
-      }
-    }
-    val marker = new org.apache.hadoop.fs.Path(table, s"_commits/$writeId")
+    // pre-marker moves need no atomicity: a file is invisible until the
+    // marker lands, so a torn copy is just ignorable garbage
+    val (fs, table, writeId) = appendStaged(df.sparkSession, path)(writeRows(df, _))
+    val marker = new Path(table, s"_commits/$writeId")
     fs.mkdirs(marker.getParent)
     fs.create(marker, false).close() // conditional put: the commit point
-    // staging cleanup is best-effort AFTER the commit
-    try fs.delete(staging, true)
-    catch { case _: java.io.IOException =>
-      System.err.println(s"[audit] staging dir left behind (cleanup failed): $staging")
-    }
   }
 
   /** Read an audit table written by [[appendAuditCommitted]]: only data
@@ -167,9 +196,9 @@ object Auditing {
     * (`date_updated`) are recovered via basePath.
     */
   def readCommitted(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val table = new org.apache.hadoop.fs.Path(path)
+    val table = new Path(path)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commitsDir = new org.apache.hadoop.fs.Path(table, "_commits")
+    val commitsDir = new Path(table, "_commits")
     val commits: Set[String] =
       if (!fs.exists(commitsDir)) Set.empty
       else fs.listStatus(commitsDir).map(_.getPath.getName).toSet
@@ -223,7 +252,7 @@ final class AuditManager(private val spark: org.apache.spark.sql.SparkSession, a
     * PATH_NOT_FOUND on a scheduler's first poll.
     */
   private def tableExists(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
+    val p = new Path(path(table))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 

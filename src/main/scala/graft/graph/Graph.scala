@@ -53,6 +53,16 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
                iterations: Int = 8, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
+    // the per-phase job descriptions below are thread-local: hand the
+    // caller's back, whatever happens
+    val sc0 = edges.sparkSession.sparkContext
+    val prior = sc0.getLocalProperty("spark.job.description")
+    try pageRankRounds(edges, srcCol, dstCol, wCol, iterations, dampingPct)
+    finally sc0.setJobDescription(prior)
+  }
+
+  private def pageRankRounds(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
+                             iterations: Int, dampingPct: Int): DataFrame = {
     val sc0 = edges.sparkSession.sparkContext
     sc0.setJobDescription("pagerank: edge setup")
     // Hash-partition the edge list on the SOURCE key before checkpointing:
@@ -133,7 +143,6 @@ object Graph {
               expr(s"(${dampingPct}L * coalesce(__in__, 0L)) div 100L"))
               .as("__sc__"))
     }
-    sc0.setJobDescription("pagerank: result")
     scores.select(col("__node__").as("node"), col("__sc__").as("pr_e12"))
   }
 }

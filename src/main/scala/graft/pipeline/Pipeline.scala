@@ -50,8 +50,8 @@ object Pipeline {
         * entity (each writes its own transform/data_contract/
         * business_rules/<entity> dir), so they pipeline across the
         * executor like any other independent job set. Rules stay
-        * sequential (cross-entity semantics); shared JSONL appends are
-        * serialized internally. 1 = the old sequential loop.
+        * sequential (cross-entity semantics); the shared stage JSONL takes
+        * concurrent appends. 1 = the old sequential loop.
         */
       entityParallelism: Int = 8,
       /** Operational bound on ONE parallel entity-stage fan-out: a hung
@@ -200,57 +200,40 @@ object Pipeline {
 
   /** Stage 2: contract validate + cast; typed parquet + errors JSONL.
     * Returns true when any non-informational message was produced.
+    *
+    * Two jobs per entity: the typed write and the message write. The
+    * failure flag is a count observed on the message write itself, not a
+    * second pass over the messages; the message sink publishes per call
+    * ([[ErrorSink.writeFeedbackErrors]]), so entity workers append to the
+    * shared stage JSONL concurrently.
     */
   def dataContract(spark: SparkSession, cfg: SubmissionConfig): Boolean = {
-    // Typed writes land in per-entity dirs (safe concurrently); the shared
-    // per-stage errors JSONL dir is append-committed through one
-    // FileOutputCommitter staging area, so that append alone is serialized
-    // under the submission's lock — the messages are materialized (persist +
-    // count) BEFORE taking it, so the expensive compute still overlaps.
-    val appendLock = new Object
+    def writeMessages(messages: DataFrame): Boolean = {
+      val obs = org.apache.spark.sql.Observation()
+      ErrorSink.writeFeedbackErrors(
+        messages.observe(obs, count(when(col("Status") =!= "informational", true)).as("failed")),
+        cfg.workingDir, "data_contract")
+      obs.get("failed").asInstanceOf[Long] > 0
+    }
     if (cfg.singleTableLayout) {
-      def sub[T](name: String)(f: => T): T =
-        if (sys.props.get("graft.pipeline.debug").isEmpty) f
-        else {
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(f"[pipeline]   dc/$name%-14s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-          r
-        }
-      // One union write for the typed frames, ONE message
-      // persist+count+append+flag instead of four jobs per entity.
+      // One union write for the typed frames, one for the messages,
+      // instead of two jobs per entity.
       val (table, schemas) = StageIO.readTable(spark, s"${cfg.workingDir}/transform")
-      val perEntity = sub("plan-build")(cfg.dischema.entities.map { spec =>
+      val perEntity = cfg.dischema.entities.map { spec =>
         val raw = StageIO.decodeEntity(table, schemas(spec.name), spec.name)
         val (typed, messages) = Contract(raw, spec)
         (spec.name, typed, messages)
-      })
-      sub("typed-write")(StageIO.writeEntities(spark, s"${cfg.workingDir}/data_contract",
-        perEntity.map(e => e._1 -> e._2)))
-      val persisted = org.apache.spark.sql.graft.ExpressionBridge
-        .flatUnion(perEntity.map(_._3)).persist()
-      // materialize + failure flag in ONE aggregation job
-      val failed = sub("messages")(
-        persisted.agg(count(when(col("Status") =!= "informational", true)))
-          .head().getLong(0) > 0)
-      sub("msg-append")(ErrorSink.writeFeedbackErrors(persisted, cfg.workingDir, "data_contract"))
-      persisted.unpersist()
-      failed
-    } else {
-      val flags = parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
-        val raw = spark.read.parquet(s"${cfg.workingDir}/transform/${spec.name}")
+      }
+      StageIO.writeEntities(spark, s"${cfg.workingDir}/data_contract",
+        perEntity.map(e => e._1 -> e._2))
+      writeMessages(org.apache.spark.sql.graft.ExpressionBridge.flatUnion(perEntity.map(_._3)))
+    } else
+      parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
+        val raw = StageIO.readStage(spark, s"${cfg.workingDir}/transform/${spec.name}")
         val (typed, messages) = Contract(raw, spec)
         typed.write.mode("overwrite").parquet(s"${cfg.workingDir}/data_contract/${spec.name}")
-        val persisted = messages.persist()
-        persisted.count()
-        appendLock.synchronized {
-          ErrorSink.writeFeedbackErrors(persisted, cfg.workingDir, "data_contract")
-        }
-        val failed = !persisted.where(col("Status") =!= "informational").isEmpty
-        persisted.unpersist()
-        failed
-      }
-      flags.exists(identity)
-    }
+        writeMessages(messages)
+      }.exists(identity)
   }
 
   /** Stage 3: business rules over the typed entities (+ Original<entity>
@@ -279,7 +262,7 @@ object Pipeline {
         cfg.dischema.entities.map(spec =>
           spec.name -> StageIO.decodeEntity(table, schemas(spec.name), spec.name)).toMap
       case None => cfg.dischema.entities.map { spec =>
-        spec.name -> spark.read.parquet(s"${cfg.workingDir}/data_contract/${spec.name}")
+        spec.name -> StageIO.readStage(spark, s"${cfg.workingDir}/data_contract/${spec.name}")
       }.toMap
     }
     val originals = typed.map { case (n, df) => s"Original$n" -> df }
@@ -295,23 +278,16 @@ object Pipeline {
       if (cfg.dischema.templatingStrategy == "runtime")
         cfg.dischema.renderRules(cfg.runtimeParams)
       else cfg.dischema.rules
-    def sub[T](name: String)(f: => T): T =
-      if (sys.props.get("graft.pipeline.debug").isEmpty) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[pipeline]   br/$name%-14s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-        r
-      }
-    val ruleMessages = sub("rules")(rules.flatMap { r =>
+    val ruleMessages = rules.flatMap { r =>
       SyncFilters.applyRules(catalog, r.preSync, r.filters, r.postSync)
-    })
+    }
     // ONE append job for all rules' messages, not one per message frame —
     // same rows either way (shared Messages schema), but a many-rules
     // dischema otherwise pays a sequential write job per rule.
     if (ruleMessages.nonEmpty)
-      sub("rule-msg-write")(ErrorSink.writeFeedbackErrors(
+      ErrorSink.writeFeedbackErrors(
         org.apache.spark.sql.graft.ExpressionBridge.flatUnion(ruleMessages),
-        cfg.workingDir, "business_rules"))
+        cfg.workingDir, "business_rules")
 
     val contractErrors = ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "data_contract")
     // EVERY catalog entity checkpoints — declared, Original copies, and
@@ -372,9 +348,8 @@ object Pipeline {
         .select(col("Entity").as(StageIO.EntityCol), col("RecordIndex").as(riKey))
         .distinct()
       val kept = encodedU.join(bad, Seq(StageIO.EntityCol, riKey), "left_anti").drop(riKey)
-      sub("table-write")(StageIO.writeEncoded(spark, stageDir, kept,
-        catalog.names.map(n => n -> catalog(n).schema)))
-      val counts = sub("counts")(StageIO.entityCounts(StageIO.readTable(spark, stageDir)._1))
+      StageIO.writeEncoded(spark, stageDir, kept, catalog.names.map(n => n -> catalog(n).schema))
+      val counts = StageIO.entityCounts(StageIO.readTable(spark, stageDir)._1)
       catalog.names.map(n => n -> counts.getOrElse(n, 0L)).toMap
     } else
       parEntities(catalog.names, cfg.entityParallelism, cfg.entityStageTimeoutSec) { name =>
@@ -474,25 +449,15 @@ object Pipeline {
         cfg.dataFile, fileExtension(cfg.dataFile))
       a.markStatus(cfg.submissionId, "received")
     }
-    // probe hook: -Dgraft.pipeline.debug prints per-service walls (stage
-    // attribution for EntityProbe/SubmissionProbe runs)
-    def staged[T](name: String)(f: => T): T =
-      if (sys.props.get("graft.pipeline.debug").isEmpty) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[pipeline] ${cfg.submissionId} $name%-18s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-        r
-      }
     try {
       // "file_transformation" is the reference's stage name (the feature
       // files assert it verbatim, and Auditing.StageOrder keys on it)
       audit.foreach(_.markStatus(cfg.submissionId, "file_transformation"))
-      staged("transform")(fileTransformation(spark, cfg))
+      fileTransformation(spark, cfg)
       audit.foreach(_.markStatus(cfg.submissionId, "data_contract"))
-      val validationFailed = staged("data_contract")(dataContract(spark, cfg))
+      val validationFailed = dataContract(spark, cfg)
       audit.foreach(_.markStatus(cfg.submissionId, "business_rules"))
-      val allCounts = staged("business_rules")(businessRules(spark, cfg))
+      val allCounts = businessRules(spark, cfg)
       val declared = cfg.dischema.entities.map(_.name)
       val counts = declared.map(n => n -> allCounts.getOrElse(n, 0L)).toMap
       audit.foreach(_.markStatus(cfg.submissionId, "error_report"))

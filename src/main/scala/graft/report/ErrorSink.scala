@@ -22,11 +22,17 @@ object ErrorSink {
     s"$workingDir/processing_errors/processing_errors.jsonl"
 
   /** Write a stage's feedback messages as JSONL (append, like the
-    * reference's "a" mode).
+    * reference's "a" mode). Safe to call concurrently for one stage — the
+    * per-entity contract workers do: each call writes its part files into
+    * its own dot-prefixed staging dir inside the stage's `.jsonl` dir
+    * (invisible to readers) and renames them in, as audit appends do
+    * ([[graft.audit.Auditing.appendStaged]]). A plain `mode("append")`
+    * would share one committer `_temporary` dir between the writers.
     */
   def writeFeedbackErrors(messages: DataFrame, workingDir: String, stage: String): String = {
     val path = feedbackErrorsPath(workingDir, stage)
-    messages.write.mode("append").json(path)
+    graft.audit.Auditing.appendStaged(messages.sparkSession, path)(
+      staging => messages.write.json(staging.toString))
     path
   }
 

@@ -28,6 +28,17 @@ class GraphSpec extends SparkSpec {
     assert(total <= 1000000000000L && total > 990000000000L, s"mass was $total")
   }
 
+  test("pageRank hands the caller's job description back") {
+    val sc = spark.sparkContext
+    Seq("caller's description", null).foreach { before =>
+      sc.setJobDescription(before)
+      try {
+        Graph.pageRank(star, "s", "d", "w", iterations = 2)
+        assert(sc.getLocalProperty("spark.job.description") == before)
+      } finally sc.setJobDescription(null)
+    }
+  }
+
   test("pageRank respects edge weights") {
     // 0 -> {1 w=9, 2 w=1}; symmetric back-edges so nothing dangles
     val wg = Seq((0L, 1L, 9L), (0L, 2L, 1L), (1L, 0L, 1L), (2L, 0L, 1L))

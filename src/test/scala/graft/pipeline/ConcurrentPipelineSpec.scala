@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.SparkSpec
 import graft.audit.AuditManager
 import graft.config.Dischema
 import graft.report.ErrorSink
@@ -13,8 +12,10 @@ import org.apache.spark.sql.functions._
   * shared audit dir — audit-table append contention included — and asserts
   * every submission individually reproduces the feature file's golden
   * numbers with zero cross-contamination of working dirs or audit rows.
+  * The reference corpus is optional; the second lane runs the same checks
+  * over the in-repo planets fixture ([[PlanetsFixture]]).
   */
-class ConcurrentPipelineSpec extends SparkSpec {
+class ConcurrentPipelineSpec extends PlanetsFixture {
 
   private val testdata = "/root/reference/tests/testdata"
 
@@ -89,5 +90,65 @@ class ConcurrentPipelineSpec extends SparkSpec {
       assert(transitions(id) == ((6L, 6L)),
         s"$id walked ${transitions(id)} — expected 6 distinct transitions exactly once")
     }
+  }
+
+  test("6 in-repo planets submissions in parallel over one audit dir: each intact, no cross-talk") {
+    val base = java.nio.file.Files.createTempDirectory("graft_conc_fixture_").toString
+    val auditDir = s"$base/audit" // SHARED: every submission appends here
+    val ids = (1 to 6).map(i => f"planets-f$i%02d")
+    // each submission gets its own copy of the fixture (data file, refdata,
+    // working dir) under base/<id>
+    val cfgs = ids.map(id => planetsSubmission(s"$base/$id", id, auditDir))
+
+    val results = Pipeline.runAll(spark, cfgs, parallelism = 6)
+
+    assert(results.keySet == ids.toSet)
+    ids.foreach { id =>
+      results(id) match {
+        case Right(r) =>
+          assert(r.validationFailed, id)
+          assert(r.recordCounts == Map("planets" -> 3L), s"$id: ${r.recordCounts}")
+        case Left(e) => fail(s"$id failed: $e")
+      }
+      val work = s"$base/$id/work"
+      val survivors = spark.read.parquet(s"$work/business_rules/planets")
+        .select("planet").collect().map(_.getString(0)).toSet
+      assert(survivors == Set("Mercury", "Earth", "Saturn"), s"$id: $survivors")
+      val ruleCodes = ErrorSink.readFeedbackErrors(spark, work, "business_rules")
+        .groupBy("ErrorCode").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(ruleCodes == Map("HIGH_G" -> 1L, "MANY_MOONS" -> 1L), s"$id: $ruleCodes")
+      val contractKeys = ErrorSink.readFeedbackErrors(spark, work, "data_contract")
+        .select("Key").collect().map(_.getString(0)).toSeq.sorted
+      assert(contractKeys == Seq("Mars", "Venus"), s"$id: $contractKeys")
+    }
+
+    // shared audit tables: one statistics row and one info row per
+    // submission, each carrying that submission's own numbers and file
+    val stats = spark.read.parquet(s"$auditDir/submission_statistics").collect()
+      .map(r => r.getAs[String]("submission_id") -> r).toSeq
+    assert(stats.map(_._1).sorted == ids)
+    stats.foreach { case (id, r) =>
+      assert(r.getAs[Long]("record_count") == 6L, id)
+      assert(r.getAs[Long]("number_record_rejections") == 3L, id)
+      assert(r.getAs[Long]("number_submission_rejections") == 0L, id)
+      assert(r.getAs[Long]("number_warnings") == 1L, id)
+    }
+    val files = spark.read.parquet(s"$auditDir/submission_info").collect()
+      .map(r => r.getAs[String]("submission_id") -> r.getAs[String]("file_name")).toSeq
+    assert(files.sortBy(_._1) == ids.map(id => id -> s"$base/$id/planets.csv"))
+
+    // status history: the full stage chain exactly once, then finished
+    val audit = new AuditManager(spark, auditDir)
+    val latest = audit.latestProcessingStatus().collect()
+      .map(r => r.getAs[String]("submission_id") ->
+        (r.getAs[String]("processing_status"), r.getAs[String]("submission_result"))).toMap
+    assert(latest == ids.map(_ -> (("finished", "validation_failed"))).toMap)
+    val chains = spark.read.parquet(s"$auditDir/processing_status")
+      .groupBy("submission_id").agg(sort_array(collect_list("processing_status")).as("s"))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    val chain = Seq("received", "file_transformation", "data_contract", "business_rules",
+      "error_report", "finished").sorted
+    assert(chains == ids.map(_ -> chain).toMap)
   }
 }

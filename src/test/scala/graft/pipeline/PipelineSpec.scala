@@ -10,67 +10,14 @@ import graft.report.ErrorSink
   * (ref: tests/features/planets.feature:12-38 — contract rejection counts,
   * surviving rows, error codes, audit status transitions, statistics).
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends PlanetsFixture {
 
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft_pipe_").toString
 
-  private val doc =
-    """{
-      | "contract": {
-      |  "datasets": {
-      |   "planets": {
-      |    "fields": {
-      |     "planet": "str",
-      |     "gravity": {"callable": "confloat", "constraints": {"gt": 0}},
-      |     "n_moons": "int"
-      |    },
-      |    "key_field": "planet",
-      |    "mandatory_fields": ["planet", "gravity"]
-      |   }
-      |  }
-      | },
-      | "transformations": {
-      |  "reference_data": {"sats": {"type": "filename", "filename": "sats.parquet"},
-      |                     "unused": {"type": "filename", "filename": "missing.parquet"}},
-      |  "rules": [
-      |   {"operation": "has_match", "entity": "planets", "target": "refdata_sats",
-      |    "join_condition": "planets.planet = refdata_sats.planet AND refdata_sats.sat_name = 'Moon'",
-      |    "column_name": "has_moon"}
-      |  ],
-      |  "filters": [
-      |   {"entity": "planets", "name": "weak", "expression": "gravity < 2",
-      |    "error_code": "HIGH_G", "failure_message": "gravity too strong"},
-      |   {"entity": "planets", "name": "warn_cold", "expression": "n_moons < 100",
-      |    "error_code": "MANY_MOONS", "failure_message": "many moons",
-      |    "is_informational": true}
-      |  ]
-      | }
-      |}""".stripMargin
-
   private def runPipeline(): (String, Pipeline.PipelineResult, String) = {
     val base = freshDir()
-    val dataFile = s"$base/planets.csv"
-    // gravity: empty for Venus (mandatory -> contract rejection),
-    // negative for Mars (gt 0 -> contract rejection)
-    java.nio.file.Files.writeString(java.nio.file.Path.of(dataFile),
-      """planet,gravity,n_moons
-        |Mercury,0.38,0
-        |Venus,,0
-        |Earth,1.0,1
-        |Mars,-0.38,2
-        |Jupiter,2.36,95
-        |Saturn,0.92,146
-        |""".stripMargin)
-    satellites.write.mode("overwrite").parquet(s"$base/sats.parquet")
-    val cfg = Pipeline.SubmissionConfig(
-      submissionId = "sub-planets",
-      dataFile = dataFile,
-      dischema = Dischema.parseString(doc),
-      workingDir = s"$base/work",
-      refdataBaseDir = base,
-      auditDir = Some(s"$base/audit"))
-    val result = Pipeline.run(spark, cfg)
+    val result = Pipeline.run(spark, planetsSubmission(base, "sub-planets", s"$base/audit"))
     (base, result, s"$base/work")
   }
 
@@ -334,5 +281,73 @@ class PipelineSpec extends SparkSpec {
       spark.conf.set("spark.sql.session.timeZone", tzBefore)
       spark.conf.set("spark.sql.shuffle.partitions", spBefore)
     }
+  }
+}
+
+/** The planets submission the pipeline specs share: 6 rows, 2 contract
+  * rejections (Venus blank mandatory gravity, Mars gravity not > 0), 1 rule
+  * rejection (Jupiter, HIGH_G), 1 warning (Saturn, MANY_MOONS), 3 survivors.
+  */
+trait PlanetsFixture extends SparkSpec {
+
+  /** has_match against refdata, plus an unused refdata source. */
+  val doc: String =
+    """{
+      | "contract": {
+      |  "datasets": {
+      |   "planets": {
+      |    "fields": {
+      |     "planet": "str",
+      |     "gravity": {"callable": "confloat", "constraints": {"gt": 0}},
+      |     "n_moons": "int"
+      |    },
+      |    "key_field": "planet",
+      |    "mandatory_fields": ["planet", "gravity"]
+      |   }
+      |  }
+      | },
+      | "transformations": {
+      |  "reference_data": {"sats": {"type": "filename", "filename": "sats.parquet"},
+      |                     "unused": {"type": "filename", "filename": "missing.parquet"}},
+      |  "rules": [
+      |   {"operation": "has_match", "entity": "planets", "target": "refdata_sats",
+      |    "join_condition": "planets.planet = refdata_sats.planet AND refdata_sats.sat_name = 'Moon'",
+      |    "column_name": "has_moon"}
+      |  ],
+      |  "filters": [
+      |   {"entity": "planets", "name": "weak", "expression": "gravity < 2",
+      |    "error_code": "HIGH_G", "failure_message": "gravity too strong"},
+      |   {"entity": "planets", "name": "warn_cold", "expression": "n_moons < 100",
+      |    "error_code": "MANY_MOONS", "failure_message": "many moons",
+      |    "is_informational": true}
+      |  ]
+      | }
+      |}""".stripMargin
+
+  /** The planets fixture under `base`: data file, refdata and a submission
+    * working in `base/work`.
+    */
+  def planetsSubmission(base: String, id: String, auditDir: String): Pipeline.SubmissionConfig = {
+    java.nio.file.Files.createDirectories(java.nio.file.Path.of(base))
+    val dataFile = s"$base/planets.csv"
+    // gravity: empty for Venus (mandatory -> contract rejection),
+    // negative for Mars (gt 0 -> contract rejection)
+    java.nio.file.Files.writeString(java.nio.file.Path.of(dataFile),
+      """planet,gravity,n_moons
+        |Mercury,0.38,0
+        |Venus,,0
+        |Earth,1.0,1
+        |Mars,-0.38,2
+        |Jupiter,2.36,95
+        |Saturn,0.92,146
+        |""".stripMargin)
+    satellites.write.mode("overwrite").parquet(s"$base/sats.parquet")
+    Pipeline.SubmissionConfig(
+      submissionId = id,
+      dataFile = dataFile,
+      dischema = Dischema.parseString(doc),
+      workingDir = s"$base/work",
+      refdataBaseDir = base,
+      auditDir = Some(auditDir))
   }
 }
