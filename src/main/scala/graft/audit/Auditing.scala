@@ -1,14 +1,11 @@
 package graft.audit
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.io.DriverParquet
 
 /** Audit-table helpers (ref: spark/auditing.py:41-212): append-only status
   * tables partitioned by update date, queried through a latest-record window.
@@ -42,37 +39,27 @@ object Auditing {
     * and readers never see a partial file.
     */
   def appendAudit(df: DataFrame, path: String): Unit =
-    appendStaged(df.sparkSession, path)(writeRows(df, _))
+    appendRows(df.sparkSession, path, df.schema, df.collect().toSeq)
 
-  /** Write an append's rows into `<staging>/date_updated=<d>/` from the
-    * driver, with Spark's own parquet writer (`prepareWrite` ->
-    * `OutputWriterFactory`), so codec, timestamp encoding and the Spark
-    * row-schema footer come out exactly as a Spark write makes them.
-    * An audit append is a handful of rows: collecting a `Seq(...).toDF`
-    * frame runs no Spark job (its plan is a local relation), and neither
-    * does this write — a distributed write job per append would cost more
-    * driver time than the business rules of a small submission. The
-    * partition value is `to_date(updated_at)` in the session time zone, as
-    * a partitioned Spark write computes it.
+  /** Append `rows` of `schema` to the audit table at `path`, written on the
+    * driver ([[graft.io.DriverParquet]]) into the staging dir under
+    * `date_updated=<to_date(updated_at) in the session time zone>`, one
+    * file per date. An audit append is a handful of rows: a distributed
+    * write job per append would cost more driver time than the business
+    * rules of a small submission. `commit` publishes through the
+    * commit-marker protocol ([[appendAuditCommitted]]).
     */
-  private def writeRows(df: DataFrame, staging: Path): Unit = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val dataSchema = df.schema
-    val rows = df.select(col("*"), to_date(col("updated_at")).cast("string")).collect()
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
-    val jobId = java.util.UUID.randomUUID().toString // part-file naming, as a Spark job's
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-      new TaskAttemptID(new TaskID(new JobID(jobId, 0), TaskType.MAP, 0), 0))
-    val toInternal = CatalystTypeConverters.createToCatalystConverter(dataSchema)
-    val n = dataSchema.length
-    rows.groupBy(r => r.getString(n)).foreach { case (date, part) =>
-      val dir = new Path(staging, ExternalCatalogUtils.getPartitionPathString("date_updated", date))
-      val file = new Path(dir, s"part-00000-$jobId.c000${factory.getFileExtension(ctx)}")
-      val writer = factory.newInstance(file.toString, dataSchema, ctx)
-      try part.foreach { r =>
-        writer.write(toInternal(Row.fromSeq(r.toSeq.take(n))).asInstanceOf[InternalRow])
-      } finally writer.close()
+  private[audit] def appendRows(spark: org.apache.spark.sql.SparkSession, path: String,
+                                schema: StructType, rows: Seq[Row],
+                                commit: Boolean = false): Unit = {
+    // pre-marker moves need no atomicity: a file is invisible until the
+    // marker lands, so a torn copy is just ignorable garbage
+    val (fs, table, writeId) = appendStaged(spark, path)(
+      DriverParquet.write(spark, _, schema, rows, dateUpdatedFrom = Some("updated_at")))
+    if (commit) {
+      val marker = new Path(table, s"_commits/$writeId")
+      fs.mkdirs(marker.getParent)
+      fs.create(marker, false).close() // conditional put: the commit point
     }
   }
 
@@ -182,14 +169,8 @@ object Auditing {
     * files), so no rollback path exists to get half-applied — the weakness
     * of mutate-in-place protocols on eventually-consistent stores.
     */
-  def appendAuditCommitted(df: DataFrame, path: String): Unit = {
-    // pre-marker moves need no atomicity: a file is invisible until the
-    // marker lands, so a torn copy is just ignorable garbage
-    val (fs, table, writeId) = appendStaged(df.sparkSession, path)(writeRows(df, _))
-    val marker = new Path(table, s"_commits/$writeId")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, false).close() // conditional put: the commit point
-  }
+  def appendAuditCommitted(df: DataFrame, path: String): Unit =
+    appendRows(df.sparkSession, path, df.schema, df.collect().toSeq, commit = true)
 
   /** Read an audit table written by [[appendAuditCommitted]]: only data
     * files whose writeId has a commit marker are visible. Partition values
@@ -232,14 +213,15 @@ object Auditing {
   */
 final class AuditManager(private val spark: org.apache.spark.sql.SparkSession, auditDir: String,
                          objectStoreCommits: Boolean = false) {
-  import spark.implicits._
+  import AuditManager._
 
   private val seq = new java.util.concurrent.atomic.AtomicLong()
   private def now = new java.sql.Timestamp(System.currentTimeMillis())
 
-  private def append(df: DataFrame, tablePath: String): Unit =
-    if (objectStoreCommits) Auditing.appendAuditCommitted(df, tablePath)
-    else Auditing.appendAudit(df, tablePath)
+  /** One row of `schema`: `values`, then `updated_at` and `audit_seq`. */
+  private def append(table: String, schema: StructType, values: Any*): Unit =
+    Auditing.appendRows(spark, path(table), schema,
+      Seq(Row.fromSeq(values :+ now :+ seq.incrementAndGet())), commit = objectStoreCommits)
 
   private def readTable(tablePath: String): DataFrame =
     if (objectStoreCommits) Auditing.readCommitted(spark, tablePath)
@@ -262,39 +244,24 @@ final class AuditManager(private val spark: org.apache.spark.sql.SparkSession, a
   def markStatus(submissionId: String, status: String,
                  jobRunId: Option[Long] = None,
                  submissionResult: Option[String] = None): Unit =
-    append(
-      Seq((submissionId, status, jobRunId, submissionResult, now, seq.incrementAndGet()))
-        .toDF("submission_id", "processing_status", "job_run_id", "submission_result",
-          "updated_at", "audit_seq"),
-      path("processing_status"))
+    append("processing_status", ProcessingStatusSchema,
+      submissionId, status, jobRunId.getOrElse(null), submissionResult.orNull)
 
   def addSubmissionInfo(submissionId: String, datasetId: String, fileName: String,
                         fileExtension: String, fileSize: Option[Long] = None,
                         submittingOrg: Option[String] = None): Unit =
-    append(
-      Seq((submissionId, datasetId, fileName, fileExtension, fileSize, submittingOrg,
-        now, seq.incrementAndGet()))
-        .toDF("submission_id", "dataset_id", "file_name", "file_extension", "file_size",
-          "submitting_org", "updated_at", "audit_seq"),
-      path("submission_info"))
+    append("submission_info", SubmissionInfoSchema,
+      submissionId, datasetId, fileName, fileExtension, fileSize.getOrElse(null), submittingOrg.orNull)
 
   def addStatistics(submissionId: String, recordCount: Long,
                     submissionRejections: Long, recordRejections: Long,
                     warnings: Long): Unit =
-    append(
-      Seq((submissionId, recordCount, submissionRejections, recordRejections, warnings,
-        now, seq.incrementAndGet()))
-        .toDF("submission_id", "record_count", "number_submission_rejections",
-          "number_record_rejections", "number_warnings", "updated_at", "audit_seq"),
-      path("submission_statistics"))
+    append("submission_statistics", SubmissionStatisticsSchema,
+      submissionId, recordCount, submissionRejections, recordRejections, warnings)
 
   def addTransfer(submissionId: String, reportName: String, transferId: String,
                   recipient: Option[String] = None): Unit =
-    append(
-      Seq((submissionId, reportName, transferId, recipient, now, seq.incrementAndGet()))
-        .toDF("submission_id", "report_name", "transfer_id", "recipient",
-          "updated_at", "audit_seq"),
-      path("transfers"))
+    append("transfers", TransfersSchema, submissionId, reportName, transferId, recipient.orNull)
 
   /** Latest processing status per submission. */
   def latestProcessingStatus(): DataFrame =
@@ -316,9 +283,7 @@ final class AuditManager(private val spark: org.apache.spark.sql.SparkSession, a
     if (!tableExists("processing_status"))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("submission_id",
-            org.apache.spark.sql.types.StringType))))
+        StructType(Seq(StructField("submission_id", StringType))))
     val cutoff = java.sql.Timestamp.valueOf(
       java.time.LocalDate.now().minusDays(maxDaysOld).atStartOfDay())
     val atStatus = Auditing.latestRecords(
@@ -374,4 +339,32 @@ final class AuditManager(private val spark: org.apache.spark.sql.SparkSession, a
     }
     !latest.where(shardOf(col("submission_id")) === runNumber).limit(1).isEmpty
   }
+}
+
+/** The audit tables' row schemas: the schemas `Seq(tuple).toDF(...)` derives
+  * for the appended values (strings and options nullable, primitive longs
+  * not), so appends keep the tables' existing footer schema.
+  */
+object AuditManager {
+  private def table(fields: (String, DataType, Boolean)*): StructType =
+    StructType((fields ++ Seq(("updated_at", TimestampType, true), ("audit_seq", LongType, false)))
+      .map { case (name, t, nullable) => StructField(name, t, nullable) })
+
+  private[audit] val ProcessingStatusSchema: StructType = table(
+    ("submission_id", StringType, true), ("processing_status", StringType, true),
+    ("job_run_id", LongType, true), ("submission_result", StringType, true))
+
+  private[audit] val SubmissionInfoSchema: StructType = table(
+    ("submission_id", StringType, true), ("dataset_id", StringType, true),
+    ("file_name", StringType, true), ("file_extension", StringType, true),
+    ("file_size", LongType, true), ("submitting_org", StringType, true))
+
+  private[audit] val SubmissionStatisticsSchema: StructType = table(
+    ("submission_id", StringType, true), ("record_count", LongType, false),
+    ("number_submission_rejections", LongType, false),
+    ("number_record_rejections", LongType, false), ("number_warnings", LongType, false))
+
+  private[audit] val TransfersSchema: StructType = table(
+    ("submission_id", StringType, true), ("report_name", StringType, true),
+    ("transfer_id", StringType, true), ("recipient", StringType, true))
 }

@@ -90,9 +90,22 @@ object GraftFunctions {
 
   def functionNames: Seq[String] = definitions.map(_._1)
 
-  /** Register every function on the session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    definitions.foreach { case (name, params, ret, body) =>
-      spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name($params) RETURNS $ret RETURN $body")
+  /** Sessions already registered. Weak keys, so an entry goes with its
+    * session; a session's equality is identity, so a `newSession()` (its
+    * own temporary-function catalog) is a new key.
+    */
+  private val registered =
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** Register every function on the session, once per session: parsing and
+    * running the statements is driver time on every rules stage otherwise.
+    */
+  def register(spark: SparkSession): Unit = registered.synchronized {
+    if (!registered.contains(spark)) {
+      definitions.foreach { case (name, params, ret, body) =>
+        spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name($params) RETURNS $ret RETURN $body")
+      }
+      registered.add(spark)
     }
+  }
 }

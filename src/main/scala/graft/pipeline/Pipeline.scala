@@ -2,9 +2,11 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.audit.AuditManager
 import graft.config.Dischema
 import graft.contract.Contract
+import graft.io.DriverParquet
 import graft.readers.Readers
 import graft.refdata.RefDataLoader
 import graft.report.ErrorSink
@@ -243,7 +245,7 @@ object Pipeline {
   def businessRules(spark: SparkSession, cfg: SubmissionConfig): Map[String, Long] = {
     // rule-stage functions (over_10, ...) are always in scope for rule and
     // filter expressions, as in the reference's rules engine
-    // (ref: spark/rules.py:80-104); registration is idempotent
+    // (ref: spark/rules.py:80-104); registered once per session
     graft.functions.GraftFunctions.register(spark)
     // "Original" is a RESERVED prefix: the pre-rules snapshots live at
     // Original<entity> (reference layout, pipeline.py:581-586), so a
@@ -372,20 +374,39 @@ object Pipeline {
 
   /** [[errorReport]] over an already-loaded (typically persisted) message
     * frame, so a caller that needs the frame for statistics too reads the
-    * stage JSONL once, not once per consumer.
+    * stage JSONL once, not once per consumer. Returns the aggregate sheet's
+    * rows as a local frame (see [[writeErrorReport]] for the jobs).
     */
   def errorReportFrom(spark: SparkSession, cfg: SubmissionConfig,
                       all: DataFrame): DataFrame = {
-    val agg = ErrorSink.aggregateReport(all)
-    agg.coalesce(1).write.mode("overwrite")
-      .parquet(s"${cfg.workingDir}/error_reports/aggregate")
-    ErrorSink.detailReport(all).coalesce(1).write.mode("overwrite")
-      .parquet(s"${cfg.workingDir}/error_reports/detail")
-    ErrorSink.summaryTable(all).coalesce(1).write.mode("overwrite")
-      .parquet(s"${cfg.workingDir}/error_reports/summary_table")
-    ErrorSink.summaryReport(all).coalesce(1).write.mode("overwrite")
-      .parquet(s"${cfg.workingDir}/error_reports/summary")
-    agg
+    val counts = writeErrorReport(spark, cfg, all)
+    spark.createDataFrame(counts.aggregate.asJava, ErrorSink.aggregateReport(all).schema)
+  }
+
+  /** Write `error_reports/{aggregate,summary_table,summary,detail}` in two
+    * steps. The three small sheets come from one collected aggregation
+    * ([[ErrorSink.reportCounts]]) and are written on the driver with the
+    * schemas of their [[ErrorSink]] reference plans. The detail sheet is one
+    * file written by one task, sorted inside that task — a global `orderBy`
+    * would add a sampling job and a shuffle of every message. The
+    * aggregation runs first so that its parallel scan fills a persisted
+    * `all`'s cache for the one-task detail write. Returns the counts, which
+    * also hold the submission statistics.
+    */
+  private[pipeline] def writeErrorReport(spark: SparkSession, cfg: SubmissionConfig,
+                                         all: DataFrame): ErrorSink.ReportCounts = {
+    val dir = s"${cfg.workingDir}/error_reports"
+    val counts = ErrorSink.reportCounts(all)
+    DriverParquet.overwrite(spark, s"$dir/aggregate",
+      ErrorSink.aggregateReport(all).schema, counts.aggregate)
+    DriverParquet.overwrite(spark, s"$dir/summary_table",
+      ErrorSink.summaryTable(all).schema, counts.summaryTable)
+    DriverParquet.overwrite(spark, s"$dir/summary",
+      ErrorSink.summaryReport(all).schema, Seq(counts.summary))
+    all.select(ErrorSink.detailColumns.map(col): _*)
+      .coalesce(1).sortWithinPartitions(col("Entity"), col("RecordIndex"))
+      .write.mode("overwrite").parquet(s"$dir/detail")
+    counts
   }
 
   /** Run many submissions concurrently — Spark schedules the jobs fairly
@@ -433,7 +454,11 @@ object Pipeline {
       s
     }
 
-  /** Full run with audit status transitions and submission statistics. */
+  /** Full run with audit status transitions and submission statistics. The
+    * statistics are read off the error report's one aggregation
+    * ([[writeErrorReport]]), so they cost no job of their own; the message
+    * frame is persisted for the report alone and released on every path.
+    */
   def run(spark0: SparkSession, cfg: SubmissionConfig): PipelineResult = {
     // The single-table layout targets MANY SMALL entities, where each stage
     // is one query with a distinct plan branch per entity: whole-stage
@@ -462,17 +487,10 @@ object Pipeline {
       val counts = declared.map(n => n -> allCounts.getOrElse(n, 0L)).toMap
       audit.foreach(_.markStatus(cfg.submissionId, "error_report"))
       val all = ErrorSink.readAllFeedbackErrors(spark, cfg.workingDir).persist()
-      errorReportFrom(spark, cfg, all)
+      val report = try writeErrorReport(spark, cfg, all) finally all.unpersist()
       audit.foreach { a =>
-        // one aggregation job for all three statistics, not three count()
-        // jobs over the persisted frame (count(when) skips nulls, so an
-        // empty frame yields 0s)
-        val stats = all.agg(
-          count(when(col("FailureType") === "submission"
-            && col("Status") =!= "informational", true)).as("subm"),
-          count(when(col("FailureType") === "record"
-            && col("Status") =!= "informational", true)).as("rec"),
-          count(when(col("Status") === "informational", true)).as("warn")).head()
+        // the statistics come from the report's own aggregation: no job
+        val (submissionRejections, recordRejections, warnings) = report.statistics
         // record_count = the SUBMITTED record count of the MAIN entity: the
         // Original copy is the pre-rules, pre-rejection frame, and the main
         // entity is the document's 'entity' template parameter (ref:
@@ -490,13 +508,12 @@ object Pipeline {
           .map(n => allCounts.getOrElse(s"Original$n", allCounts.getOrElse(n, 0L))).sum
         a.addStatistics(cfg.submissionId,
           recordCount = submitted,
-          submissionRejections = stats.getLong(0),
-          recordRejections = stats.getLong(1),
-          warnings = stats.getLong(2))
+          submissionRejections = submissionRejections,
+          recordRejections = recordRejections,
+          warnings = warnings)
         a.markStatus(cfg.submissionId, "finished",
           submissionResult = Some(if (validationFailed) "validation_failed" else "success"))
       }
-      all.unpersist()
       PipelineResult(validationFailed, counts, "finished")
     } catch {
       case e: Throwable =>

@@ -1,6 +1,6 @@
 package graft.report
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.rules.Messages
 
@@ -76,11 +76,12 @@ object ErrorSink {
     * sorted for stable presentation by entity then record index.
     */
   def detailReport(messages: DataFrame): DataFrame =
-    messages.select(
-      col("Entity"), col("Key"), col("FailureType"), col("Status"),
-      col("ErrorType"), col("ErrorLocation"), col("ErrorMessage"), col("ErrorCode"),
-      col("ReportingField"), col("Value"), col("Category"), col("RecordIndex"))
-      .orderBy(col("Entity"), col("RecordIndex"))
+    messages.select(detailColumns.map(col): _*).orderBy(col("Entity"), col("RecordIndex"))
+
+  /** [[detailReport]]'s columns, in order. */
+  private[graft] val detailColumns: Seq[String] = Seq(
+    "Entity", "Key", "FailureType", "Status", "ErrorType", "ErrorLocation", "ErrorMessage",
+    "ErrorCode", "ReportingField", "Value", "Category", "RecordIndex")
 
   /** Aggregate report (ref: reporting/error_report.py:115-140), re-exported
     * here so report consumers need only this module.
@@ -294,6 +295,18 @@ object ErrorSink {
     messages.groupBy(reportType.as("Type"), col("Entity").as("Table"))
       .agg(count(lit(1)).as("Count"))
 
+  /** Report lanes in the summary status precedence: the lane, its count
+    * column in [[summaryReport]], and the status a non-zero count sets
+    * (ref: excel_report.py:24-107).
+    */
+  private val Lanes = Seq(
+    ("File Rejection", "n_file_rejections", "File has been rejected"),
+    ("Record Rejection", "n_record_rejections", "File has been accepted with record rejections"),
+    ("Warning", "n_warnings", "File has been accepted, all records accepted with warnings"))
+  private val NoIssuesStatus = "File has been accepted, no issues to report"
+  private val ProcessingFailedStatus =
+    "There was an issue processing the submission. Please contact support."
+
   /** Per-submission summary block (ref: excel_report.py:24-107): one row of
     * lane counts plus the overall report status, derived with the
     * reference's precedence — processing failure, then file rejection, then
@@ -302,20 +315,71 @@ object ErrorSink {
     */
   def summaryReport(messages: DataFrame, processingFailed: Boolean = false): DataFrame = {
     val t = reportType
-    val counts = messages.agg(
-      coalesce(sum(when(t === "File Rejection", 1L)), lit(0L)).as("n_file_rejections"),
-      coalesce(sum(when(t === "Record Rejection", 1L)), lit(0L)).as("n_record_rejections"),
-      coalesce(sum(when(t === "Warning", 1L)), lit(0L)).as("n_warnings"),
-      count(lit(1)).as("n_messages"))
+    val laneCounts = Lanes.map { case (lane, name, _) =>
+      coalesce(sum(when(t === lane, 1L)), lit(0L)).as(name)
+    }
+    val counts = messages.agg(laneCounts.head, laneCounts.tail :+ count(lit(1)).as("n_messages"): _*)
     val status =
-      if (processingFailed)
-        lit("There was an issue processing the submission. Please contact support.")
-      else
-        when(col("n_file_rejections") > 0, "File has been rejected")
-          .when(col("n_record_rejections") > 0, "File has been accepted with record rejections")
-          .when(col("n_warnings") > 0,
-            "File has been accepted, all records accepted with warnings")
-          .otherwise("File has been accepted, no issues to report")
+      if (processingFailed) lit(ProcessingFailedStatus)
+      else Lanes.foldRight(lit(NoIssuesStatus)) { case ((_, name, s), rest) =>
+        when(col(name) > 0, s).otherwise(rest)
+      }
     counts.withColumn("report_status", status)
+  }
+
+  /** The small report sheets and the submission statistics from ONE
+    * aggregation, collected: messages grouped by the aggregate sheet's keys,
+    * the report lane and the three statistics predicates. Every sheet is a
+    * coarser grouping of those cells, summed on the driver, so the cells are
+    * at most a few per aggregate-sheet row — the rows an aggregate sheet
+    * collects anyway (`spark.driver.maxResultSize` still guards it).
+    */
+  def reportCounts(messages: DataFrame): ReportCounts = {
+    val counted = col("Status") =!= "informational"
+    def flag(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
+    new ReportCounts(messages
+      .groupBy(col("ErrorType"), col("Entity"), col("ErrorLocation"), col("Category"),
+        col("ErrorCode"), reportType,
+        flag(col("FailureType") === "submission" && counted),
+        flag(col("FailureType") === "record" && counted),
+        flag(col("Status") === "informational"))
+      .agg(count(lit(1)))
+      .collect().toSeq
+      .map(r => ReportCell(r.toSeq.take(5), r.getString(5),
+        r.getBoolean(6), r.getBoolean(7), r.getBoolean(8), r.getLong(9))))
+  }
+
+  /** One [[reportCounts]] cell: an aggregate-sheet key (Type, Table,
+    * Data_Item, Category, Error_Code), its report lane, its statistics flags
+    * and its message count.
+    */
+  private[report] final case class ReportCell(
+      key: Seq[Any], lane: String,
+      submissionRejection: Boolean, recordRejection: Boolean, warning: Boolean, n: Long)
+
+  /** [[reportCounts]]' cells, summed into the rows of [[aggregateReport]],
+    * [[summaryTable]] and [[summaryReport]] (no processing failure), and
+    * into the audit statistics.
+    */
+  final class ReportCounts private[report] (cells: Seq[ReportCell]) {
+    private def sums[K](key: ReportCell => K): Seq[(K, Long)] =
+      cells.groupMapReduce(key)(_.n)(_ + _).toSeq
+    private def total(keep: ReportCell => Boolean): Long = cells.filter(keep).map(_.n).sum
+
+    def aggregate: Seq[Row] = sums(_.key).map { case (k, n) => Row.fromSeq(k :+ n) }
+
+    def summaryTable: Seq[Row] =
+      sums(c => (c.lane, c.key(1))).map { case ((lane, entity), n) => Row(lane, entity, n) }
+
+    def summary: Row = {
+      val laneCounts = Lanes.map { case (lane, _, _) => total(_.lane == lane) }
+      val status = Lanes.zip(laneCounts).collectFirst { case ((_, _, s), n) if n > 0 => s }
+        .getOrElse(NoIssuesStatus)
+      Row.fromSeq(laneCounts ++ Seq(total(_ => true), status))
+    }
+
+    /** (submission rejections, record rejections, warnings). */
+    def statistics: (Long, Long, Long) =
+      (total(_.submissionRejection), total(_.recordRejection), total(_.warning))
   }
 }

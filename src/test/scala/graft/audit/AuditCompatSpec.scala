@@ -55,6 +55,26 @@ class AuditCompatSpec extends SparkSpec {
     } finally reader.close()
   }
 
+  test("the audit tables' fixed schemas are the schemas toDF derives") {
+    val ts = new java.sql.Timestamp(0L)
+    assert(AuditManager.ProcessingStatusSchema ==
+      Seq(("s", "st", Option(1L), Option("r"), ts, 1L))
+        .toDF("submission_id", "processing_status", "job_run_id", "submission_result",
+          "updated_at", "audit_seq").schema)
+    assert(AuditManager.SubmissionInfoSchema ==
+      Seq(("s", "d", "f", "e", Option(1L), Option("o"), ts, 1L))
+        .toDF("submission_id", "dataset_id", "file_name", "file_extension", "file_size",
+          "submitting_org", "updated_at", "audit_seq").schema)
+    assert(AuditManager.SubmissionStatisticsSchema ==
+      Seq(("s", 1L, 1L, 1L, 1L, ts, 1L))
+        .toDF("submission_id", "record_count", "number_submission_rejections",
+          "number_record_rejections", "number_warnings", "updated_at", "audit_seq").schema)
+    assert(AuditManager.TransfersSchema ==
+      Seq(("s", "r", "t", Option("x"), ts, 1L))
+        .toDF("submission_id", "report_name", "transfer_id", "recipient",
+          "updated_at", "audit_seq").schema)
+  }
+
   Seq(false, true).foreach { commits =>
     val protocol = if (commits) "commit-marker" else "rename"
     test(s"Spark-job and driver-written appends read back as one table ($protocol protocol)") {

@@ -6,12 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import graft.audit.AuditManager
 import graft.report.ErrorSink
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Spark jobs per step of a planets submission. Per-submission bookkeeping
   * launches none: audit appends are written on the driver, the contract's
-  * failure flag is observed on its message write, and the stage checkpoints
-  * are read with their footer schema instead of a schema-inference job.
+  * failure flag is observed on its message write, the stage checkpoints
+  * are read with their footer schema instead of a schema-inference job, and
+  * the statistics come from the error report's one aggregation.
   */
 class JobBudgetSpec extends PlanetsFixture {
 
@@ -22,16 +26,25 @@ class JobBudgetSpec extends PlanetsFixture {
 
   /** `f`'s result and the long call site of every job it started, on this
     * thread or on threads it spawned. A call site's first line is the Spark
-    * API method, the second the engine frame that called it.
+    * API method, the second the engine frame that called it. A job of a SQL
+    * execution takes the execution's call site: adaptive execution submits
+    * query stages from a pool thread, whose own call site has no engine frame.
     */
   private def jobsOf[T](f: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.details)
+        case _ => ()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(TagKey) == tag))
-          sites.add(e.stageInfos.maxBy(_.stageId).details)
+          sites.add(Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+            .flatMap(id => Option(executions.get(id)))
+            .getOrElse(e.stageInfos.maxBy(_.stageId).details))
     }
     sc.addSparkListener(listener)
     sc.setLocalProperty(TagKey, tag)
@@ -60,7 +73,8 @@ class JobBudgetSpec extends PlanetsFixture {
     assert(jobs.nonEmpty, "the listener saw no job at all")
     // the message sink shares the audit publish helper; an audit append is
     // a job under AuditManager or the append functions themselves
-    val inAppend = """graft\.audit\.(AuditManager|Auditing\$\.(appendAudit|writeRows))""".r
+    val inAppend =
+      """graft\.audit\.(AuditManager|Auditing\$\.(appendAudit|appendRows))|graft\.io\.DriverParquet""".r
     val audit = jobs.filter(inAppend.findFirstIn(_).nonEmpty)
     assert(audit.isEmpty, s"jobs inside audit appends:\n${audit.mkString("\n--\n")}")
     // refdata is user files and keeps Spark's inference; nothing else may infer
@@ -105,6 +119,48 @@ class JobBudgetSpec extends PlanetsFixture {
     val dc = s"${cfg.workingDir}/data_contract/planets"
     assert(StageIO.readStage(spark, dc).schema == spark.read.parquet(dc).schema)
     assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "data_contract").count() == 2)
+  }
+
+  test("the error report starts at most 4 jobs and the statistics none") {
+    val base = freshDir()
+    val cfg = planetsSubmission(base, "budget-report", s"$base/audit")
+    val (_, jobs) = jobsOf(Pipeline.run(spark, cfg))
+    // a statistics aggregation of its own would be a job called from run
+    val inRun = jobs.filter(j => """graft\.pipeline\.Pipeline\$\.(\$anonfun\$)?run[$(]""".r
+      .findFirstIn(caller(j)).nonEmpty)
+    assert(inRun.isEmpty, inRun.mkString("\n--\n"))
+    val all = ErrorSink.readAllFeedbackErrors(spark, cfg.workingDir).persist()
+    try {
+      val (_, reportJobs) = jobsOf(Pipeline.errorReportFrom(spark, cfg, all))
+      assert(reportJobs.nonEmpty && reportJobs.size <= 4, reportJobs.mkString("\n--\n"))
+    } finally all.unpersist()
+  }
+
+  test("the rule functions are registered once per session") {
+    val base = freshDir()
+    val cfg = planetsSubmission(base, "budget-functions", s"$base/audit")
+    Pipeline.fileTransformation(spark, cfg)
+    Pipeline.dataContract(spark, cfg)
+    val session = spark.newSession()
+    val created = new java.util.concurrent.atomic.AtomicInteger()
+    session.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.nodeName.matches("(?i)create.*function.*")) created.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def creations(f: => Unit): Int = {
+      created.set(0)
+      f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      created.get
+    }
+    assert(creations(Pipeline.businessRules(session, cfg)) ==
+      graft.functions.GraftFunctions.functionNames.size)
+    assert(creations(Pipeline.businessRules(session, cfg)) == 0)
+    // a new session has its own function catalog: it registers again
+    val fresh = session.newSession()
+    graft.functions.GraftFunctions.register(fresh)
+    assert(fresh.sql("SELECT over_10(11)").head().getBoolean(0))
   }
 
   private def submit(name: String, csv: String, single: Boolean) = {
