@@ -44,8 +44,8 @@ object Pipeline {
         * resolved from the submission's metadata or data.
         */
       runtimeParams: Map[String, Any] = Map.empty,
-      /** Concurrent per-entity stage work within ONE submission. The
-        * per-entity checkpoint layout costs a fixed number of Spark jobs
+      /** Concurrent per-entity stage work within ONE submission. Each
+        * stage checkpoints per entity, at a fixed number of Spark jobs
         * per entity; on a many-small-entities dischema (~100 tiny
         * entities) that fixed cost IS the wall clock (EntityProbe measured
         * ~0.8 s/entity sequential), and the jobs are independent per
@@ -62,17 +62,10 @@ object Pipeline {
         * an unbounded Await. Generous by default — a stage legitimately
         * takes minutes at scale; this is a circuit breaker, not a budget.
         */
-      entityStageTimeoutSec: Long = 4 * 3600,
-      /** Opt-in many-small-entities layout: each stage checkpoints ONE
-        * entity-partitioned parquet table ([[StageIO]]) instead of one
-        * directory per entity, collapsing the N per-entity write jobs into
-        * one union write — the per-entity job overhead (EntityProbe:
-        * ~0.28 s/entity even at parallelism 8) stops scaling with the
-        * entity count. The per-entity-dir layout stays the default: it is
-        * the reference's on-disk contract and the right shape for bulk
-        * data, where the single-table payload codec would cost per row.
-        */
-      singleTableLayout: Boolean = false)
+      entityStageTimeoutSec: Long = 4 * 3600) {
+    // Kept only so the benchmark harness compiles: there is one stage layout.
+    def singleTableLayout: Boolean = false
+  }
 
   final case class PipelineResult(
       validationFailed: Boolean,
@@ -178,18 +171,9 @@ object Pipeline {
       }
       Contract.stringify(raw)
     }
-    if (cfg.singleTableLayout) {
-      // Frame CONSTRUCTION still fans per entity (a CSV/XML/JSON ingest pays
-      // its zipWithIndex count pass eagerly at construction), so it keeps
-      // the bounded-parallel loop; the N write jobs collapse into one
-      // union write.
-      val frames = parEntities(cfg.dischema.entities, cfg.entityParallelism,
-        cfg.entityStageTimeoutSec)(spec => spec.name -> ingest(spec))
-      StageIO.writeEntities(spark, s"${cfg.workingDir}/transform", frames)
-    } else
-      parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
-        ingest(spec).write.mode("overwrite").parquet(s"${cfg.workingDir}/transform/${spec.name}")
-      }
+    parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
+      ingest(spec).write.mode("overwrite").parquet(s"${cfg.workingDir}/transform/${spec.name}")
+    }
     ()
   }
 
@@ -210,32 +194,16 @@ object Pipeline {
     * shared stage JSONL concurrently.
     */
   def dataContract(spark: SparkSession, cfg: SubmissionConfig): Boolean = {
-    def writeMessages(messages: DataFrame): Boolean = {
+    parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
+      val raw = StageIO.readStage(spark, s"${cfg.workingDir}/transform/${spec.name}")
+      val (typed, messages) = Contract(raw, spec)
+      typed.write.mode("overwrite").parquet(s"${cfg.workingDir}/data_contract/${spec.name}")
       val obs = org.apache.spark.sql.Observation()
       ErrorSink.writeFeedbackErrors(
         messages.observe(obs, count(when(col("Status") =!= "informational", true)).as("failed")),
         cfg.workingDir, "data_contract")
       obs.get("failed").asInstanceOf[Long] > 0
-    }
-    if (cfg.singleTableLayout) {
-      // One union write for the typed frames, one for the messages,
-      // instead of two jobs per entity.
-      val (table, schemas) = StageIO.readTable(spark, s"${cfg.workingDir}/transform")
-      val perEntity = cfg.dischema.entities.map { spec =>
-        val raw = StageIO.decodeEntity(table, schemas(spec.name), spec.name)
-        val (typed, messages) = Contract(raw, spec)
-        (spec.name, typed, messages)
-      }
-      StageIO.writeEntities(spark, s"${cfg.workingDir}/data_contract",
-        perEntity.map(e => e._1 -> e._2))
-      writeMessages(org.apache.spark.sql.graft.ExpressionBridge.flatUnion(perEntity.map(_._3)))
-    } else
-      parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
-        val raw = StageIO.readStage(spark, s"${cfg.workingDir}/transform/${spec.name}")
-        val (typed, messages) = Contract(raw, spec)
-        typed.write.mode("overwrite").parquet(s"${cfg.workingDir}/data_contract/${spec.name}")
-        writeMessages(messages)
-      }.exists(identity)
+    }.exists(identity)
   }
 
   /** Stage 3: business rules over the typed entities (+ Original<entity>
@@ -255,18 +223,9 @@ object Pipeline {
     require(reserved.isEmpty,
       s"entity name(s) ${reserved.mkString(", ")} use the reserved 'Original' " +
         "prefix (pre-rules snapshot namespace) — rename the entity")
-    val dcSingle: Option[(DataFrame, Map[String, org.apache.spark.sql.types.StructType])] =
-      if (cfg.singleTableLayout)
-        Some(StageIO.readTable(spark, s"${cfg.workingDir}/data_contract"))
-      else None
-    val typed = dcSingle match {
-      case Some((table, schemas)) =>
-        cfg.dischema.entities.map(spec =>
-          spec.name -> StageIO.decodeEntity(table, schemas(spec.name), spec.name)).toMap
-      case None => cfg.dischema.entities.map { spec =>
-        spec.name -> StageIO.readStage(spark, s"${cfg.workingDir}/data_contract/${spec.name}")
-      }.toMap
-    }
+    val typed = cfg.dischema.entities.map { spec =>
+      spec.name -> StageIO.readStage(spark, s"${cfg.workingDir}/data_contract/${spec.name}")
+    }.toMap
     val originals = typed.map { case (n, df) => s"Original$n" -> df }
     val loader = new RefDataLoader(spark, cfg.dischema.referenceData, cfg.refdataBaseDir)
     val catalog = new EntityCatalog(
@@ -309,59 +268,14 @@ object Pipeline {
           contractErrors.where(col("Entity") === name))
       else entity
     }
-    if (cfg.singleTableLayout) {
-      // One union write + one count job over the written table — and ONE
-      // GLOBAL rejection anti-join on (entity, record index) instead of a
-      // per-entity anti-join plan (200 catalog entities was 200 error-file
-      // scans and 200 join branches in the union plan; the probe measured
-      // plan construction dominating). Rows without a record index (Original
-      // snapshots, derived entities) carry a null key, which an anti-join
-      // never matches — exactly the pass-through the per-entity path gives
-      // them.
-      val stageDir = s"${cfg.workingDir}/business_rules"
-      val ri = Contract.RecordIndexColumn
-      val riKey = "__graft_ri__"
-      val (dcTable, _) = dcSingle.get
-      val encoded = catalog.names.map { name =>
-        val df = catalog(name)
-        val base = name.stripPrefix("Original")
-        // Original* snapshots are the PRE-RULES typed frames — byte-identical
-        // to the data_contract payloads — so they copy payload rows straight
-        // from the previous stage table, skipping a decode+re-encode branch
-        // per entity (half the catalog). Guarded by frame identity: a rule
-        // that (ab)used an Original name would replace the catalog entry.
-        val snapshotCopy = name.startsWith("Original") &&
-          originals.get(name).exists(_ eq df)
-        if (snapshotCopy)
-          dcTable.where(col(StageIO.EntityCol) === base)
-            .select(col(StageIO.PayloadCol), lit(name).as(StageIO.EntityCol),
-              lit(null).cast("long").as(riKey))
-        else {
-          val keyCol =
-            if (!name.startsWith("Original") && df.columns.contains(ri))
-              col(s"`$ri`").cast("long")
-            else lit(null).cast("long")
-          StageIO.encodeEntity(name, df, Seq(keyCol.as(riKey)))
-        }
-      }
-      val encodedU = org.apache.spark.sql.graft.ExpressionBridge.flatUnion(encoded)
-      val bad = contractErrors
-        .where(col("FailureType") === "record" && col("Status") =!= "informational")
-        .select(col("Entity").as(StageIO.EntityCol), col("RecordIndex").as(riKey))
-        .distinct()
-      val kept = encodedU.join(bad, Seq(StageIO.EntityCol, riKey), "left_anti").drop(riKey)
-      StageIO.writeEncoded(spark, stageDir, kept, catalog.names.map(n => n -> catalog(n).schema))
-      val counts = StageIO.entityCounts(StageIO.readTable(spark, stageDir)._1)
-      catalog.names.map(n => n -> counts.getOrElse(n, 0L)).toMap
-    } else
-      parEntities(catalog.names, cfg.entityParallelism, cfg.entityStageTimeoutSec) { name =>
-        // Row count observed ON the write itself — no second job
-        // re-reading the parquet just to count what was written.
-        val obs = org.apache.spark.sql.Observation()
-        rejected(name).observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
-          .parquet(s"${cfg.workingDir}/business_rules/$name")
-        name -> obs.get("n").asInstanceOf[Long]
-      }.toMap
+    parEntities(catalog.names, cfg.entityParallelism, cfg.entityStageTimeoutSec) { name =>
+      // Row count observed ON the write itself — no second job
+      // re-reading the parquet just to count what was written.
+      val obs = org.apache.spark.sql.Observation()
+      rejected(name).observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+        .parquet(s"${cfg.workingDir}/business_rules/$name")
+      name -> obs.get("n").asInstanceOf[Long]
+    }.toMap
   }
 
   /** Stage 4: aggregate + detail + summary report tables from every stage's
@@ -429,45 +343,12 @@ object Pipeline {
     } finally pool.shutdown()
   }
 
-  /** Session for one submission. The single-table layout gets a
-    * submission-local clone (newSession — concurrent submissions on the
-    * shared session keep their own confs; extensions and the context are
-    * inherited) with whole-stage codegen off: that layout targets MANY
-    * SMALL entities, where each stage is one query with a distinct plan
-    * branch per entity and codegen pays a Janino compile per branch for
-    * rows too few to repay it (EntityProbe: interpreted mode ~1.6x faster
-    * end-to-end at 100 entities). newSession starts from the builder
-    * defaults, NOT the caller's runtime confs (session timezone, shuffle
-    * partitions, ...) — copy them over so the two layouts differ only in
-    * layout + the codegen override, not in silently-reset SQL behavior.
-    */
-  private[pipeline] def sessionFor(spark0: SparkSession,
-                                   singleTableLayout: Boolean): SparkSession =
-    if (!singleTableLayout) spark0
-    else {
-      val s = spark0.newSession()
-      spark0.conf.getAll.foreach { case (k, v) =>
-        if (s.conf.isModifiable(k) && s.conf.getOption(k) != Some(v))
-          s.conf.set(k, v)
-      }
-      s.conf.set("spark.sql.codegen.wholeStage", "false")
-      s
-    }
-
   /** Full run with audit status transitions and submission statistics. The
     * statistics are read off the error report's one aggregation
     * ([[writeErrorReport]]), so they cost no job of their own; the message
     * frame is persisted for the report alone and released on every path.
     */
-  def run(spark0: SparkSession, cfg: SubmissionConfig): PipelineResult = {
-    // The single-table layout targets MANY SMALL entities, where each stage
-    // is one query with a distinct plan branch per entity: whole-stage
-    // codegen pays a Janino compile per branch for rows too few to repay it
-    // (EntityProbe: interpreted mode ~1.6x faster end-to-end at 100
-    // entities). Session-LOCAL via newSession — concurrent submissions on
-    // the shared session keep their own confs; extensions and the context
-    // are inherited.
-    val spark = sessionFor(spark0, cfg.singleTableLayout)
+  def run(spark: SparkSession, cfg: SubmissionConfig): PipelineResult = {
     val audit = cfg.auditDir.map(new AuditManager(spark, _))
     audit.foreach { a =>
       a.addSubmissionInfo(cfg.submissionId, cfg.dischema.entities.map(_.name).mkString(","),

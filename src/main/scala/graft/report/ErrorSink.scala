@@ -45,19 +45,21 @@ object ErrorSink {
     readJsonOrEmpty(spark, s"$workingDir/errors/*_errors.jsonl")
 
   /** A submission with ZERO messages may legitimately have no errors dir at
-    * all: writing an EMPTY message frame can plan to zero write tasks (the
-    * single-table layout's unioned message frame does), so not even the
-    * directory lands. Missing path = empty message set with the canonical
-    * schema — never a read error.
+    * all: a stage that emits no messages (or a failed run) may leave no
+    * `.jsonl` directory behind. Missing path = empty message set with the
+    * canonical schema — never a read error. The read takes the paths the
+    * glob matched, not the glob: Spark's streaming-sink metadata probe
+    * stats a single path literally, and on a glob it logs a WARN with a
+    * `FileNotFoundException` trace per read.
     */
   private def readJsonOrEmpty(spark: SparkSession, glob: String): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(glob)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val any = fs.globStatus(path)
-    if (any == null || any.isEmpty)
+    val matched = Option(fs.globStatus(path)).toSeq.flatten.map(_.getPath.toString)
+    if (matched.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Messages.schema)
-    else spark.read.schema(Messages.schema).json(glob)
+    else spark.read.schema(Messages.schema).json(matched: _*)
   }
 
   /** Engine-internal (processing) errors, reference layout

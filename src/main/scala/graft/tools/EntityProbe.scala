@@ -13,7 +13,7 @@ import graft.readers.Readers
   * through the full 4-service pipeline and reports wall + per-entity cost
   * at each N, so the fixed cost separates from the data cost.
   *
-  * Usage: runMain graft.tools.EntityProbe [rows] [n1,n2,...]
+  * Usage: runMain graft.tools.EntityProbe [rows] [n1,n2,...] [entityParallelism]
   */
 object EntityProbe {
 
@@ -33,7 +33,7 @@ object EntityProbe {
   }
 
   def run(spark: SparkSession, base: String, rows: Int, n: Int,
-          entityParallelism: Int = 8, singleTable: Boolean = false): Double = {
+          entityParallelism: Int = 8): Double = {
     val dataFile = s"$base/tiny_$n.csv"
     val sb = new StringBuilder("k,a,b\n")
     (1 to rows).foreach(i => sb.append(s"$i,alpha_$i,beta_$i\n"))
@@ -46,8 +46,7 @@ object EntityProbe {
       workingDir = s"$base/work-$n",
       auditDir = Some(s"$base/audit-$n"),
       csvOptions = Readers.CsvOptions(),
-      entityParallelism = entityParallelism,
-      singleTableLayout = singleTable)
+      entityParallelism = entityParallelism)
     val t0 = System.nanoTime()
     val result = Pipeline.run(spark, cfg)
     val wall = (System.nanoTime() - t0) / 1e9
@@ -60,7 +59,6 @@ object EntityProbe {
     val rows = args.headOption.map(_.toInt).getOrElse(50)
     val ns = if (args.length > 1) args(1).split(",").map(_.trim.toInt).toSeq else Seq(10, 50, 100)
     val par = if (args.length > 2) args(2).toInt else 8
-    val singleTable = args.length > 3 && args(3).equalsIgnoreCase("single")
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -72,12 +70,11 @@ object EntityProbe {
     org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(base), true)
     // warmup (session/codegen init off the measurement)
-    run(spark, base, rows, 2, par, singleTable)
+    run(spark, base, rows, 2, par)
     println(s"# Entity-overhead probe: $rows rows/entity, entityParallelism=$par, " +
-      s"layout=${if (singleTable) "single-table" else "per-entity-dir"}, " +
       s"local[${spark.sparkContext.defaultParallelism}]")
     val walls = ns.map { n =>
-      val w = run(spark, base, rows, n, par, singleTable)
+      val w = run(spark, base, rows, n, par)
       println(f"entities=$n%4d wall=$w%7.1f s  per-entity=${w / n}%6.3f s")
       w
     }

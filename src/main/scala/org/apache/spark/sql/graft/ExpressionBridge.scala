@@ -29,8 +29,8 @@ object ExpressionBridge {
   /** N-ary union as ONE flat logical Union node. `frames.reduce(_ union _)`
     * nests N-1 BINARY Unions, and the analyzer's set-op reconciliation
     * (WidenSetOperationTypes and friends) re-walks every nesting level — at
-    * a 100-entity fan-in that superlinear analyzer pass dominated the
-    * single-table pipeline stages. All frames must be position-compatible
+    * a 100-frame fan-in that superlinear analyzer pass dominates plan
+    * construction. All frames must be position-compatible
     * (same column count, coercible types), exactly as `union` requires.
     */
   def flatUnion(frames: Seq[org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {

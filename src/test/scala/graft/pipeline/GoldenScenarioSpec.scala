@@ -21,20 +21,13 @@ class GoldenScenarioSpec extends SparkSpec {
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft_golden_").toString
 
-  /** Every golden scenario must hold in BOTH stage layouts: the reference's
-    * per-entity dirs (default) and the opt-in single-table StageIO layout —
-    * same submissions, same numbers, different checkpoint shape.
-    */
-  private val layouts = Seq(false, true)
-  private def readStage(base: String, stage: String, entity: String,
-                        single: Boolean): org.apache.spark.sql.DataFrame =
-    if (single) StageIO.readEntity(spark, s"$base/work/$stage", entity)
-    else spark.read.parquet(s"$base/work/$stage/$entity")
+  private def readStage(base: String, stage: String,
+                        entity: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(s"$base/work/$stage/$entity")
 
   /** planets.feature:12-38 "Validate and filter planets". */
   test("planets: reference dischema + CSV reproduce the feature's golden outcomes") {
     assume(new java.io.File(s"$testdata/planets").isDirectory)
-    for (single <- layouts) {
     val base = freshDir()
     val cfg = Pipeline.SubmissionConfig(
       submissionId = "planets-demo",
@@ -42,8 +35,7 @@ class GoldenScenarioSpec extends SparkSpec {
       dischema = Dischema.parseFile(s"$testdata/planets/planets.dischema.json"),
       workingDir = s"$base/work",
       refdataBaseDir = s"$testdata/planets",
-      auditDir = Some(s"$base/audit"),
-      singleTableLayout = single)
+      auditDir = Some(s"$base/audit"))
     val result = Pipeline.run(spark, cfg)
 
     // "there is 1 record rejection from the data_contract phase" — Pluto's
@@ -57,7 +49,7 @@ class GoldenScenarioSpec extends SparkSpec {
 
     // "The rules restrict planets to 1 qualifying record";
     // "does not contain Jupiter"; "contains Neptune"
-    val planets = readStage(base, "business_rules", "planets", single)
+    val planets = readStage(base, "business_rules", "planets")
     val names = planets.select("planet").collect().map(_.getString(0)).toSeq
     assert(names == Seq("Neptune"), names)
     assert(result.recordCounts == Map("planets" -> 1L))
@@ -88,11 +80,10 @@ class GoldenScenarioSpec extends SparkSpec {
 
     // the derived largest_satellites entity and the Original copy land as
     // business_rules parquet like every other catalog entity
-    val sats = readStage(base, "business_rules", "largest_satellites", single)
+    val sats = readStage(base, "business_rules", "largest_satellites")
     assert(sats.count() == 9L)
     assert(sats.columns.contains("gm") && sats.columns.contains("radius"))
-    assert(readStage(base, "business_rules", "Originalplanets", single).count() == 9L)
-    }
+    assert(readStage(base, "business_rules", "Originalplanets").count() == 9L)
   }
 
   /** planets.feature:40-46 "no extension" + :48-62 "duplicated extension":
@@ -103,14 +94,13 @@ class GoldenScenarioSpec extends SparkSpec {
     */
   test("planets: no-extension fails the transform phase; .csv.csv validates cleanly") {
     assume(new java.io.File(s"$testdata/planets").isDirectory)
-    for (single <- layouts) {
     val b1 = freshDir()
     val bad = Pipeline.SubmissionConfig(
       submissionId = "planets-noext",
       dataFile = s"$testdata/planets/planets_no_extension",
       dischema = Dischema.parseFile(s"$testdata/planets/planets.dischema.json"),
       workingDir = s"$b1/work", refdataBaseDir = s"$testdata/planets",
-      auditDir = Some(s"$b1/audit"), singleTableLayout = single)
+      auditDir = Some(s"$b1/audit"))
     intercept[IllegalArgumentException] { Pipeline.run(spark, bad) }
     assert(new AuditManager(spark, s"$b1/audit").statusOf("planets-noext")
       .contains("failed"))
@@ -121,13 +111,12 @@ class GoldenScenarioSpec extends SparkSpec {
       workingDir = s"$b2/work", auditDir = Some(s"$b2/audit")))
     val contract = ErrorSink.readFeedbackErrors(spark, s"$b2/work", "data_contract")
     assert(contract.where("FailureType = 'record'").count() == 0L)
-    val row = readStage(b2, "data_contract", "planets", single).collect().head
+    val row = readStage(b2, "data_contract", "planets").collect().head
     assert(row.getAs[String]("planet") == "Mercury")
     assert(row.getAs[Boolean]("hasGlobalMagneticField")) // "Yes" parsed
     assert(!row.getAs[Boolean]("hasRingSystem"))         // "No" parsed
     assert(new AuditManager(spark, s"$b2/audit").statusOf("planets-dupext")
       .contains("finished"))
-    }
   }
 
   /** movies.feature:10-46 "Validate and filter movies" — nested JSON (cast
@@ -150,7 +139,6 @@ class GoldenScenarioSpec extends SparkSpec {
     }
     spark.read.parquet(s"$testdata/movies/refdata/movies_sequels.parquet")
       .write.mode("overwrite").saveAsTable("movies_refdata.sequels")
-    for (single <- layouts) {
     val base = freshDir()
     val cfg = Pipeline.SubmissionConfig(
       submissionId = "movies-demo",
@@ -158,8 +146,7 @@ class GoldenScenarioSpec extends SparkSpec {
       dischema = Dischema.parseFile(s"$testdata/movies/movies.dischema.json"),
       workingDir = s"$base/work",
       refdataBaseDir = s"$testdata/movies",
-      auditDir = Some(s"$base/audit"),
-      singleTableLayout = single)
+      auditDir = Some(s"$base/audit"))
     Pipeline.run(spark, cfg)
 
     // "1 submission rejection and 3 record rejections from data_contract"
@@ -178,7 +165,7 @@ class GoldenScenarioSpec extends SparkSpec {
 
     // "The rules restrict movies to 3 qualifying records" — record 1 falls
     // to the DODGYDATE contract rejection, record 4 to LIMITED_RATINGS
-    assert(readStage(base, "business_rules", "movies", single).count() == 3L)
+    assert(readStage(base, "business_rules", "movies").count() == 3L)
     val rules = ErrorSink.readFeedbackErrors(spark, s"$base/work", "business_rules")
     val ruleDetails = rules.select("ErrorCode", "ErrorMessage", "RecordIndex")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
@@ -193,7 +180,6 @@ class GoldenScenarioSpec extends SparkSpec {
     assert(stats.getAs[Long]("number_submission_rejections") == 1L)
     assert(stats.getAs[Long]("number_record_rejections") == 3L)
     assert(stats.getAs[Long]("number_warnings") == 2L)
-    }
   }
 
   /** books.feature:52-79 "Validate complex nested XML data (spark)" — two
@@ -203,7 +189,6 @@ class GoldenScenarioSpec extends SparkSpec {
     */
   test("books: reference dischema + nested XML reproduce the feature's golden outcomes") {
     assume(new java.io.File(s"$testdata/books").isDirectory)
-    for (single <- layouts) {
     val base = freshDir()
     val cfg = Pipeline.SubmissionConfig(
       submissionId = "books-demo",
@@ -211,8 +196,7 @@ class GoldenScenarioSpec extends SparkSpec {
       dischema = Dischema.parseFile(s"$testdata/books/nested_books.dischema.json"),
       workingDir = s"$base/work",
       refdataBaseDir = s"$testdata/books",
-      auditDir = Some(s"$base/audit"),
-      singleTableLayout = single)
+      auditDir = Some(s"$base/audit"))
     Pipeline.run(spark, cfg)
 
     // "there is 1 record rejection from the data_contract phase" —
@@ -226,7 +210,7 @@ class GoldenScenarioSpec extends SparkSpec {
 
     // "The rules restrict nested_books to 3 qualifying records" and the
     // Corets sum: 3 books x 5.95 = 17.85
-    val books = readStage(base, "business_rules", "nested_books", single)
+    val books = readStage(base, "business_rules", "nested_books")
     assert(books.count() == 3L)
     val corets = books.where(org.apache.spark.sql.functions.col("name")
         .startsWith("Corets"))
@@ -242,11 +226,9 @@ class GoldenScenarioSpec extends SparkSpec {
     assert(stats.getAs[Long]("record_count") == 4L)
     assert(stats.getAs[Long]("number_record_rejections") == 2L)
     assert(stats.getAs[Long]("number_warnings") == 0L)
-    }
   }
 
-  private def runScenario(name: String, dataFile: String, dir: String,
-                          single: Boolean = false): String = {
+  private def runScenario(name: String, dataFile: String, dir: String): String = {
     val base = freshDir()
     Pipeline.run(spark, Pipeline.SubmissionConfig(
       submissionId = name,
@@ -254,8 +236,7 @@ class GoldenScenarioSpec extends SparkSpec {
       dischema = Dischema.parseFile(s"$dir/$name.dischema.json"),
       workingDir = s"$base/work",
       refdataBaseDir = dir,
-      auditDir = Some(s"$base/audit"),
-      singleTableLayout = single))
+      auditDir = Some(s"$base/audit")))
     base
   }
 
@@ -265,13 +246,12 @@ class GoldenScenarioSpec extends SparkSpec {
     */
   test("animals: both reference XML fixtures reproduce the feature's golden outcomes") {
     assume(new java.io.File(s"$testdata/animals").isDirectory)
-    for (single <- layouts) {
     // scenario 1: plain record rejections
-    val b1 = runScenario("animals", "animals.xml", s"$testdata/animals", single)
+    val b1 = runScenario("animals", "animals.xml", s"$testdata/animals")
     val r1 = ErrorSink.readFeedbackErrors(spark, s"$b1/work", "business_rules")
     assert(r1.where("ErrorCode = 'ANE01' AND FailureType = 'record'").count() == 2L)
     assert(r1.count() == 2L)
-    assert(readStage(b1, "business_rules", "animals", single).count() == 3L)
+    assert(readStage(b1, "business_rules", "animals").count() == 3L)
     val s1 = spark.read.parquet(s"$b1/audit/submission_statistics").collect().head
     assert(s1.getAs[Long]("record_count") == 5L)
     assert(s1.getAs[Long]("number_record_rejections") == 2L)
@@ -280,7 +260,7 @@ class GoldenScenarioSpec extends SparkSpec {
     // scenario 2: mixture — the Human SUBMISSION failure notifies but its
     // record SURVIVES the filter (7 - 2 ANE01 = 5), the negative-weight
     // warning never removes
-    val b2 = runScenario("animals", "animals_mixture.xml", s"$testdata/animals", single)
+    val b2 = runScenario("animals", "animals_mixture.xml", s"$testdata/animals")
     val r2 = ErrorSink.readFeedbackErrors(spark, s"$b2/work", "business_rules")
     val byCode = r2.groupBy("ErrorCode", "FailureType", "Status").count().collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
@@ -288,7 +268,7 @@ class GoldenScenarioSpec extends SparkSpec {
       ("ANE01", "record", "error") -> 2L,
       ("ANE02", "submission", "error") -> 1L,
       ("ANE03", "record", "informational") -> 1L), byCode)
-    assert(readStage(b2, "business_rules", "animals", single).count() == 5L)
+    assert(readStage(b2, "business_rules", "animals").count() == 5L)
     // per-record message templating fills the offending value
     val msg = r2.where("ErrorCode = 'ANE03'").select("ErrorMessage").head().getString(0)
     assert(msg == "Warning - `-6000.0` is below zero.", msg)
@@ -297,7 +277,6 @@ class GoldenScenarioSpec extends SparkSpec {
     assert(s2.getAs[Long]("number_submission_rejections") == 1L)
     assert(s2.getAs[Long]("number_record_rejections") == 2L)
     assert(s2.getAs[Long]("number_warnings") == 1L)
-    }
   }
 
   /** demographics.feature:7-32 — domain types (nhsnumber mod-11, postcode
@@ -308,9 +287,8 @@ class GoldenScenarioSpec extends SparkSpec {
     */
   test("demographics: reference dischema + PID CSV reproduce the feature's golden outcomes") {
     assume(new java.io.File(s"$testdata/demographics").isDirectory)
-    for (single <- layouts) {
     val base = runScenario("basic_demographics", "basic_demographics.csv",
-      s"$testdata/demographics", single)
+      s"$testdata/demographics")
     val contract = ErrorSink.readFeedbackErrors(spark, s"$base/work", "data_contract")
     assert(contract.where("FailureType = 'record'").count() == 12L)
     assert(contract.where("FailureType = 'record' AND Status != 'informational'")
@@ -319,7 +297,7 @@ class GoldenScenarioSpec extends SparkSpec {
     val warn = contract.where("Status = 'informational'").collect()
     assert(warn.length == 1 && warn.head.getAs[Long]("RecordIndex") == 12L)
 
-    val demo = readStage(base, "business_rules", "demographics", single)
+    val demo = readStage(base, "business_rules", "demographics")
     assert(demo.count() == 2L)
     assert(demo.where("NHS_Number_Valid = 'FALSE'").count() == 0L)
     val rules = ErrorSink.readFeedbackErrors(spark, s"$base/work", "business_rules")
@@ -329,6 +307,5 @@ class GoldenScenarioSpec extends SparkSpec {
     assert(stats.getAs[Long]("record_count") == 13L)
     assert(stats.getAs[Long]("number_record_rejections") == 18L)
     assert(stats.getAs[Long]("number_warnings") == 1L)
-    }
   }
 }

@@ -163,43 +163,39 @@ class JobBudgetSpec extends PlanetsFixture {
     assert(fresh.sql("SELECT over_10(11)").head().getBoolean(0))
   }
 
-  private def submit(name: String, csv: String, single: Boolean) = {
+  private def submit(name: String, csv: String) = {
     val base = freshDir()
-    val cfg = planetsSubmission(base, name, s"$base/audit").copy(singleTableLayout = single)
+    val cfg = planetsSubmission(base, name, s"$base/audit")
     java.nio.file.Files.writeString(java.nio.file.Path.of(cfg.dataFile), csv)
     val result = within(Pipeline.run(spark, cfg))
     (result, cfg, new AuditManager(spark, s"$base/audit"))
   }
 
-  Seq(false, true).foreach { single =>
-    val layout = if (single) "single-table layout" else "per-entity layout"
+  test("zero contract messages: validationFailed is false and the run finishes (per-entity layout)") {
+    // Jupiter still fails a rule: only the contract is clean
+    val (result, cfg, audit) = submit("clean-contract",
+      "planet,gravity,n_moons\nMercury,0.38,0\nEarth,1.0,1\nJupiter,2.36,95\n")
+    assert(!result.validationFailed)
+    assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "data_contract").count() == 0)
+    assert(result.recordCounts == Map("planets" -> 2L))
+    assert(audit.statusOf("clean-contract").contains("finished"))
+  }
 
-    test(s"zero contract messages: validationFailed is false and the run finishes ($layout)") {
-      // Jupiter still fails a rule: only the contract is clean
-      val (result, cfg, audit) = submit("clean-contract",
-        "planet,gravity,n_moons\nMercury,0.38,0\nEarth,1.0,1\nJupiter,2.36,95\n", single)
-      assert(!result.validationFailed)
-      assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "data_contract").count() == 0)
-      assert(result.recordCounts == Map("planets" -> 2L))
-      assert(audit.statusOf("clean-contract").contains("finished"))
-    }
+  test("rules that emit no messages: the run finishes with the contract's flag (per-entity layout)") {
+    val (result, cfg, audit) = submit("quiet-rules",
+      "planet,gravity,n_moons\nMercury,0.38,0\nVenus,,0\nEarth,1.0,1\n")
+    assert(result.validationFailed) // Venus: blank mandatory gravity
+    assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "data_contract").count() == 1)
+    assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "business_rules").count() == 0)
+    assert(result.recordCounts == Map("planets" -> 2L))
+    assert(audit.statusOf("quiet-rules").contains("finished"))
+  }
 
-    test(s"rules that emit no messages: the run finishes with the contract's flag ($layout)") {
-      val (result, cfg, audit) = submit("quiet-rules",
-        "planet,gravity,n_moons\nMercury,0.38,0\nVenus,,0\nEarth,1.0,1\n", single)
-      assert(result.validationFailed) // Venus: blank mandatory gravity
-      assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "data_contract").count() == 1)
-      assert(ErrorSink.readFeedbackErrors(spark, cfg.workingDir, "business_rules").count() == 0)
-      assert(result.recordCounts == Map("planets" -> 2L))
-      assert(audit.statusOf("quiet-rules").contains("finished"))
-    }
-
-    test(s"a header-only submission finishes with nothing to report ($layout)") {
-      val (result, cfg, audit) = submit("empty", "planet,gravity,n_moons\n", single)
-      assert(!result.validationFailed)
-      assert(result.recordCounts == Map("planets" -> 0L))
-      assert(ErrorSink.readAllFeedbackErrors(spark, cfg.workingDir).count() == 0)
-      assert(audit.statusOf("empty").contains("finished"))
-    }
+  test("a header-only submission finishes with nothing to report (per-entity layout)") {
+    val (result, cfg, audit) = submit("empty", "planet,gravity,n_moons\n")
+    assert(!result.validationFailed)
+    assert(result.recordCounts == Map("planets" -> 0L))
+    assert(ErrorSink.readAllFeedbackErrors(spark, cfg.workingDir).count() == 0)
+    assert(audit.statusOf("empty").contains("finished"))
   }
 }

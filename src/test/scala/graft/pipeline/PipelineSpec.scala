@@ -259,28 +259,54 @@ class PipelineSpec extends PlanetsFixture {
     assert(audit.submissionsAtStatus("error_report").count() == 1L)
   }
 
-  test("single-table session clone inherits caller runtime confs") {
-    // newSession() resets runtime SQL confs to builder defaults — the
-    // layout clone must copy them or the two layouts silently diverge in
-    // SQL behavior (timezone-sensitive casts, shuffle sizing, ...)
-    val tzBefore = spark.conf.get("spark.sql.session.timeZone")
-    val spBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val clone = Pipeline.sessionFor(spark, singleTableLayout = true)
-      assert(clone ne spark)
-      assert(clone.conf.get("spark.sql.session.timeZone") == "America/New_York")
-      assert(clone.conf.get("spark.sql.shuffle.partitions") == "7")
-      // the one intended divergence: interpreted mode for many-tiny-branch plans
-      assert(clone.conf.get("spark.sql.codegen.wholeStage") == "false")
-      assert(spark.conf.get("spark.sql.codegen.wholeStage", "true") == "true")
-      // default layout keeps the caller's session untouched
-      assert(Pipeline.sessionFor(spark, singleTableLayout = false) eq spark)
-    } finally {
-      spark.conf.set("spark.sql.session.timeZone", tzBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", spBefore)
+  /** Messages of the streaming-sink metadata probe that mention `marker`,
+    * logged while `f` runs. The probe stats a single read path literally
+    * and logs a WARN with a stack trace when that fails.
+    */
+  private def sinkWarnings(marker: String)(f: => Any): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val logger = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val appender = new AbstractAppender("graft-sink-warnings", null, null, true,
+      Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains(marker)) seen.add(msg)
+      }
     }
+    appender.start()
+    val lc = new LoggerConfig(logger, Level.WARN, true)
+    lc.addAppender(appender, Level.WARN, null)
+    config.addLogger(logger, lc)
+    ctx.updateLoggers()
+    try {
+      f
+      seen.toArray(Array.empty[String]).toSeq
+    } finally {
+      config.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("a run's message reads log no metadata-directory WARN") {
+    val base = freshDir()
+    val cfg = planetsSubmission(base, "sub-quiet-read", s"$base/audit")
+    val warnings = sinkWarnings(base)(Pipeline.run(spark, cfg))
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+    def readGlob() = spark.read.schema(graft.rules.Messages.schema)
+      .json(s"${cfg.workingDir}/errors/*_errors.jsonl")
+    // the probe does warn on the glob string itself: the appender is live
+    assert(sinkWarnings(base)(readGlob()).nonEmpty)
+    // same rows as the glob read: 2 contract + 2 rule messages
+    val all = ErrorSink.readAllFeedbackErrors(spark, cfg.workingDir)
+    assert(all.count() == 4L)
+    assert(sortedRows(all) == sortedRows(readGlob()))
   }
 }
 

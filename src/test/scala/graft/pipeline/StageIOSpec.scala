@@ -3,23 +3,21 @@ package graft.pipeline
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
-/** The single-table stage layout's load-bearing properties: the JSON payload
-  * codec must round-trip EVERY contract type exactly (a lossy codec would
-  * silently corrupt stage checkpoints), heterogeneous schemas must coexist
-  * in one table, and the manifest must survive a JVM restart (stage
-  * restartability is part of the pipeline contract).
+/** Per-entity stage checkpoints read back through [[StageIO.readStage]]:
+  * the schema comes from a part file's footer, so it must be exactly the
+  * written schema for every contract type, and a checkpoint without a part
+  * file must fail rather than read as empty.
   */
 class StageIOSpec extends SparkSpec {
 
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft_stageio_").toString
 
-  test("heterogeneous entities round-trip exactly through one table") {
-    val dir = freshDir() + "/stage"
+  test("a per-entity checkpoint of every contract type reads back with its written schema") {
+    val base = freshDir()
     val aSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("name", StringType),
@@ -32,7 +30,7 @@ class StageIOSpec extends SparkSpec {
         Row(2L, null, Double.MaxValue, null, false)),
       aSchema)
     val bSchema = StructType(Seq(
-      StructField("id", LongType), // same name, SAME table, different entity
+      StructField("id", LongType),
       StructField("ts", TimestampType),
       StructField("d", DateType),
       StructField("tags", ArrayType(StringType)),
@@ -44,47 +42,24 @@ class StageIOSpec extends SparkSpec {
           Date.valueOf("2024-03-01"), Seq("p", "q"), Row(7, "z")),
         Row(11L, null, null, null, null)),
       bSchema)
-    StageIO.writeEntities(spark, dir, Seq("ent_a" -> a, "ent_b" -> b))
-
-    val backA = StageIO.readEntity(spark, dir, "ent_a")
-    assert(backA.schema == aSchema)
-    assert(rows(backA) == rows(a))
-    val backB = StageIO.readEntity(spark, dir, "ent_b")
-    assert(backB.schema == bSchema)
-    // micro-precision timestamps survive (default JSON format drops micros)
-    assert(rows(backB) == rows(b))
-    assert(StageIO.entityNames(spark, dir) == Seq("ent_a", "ent_b"))
-    assert(StageIO.entityCounts(spark, dir) == Map("ent_a" -> 2L, "ent_b" -> 2L))
-  }
-
-  test("an empty entity keeps its schema and counts as zero") {
-    val dir = freshDir() + "/stage"
-    import spark.implicits._
-    val full = Seq((1L, "x")).toDF("id", "v")
-    val empty = full.where(lit(false))
-    StageIO.writeEntities(spark, dir, Seq("full" -> full, "none" -> empty))
-    // no partition dir lands for the empty entity — schema comes from the
-    // manifest, count from the caller-side zero fill. from_json relaxes
-    // every field to nullable (JSON carries no non-null guarantee) — names
-    // and types are the layout's schema contract, nullability is not.
-    val back = StageIO.readEntity(spark, dir, "none")
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      empty.schema.map(f => (f.name, f.dataType)))
-    assert(back.count() == 0L)
-    assert(StageIO.entityCounts(spark, dir) == Map("full" -> 1L))
-    assert(StageIO.entityNames(spark, dir) == Seq("full", "none"))
-  }
-
-  test("manifest parser round-trips escapes and rejects unknown entities") {
-    val parsed = StageIO.parseFlatJson(
-      """{"a\"b":"v1","tab\there":"line\nbreak","u":"A"}""")
-    assert(parsed == scala.collection.immutable.ListMap(
-      "a\"b" -> "v1", "tab\there" -> "line\nbreak", "u" -> "A"))
-    val dir = freshDir() + "/stage"
-    import spark.implicits._
-    StageIO.writeEntities(spark, dir, Seq("only" -> Seq(1).toDF("x")))
-    intercept[IllegalArgumentException] {
-      StageIO.readEntity(spark, dir, "missing")
+    for ((name, df, schema) <- Seq(("ent_a", a, aSchema), ("ent_b", b, bSchema))) {
+      val dir = s"$base/data_contract/$name"
+      df.write.parquet(dir)
+      val back = StageIO.readStage(spark, dir)
+      // StructField equality covers names, types, nullability and metadata
+      assert(back.schema == schema)
+      assert(back.schema == spark.read.parquet(dir).schema)
+      // micro-precision timestamps, exact decimals, nested nulls
+      assert(rows(back) == rows(df))
     }
+  }
+
+  test("a checkpoint directory without a part file fails instead of reading empty") {
+    val dir = java.nio.file.Path.of(freshDir(), "transform", "ent")
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))
+    java.nio.file.Files.createFile(dir.resolve(".part-00000.crc"))
+    val e = intercept[IllegalStateException](StageIO.readStage(spark, dir.toString))
+    assert(e.getMessage.contains("no part file"))
   }
 }
