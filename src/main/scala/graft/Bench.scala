@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failures are reported in an "errors" object (never
@@ -9,33 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKByAgg (ObjectHashAggregate) keeps O(k) state per group; the
-      // default 128-group fallback-to-sort defeats its map-side combine on
-      // wide tasks. 16M groups x ~200 B is well inside executor memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      // InferFiltersFromGenerate synthesizes `size(e)>0 && isnotnull(e)`
-      // below every explode(e); predicate pushdown then substitutes the
-      // FULL generator-input expression through the projections down to the
-      // scan, so each row evaluates the tree twice — and on the contract
-      // family the duplicated error-array tree made one 15k-line
-      // processNext() that failed janino's 64KB method limit, silently
-      // running the whole stage INTERPRETED (1.08MB codegen span, CgProbe
-      // r16). explode already emits nothing for empty/null arrays, so the
-      // inferred filter never changes results; every generator input in
-      // this engine is a computed expression (split/transform/concat), so
-      // the filter can never become a cheap scan-level prune here. Same
-      // rationale as the optimization guide's "optimizer duplicates
-      // expensive expressions below filters" caveat (guide section 4.4).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warmup: pay JVM/codegen/scheduler init outside the timed loop.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // Fixture pre-build: reader/bucketed fixtures are sf-dir-derived test

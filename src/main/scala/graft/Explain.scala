@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection main: prints the formatted physical plan of the named
   * queries (all, when none named) at SPARK_GRAFT_SF_DIR — the feedback loop
@@ -8,19 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench/Verify: inferred generate-filters re-inline generator
-      // inputs below the projections (rationale in Bench.scala).
-      // -Dgraft.explain.excludedRules= (empty) prints the rule-on plan for
-      // before/after captures.
-      .config("spark.sql.optimizer.excludedRules",
-        sys.props.getOrElse("graft.explain.excludedRules",
-          "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

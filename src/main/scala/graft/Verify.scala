@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,24 +16,7 @@ object Verify {
         (n: String) => subs.exists(s =>
           if (s.startsWith("=")) n == s.drop(1) else n.contains(s))
       } else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKByAgg (ObjectHashAggregate) keeps O(k) state per group; the
-      // default 128-group fallback-to-sort defeats its map-side combine on
-      // wide tasks. 16M groups x ~200 B is well inside executor memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      // exclude InferFiltersFromGenerate: its inferred size()>0 filter
-      // re-inlines the full generator-input tree below the projections
-      // (janino-failing 1MB spans on the contract family) and never changes
-      // results — see the rationale comment in Bench.scala
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Single-file dumps are the driver-friendly default, but a billion-row
     // frame (q_dedup_simhash_pairs at sf3+) through one write task is the
@@ -52,6 +34,14 @@ object Verify {
       }
       finally spark.catalog.clearCache() // no cross-query cache accumulation
     }
+    writeOracle(outDir, nameFilter)
+    spark.stop()
+  }
+
+  /** Writes `oracle_sql.json` and the `oracle_compare.json` sidecar for the
+    * queries `keep` selects — the files the DuckDB compare reads.
+    */
+  def writeOracle(outDir: String, keep: String => Boolean): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -64,19 +54,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => nameFilter(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kv: Map[String, String]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter(kv => keep(kv._1))))
     // compare-mode overrides (subset_recall for probabilistic operators);
     // checkers without support ignore the sidecar and compare exact.
     // Always clear any pre-existing sidecar first: a reused outDir must not
     // keep a stale mode map — a query later reverted to exact semantics
     // would otherwise be silently checked with the weaker subset_recall.
     Files.deleteIfExists(Paths.get(s"$outDir/oracle_compare.json"))
-    val modes = SparkEntry.oracleCompare.filter(kv => nameFilter(kv._1))
+    val modes = SparkEntry.oracleCompare.filter(kv => keep(kv._1))
     if (modes.nonEmpty)
-      Files.writeString(Paths.get(s"$outDir/oracle_compare.json"),
-        modes.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    spark.stop()
+      Files.writeString(Paths.get(s"$outDir/oracle_compare.json"), obj(modes))
   }
 }

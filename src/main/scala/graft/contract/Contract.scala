@@ -755,7 +755,7 @@ object Contract {
     // attribute-level predicate it costs nothing and pushes isnotnull into
     // the scan. (InferFiltersFromGenerate used to synthesize it; the rule is
     // excluded session-wide because on COMPUTED generator inputs its filter
-    // re-inlines the whole tree below the projections — see Bench.scala.
+    // re-inlines the whole tree below the projections — see GraftSession.
     // Here the input is a plain column, the one case where it was a win.)
     val elems = df.where(raw.isNotNull && size(raw) > 0)
       .select(baseCols ++ Seq(posexplode(raw).as(Seq("__pos__", "__elem__"))): _*)

@@ -375,11 +375,7 @@ object StreamingQueries {
       // reference re-derivations.
       val nFiles = Option(new java.io.File(landing).listFiles())
         .map(_.count(f => f.getName.startsWith("part-"))).getOrElse(1)
-      // graft.stream.crossBatches overrides the target batch count (A/B
-      // probes measuring how cost scales with batches; default 3)
-      val targetBatches = sys.props.get("graft.stream.crossBatches")
-        .map(_.toInt).getOrElse(3)
-      val perTrigger = math.max(1, nFiles / math.max(1, targetBatches))
+      val perTrigger = math.max(1, nFiles / 3)
       val src = s.readStream.schema(s.read.parquet(landing).schema)
         .option("maxFilesPerTrigger", perTrigger).parquet(landing)
       val q = Streaming.crossDedupSink(src, reference,

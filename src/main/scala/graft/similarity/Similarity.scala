@@ -423,70 +423,68 @@ object Similarity {
         def rawPairs = x.join(y, Seq("bucket")).where(col("a") < col("b") &&
             firstSharedProbeBucket(col("__ca__"), col("__cb__"), col("bucket")))
           .select(col("a"), col("b"))
-        if (graft.text.Dedup.verifyScaled) {
-          // Demand-scaled verify parallelism, both vector-join exchanges
-          // pinned (see Dedup.verifyPartitions): the exchanges below carry
-          // a vector PER PAIR, and a fixed session partition count turns
-          // into spill thrash once bucket occupancy makes candidates
-          // outgrow it (the sf3 probe measured the cliff on the shingle
-          // verify). Unlike the shingle paths, the demand signal here is
-          // an UPPER BOUND computed from bucket occupancies — one narrow
-          // aggregation over the coded rows (Σ n·(n-1)/2) instead of
-          // materializing + counting the candidate frame itself, which
-          // cost ~10 s at sf1 for no spill protection the bound doesn't
-          // already give (over-provisioning partitions is cheap).
-          val rawMass = coded.groupBy(col("bucket"))
-            .agg(count(lit(1)).as("__n__"))
-            .agg(coalesce(sum(col("__n__") * (col("__n__") - 1) / 2), lit(0)).cast("long"))
-            .head.getLong(0)
-          // each distinct pair is counted once PER shared probe bucket
-          // (multiprobe emits numPlanes+1 codes per vector) — divide the
-          // mass down to a distinct-pair estimate; this is a provisioning
-          // signal, not a correctness bound, and the slack only moves the
-          // partition count. The first-shared-bucket filter collapses the
-          // rawMass join output to ~pairMass rows MAP-SIDE, so rawMass is
-          // now compute (codegen long ops inside the join task), not disk:
-          // the only exchanged rows on this path are the verify rows.
-          val pairMass = rawMass / (numPlanes + 1)
-          // Bounded-footprint chunking, embedding flavor: one verify
-          // exchange carries two ~64-dim vectors per pair (~0.5 KB/row),
-          // so pairMass × 0.5 KB can exceed free disk even with the
-          // pre-dedup mass gone (738M distinct pairs ≈ 370 GB at sf10's
-          // 8-plane/200k geometry). Chunk by hash(a): the slice filter
-          // pushes below the bucket join into the coded x side, each pass
-          // exchanges only its pairMass/K verify rows, released before the
-          // next pass. Fixed-plane occupancy grows quadratically with
-          // corpus — the production dial is more planes, but the operator
-          // must stay disk-bounded at any geometry.
-          val embedBudget = graft.text.Dedup.longProp("graft.verify.chunkRows")
-            .getOrElse(30000000L)
-          if (pairMass > embedBudget) {
-            val k = graft.text.Dedup.longProp("graft.verify.chunks").map(_.toInt)
-              .getOrElse(math.min(64L, math.max(1L, (pairMass + embedBudget - 1) / embedBudget)).toInt)
-            if (sys.props.get("graft.verify.debug").nonEmpty)
-              System.err.println(s"[verify] embed pairMass=$pairMass rawMass=$rawMass chunks=$k")
-            val n = graft.text.Dedup.verifyPartitions(spark, (pairMass + k - 1) / k, 500000L)
-            return graft.text.Dedup.chunkedVerify(rawPairs, k) { slice =>
-              scoreVerified(
-                slice.repartition(n, col("a"))
-                  .join(vecA, "a")
-                  .repartition(n, col("b"))
-                  .join(vecB, "b"),
-                threshold)
-            }
+        // Demand-scaled verify parallelism, both vector-join exchanges
+        // pinned (see Dedup.verifyPartitions): the exchanges below carry
+        // a vector PER PAIR, and a fixed session partition count turns
+        // into spill thrash once bucket occupancy makes candidates
+        // outgrow it (the sf3 probe measured the cliff on the shingle
+        // verify). Unlike the shingle paths, the demand signal here is
+        // an UPPER BOUND computed from bucket occupancies — one narrow
+        // aggregation over the coded rows (Σ n·(n-1)/2) instead of
+        // materializing + counting the candidate frame itself, which
+        // cost ~10 s at sf1 for no spill protection the bound doesn't
+        // already give (over-provisioning partitions is cheap).
+        val rawMass = coded.groupBy(col("bucket"))
+          .agg(count(lit(1)).as("__n__"))
+          .agg(coalesce(sum(col("__n__") * (col("__n__") - 1) / 2), lit(0)).cast("long"))
+          .head.getLong(0)
+        // each distinct pair is counted once PER shared probe bucket
+        // (multiprobe emits numPlanes+1 codes per vector) — divide the
+        // mass down to a distinct-pair estimate; this is a provisioning
+        // signal, not a correctness bound, and the slack only moves the
+        // partition count. The first-shared-bucket filter collapses the
+        // rawMass join output to ~pairMass rows MAP-SIDE, so rawMass is
+        // now compute (codegen long ops inside the join task), not disk:
+        // the only exchanged rows on this path are the verify rows.
+        val pairMass = rawMass / (numPlanes + 1)
+        // Bounded-footprint chunking, embedding flavor: one verify
+        // exchange carries two ~64-dim vectors per pair (~0.5 KB/row),
+        // so pairMass × 0.5 KB can exceed free disk even with the
+        // pre-dedup mass gone (738M distinct pairs ≈ 370 GB at sf10's
+        // 8-plane/200k geometry). Chunk by hash(a): the slice filter
+        // pushes below the bucket join into the coded x side, each pass
+        // exchanges only its pairMass/K verify rows, released before the
+        // next pass. Fixed-plane occupancy grows quadratically with
+        // corpus — the production dial is more planes, but the operator
+        // must stay disk-bounded at any geometry.
+        val embedBudget = graft.text.Dedup.longProp("graft.verify.chunkRows")
+          .getOrElse(30000000L)
+        if (pairMass > embedBudget) {
+          val k = graft.text.Dedup.longProp("graft.verify.chunks").map(_.toInt)
+            .getOrElse(math.min(64L, math.max(1L, (pairMass + embedBudget - 1) / embedBudget)).toInt)
+          if (sys.props.get("graft.verify.debug").nonEmpty)
+            System.err.println(s"[verify] embed pairMass=$pairMass rawMass=$rawMass chunks=$k")
+          val n = graft.text.Dedup.verifyPartitions(spark, (pairMass + k - 1) / k, 500000L)
+          return graft.text.Dedup.chunkedVerify(rawPairs, k) { slice =>
+            scoreVerified(
+              slice.repartition(n, col("a"))
+                .join(vecA, "a")
+                .repartition(n, col("b"))
+                .join(vecB, "b"),
+              threshold)
           }
-          // 500k rows/partition: a verify row carries two ~64-dim vectors
-          // (~0.5 KB) vs the shingle paths' 2-4 KB arrays
-          val n = graft.text.Dedup.verifyPartitions(spark, pairMass, 500000L)
-          val base = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-          // below the session baseline the pinned exchanges are pure
-          // overhead (~3 s measured at sf1) — keep the streaming plan there
-          if (n <= base) rawPairs.join(vecA, "a").join(vecB, "b")
-          else rawPairs.repartition(n, col("a"))
-            .join(vecA, "a")
-            .repartition(n, col("b"))
-            .join(vecB, "b")
-        } else rawPairs.join(vecA, "a").join(vecB, "b")
+        }
+        // 500k rows/partition: a verify row carries two ~64-dim vectors
+        // (~0.5 KB) vs the shingle paths' 2-4 KB arrays
+        val n = graft.text.Dedup.verifyPartitions(spark, pairMass, 500000L)
+        val base = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+        // below the session baseline the pinned exchanges are pure
+        // overhead (~3 s measured at sf1) — keep the streaming plan there
+        if (n <= base) rawPairs.join(vecA, "a").join(vecB, "b")
+        else rawPairs.repartition(n, col("a"))
+          .join(vecA, "a")
+          .repartition(n, col("b"))
+          .join(vecB, "b")
       }
     scoreVerified(scored, threshold)
   }

@@ -33,8 +33,8 @@ import org.apache.spark.sql.types._
   *
   * Memory: the in-flight hash state is O(groups-in-task × k); raise
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (default
-  * 128 groups) so wide tasks stay in hash mode — the Bench/Verify session
-  * builders set it; the sort-based fallback is correct, just slower.
+  * 128 groups) so wide tasks stay in hash mode — [[graft.GraftSession]]
+  * sets it; the sort-based fallback is correct, just slower.
   */
 final case class TopKByAgg(
     child: Expression,

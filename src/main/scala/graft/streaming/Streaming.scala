@@ -167,23 +167,6 @@ object Streaming {
       .trigger(trigger)
       .start()
 
-  /** CONTINUOUS-CRAWL near-dup detection: every micro-batch of incoming
-    * documents is checked against a TRAINED static reference corpus with
-    * the EXACT [[graft.text.Dedup.prefixFilterCrossJoin]] (prefix-token
-    * equi-join BETWEEN sides only — batch-internal duplicate mass
-    * generates no pairs), and the (a = new id, b = ref id, jaccard,
-    * batch_id) matches append to the sink. Exactness is per pair, so the
-    * appended union over micro-batches equals the batch cross join on the
-    * drained stream REGARDLESS of batch boundaries (the per-batch token
-    * order differs from the global one; any total order is complete — the
-    * banded minHash form's per-pair miss odds would instead compound with
-    * every batch). A batch doc is novel iff it has no row here —
-    * downstream anti-joins on `a`. This is the streaming front door of the
-    * incremental-ingest family ([[graft.text.IncrementalDedup]] is the
-    * Bloom-gated exact-match sibling); `foreachBatch` because the operator
-    * composes a bounded batch frame with a static frame per trigger —
-    * the persistent state is the reference, not stream state.
-    */
   /** SFT-feed front door: per-micro-batch chat-format validation. Each
     * conversation is ONE stream row (the turn array is a column), so the
     * batch [[graft.text.Conversations.validate]] applies unchanged inside
@@ -206,6 +189,23 @@ object Streaming {
       .trigger(trigger)
       .start()
 
+  /** CONTINUOUS-CRAWL near-dup detection: every micro-batch of incoming
+    * documents is checked against a TRAINED static reference corpus with
+    * the EXACT [[graft.text.Dedup.prefixFilterCrossJoin]] (prefix-token
+    * equi-join BETWEEN sides only — batch-internal duplicate mass
+    * generates no pairs), and the (a = new id, b = ref id, jaccard,
+    * batch_id) matches append to the sink. Exactness is per pair, so the
+    * appended union over micro-batches equals the batch cross join on the
+    * drained stream REGARDLESS of batch boundaries (the per-batch token
+    * order differs from the global one; any total order is complete — the
+    * banded minHash form's per-pair miss odds would instead compound with
+    * every batch). A batch doc is novel iff it has no row here —
+    * downstream anti-joins on `a`. This is the streaming front door of the
+    * incremental-ingest family ([[graft.text.IncrementalDedup]] is the
+    * Bloom-gated exact-match sibling); `foreachBatch` because the operator
+    * composes a bounded batch frame with a static frame per trigger —
+    * the persistent state is the reference, not stream state.
+    */
   def crossDedupSink(stream: DataFrame, reference: DataFrame,
                      idCol: String, textCol: String,
                      outPath: String, checkpointDir: String,
@@ -218,23 +218,13 @@ object Streaming {
     // is unchanged: the index freezes the shared token order to
     // (ref-corpus frequency, token), which the prefix-filter completeness
     // lemma accepts like any other total order (see the index's Scaladoc).
-    // graft.crossindex.disabled=true reverts to the r14 per-batch
-    // re-derivation (A/B adjudication on a noisy box + operational escape
-    // hatch, same pattern as graft.verify.scaled)
-    val useIndex = !sys.props.get("graft.crossindex.disabled").exists(_.toBoolean)
-    val index =
-      if (useIndex) Some(graft.text.Dedup.buildPrefixCrossIndex(
-        reference, idCol, textCol, threshold = threshold))
-      else None
+    val index = graft.text.Dedup.buildPrefixCrossIndex(
+      reference, idCol, textCol, threshold = threshold)
     val q = stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        def sink(pairs: DataFrame): Unit =
+        index.joinBatchWith(batch.toDF()) { pairs =>
           pairs.withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(outPath)
-        index match {
-          case Some(idx) => idx.joinBatchWith(batch.toDF())(sink)
-          case None => graft.text.Dedup.prefixFilterCrossJoinWith(
-            batch.toDF(), reference, idCol, textCol, threshold = threshold)(sink)
         }
         ()
       }
@@ -252,7 +242,7 @@ object Streaming {
         override def onQueryTerminated(
             e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
           if (e.id == q.id) {
-            index.foreach(_.release())
+            index.release()
             stream.sparkSession.streams.removeListener(this)
           }
       })

@@ -329,19 +329,6 @@ object Dedup {
     // collapse it onto one task (measured serial at sf0.1). The second pin
     // matters as much as the first: without it the exchange that hauls
     // sh_a to the b-side join falls back to the session partition count.
-    // `graft.verify.scaled=false` reverts to the fixed-count plan (A/B
-    // adjudication on a noisy box + operational escape hatch).
-    if (!verifyScaled) {
-      val n = candidates.sparkSession
-        .conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val result = keepJaccardAtLeast(
-          candidates.repartition(n, col("a"))
-            .join(left, "a")
-            .join(right, "b"),
-          threshold)
-        .select(col("a"), col("b"), col("jaccard"))
-      return (result, candidates.limit(0))
-    }
     val cand = candidates
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cnt = cand.count()
@@ -360,12 +347,6 @@ object Dedup {
     }
     (result, cand)
   }
-
-  /** Demand-scaled verify parallelism on/off (default on) — see
-    * [[verifyPairsOwned]]/[[verifyPartitions]].
-    */
-  private[graft] def verifyScaled: Boolean =
-    sys.props.getOrElse("graft.verify.scaled", "true").toBoolean
 
   /** Widen degenerate input partitioning before CPU-heavy per-row work: a
     * single small parquet file arrives as ONE partition, serializing the
@@ -913,15 +894,6 @@ object Dedup {
                                    batchRows: Long): (DataFrame, DataFrame) = {
       val spark = candidates.sparkSession
       val left = shNew.select(col(idCol).as("a"), sort_array(col("sh")).as("sh_a"))
-      if (!verifyScaled) {
-        val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-        val result = keepJaccardAtLeast(
-            candidates.repartition(n, col("a")).join(left, "a")
-              .join(refVerify, "b"),
-            threshold)
-          .select(col("a"), col("b"), col("jaccard"))
-        return (result, candidates.limit(0))
-      }
       val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cnt = cand.count()
       val k = verifyChunkCount(cnt)
@@ -1044,7 +1016,9 @@ object Dedup {
         val posts = rk.postings.value
         val refSh = rk.refShingles.value
         it.flatMap { r =>
-          if (r.isNullAt(1)) Iterator.empty
+          // self-join mode: a null id on either side fails the expression
+          // plan's a < b, so its pairs are dropped here too
+          if (r.isNullAt(1) || (selfOrdered && r.isNullAt(0))) Iterator.empty
           else {
             val a = r.get(0)
             // self-join mode (one corpus on both sides): keep only a < b,
@@ -1069,8 +1043,8 @@ object Dedup {
                     val szY = post.sz(j)
                     // pair orientation (self mode), then length filter
                     // (both directions), then position filter
-                    if ((!selfOrdered ||
-                          aLong < post.ids(j).asInstanceOf[Number].longValue()) &&
+                    if ((!selfOrdered || (post.ids(j) != null &&
+                          aLong < post.ids(j).asInstanceOf[Number].longValue())) &&
                         szY >= math.ceil(t * n - 1e-9) &&
                         n >= math.ceil(t * szY - 1e-9)) {
                       val alpha = math.ceil(tFrac * (n + szY) - 1e-9)
@@ -1475,15 +1449,12 @@ object Dedup {
     // — dedupe the id-only candidates BEFORE hauling both shingle arrays
     // through the verify joins; unlike prefixFilterJoin's ~5%-dup position
     // filter, duplication here scales with the overlap itself.
-    val candidates0 = prefixes.join(full,
+    val candidates = prefixes.join(full,
         prefixes("tok") === full("tok") && col("a") =!= col("b")
           && col("b_sz") >= ceil(lit(threshold) * col("a_sz") - lit(1e-9)))
       .select(col("a"), col("b"))
       .dropDuplicates("a", "b")
-    val candidates =
-      if (verifyScaled)
-        candidates0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else candidates0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val left = withShingles.select(col(idCol).as("a"), sort_array(col("sh")).as("sh_a"))
     val right = withShingles.select(col(idCol).as("b"), sort_array(col("sh")).as("sh_b"))
     val spark = withShingles.sparkSession
@@ -1492,20 +1463,17 @@ object Dedup {
     // 21 s; the persist keeps candidate generation at one execution), and
     // bounded-footprint K-pass chunking past the single-pass disk budget
     // (the sf10 ENOSPC wall — see [[verifyChunkCount]]/[[chunkedVerify]])
-    val cnt = if (verifyScaled) candidates.count() else 0L
-    val k = if (verifyScaled) verifyChunkCount(cnt) else 1
-    if (verifyScaled && sys.props.get("graft.verify.debug").nonEmpty)
+    val cnt = candidates.count()
+    val k = verifyChunkCount(cnt)
+    if (sys.props.get("graft.verify.debug").nonEmpty)
       System.err.println(s"[verify] containment candidates=$cnt chunks=$k")
-    val n =
-      if (verifyScaled) verifyPartitions(spark, (cnt + k - 1) / k)
-      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val n = verifyPartitions(spark, (cnt + k - 1) / k)
     // early-exit verify: C(a->b) >= t needs an intersection of at least
     // ceil(t * |a|) (one-sided denominator; same ceil guard as alpha)
     val neededC = ceil(lit(threshold) * size(col("sh_a")).cast("double") - lit(1e-9)).cast("int")
     def onePass(slice: DataFrame): DataFrame = {
-      val afterLeft = slice.repartition(n, col("a")).join(left, "a")
-      (if (verifyScaled) afterLeft.repartition(n, col("b")) else afterLeft)
-        .join(right, "b")
+      slice.repartition(n, col("a")).join(left, "a")
+        .repartition(n, col("b")).join(right, "b")
         .withColumn("__graft_i__",
           SortedIntersectCountExpr.sortedIntersectAtLeast(col("sh_a"), col("sh_b"), neededC))
         .where(col("__graft_i__") >= 0)
@@ -1568,15 +1536,11 @@ object Dedup {
     * checkpoint blocks are dropped eagerly; the LAST one is released by the
     * returned thunk once the caller has consumed the labels. (Unpersisting
     * a localCheckpointed RDD that will never be recomputed is safe;
-    * recomputing one is not — hence thunk-on-consume.) Cadence overridable
-    * via -Dgraft.cc.checkpointEvery (k>1 restores the persist-per-round /
-    * checkpoint-every-k flow for A/B probes).
+    * recomputing one is not — hence thunk-on-consume.)
     */
   private[graft] def connectedComponentsImpl(nodes: DataFrame, edges: DataFrame,
                                              idCol: String, maxRounds: Int
                                             ): (DataFrame, () => Unit, Boolean) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val checkpointEvery = sys.props.get("graft.cc.checkpointEvery").map(_.toInt).getOrElse(1)
     def cpRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
       df.queryExecution.analyzed.collectFirst {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -1588,10 +1552,6 @@ object Dedup {
     var labels = nodes.select(col(idCol).as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint()
     var lastCp: Option[org.apache.spark.rdd.RDD[_]] = cpRdd(labels)
-    // `owned` is the persisted HANDLE of the off-cadence flow (k>1) —
-    // unpersisting a derived frame (e.g. a drop() projection) is a silent
-    // no-op because the cached plan no longer sameResult's it
-    var owned: Option[DataFrame] = None
     var round = 0
     var changed = 1L
     val ccDebug = sys.props.get("graft.cc.debug").nonEmpty
@@ -1605,24 +1565,14 @@ object Dedup {
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
           (coalesce(col("nmin"), col("label")) < col("label")).as("__chg__"))
-      if ((round + 1) % checkpointEvery == 0) {
-        // checkpoint FIRST (the round's one materialization, eager), then
-        // count convergence over the checkpoint blocks — no CacheManager
-        // entry, no cachedName toString, constant-size plans throughout
-        val cp = next.localCheckpoint()
-        changed = cp.agg(count(when(col("__chg__"), true))).head().getLong(0)
-        owned.foreach(_.unpersist(blocking = false))
-        lastCp.foreach(_.unpersist(blocking = false)) // superseded checkpoint
-        lastCp = cpRdd(cp)
-        owned = None
-        labels = cp.drop("__chg__")
-      } else {
-        val nextP = next.persist(lvl)
-        changed = nextP.agg(count(when(col("__chg__"), true))).head().getLong(0)
-        owned.foreach(_.unpersist(blocking = false))
-        owned = Some(nextP)
-        labels = nextP.drop("__chg__")
-      }
+      // checkpoint FIRST (the round's one materialization, eager), then
+      // count convergence over the checkpoint blocks — no CacheManager
+      // entry, no cachedName toString, constant-size plans throughout
+      val cp = next.localCheckpoint()
+      changed = cp.agg(count(when(col("__chg__"), true))).head().getLong(0)
+      lastCp.foreach(_.unpersist(blocking = false)) // superseded checkpoint
+      lastCp = cpRdd(cp)
+      labels = cp.drop("__chg__")
       round += 1
       if (ccDebug) System.err.println(
         f"[components] round $round: ${(System.nanoTime() - roundT0) / 1e9}%.1f s changed=$changed")
@@ -1638,12 +1588,8 @@ object Dedup {
       System.err.println(s"[components] label propagation did NOT converge in " +
         s"$maxRounds rounds ($changed labels still changing) — a component with " +
         s"diameter > $maxRounds carries PARTIAL labels; raise maxRounds")
-    val finalOwned = owned
     val finalCp = lastCp
-    val release = () => {
-      finalOwned.foreach(_.unpersist(blocking = false))
-      finalCp.foreach(_.unpersist(blocking = false))
-    }
+    val release = () => finalCp.foreach(_.unpersist(blocking = false))
     (labels.withColumnRenamed("id", idCol).withColumnRenamed("label", "component"),
       release, converged)
   }
@@ -1916,23 +1862,21 @@ object Dedup {
     // Only the quadratic rep-pair stage is chunked; the member fan-out
     // below runs once over the Hamming-filtered survivors (output-bounded,
     // and `members` — possibly a decode lane — is not recomputed per pass).
-    val survivors =
-      if (!verifyScaled) repPairsFrom(keyed, keyed)
+    val survivors = {
+      val mass = pairMassBound(keyed, col("ci"), col("cv"))
+      val k = verifyChunkCount(mass)
+      if (sys.props.get("graft.verify.debug").nonEmpty)
+        System.err.println(s"[verify] hamming pairMass=$mass chunks=$k")
+      if (k <= 1) repPairsFrom(keyed, keyed)
       else {
-        val mass = pairMassBound(keyed, col("ci"), col("cv"))
-        val k = verifyChunkCount(mass)
-        if (sys.props.get("graft.verify.debug").nonEmpty)
-          System.err.println(s"[verify] hamming pairMass=$mass chunks=$k")
-        if (k <= 1) repPairsFrom(keyed, keyed)
-        else {
-          val keyedP = keyed
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          keyedP.count() // materialize once for the K x-slices + full y side
-          try chunkedVerifyOn(keyedP, k, col("rep"))(xSlice =>
-            repPairsFrom(xSlice, keyedP))
-          finally keyedP.unpersist(blocking = false) // passes ran eagerly
-        }
+        val keyedP = keyed
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        keyedP.count() // materialize once for the K x-slices + full y side
+        try chunkedVerifyOn(keyedP, k, col("rep"))(xSlice =>
+          repPairsFrom(xSlice, keyedP))
+        finally keyedP.unpersist(blocking = false) // passes ran eagerly
       }
+    }
     // Fan the surviving signature pairs back out to member pairs — two
     // shuffle joins keyed on the signature, output-bounded by the true
     // pair count.

@@ -65,8 +65,6 @@ object EditDistance {
       .select(col("a"), col("b"), col("edit_distance").cast("bigint"))
     val cand0 = half("__pk__").unionByName(half("__sk__"))
       .dropDuplicates("a", "b")
-    if (!graft.text.Dedup.verifyScaled)
-      return verify(cand0.join(tA, "a").join(tB, "b"))
     // persist + count the candidate frame once: the count picks the chunk
     // count and sizes the verify exchanges, and the cache keeps candidate
     // generation single-execution across the K passes (same discipline as

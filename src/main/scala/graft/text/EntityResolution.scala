@@ -70,6 +70,18 @@ object EntityResolution {
     cross.unionByName(exact)
   }
 
+  /** The value graph [[resolveClusters]] runs components over: one node
+    * per distinct value (`__vid__`, the value itself) and the candidate
+    * edit-distance pairs between them.
+    */
+  private[text] def valuePairs(records: DataFrame, valueCol: String, maxDist: Int,
+                               keyLen: Int): (DataFrame, DataFrame) = {
+    val distinctVals = records.select(col(valueCol).as("__val__")).distinct()
+      .select(col("__val__").as("__vid__"), col("__val__"))
+    (distinctVals.select(col("__vid__")),
+      EditDistance.editDistancePairs(distinctVals, "__vid__", "__val__", maxDist, keyLen))
+  }
+
   /** Full entity resolution: candidate pairs → connected components →
     * one surviving record per entity cluster. Output is one row per input
     * record with its `entity_id` (the cluster's minimum record id) and a
@@ -84,14 +96,10 @@ object EntityResolution {
                       score: Column, maxDist: Int, keyLen: Int = 32): DataFrame = {
     val ids = records.select(col(idCol).as("__eid__"), col(valueCol).as("__val__"),
       score.as("__score__"))
-    val distinctVals = ids.select(col("__val__")).distinct()
-      .select(col("__val__").as("__vid__"), col("__val__"))
-    val valuePairs = EditDistance.editDistancePairs(
-      distinctVals, "__vid__", "__val__", maxDist, keyLen)
+    val (nodes, edges) = valuePairs(records, valueCol, maxDist, keyLen)
     // Min-label propagation over distinct values; labels are value strings
     // (the cluster's lexicographic-minimum value — an opaque cluster key).
-    val valueComp = Dedup.connectedComponents(
-      distinctVals.select(col("__vid__")), valuePairs, "__vid__")
+    val valueComp = Dedup.connectedComponents(nodes, edges, "__vid__")
     // A record with a NULL value links to nothing (null generates no
     // blocking key and no exact match), but must still appear in the
     // output: it is its OWN singleton entity. Handled as a separate lane --

@@ -59,13 +59,9 @@ object EntityProbe {
     val rows = args.headOption.map(_.toInt).getOrElse(50)
     val ns = if (args.length > 1) args(1).split(",").map(_.trim.toInt).toSeq else Seq(10, 50, 100)
     val par = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
+    // 32 partitions whatever the core count, as in the SCALE.md entity runs
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     val base = "/tmp/graft_entprobe"
     org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(base), true)

@@ -26,13 +26,10 @@ object GenScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
+    // fixed 32 partitions whatever the core count: regenerated fixtures keep
+    // the part-file layout the committed scale runs measured
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     generate(spark, src, dst, factor)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Write SparkEntry.oracleSql as oracle_sql.json WITHOUT re-running any
   * query — repairs/refreshes a verify dump's oracle file after a
   * name-filtered partial re-dump (which rewrites the file with only the
@@ -11,27 +9,8 @@ import java.nio.file.{Files, Paths}
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    println(s"wrote ${graft.SparkEntry.oracleSql.size} oracle entries to $outDir/oracle_sql.json")
-    // clear first: a stale sidecar in a reused outDir would silently check
-    // a reverted-to-exact query with the weaker subset_recall mode
-    Files.deleteIfExists(Paths.get(s"$outDir/oracle_compare.json"))
-    val modes = graft.SparkEntry.oracleCompare
-    if (modes.nonEmpty) {
-      Files.writeString(Paths.get(s"$outDir/oracle_compare.json"),
-        modes.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-      println(s"wrote ${modes.size} compare-mode entries to $outDir/oracle_compare.json")
-    }
+    graft.Verify.writeOracle(outDir, _ => true)
+    println(s"wrote ${graft.SparkEntry.oracleSql.size} oracle entries and " +
+      s"${graft.SparkEntry.oracleCompare.size} compare-mode entries to $outDir")
   }
 }

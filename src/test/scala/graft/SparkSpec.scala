@@ -38,19 +38,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench/Verify: inferred generate-filters re-inline generator
-      // inputs below the projections (rationale in Bench.scala)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine the oracle certifies, on 4 cores whatever the machine has:
+    * partition counts, and so the plans the specs pin, stay fixed. */
+  lazy val session: SparkSession = GraftSession.local(4)
 }

@@ -6,19 +6,22 @@ import org.apache.spark.sql.functions._
 /** TopKByAgg vs the window row_number idiom it replaces: identical row
   * selection, rank numbering and ordering on random data with heavy ties,
   * across partial/merge paths (forced multi-partition input) and the
-  * sort-based fallback (threshold left at its tiny test default).
+  * sort-based fallback. The shared session carries the engine's 16M-group
+  * fallback threshold, so the fallback case runs on a session of its own
+  * with the threshold set low, and asserts that the fallback really ran.
   */
 class TopKAggSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def randomScored(n: Int, groups: Int, seed: Int) = {
+  private def randomScored(n: Int, groups: Int, seed: Int,
+                           session: org.apache.spark.sql.SparkSession = spark) = {
     val rnd = new scala.util.Random(seed)
     // coarse scores force ties so the tiebreak path is exercised
-    (0 until n).map { i =>
+    session.createDataFrame((0 until n).map { i =>
       (rnd.nextInt(groups).toLong, (i * 2654435761L) % 1000003L,
         math.rint(rnd.nextDouble() * 20) / 20.0)
-    }.toDF("query_id", "neighbor_id", "cosine").repartition(7)
+    }).toDF("query_id", "neighbor_id", "cosine").repartition(7)
   }
 
   private def windowTopK(df: org.apache.spark.sql.DataFrame, k: Int,
@@ -32,14 +35,17 @@ class TopKAggSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect().toSet
   }
 
-  private def aggTopK(df: org.apache.spark.sql.DataFrame, k: Int,
-                      asc: Boolean) =
+  private def aggTopKFrame(df: org.apache.spark.sql.DataFrame, k: Int,
+                           asc: Boolean) =
     df.groupBy(col("query_id"))
       .agg(TopKByAgg.topKBy(struct(col("cosine"), col("neighbor_id")), k, asc).as("t"))
       .select(col("query_id"), posexplode(col("t")).as(Seq("p", "e")))
       .select(col("query_id"), col("e.neighbor_id"), (col("p") + 1).cast("long").as("rank"),
         col("e.cosine"))
-      .as[(Long, Long, Long, Double)].collect().toSet
+      .as[(Long, Long, Long, Double)]
+
+  private def aggTopK(df: org.apache.spark.sql.DataFrame, k: Int,
+                      asc: Boolean) = aggTopKFrame(df, k, asc).collect().toSet
 
   test("equals window row_number on random tied data (desc and asc, several k)") {
     val df = randomScored(20000, 37, seed = 11).cache()
@@ -48,6 +54,26 @@ class TopKAggSpec extends SparkSpec {
         val w = windowTopK(df, k, asc)
         val a = aggTopK(df, k, asc)
         assert(a == w, s"k=$k asc=$asc: ${(a diff w).take(3)} vs ${(w diff a).take(3)}")
+      }
+    } finally df.unpersist()
+  }
+
+  test("sort-based fallback equals window row_number, and the fallback runs") {
+    val low = spark.newSession()
+    low.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2")
+    val df = randomScored(20000, 37, seed = 11, session = low).cache()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    try {
+      for (k <- Seq(1, 3, 17); asc <- Seq(false, true)) {
+        val frame = aggTopKFrame(df, k, asc)
+        val a = frame.collect().toSet
+        val w = windowTopK(df, k, asc)
+        assert(a == w, s"k=$k asc=$asc: ${(a diff w).take(3)} vs ${(w diff a).take(3)}")
+        val fellBack = helper.collect(frame.queryExecution.executedPlan) {
+          case agg: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec =>
+            agg.metrics("numTasksFallBacked").value
+        }.sum
+        assert(fellBack > 0, s"k=$k asc=$asc: no task fell back to sort-based aggregation")
       }
     } finally df.unpersist()
   }

@@ -182,6 +182,32 @@ class DedupSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  test("prefixFilterJoin tier-1 self kernel drops null ids like the expression pipeline") {
+    spark.catalog.clearCache()
+    // a null id on either side of a near-dup pair: the expression plan's
+    // a < b drops the pair, and the kernel must not throw on it
+    val withNull = Seq[(Option[Long], String)](
+      (Some(1L), "the quick brown fox jumps over the lazy dog tonight"),
+      (None, "the quick brown fox jumps over the lazy cat tonight"),
+      (Some(4L), "the quick brown fox jumps over the lazy dog tonight"),
+      (Some(5L), "short text")).toDF("doc_id", "text")
+    def run(): Set[(Long, Long, Double)] =
+      Dedup.prefixFilterJoinWith(withNull, "doc_id", "text", 3, 0.5)(
+        _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet)
+    val prev = Seq("graft.ppjoin.broadcastRows", "graft.ppjoin.kernel")
+      .map(k => k -> sys.props.get(k))
+    try {
+      sys.props("graft.ppjoin.broadcastRows") = "1000000" // force tier 1
+      val kernel = run()
+      sys.props("graft.ppjoin.kernel") = "off"
+      assert(kernel == run())
+      assert(kernel.map(t => (t._1, t._2)) == Set((1L, 4L)))
+    } finally prev.foreach { case (k, v) =>
+      v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("PrefixCrossIndex tiers 2 and 3 (forced gates) equal the one-shot join") {
     spark.catalog.clearCache()
     // the default gates put any test-sized corpus on the tier-1 broadcast

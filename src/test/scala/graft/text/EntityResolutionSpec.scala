@@ -63,11 +63,8 @@ class EntityResolutionSpec extends SparkSpec {
     // resolveClusters' OUTPUT plan truncates at the label-propagation
     // checkpoint (connectedComponents cuts lineage to a LogicalRDD each
     // round), so the candidate join is guarded on the pair frame it feeds
-    // into the iteration: editDistancePairs over the distinct-value frame —
-    // the exact construction at EntityResolution.resolveClusters
-    val distinctVals = records
-      .select(col("name").as("__vid__"), col("name").as("__val__")).distinct()
-    guard(EditDistance.editDistancePairs(distinctVals, "__vid__", "__val__", 1, 8)
+    // into the iteration, built by the same valuePairs call
+    guard(EntityResolution.valuePairs(records, "name", 1, 8)._2
       .queryExecution.analyzed)
   }
 

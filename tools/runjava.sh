@@ -1,6 +1,10 @@
 #!/bin/bash
 # Run a graft main outside sbt (frees the sbt lock for tests).
 # Usage: tools/runjava.sh <mainClass> [args...]
+# Runs the classes of the checkout this script lives in (compile it first
+# with `sbt compile`), against the Spark jars its build.sbt names.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -17,5 +21,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-48g} \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes:/root/repo/src/main/resources" \
+  -cp "$JARS/*:$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources" \
   "$@"
