@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.io.DriverParquet
+import graft.io.{DriverParquet, NioLocalFileSystem}
 
 /** Audit-table helpers (ref: spark/auditing.py:41-212): append-only status
   * tables partitioned by update date, queried through a latest-record window.
@@ -72,7 +72,7 @@ object Auditing {
   private[graft] def appendStaged(spark: org.apache.spark.sql.SparkSession, path: String)(
       write: Path => Unit): (FileSystem, Path, String) = {
     val table = new Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = NioLocalFileSystem.get(spark, table)
     val writeId = java.util.UUID.randomUUID().toString.replace("-", "")
     val staging = new Path(table, s".staging-$writeId")
     write(staging)
@@ -178,7 +178,7 @@ object Auditing {
     */
   def readCommitted(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val table = new Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = NioLocalFileSystem.get(spark, table)
     val commitsDir = new Path(table, "_commits")
     val commits: Set[String] =
       if (!fs.exists(commitsDir)) Set.empty
@@ -235,7 +235,7 @@ final class AuditManager(private val spark: org.apache.spark.sql.SparkSession, a
     */
   private def tableExists(table: String): Boolean = {
     val p = new Path(path(table))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    NioLocalFileSystem.get(spark, p).exists(p)
   }
 
   /** received -> file_transformation -> data_contract -> business_rules ->

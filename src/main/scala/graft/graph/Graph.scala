@@ -53,18 +53,14 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
                iterations: Int = 8, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    // the per-phase job descriptions below are thread-local: hand the
-    // caller's back, whatever happens
-    val sc0 = edges.sparkSession.sparkContext
-    val prior = sc0.getLocalProperty("spark.job.description")
-    try pageRankRounds(edges, srcCol, dstCol, wCol, iterations, dampingPct)
-    finally sc0.setJobDescription(prior)
+    // the per-iteration descriptions set below end with this scope too
+    graft.JobDescription.scoped(edges.sparkSession.sparkContext, "pagerank: edge setup")(
+      pageRankRounds(edges, srcCol, dstCol, wCol, iterations, dampingPct))
   }
 
   private def pageRankRounds(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
                              iterations: Int, dampingPct: Int): DataFrame = {
     val sc0 = edges.sparkSession.sparkContext
-    sc0.setJobDescription("pagerank: edge setup")
     // Hash-partition the edge list on the SOURCE key before checkpointing:
     // `Dataset.localCheckpoint` preserves the physical outputPartitioning
     // into the LogicalRDD, so every iteration's rates-to-scores join is

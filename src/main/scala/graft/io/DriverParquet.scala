@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * timestamp encoding and the Spark row-schema footer come out exactly as a
   * Spark write makes them. For row sets already on the driver and small
   * enough that a distributed write job would cost more than the rows:
-  * audit appends and the error report's small sheets.
+  * audit appends and the error report's small sheets. Files and
+  * directories are made through [[NioLocalFileSystem]] on `file:`.
   */
 object DriverParquet {
 
@@ -28,6 +29,7 @@ object DriverParquet {
             dateUpdatedFrom: Option[String] = None): Unit = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val job = Job.getInstance(session.sessionState.newHadoopConf())
+    NioLocalFileSystem.options.foreach { case (k, v) => job.getConfiguration.set(k, v) }
     val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
     val jobId = java.util.UUID.randomUUID().toString // part-file naming, as a Spark job's
     val ctx = new TaskAttemptContextImpl(job.getConfiguration,
@@ -61,7 +63,7 @@ object DriverParquet {
     */
   def overwrite(spark: SparkSession, path: String, schema: StructType, rows: Seq[Row]): Unit = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = NioLocalFileSystem.get(spark, dir)
     fs.delete(dir, true)
     write(spark, dir, schema, rows)
     fs.create(new Path(dir, "_SUCCESS"), true).close()

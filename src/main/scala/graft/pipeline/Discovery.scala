@@ -114,7 +114,7 @@ object Discovery {
                newId: () => String = () => java.util.UUID.randomUUID().toString.replace("-", "")
               ): DiscoveryResult = {
     val landing = new Path(landingDir)
-    val fs = landing.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.io.NioLocalFileSystem.get(spark, landing)
     if (!fs.exists(landing))
       return DiscoveryResult(Nil, Nil, Nil, Nil)
 

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import graft.audit.AuditManager
 import graft.config.Dischema
 import graft.contract.Contract
-import graft.io.DriverParquet
+import graft.io.{DriverParquet, NioLocalFileSystem}
 import graft.readers.Readers
 import graft.refdata.RefDataLoader
 import graft.report.ErrorSink
@@ -26,7 +26,7 @@ import graft.rules.{EntityCatalog, SyncFilters}
   * reference relies on, and each stage's output is read exactly once by the
   * next. Audit status transitions mirror the reference's
   * received -> transform -> data_contract -> business_rules -> error_report
-  * -> finished.
+  * -> finished. Local files go through [[graft.io.NioLocalFileSystem]]: no forked `chmod` per file.
   */
 object Pipeline {
 
@@ -172,7 +172,8 @@ object Pipeline {
       Contract.stringify(raw)
     }
     parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
-      ingest(spec).write.mode("overwrite").parquet(s"${cfg.workingDir}/transform/${spec.name}")
+      ingest(spec).write.options(NioLocalFileSystem.options).mode("overwrite")
+        .parquet(s"${cfg.workingDir}/transform/${spec.name}")
     }
     ()
   }
@@ -197,7 +198,8 @@ object Pipeline {
     parEntities(cfg.dischema.entities, cfg.entityParallelism, cfg.entityStageTimeoutSec) { spec =>
       val raw = StageIO.readStage(spark, s"${cfg.workingDir}/transform/${spec.name}")
       val (typed, messages) = Contract(raw, spec)
-      typed.write.mode("overwrite").parquet(s"${cfg.workingDir}/data_contract/${spec.name}")
+      typed.write.options(NioLocalFileSystem.options).mode("overwrite")
+        .parquet(s"${cfg.workingDir}/data_contract/${spec.name}")
       val obs = org.apache.spark.sql.Observation()
       ErrorSink.writeFeedbackErrors(
         messages.observe(obs, count(when(col("Status") =!= "informational", true)).as("failed")),
@@ -272,7 +274,8 @@ object Pipeline {
       // Row count observed ON the write itself — no second job
       // re-reading the parquet just to count what was written.
       val obs = org.apache.spark.sql.Observation()
-      rejected(name).observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+      rejected(name).observe(obs, count(lit(1)).as("n")).write
+        .options(NioLocalFileSystem.options).mode("overwrite")
         .parquet(s"${cfg.workingDir}/business_rules/$name")
       name -> obs.get("n").asInstanceOf[Long]
     }.toMap
@@ -319,7 +322,7 @@ object Pipeline {
       ErrorSink.summaryReport(all).schema, Seq(counts.summary))
     all.select(ErrorSink.detailColumns.map(col): _*)
       .coalesce(1).sortWithinPartitions(col("Entity"), col("RecordIndex"))
-      .write.mode("overwrite").parquet(s"$dir/detail")
+      .write.options(NioLocalFileSystem.options).mode("overwrite").parquet(s"$dir/detail")
     counts
   }
 

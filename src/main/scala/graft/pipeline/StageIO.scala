@@ -23,7 +23,7 @@ object StageIO {
   private val RowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   private def footerSchema(spark: SparkSession, dir: String): StructType = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.io.NioLocalFileSystem.conf(spark)
     val path = new Path(dir)
     val part = path.getFileSystem(conf).listStatus(path).iterator.map(_.getPath)
       .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))

@@ -2,6 +2,7 @@ package graft.report
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.NioLocalFileSystem
 import graft.rules.Messages
 
 /** Message sinks and report tables.
@@ -32,7 +33,7 @@ object ErrorSink {
   def writeFeedbackErrors(messages: DataFrame, workingDir: String, stage: String): String = {
     val path = feedbackErrorsPath(workingDir, stage)
     graft.audit.Auditing.appendStaged(messages.sparkSession, path)(
-      staging => messages.write.json(staging.toString))
+      staging => messages.write.options(NioLocalFileSystem.options).json(staging.toString))
     path
   }
 
@@ -54,7 +55,7 @@ object ErrorSink {
     */
   private def readJsonOrEmpty(spark: SparkSession, glob: String): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(glob)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = NioLocalFileSystem.get(spark, path)
     val matched = Option(fs.globStatus(path)).toSeq.flatten.map(_.getPath.toString)
     if (matched.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -70,7 +71,8 @@ object ErrorSink {
     import spark.implicits._
     Seq((stage, "processing", "integrity", message, traceback))
       .toDF("step_name", "error_location", "error_level", "error_message", "error_traceback")
-      .write.mode("append").json(processingErrorsPath(workingDir))
+      .write.options(NioLocalFileSystem.options).mode("append")
+      .json(processingErrorsPath(workingDir))
   }
 
   /** Detail report rows in the UserMessage column order
@@ -107,7 +109,7 @@ object ErrorSink {
   def errorCodesFromJson(spark: SparkSession, path: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = NioLocalFileSystem.get(spark, p)
     val in = fs.open(p)
     val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
@@ -149,7 +151,7 @@ object ErrorSink {
     messages
       .select(Messages.header.map(col): _*)
       .orderBy(col("Entity"), col("RecordIndex"))
-      .write.mode("overwrite")
+      .write.options(NioLocalFileSystem.options).mode("overwrite")
       .option("header", true)
       .option("nullValue", CsvNullMarker)
       .option("maxRecordsPerFile", overflow)
@@ -174,7 +176,7 @@ object ErrorSink {
                         overflow: Long = 1000000L,
                         processingFailed: Boolean = false): String = {
     def oneCsv(df: DataFrame, sub: String): Unit =
-      df.coalesce(1).write.mode("overwrite")
+      df.coalesce(1).write.options(NioLocalFileSystem.options).mode("overwrite")
         .option("header", true).option("nullValue", CsvNullMarker)
         .csv(s"$dir/$sub")
     oneCsv(summaryReport(messages, processingFailed), "summary")

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.JobDescription
 
 /** Document deduplication operators for large-scale training-data pipelines.
   *
@@ -756,7 +757,10 @@ object Dedup {
       */
     def joinBatchWith[T](newDocs: DataFrame)(use: DataFrame => T): T = {
       val (result, owned) = joinBatchImpl(newDocs)
-      try use(result) finally owned.foreach(_.unpersist(blocking = false))
+      // the jobs `use` starts run the probe (tier 1) or the verify
+      val phase = if (refKernel.isDefined) "xdedup: kernel probe" else "xdedup: verify+sink"
+      try JobDescription.scoped(newDocs.sparkSession.sparkContext, phase)(use(result))
+      finally owned.foreach(_.unpersist(blocking = false))
     }
 
     private def joinBatchImpl(newDocs: DataFrame): (DataFrame, Seq[DataFrame]) = {
@@ -766,20 +770,17 @@ object Dedup {
           // Tier 1: no batch-side persist, count, or candidate frame — the
           // kernel's per-row candidate set is already (a, b)-distinct, so
           // the downstream dropDuplicates contract is met by construction.
-          sc.setJobDescription("xdedup: kernel probe")
           val shNew = widen(newDocs)
             .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
           return (PrefixCrossIndex.kernelProbe(shNew, idCol, threshold, rk), Nil)
         case None => ()
       }
-      sc.setJobDescription("xdedup: batch shingles")
       val shNew = widen(newDocs)
         .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // materialize before the multiple consumers below (see minHashDedup);
       // the row count also drives the verify's batch-side broadcast decision
-      val batchRows = shNew.count()
-      sc.setJobDescription("xdedup: candidates")
+      val batchRows = JobDescription.scoped(sc, "xdedup: batch shingles")(shNew.count())
       // Batch tokens take the FROZEN reference frequency (unseen tokens get
       // cnt 0 = rarest) — the shared (cnt, tok) total order the index's own
       // prefixes were sorted under.
@@ -818,8 +819,8 @@ object Dedup {
             && col("x.sz") >= ceil(lit(threshold) * col("y.sz") - lit(1e-9))
             && alpha <= lit(1) + least(col("x.sz") - col("x.pos") - 1, col("y.sz") - col("y.pos") - 1))
         .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
-      val (verified, candCache) = verifyAgainstIndex(candidates, shNew, batchRows)
-      sc.setJobDescription("xdedup: verify+sink")
+      val (verified, candCache) = JobDescription.scoped(sc, "xdedup: candidates")(
+        verifyAgainstIndex(candidates, shNew, batchRows))
       (verified.dropDuplicates("a", "b"), Seq(shNew, candCache))
     }
 
@@ -1016,9 +1017,10 @@ object Dedup {
         val posts = rk.postings.value
         val refSh = rk.refShingles.value
         it.flatMap { r =>
-          // self-join mode: a null id on either side fails the expression
-          // plan's a < b, so its pairs are dropped here too
-          if (r.isNullAt(1) || (selfOrdered && r.isNullAt(0))) Iterator.empty
+          // a null id on either side matches nothing in the expression
+          // plans (the self join's a < b, the cross verify's equi-joins),
+          // so its pairs are dropped here too
+          if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
           else {
             val a = r.get(0)
             // self-join mode (one corpus on both sides): keep only a < b,
@@ -1041,10 +1043,10 @@ object Dedup {
                   val m = post.ids.length
                   while (j < m) {
                     val szY = post.sz(j)
-                    // pair orientation (self mode), then length filter
-                    // (both directions), then position filter
-                    if ((!selfOrdered || (post.ids(j) != null &&
-                          aLong < post.ids(j).asInstanceOf[Number].longValue())) &&
+                    // non-null id, pair orientation (self mode), then
+                    // length filter (both directions), then position filter
+                    if (post.ids(j) != null && (!selfOrdered ||
+                          aLong < post.ids(j).asInstanceOf[Number].longValue()) &&
                         szY >= math.ceil(t * n - 1e-9) &&
                         n >= math.ceil(t * szY - 1e-9)) {
                       val alpha = math.ceil(tFrac * (n + szY) - 1e-9)
@@ -1148,7 +1150,8 @@ object Dedup {
         val posts = rk.postings.value
         val refSh = rk.refShingles.value
         it.flatMap { r =>
-          if (r.isNullAt(1)) Iterator.empty
+          // a null id matches nothing in the expression plan's a =!= b
+          if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
           else {
             val a = r.get(0)
             val shA = r.getSeq[String](1)
@@ -1166,8 +1169,9 @@ object Dedup {
                   val m = post.ids.length
                   while (j < m) {
                     // one-sided length prune + a != b (value equality, the
-                    // expression plan's =!=)
-                    if (post.sz(j) >= math.ceil(t * n - 1e-9) && post.ids(j) != a)
+                    // expression plan's =!=, which no null id passes)
+                    if (post.sz(j) >= math.ceil(t * n - 1e-9) && post.ids(j) != null &&
+                        post.ids(j) != a)
                       cands.add(post.ids(j))
                     j += 1
                   }
@@ -1272,9 +1276,13 @@ object Dedup {
     * [[PrefixCrossIndex.joinBatch]].
     */
   def buildPrefixCrossIndex(refDocs: DataFrame, idCol: String, textCol: String,
-                            shingleSize: Int = 3, threshold: Double = 0.5): PrefixCrossIndex = {
+                            shingleSize: Int = 3, threshold: Double = 0.5): PrefixCrossIndex =
+    JobDescription.scoped(refDocs.sparkSession.sparkContext, "xdedup: build index")(
+      buildPrefixCrossIndexImpl(refDocs, idCol, textCol, shingleSize, threshold))
+
+  private def buildPrefixCrossIndexImpl(refDocs: DataFrame, idCol: String, textCol: String,
+                                        shingleSize: Int, threshold: Double): PrefixCrossIndex = {
     val sc = refDocs.sparkSession.sparkContext
-    sc.setJobDescription("xdedup: build index")
     val shRef = widen(refDocs)
       .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

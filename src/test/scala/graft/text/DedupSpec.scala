@@ -208,6 +208,60 @@ class DedupSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  test("containment and cross kernels drop null ids like the expression pipeline") {
+    spark.catalog.clearCache()
+    // three identical documents: every pair passes the threshold, and a
+    // null id matches nothing in the expression plans' =!= and equi-joins
+    val text = "the quick brown fox jumps over the lazy dog tonight"
+    val docs = Seq[(Option[Long], String)]((Some(1L), text), (None, text), (Some(4L), text))
+      .toDF("doc_id", "text")
+    def run(): (Set[(Long, Long, Double)], Set[(Long, Long, Double)]) = (
+      Dedup.containmentPairsWith(docs, "doc_id", "text", 3, 0.5)(
+        _.select("a", "b", "containment").as[(Long, Long, Double)].collect().toSet),
+      Dedup.prefixFilterCrossJoinWith(docs.where(col("doc_id") === 1 || col("doc_id").isNull),
+          docs.where(col("doc_id") === 4 || col("doc_id").isNull), "doc_id", "text")(
+        _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet))
+    val prev = Seq("graft.ppjoin.broadcastRows", "graft.ppjoin.kernel")
+      .map(k => k -> sys.props.get(k))
+    try {
+      sys.props("graft.ppjoin.broadcastRows") = "1000000" // force tier 1
+      val kernel = run()
+      sys.props("graft.ppjoin.kernel") = "off"
+      assert(kernel == run())
+      assert(kernel._1 == Set((1L, 4L, 1.0), (4L, 1L, 1.0)))
+      assert(kernel._2 == Set((1L, 4L, 1.0)))
+    } finally prev.foreach { case (k, v) =>
+      v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("PrefixCrossIndex hands the caller's job description back on every tier") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val fresh = corpus.where(col("doc_id") % 2 === 0)
+    val ref = corpus.where(col("doc_id") % 2 === 1)
+    val prev = sys.props.get("graft.crossindex.broadcastRefRows")
+    sc.setJobDescription("caller")
+    try Seq(None, Some("0")).foreach { refRows => // tier 1, tier 2
+      refRows.fold(sys.props.remove("graft.crossindex.broadcastRefRows"): Unit)(v =>
+        sys.props("graft.crossindex.broadcastRefRows") = v)
+      val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text")
+      try {
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        assert(index.joinBatch(fresh).count() == 2)
+        assert(index.joinBatchWith(fresh)(_.count()) == 2)
+        assert(sc.getLocalProperty("spark.job.description") == "caller", refRows)
+      } finally index.release()
+    } finally {
+      sc.setJobDescription(null)
+      prev.fold(sys.props.remove("graft.crossindex.broadcastRefRows"): Unit)(v =>
+        sys.props("graft.crossindex.broadcastRefRows") = v)
+    }
+    spark.catalog.clearCache()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("PrefixCrossIndex tiers 2 and 3 (forced gates) equal the one-shot join") {
     spark.catalog.clearCache()
     // the default gates put any test-sized corpus on the tier-1 broadcast
