@@ -2705,7 +2705,8 @@ object LlmQueries {
     // The two corpus partitions are doc_id%3-disjoint, so `!=` places no
     // ordering constraint; the shared rare-first order (corpus-wide token
     // counts over BOTH sides) keeps the prefix lemma complete for cross
-    // pairs exactly as the engine's own prefixFilterCrossJoin documents.
+    // pairs — any single order applied to both sides does (the engine's
+    // prefixFilterCrossJoin freezes the reference side's counts).
     "q_dedup_cross" ->
       (s"$shingleCte, " +
         "toks AS (SELECT doc_id, unnest(sh) AS tok FROM sh), " +

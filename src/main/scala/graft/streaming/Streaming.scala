@@ -191,15 +191,16 @@ object Streaming {
 
   /** CONTINUOUS-CRAWL near-dup detection: every micro-batch of incoming
     * documents is checked against a TRAINED static reference corpus with
-    * the EXACT [[graft.text.Dedup.prefixFilterCrossJoin]] (prefix-token
-    * equi-join BETWEEN sides only — batch-internal duplicate mass
-    * generates no pairs), and the (a = new id, b = ref id, jaccard,
-    * batch_id) matches append to the sink. Exactness is per pair, so the
-    * appended union over micro-batches equals the batch cross join on the
-    * drained stream REGARDLESS of batch boundaries (the per-batch token
-    * order differs from the global one; any total order is complete — the
-    * banded minHash form's per-pair miss odds would instead compound with
-    * every batch). A batch doc is novel iff it has no row here —
+    * one probe of a [[graft.text.Dedup.PrefixCrossIndex]] over it — the
+    * operator behind the EXACT [[graft.text.Dedup.prefixFilterCrossJoin]]
+    * (pairs only BETWEEN sides — batch-internal duplicate mass generates
+    * none) — and the (a = new id, b = ref id, jaccard, batch_id) matches
+    * append to the sink. Exactness is per pair, so the appended union over
+    * micro-batches equals the batch cross join on the drained stream
+    * REGARDLESS of batch boundaries (the banded minHash form's per-pair
+    * miss odds would instead compound with every batch). Reference ids
+    * must be unique (a duplicate fails the stream). A batch doc is novel
+    * iff it has no row here —
     * downstream anti-joins on `a`. This is the streaming front door of the
     * incremental-ingest family ([[graft.text.IncrementalDedup]] is the
     * Bloom-gated exact-match sibling); `foreachBatch` because the operator
@@ -211,13 +212,12 @@ object Streaming {
                      outPath: String, checkpointDir: String,
                      threshold: Double = 0.5,
                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // The reference corpus is immutable across micro-batches, so its
-    // shingle table / token frequencies / rare-first prefix stream are
-    // built and persisted ONCE here (graft.text.Dedup.PrefixCrossIndex) —
-    // re-deriving them per batch was most of the per-batch cost. Exactness
-    // is unchanged: the index freezes the shared token order to
-    // (ref-corpus frequency, token), which the prefix-filter completeness
-    // lemma accepts like any other total order (see the index's Scaladoc).
+    // The reference corpus is immutable across micro-batches, so its token
+    // frequencies and rare-first prefixes are derived ONCE here
+    // (graft.text.Dedup.PrefixCrossIndex) — re-deriving them per batch was
+    // most of the per-batch cost. The index freezes the shared token order
+    // to (ref-corpus frequency, token), which the prefix-filter
+    // completeness lemma accepts like any other total order.
     val index = graft.text.Dedup.buildPrefixCrossIndex(
       reference, idCol, textCol, threshold = threshold)
     val q = stream.writeStream

@@ -13,11 +13,13 @@ import graft.JobDescription
   *   - approximate: MinHash signatures + LSH banding with an exact verify
   *     pass over bucket-cohabiting candidates only.
   *
-  * All heavy lifting stays in Spark SQL higher-order functions over array
-  * columns (no UDFs, no driver collection); candidate generation shuffles on
-  * band/token keys so the plans scale horizontally. Beyond-parity operator
-  * (reference has no dedup; driver brief requires it for the 100 TB
-  * training-data path).
+  * Past their tier-1 gates the plans are native Catalyst expressions over
+  * array columns (no UDFs); candidate generation shuffles on band/token keys
+  * so they scale horizontally. Within the gate ([[driverTier]]) the exact
+  * prefix joins collect the indexed side once to the driver and probe its
+  * broadcast postings in one narrow pass. Beyond-parity operator (reference
+  * has no dedup; driver brief requires it for the 100 TB training-data
+  * path).
   */
 object Dedup {
 
@@ -106,14 +108,15 @@ object Dedup {
     math.max(base, math.min(4096L, (candRows + perPart - 1) / perPart).toInt)
   }
 
-  /** Positive-long system property with malformed-value tolerance: a typo
-    * in an operational knob degrades to the built-in default with a stderr
-    * warning instead of a NumberFormatException on every verify path.
+  /** Long system property of at least `min` with malformed-value tolerance:
+    * a typo in an operational knob degrades to the built-in default with a
+    * stderr warning instead of a NumberFormatException on every verify
+    * path. Row gates take `min = 0` (0 = never the gated tier).
     */
-  private[graft] def longProp(name: String): Option[Long] =
+  private[graft] def longProp(name: String, min: Long = 1L): Option[Long] =
     sys.props.get(name).flatMap { s =>
-      scala.util.Try(s.trim.toLong).toOption.filter(_ > 0L).orElse {
-        System.err.println(s"[dedup] ignoring malformed $name='$s' (want a positive long)")
+      scala.util.Try(s.trim.toLong).toOption.filter(_ >= min).orElse {
+        System.err.println(s"[dedup] ignoring malformed $name='$s' (want a long >= $min)")
         None
       }
     }
@@ -275,20 +278,6 @@ object Dedup {
                   idCol: String, shingleCol: String, threshold: Double): DataFrame =
     verifyPairsOwned(candidates, docShingles, idCol, shingleCol, threshold)._1
 
-  /** [[verifyPairs]] with cache ownership: under the scaled path the verify
-    * persists the candidate frame (see [[verifyPairsOwned]]); this form
-    * releases that cache when `use` returns. Callers without a per-query
-    * `spark.catalog.clearCache()` discipline use this, or the cache lives
-    * until session cache clear.
-    */
-  private[graft] def verifyPairsWith[T](candidates: DataFrame, docShingles: DataFrame,
-                                        idCol: String, shingleCol: String,
-                                        threshold: Double)(use: DataFrame => T): T = {
-    val (result, cache) =
-      verifyPairsOwned(candidates, docShingles, idCol, shingleCol, threshold)
-    try use(result) finally cache.unpersist(blocking = false)
-  }
-
   /** [[verifyPairs]] returning the candidate cache it creates, so `With`
     * owners can release it. The candidate frame is persisted and COUNTED
     * before the verify plan is built: the count sizes the verify exchanges
@@ -301,28 +290,14 @@ object Dedup {
     */
   private[graft] def verifyPairsOwned(candidates: DataFrame, docShingles: DataFrame,
                                       idCol: String, shingleCol: String,
-                                      threshold: Double): (DataFrame, DataFrame) =
-    verifyPairsSidesOwned(candidates, docShingles, docShingles, idCol,
-      shingleCol, threshold)
-
-  /** [[verifyPairsOwned]] with DISTINCT shingle tables per pair side —
-    * the cross-corpus form, where `a` ids resolve only against the new
-    * side and `b` ids only against the reference (the two id namespaces
-    * may legitimately overlap). Self-join callers pass the same table
-    * twice via [[verifyPairsOwned]].
-    */
-  private[graft] def verifyPairsSidesOwned(candidates: DataFrame,
-                                           aShingles: DataFrame,
-                                           bShingles: DataFrame,
-                                           idCol: String, shingleCol: String,
-                                           threshold: Double): (DataFrame, DataFrame) = {
+                                      threshold: Double): (DataFrame, DataFrame) = {
     // Sort once per DOC row (before the join fans each array out to its
     // candidates), merge-count once per PAIR: the sorted kernel does no
     // hashing and no per-pair allocation — the PPJoin probe measured the
     // hash-set formulation as the dominant stage at sf1.
-    val left = aShingles.select(col(idCol).as("a"),
+    val left = docShingles.select(col(idCol).as("a"),
       sort_array(col(shingleCol)).as("sh_a"))
-    val right = bShingles.select(col(idCol).as("b"),
+    val right = docShingles.select(col(idCol).as("b"),
       sort_array(col(shingleCol)).as("sh_b"))
     // Pin BOTH verify exchanges by number (REPARTITION_BY_NUM is exempt
     // from AQE coalescing), scaled to the measured candidate count: the
@@ -332,7 +307,7 @@ object Dedup {
     // sh_a to the b-side join falls back to the session partition count.
     val cand = candidates
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = cand.count()
+    val cnt = releaseOnFailure(Seq(cand))(cand.count())
     val k = verifyChunkCount(cnt)
     if (sys.props.get("graft.verify.debug").nonEmpty)
       System.err.println(s"[verify] candidates=$cnt chunks=$k")
@@ -402,17 +377,11 @@ object Dedup {
     // of the verify join — recomputing the shingling per consumer triples
     // the text-processing cost (same reason the reference checkpoints
     // between stages)
-    val withShingles = widen(docs).select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize once before the three consumers race to populate the
-    // same cache blocks (concurrent first-reads of an unmaterialized
-    // persist stall each other — measured 50x on the contract plane)
-    withShingles.count()
-    val withSig = withShingles.withColumn("sig", minHashSignature(col("sh"), numHashes, seed))
+    val sh = shingleTable(docs, idCol, textCol, shingleSize)
+    val withSig = sh.df.withColumn("sig", minHashSignature(col("sh"), numHashes, seed))
     val candidates = lshCandidates(withSig, idCol, "sig", numBands, rowsPerBand)
-    val (verified, candCache) =
-      verifyPairsOwned(candidates, withShingles, idCol, "sh", threshold)
-    (verified, Seq(withShingles, candCache))
+    val (verified, candCache) = verifyPairsOwned(candidates, sh.df, idCol, "sh", threshold)
+    (verified, sh.owned :+ candCache)
   }
 
   /** CROSS-corpus near-duplicate join: (new, ref) pairs with Jaccard >=
@@ -458,15 +427,9 @@ object Dedup {
     val rowsPerBand = numHashes / numBands
     // each side's shingle table feeds banding AND its half of the verify
     // join — persisted for the same reason as minHashDedupImpl
-    def prep(docs: DataFrame): DataFrame = {
-      val sh = widen(docs)
-        .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count()
-      sh
-    }
-    val shNew = prep(newDocs)
-    val shRef = prep(refDocs)
+    val newSide = shingleTable(newDocs, idCol, textCol, shingleSize)
+    val refSide = shingleTable(refDocs, idCol, textCol, shingleSize)
+    val (shNew, shRef) = (newSide.df, refSide.df)
     def banded(sh: DataFrame, out: String): DataFrame = {
       val b = pinPartitions(
         sh.withColumn("sig", minHashSignature(col("sh"), numHashes, seed))
@@ -491,21 +454,172 @@ object Dedup {
           .join(shRef.select(col(idCol).as("b"), sort_array(col("sh")).as("sh_b")), "b"),
         threshold)
       .select(col("a"), col("b"), col("jaccard"))
-    (result, Seq(shNew, shRef))
+    (result, newSide.owned ++ refSide.owned)
   }
 
-  /** Exact Jaccard-threshold self-join via prefix filtering (PPJoin-style).
-    *
-    * Tokens are globally ordered RAREST-FIRST (corpus frequency, token
-    * tiebreak — any total order is correct for completeness, but rare-first
-    * makes the emitted prefix tokens the least-shared ones, collapsing the
-    * candidate count on skewed vocabularies) and each document emits only
-    * its first |S| - ceil(t*|S|) + 1 tokens. Two sets with Jaccard >= t
-    * must share >= ceil(t*|S|) tokens, so they must collide on at least one
-    * prefix token — candidate generation is COMPLETE for the threshold, and
-    * the verify pass is exact. Candidates are generated by an equi-join on
-    * token (shuffle on token key), never all-pairs; the extra cost of the
-    * frequency ordering is one narrow token-count aggregation.
+  // ---- Exact prefix-filter joins: one core for the self, cross and
+  // ---- containment modes and for every tier.
+  //
+  // Tokens are globally ordered RAREST-FIRST (corpus frequency, token
+  // tiebreak — any total order is complete, but rare-first makes the emitted
+  // prefix tokens the least-shared ones, collapsing the candidate count on
+  // skewed vocabularies) and each document emits only its first
+  // |S| - ceil(t*|S|) + 1 tokens. Two sets with Jaccard >= t must share
+  // >= ceil(t*|S|) tokens, so they collide on at least one prefix token:
+  // candidate generation is COMPLETE for the threshold, and the verify pass
+  // is exact. Every ceil carries a 1e-9 guard: an epsilon-above-integer
+  // double product would inflate it, shrinking a prefix or tightening a
+  // prune past a just-qualifying pair (a completeness break at non-dyadic
+  // thresholds).
+  //
+  // Tier 1 (the side built into postings fits the one gate, [[driverTier]])
+  // is one driver collect ([[PrefixCrossIndex.driverKernel]]) and one narrow
+  // probe pass ([[PrefixCrossIndex.kernelProbe]]). Past the gate the same
+  // order, prefixes and prunes run as a distributed plan: [[sortedTokens]] →
+  // [[prefixRows]] → token equi-join under [[jaccardPrunes]] → exact verify.
+  // Every tier emits the same rows, scores bit-equal.
+  //
+  // Ids of the side built into postings must be unique among rows with a
+  // non-null id; a duplicate throws in every tier (the driver build's map
+  // `put`, or [[uniqueOr]] inside an aggregation on the id that needs no
+  // exchange of its own). Rows with a null id pair with nothing.
+
+  /** A shingle table (id, sh) with the two figures the tier gate reads.
+    * `owned` is the cache this call created: empty when an earlier call
+    * already cached the same plan, whose cache stays its creator's.
+    */
+  private final case class Shingled(df: DataFrame, owned: Seq[DataFrame],
+                                    rows: Long, tokens: Long)
+
+  /** The persisted (id, sh) shingle table of `docs`, materialized by ONE
+    * aggregation that also measures rows and Σ |sh| — before the consumers
+    * race to populate the same cache blocks (concurrent first-reads of an
+    * unmaterialized persist stall each other — measured 50x on the
+    * contract plane). Persists only a plan not cached yet, so calls on one
+    * `docs` frame share a cache and no `With` form releases another's.
+    */
+  private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
+                           shingleSize: Int): Shingled = {
+    val df = widen(docs).select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
+    val owned =
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) Nil
+      else Seq(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val st = df.agg(count(lit(1)),
+      coalesce(sum(when(col("sh").isNotNull, size(col("sh")))), lit(0L))).head()
+    Shingled(df, owned, st.getLong(0), st.getLong(1))
+  }
+
+  /** `body`, unpersisting `owned` if it throws (a duplicate id fails the
+    * build or the first action over the candidates).
+    */
+  private def releaseOnFailure[T](owned: => Seq[DataFrame])(body: => T): T =
+    try body catch {
+      case e: Throwable =>
+        owned.foreach(_.unpersist(blocking = false))
+        throw e
+    }
+
+  /** Driver heap per shingle held by tier 1's three maps (frequencies,
+    * postings, id → sorted shingles) plus their broadcast copy: measured
+    * with heap before/after [[PrefixCrossIndex.driverKernel]] on a
+    * `GenScale` corpus (SCALE.md, 2026-10-19 note), rounded up.
+    */
+  private[text] val DriverBytesPerToken = 160L
+
+  /** Share of the driver's max heap tier 1's maps may take. */
+  private[text] val DriverHeapShare = 0.25
+
+  /** The one tier-1 gate, for the side built into driver postings (the
+    * corpus of a self or containment join, the reference of the cross
+    * index): tier 1 unless `graft.ppjoin.kernel=off`, the side has more
+    * than `graft.ppjoin.broadcastRows` rows (default 100k), or its
+    * estimated map bytes (`tokens` × [[DriverBytesPerToken]]) exceed
+    * [[DriverHeapShare]] of `maxHeap` — ≤100k long documents must not OOM
+    * the driver.
+    */
+  private[text] def driverTier(rows: Long, tokens: Long,
+                               maxHeap: Long = Runtime.getRuntime.maxMemory): Boolean =
+    !sys.props.get("graft.ppjoin.kernel").contains("off") &&
+      rows <= longProp("graft.ppjoin.broadcastRows", min = 0L).getOrElse(100000L) &&
+      tokens.toDouble * DriverBytesPerToken <= maxHeap * DriverHeapShare
+
+  /** `value`, unless `n` > 1 rows share the non-null `id`: then the plan
+    * raises an error naming the id — the distributed tiers' unique-id check,
+    * evaluated inside an aggregation on the id.
+    */
+  private def uniqueOr(id: Column, n: Column, value: Column, idCol: String): Column =
+    when(id.isNotNull && n > 1,
+      raise_error(concat(lit(s"duplicate $idCol "), id.cast("string")))).otherwise(value)
+
+  /** Corpus document frequency of each exploded (id, tok) row as a window
+    * count: one shuffle on tok, instead of a count aggregation joined back
+    * on (a second shuffle of the same frame).
+    */
+  private def windowFreq(ex: DataFrame): DataFrame =
+    ex.withColumn("cnt",
+      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))))
+
+  /** The one expression prefix chain, first half: explode `sh`, attach each
+    * token's frequency (`freq` adds `cnt`), and regroup per document as
+    * `sh_sorted` = sort_array(struct(cnt, tok)) — struct order is the global
+    * rare-first total order with a deterministic tiebreak. With `unique`,
+    * the regrouping aggregation also rejects a duplicate id.
+    */
+  private def sortedTokens(sh: DataFrame, idCol: String, freq: DataFrame => DataFrame,
+                           unique: Boolean = true): DataFrame = {
+    val ex = sh.select(col(idCol), posexplode(col("sh")).as(Seq("__p__", "tok")))
+    val sorted = freq(ex).groupBy(col(idCol)).agg(
+      sort_array(collect_list(struct(col("cnt"), col("tok")))).as("sh_sorted"),
+      count(when(col("__p__") === 0, true)).as("__docs__"))
+    sorted.select(col(idCol),
+      (if (unique) uniqueOr(col(idCol), col("__docs__"), col("sh_sorted"), idCol)
+       else col("sh_sorted")).as("sh_sorted"))
+  }
+
+  /** The chain's second half: each document's rare-first prefix rows
+    * (id, sz, pos, tok) — the first |S| - ceil(t*|S|) + 1 tokens, or every
+    * token with `full` — pinned on tok (the candidate join's output is
+    * quadratic in bucket occupancy while its input is byte-small; see
+    * [[pinPartitions]]).
+    */
+  private def prefixRows(sorted: DataFrame, idCol: String, threshold: Double,
+                         full: Boolean = false): DataFrame = {
+    val sz = size(col("sh_sorted"))
+    val toks =
+      if (full) col("sh_sorted")
+      else slice(col("sh_sorted"), lit(1),
+        (sz - ceil(lit(threshold) * sz - lit(1e-9)).cast("int") + 1).cast("int"))
+    pinPartitions(sorted.select(col(idCol), sz.as("sz"),
+        posexplode(transform(toks, x => x.getField("tok"))).as(Seq("pos", "tok"))),
+      col("tok"))
+  }
+
+  /** `side`'s length prune: a partner needs at least ceil(t*|side|) tokens. */
+  private def minSize(threshold: Double, side: String): Column =
+    ceil(lit(threshold) * col(s"$side.sz") - lit(1e-9))
+
+  /** The PPJoin prunes between prefix rows `x` and `y` (Xiao et al. 2008),
+    * both completeness-preserving and indifferent to pair orientation, so
+    * they hold for self and cross pairs alike:
+    *  - length: jaccard >= t implies |I| >= t*|U| >= t*max(|x|,|y|) and
+    *    |I| <= min(|x|,|y|), so min >= t*max;
+    *  - position: jaccard >= t needs overlap alpha = ceil(t/(1+t)*(|x|+|y|));
+    *    a collision at 0-based prefix positions (i, j) supports at most
+    *    1 + min(|x|-i-1, |y|-j-1) overlap. The earliest shared token gives
+    *    the loosest bound, so a qualifying pair survives at least once.
+    */
+  private def jaccardPrunes(threshold: Double): Column = {
+    val alpha = ceil(lit(threshold / (1 + threshold)) * (col("x.sz") + col("y.sz")) - lit(1e-9))
+    col("y.sz") >= minSize(threshold, "x") && col("x.sz") >= minSize(threshold, "y") &&
+      alpha <= lit(1) + least(col("x.sz") - col("x.pos") - 1, col("y.sz") - col("y.pos") - 1)
+  }
+
+  /** Exact Jaccard-threshold self-join via prefix filtering (PPJoin-style):
+    * every pair (a < b) of `docs` with jaccard >= `threshold`, none missed.
+    * Candidates come from an equi-join on prefix tokens (shuffle on the
+    * token key), never all-pairs; the frequency order costs one narrow
+    * token-count window. Integral ids within the tier-1 gate run the driver
+    * kernel. `idCol` must be unique among non-null ids (a duplicate throws).
     */
   def prefixFilterJoin(docs: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 3, threshold: Double = 0.5): DataFrame =
@@ -521,81 +635,34 @@ object Dedup {
 
   private def prefixFilterJoinImpl(docs: DataFrame, idCol: String, textCol: String,
                                    shingleSize: Int, threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val withShingles = widen(docs).select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = withShingles.count() // materialize before concurrent consumers (see minHashDedup)
-    // Tier-1 broadcast kernel (measured gate, same budget shape as the
-    // streaming cross index): when the corpus fits the broadcast budget and
-    // ids are integral, the whole prefix/candidate/verify pipeline runs as
-    // one narrow self-ordered kernel pass — bit-equal output (see
-    // PrefixCrossIndex.selfKernelPairs), zero candidate exchanges. Beyond
-    // the gate (or -Dgraft.ppjoin.kernel=off) the distributed expression
-    // pipeline below is the scale path.
-    val kernelOff = sys.props.get("graft.ppjoin.kernel").contains("off")
-    val kernelGate = longProp("graft.ppjoin.broadcastRows").getOrElse(100000L)
-    val idIntegral = withShingles.schema(idCol).dataType match {
+    val sh = shingleTable(docs, idCol, textCol, shingleSize)
+    releaseOnFailure(sh.owned)(selfPairs(sh, idCol, threshold))
+  }
+
+  private def selfPairs(sh: Shingled, idCol: String,
+                        threshold: Double): (DataFrame, Seq[DataFrame]) = {
+    // the kernel orders pairs a < b as longs, like Catalyst's numeric <
+    val idIntegral = sh.df.schema(idCol).dataType match {
       case _: org.apache.spark.sql.types.LongType |
            _: org.apache.spark.sql.types.IntegerType |
            _: org.apache.spark.sql.types.ShortType => true
       case _ => false
     }
-    if (!kernelOff && idIntegral && nRows <= kernelGate)
-      return (PrefixCrossIndex.selfKernelPairs(withShingles, idCol, threshold),
-        Seq(withShingles))
-    val exploded = withShingles.select(col(idCol), explode(col("sh")).as("tok"))
-    // corpus frequency as a window count: one shuffle of the exploded rows
-    // on tok, instead of a count aggregation joined back on (a second
-    // shuffle of the same frame)
-    val withCnt = exploded.withColumn("cnt",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))))
-    // per-doc shingles sorted by (corpus count, token): struct order gives
-    // the global rare-first total order with a deterministic tiebreak
-    val sorted = withCnt
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("cnt"), col("tok")))).as("sh_sorted"))
-    // The ceil here (and in every length filter below) carries the same
-    // 1e-9 guard as alpha: an epsilon-above-integer double product would
-    // inflate the ceil, shrinking the prefix / tightening the length
-    // filter past a just-qualifying pair — a completeness break for
-    // non-dyadic thresholds.
-    val prefixLen = (size(col("sh_sorted")) - ceil(lit(threshold) * size(col("sh_sorted")) - lit(1e-9)).cast("int") + 1).cast("int")
-    // partitioning pinned on the join key: the candidate join's output is
-    // quadratic in bucket occupancy while its input is byte-small — see
-    // pinPartitions (AQE would otherwise coalesce the exchange)
-    val prefixes = pinPartitions(sorted
-      .select(col(idCol), size(col("sh_sorted")).as("sz"),
-        posexplode(transform(slice(col("sh_sorted"), lit(1), prefixLen), x => x.getField("tok")))
-          .as(Seq("pos", "tok"))),
-      col("tok"))
-    // Two candidate prunes, both completeness-preserving (PPJoin, Xiao et
-    // al. 2008):
-    //  - length filter: jaccard >= t implies |I| >= t*|U| >= t*max(|x|,|y|)
-    //    and |I| <= min(|x|,|y|), so min >= t*max;
-    //  - position filter: jaccard >= t needs overlap
-    //    alpha = ceil(t/(1+t) * (|x|+|y|)); a collision at 0-based prefix
-    //    positions (i, j) can contribute at most
-    //    1 + min(|x|-i-1, |y|-j-1) total overlap, so collisions too deep in
-    //    both prefixes cannot support a qualifying pair. The earliest shared
-    //    token gives the loosest bound, so a truly similar pair always
-    //    survives at least one collision.
-    // The 1e-9 guard keeps ceil exact when t/(1+t)*(|x|+|y|) is an exact
-    // integer that double arithmetic rounds UP past (e.g. t where the
-    // product lands epsilon above an integer): an inflated alpha would drop
-    // a pair whose true overlap is exactly alpha — a completeness break.
-    val alpha = ceil(lit(threshold / (1 + threshold)) * (col("x.sz") + col("y.sz")) - lit(1e-9))
+    if (idIntegral && driverTier(sh.rows, sh.tokens))
+      return (PrefixCrossIndex.kernelProbe(sh.df, idCol, threshold,
+        PrefixCrossIndex.driverKernel(sh.df, idCol, threshold), PrefixCrossIndex.SelfJaccard),
+        sh.owned)
+    val prefixes = prefixRows(sortedTokens(sh.df, idCol, windowFreq), idCol, threshold)
     val candidates = prefixes.as("x").join(prefixes.as("y"),
-        col("x.tok") === col("y.tok") && col(s"x.$idCol") < col(s"y.$idCol")
-          && col("y.sz") >= ceil(lit(threshold) * col("x.sz") - lit(1e-9))
-          && col("x.sz") >= ceil(lit(threshold) * col("y.sz") - lit(1e-9))
-          && alpha <= lit(1) + least(col("x.sz") - col("x.pos") - 1, col("y.sz") - col("y.pos") - 1))
+        col("x.tok") === col("y.tok") && col(s"x.$idCol") < col(s"y.$idCol") &&
+          jaccardPrunes(threshold))
       .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
     // A pair sharing k prefix tokens appears k times — but the position
     // filter leaves only ~5% duplicates (measured at sf0.1), so verifying
     // dups and deduplicating the (tiny) verified output is cheaper than a
     // full-shuffle distinct over the candidate set.
-    val (verified, candCache) =
-      verifyPairsOwned(candidates, withShingles, idCol, "sh", threshold)
-    (verified.dropDuplicates("a", "b"), Seq(withShingles, candCache))
+    val (verified, candCache) = verifyPairsOwned(candidates, sh.df, idCol, "sh", threshold)
+    (verified.dropDuplicates("a", "b"), sh.owned :+ candCache)
   }
 
   /** EXACT cross-corpus Jaccard-threshold join via prefix filtering — the
@@ -606,144 +673,62 @@ object Dedup {
     * corpus large enough to hold many just-at-threshold pairs WILL drop
     * one — measured at 30x the design scale, where the banded operator
     * first diverged from the exact oracle. Prefix filtering has no such
-    * term: with both corpora's tokens in ONE shared rare-first total
-    * order (union document frequency — any single order is complete, but
-    * it must be the same on both sides so qualifying pairs collide on a
-    * prefix token), the [[prefixFilterJoin]] length/position prunes apply
-    * verbatim to cross pairs, and candidate generation stays a token-key
-    * equi-join between the two prefix streams — never all-pairs, no
-    * bucket-occupancy cap to breach.
+    * term. This is one probe of a [[PrefixCrossIndex]] over `refDocs`.
     *
     * Output: (a = new id, b = ref id, jaccard), exact. The id namespaces
-    * may overlap (each side resolves against its own shingle table).
+    * may overlap; ref ids must be unique among non-null ids (a duplicate
+    * throws), new ids should be unique.
     */
   def prefixFilterCrossJoin(newDocs: DataFrame, refDocs: DataFrame,
                             idCol: String, textCol: String,
                             shingleSize: Int = 3, threshold: Double = 0.5): DataFrame =
-    prefixFilterCrossJoinImpl(newDocs, refDocs, idCol, textCol, shingleSize, threshold)._1
+    buildPrefixCrossIndex(refDocs, idCol, textCol, shingleSize, threshold).joinBatch(newDocs)
 
-  /** [[prefixFilterCrossJoin]] with cache ownership — see [[minHashDedupWith]]. */
+  /** [[prefixFilterCrossJoin]] releasing the index and the probe's caches
+    * when `use` returns — see [[minHashDedupWith]].
+    */
   def prefixFilterCrossJoinWith[T](newDocs: DataFrame, refDocs: DataFrame,
                                    idCol: String, textCol: String,
                                    shingleSize: Int = 3, threshold: Double = 0.5)
                                   (use: DataFrame => T): T = {
-    val (result, owned) =
-      prefixFilterCrossJoinImpl(newDocs, refDocs, idCol, textCol, shingleSize, threshold)
-    try use(result) finally owned.foreach(_.unpersist(blocking = false))
+    val index = buildPrefixCrossIndex(refDocs, idCol, textCol, shingleSize, threshold)
+    try index.joinBatchWith(newDocs)(use) finally index.release()
   }
 
-  private def prefixFilterCrossJoinImpl(newDocs: DataFrame, refDocs: DataFrame,
-                                        idCol: String, textCol: String,
-                                        shingleSize: Int, threshold: Double
-                                       ): (DataFrame, Seq[DataFrame]) = {
-    def prep(docs: DataFrame): DataFrame = {
-      val sh = widen(docs)
-        .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count() // materialize before concurrent consumers (see minHashDedup)
-      sh
-    }
-    val shNew = prep(newDocs)
-    val shRef = prep(refDocs)
-    // Tier-1 broadcast kernel: when the REFERENCE side fits the broadcast
-    // budget, the pair set is one narrow probe pass of the new side against
-    // driver-built reference maps (see PrefixCrossIndex.crossKernelPairs —
-    // output-identical under the order change; -Dgraft.ppjoin.kernel=off
-    // keeps the distributed pipeline, the only path past the gate).
-    val kernelOff = sys.props.get("graft.ppjoin.kernel").contains("off")
-    val refGate = longProp("graft.crossindex.broadcastRefRows").getOrElse(100000L)
-    if (!kernelOff && shRef.count() <= refGate)
-      return (PrefixCrossIndex.crossKernelPairs(shNew, shRef, idCol, threshold),
-        Seq(shNew, shRef))
-    // Union document frequency as a window count over BOTH sides' exploded
-    // tokens: one shuffle on tok yields the shared order AND feeds the
-    // per-(side, id) re-sort — same single-exchange shape as
-    // prefixFilterJoinImpl's count. The side tag keeps overlapping id
-    // namespaces apart until the candidate join.
-    val ex = shNew.select(lit(0).as("side"), col(idCol), explode(col("sh")).as("tok"))
-      .unionByName(
-        shRef.select(lit(1).as("side"), col(idCol), explode(col("sh")).as("tok")))
-    val withCnt = ex.withColumn("cnt",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))))
-    val sorted = withCnt
-      .groupBy(col("side"), col(idCol))
-      .agg(sort_array(collect_list(struct(col("cnt"), col("tok")))).as("sh_sorted"))
-    // same 1e-9 ceil guard as the self-join path (completeness at
-    // non-dyadic thresholds)
-    val prefixLen = (size(col("sh_sorted")) - ceil(lit(threshold) * size(col("sh_sorted")) - lit(1e-9)).cast("int") + 1).cast("int")
-    val prefixes = pinPartitions(sorted
-      .select(col("side"), col(idCol), size(col("sh_sorted")).as("sz"),
-        posexplode(transform(slice(col("sh_sorted"), lit(1), prefixLen), x => x.getField("tok")))
-          .as(Seq("pos", "tok"))),
-      col("tok"))
-    // Length + position prunes exactly as in prefixFilterJoinImpl (both
-    // completeness-preserving; the PPJoin argument never uses a < b
-    // ordering, so it holds for cross pairs unchanged — including the
-    // 1e-9 ceil guard).
-    val alpha = ceil(lit(threshold / (1 + threshold)) * (col("x.sz") + col("y.sz")) - lit(1e-9))
-    val candidates = prefixes.where(col("side") === 0).as("x")
-      .join(prefixes.where(col("side") === 1).as("y"),
-        col("x.tok") === col("y.tok")
-          && col("y.sz") >= ceil(lit(threshold) * col("x.sz") - lit(1e-9))
-          && col("x.sz") >= ceil(lit(threshold) * col("y.sz") - lit(1e-9))
-          && alpha <= lit(1) + least(col("x.sz") - col("x.pos") - 1, col("y.sz") - col("y.pos") - 1))
-      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
-    val (verified, candCache) =
-      verifyPairsSidesOwned(candidates, shNew, shRef, idCol, "sh", threshold)
-    (verified.dropDuplicates("a", "b"), Seq(shNew, shRef, candCache))
-  }
-
-  /** Pre-built, persisted reference-side index for REPEATED exact
-    * prefix-filter cross joins against one immutable corpus — the
-    * streaming front door ([[graft.streaming.Streaming]] crossDedupSink)
-    * probes the same reference every micro-batch, and re-deriving its
-    * shingle table, token frequencies and rare-first prefixes per batch
-    * was most of the per-batch cost (the r14 2.3× exactness-upgrade tax).
+  /** Pre-built reference-side index for REPEATED exact prefix-filter cross
+    * joins against one immutable corpus: [[prefixFilterCrossJoin]] probes it
+    * once, the streaming front door ([[graft.streaming.Streaming]]
+    * crossDedupSink) once per micro-batch — re-deriving the reference's
+    * shingle table, token frequencies and rare-first prefixes per batch was
+    * most of the per-batch cost (the r14 2.3× exactness-upgrade tax).
     *
-    * Order change vs [[prefixFilterCrossJoin]], exactness preserved: the
-    * shared total order is (REFERENCE-corpus token frequency, token), with
-    * batch tokens unseen in the reference ordered first (cnt 0). The
+    * The shared total order is (REFERENCE-corpus token frequency, token),
+    * with batch tokens unseen in the reference ordered first (cnt 0). The
     * prefix-filter completeness lemma holds for ANY total order applied
     * identically to both sides; this one is a pure token function, so it
-    * can be frozen with the index instead of recomputed over the union per
-    * batch. A token shared by a qualifying (new, ref) pair is by
-    * definition in the reference, so it carries a real frequency on both
-    * sides; unseen-in-ref tokens occupy early prefix slots on the batch
-    * side only and can never collide (the reference has no such token) —
-    * they cost nothing and drop nothing. Length and position prunes are
-    * verbatim [[prefixFilterJoin]]; the verify pass is exact Jaccard.
+    * is frozen with the index. A token shared by a qualifying (new, ref)
+    * pair is by definition in the reference, so it carries a real
+    * frequency on both sides; unseen-in-ref tokens occupy early prefix
+    * slots on the batch side only and can never collide — they cost
+    * nothing and drop nothing. Prunes are [[jaccardPrunes]]; the verify is
+    * exact Jaccard.
+    *
+    * Three tiers, chosen at build:
+    *  1. the reference passes [[driverTier]]: driver-built postings, and
+    *     every batch is one narrow [[PrefixCrossIndex.kernelProbe]] pass;
+    *  2. its vocabulary fits `graft.crossindex.broadcastVocabRows` (default
+    *     4M tokens, ~40 B each): the frequencies are a broadcast map, both
+    *     sides' prefixes come from [[PrefixCrossIndex.prefixKernel]], and
+    *     the reference prefixes and verify side are persisted once;
+    *  3. otherwise the persisted token counts feed the expression chain.
     *
     * Release with [[PrefixCrossIndex.release]] (or a session
     * `catalog.clearCache()`).
     */
   final class PrefixCrossIndex private[text] (
-      private[text] val idCol: String,
-      private[text] val textCol: String,
-      private[text] val shingleSize: Int,
-      private[text] val threshold: Double,
-      private[text] val shRef: DataFrame,
-      private[text] val tokenCounts: DataFrame,
-      private[text] val refPrefixes: DataFrame,
-      private[text] val vocabBroadcastable: Boolean,
-      // r16 per-batch-cost additions (joinBatchImpl uses them when present):
-      // the frozen vocabulary as a DRIVER-BROADCAST map (token -> ref doc
-      // frequency), so a batch's rare-first prefix derivation is one narrow
-      // kernel pass instead of broadcast-build + lookup join + groupBy
-      // re-sort PER BATCH; and the reference VERIFY side (b, sorted sh_b)
-      // sorted + hash-partitioned on b ONCE — the r15 code re-sorted and
-      // re-exchanged the full reference shingle table every micro-batch,
-      // an O(|ref|) per-batch cost that dominated the isolated profile
-      // (4.2 s of 9.8 s at sf0.1; JobProfiler r16).
-      private[text] val tokFreq: Option[org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]]],
-      private[text] val refVerify: DataFrame,
-      private[text] val refVerifyParts: Int,
-      // Tier-1 full-kernel structures (present when the WHOLE reference fits
-      // the broadcast budget, measured at build): the per-batch probe then
-      // runs candidates + position/length prunes + exact-Jaccard verify as
-      // ONE narrow pass against broadcast postings and shingle sets — zero
-      // per-batch exchanges, one write job per micro-batch (the same
-      // broadcast-small-side shape as the r16 brute-cosine kernels).
-      private[text] val refKernel: Option[PrefixCrossIndex.RefKernel]) {
+      idCol: String, textCol: String, shingleSize: Int, threshold: Double,
+      private[text] val tier: PrefixCrossIndex.Tier) {
+    import PrefixCrossIndex._
 
     /** Exact cross pairs (a = new id, b = ref id, jaccard) for one batch
       * of new documents against the indexed reference.
@@ -758,145 +743,60 @@ object Dedup {
     def joinBatchWith[T](newDocs: DataFrame)(use: DataFrame => T): T = {
       val (result, owned) = joinBatchImpl(newDocs)
       // the jobs `use` starts run the probe (tier 1) or the verify
-      val phase = if (refKernel.isDefined) "xdedup: kernel probe" else "xdedup: verify+sink"
+      val phase = tier match {
+        case _: DriverKernel => "xdedup: kernel probe"
+        case _: Distributed => "xdedup: verify+sink"
+      }
       try JobDescription.scoped(newDocs.sparkSession.sparkContext, phase)(use(result))
       finally owned.foreach(_.unpersist(blocking = false))
     }
 
-    private def joinBatchImpl(newDocs: DataFrame): (DataFrame, Seq[DataFrame]) = {
-      val sc = newDocs.sparkSession.sparkContext
-      refKernel match {
-        case Some(rk) =>
-          // Tier 1: no batch-side persist, count, or candidate frame — the
-          // kernel's per-row candidate set is already (a, b)-distinct, so
-          // the downstream dropDuplicates contract is met by construction.
-          val shNew = widen(newDocs)
-            .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-          return (PrefixCrossIndex.kernelProbe(shNew, idCol, threshold, rk), Nil)
-        case None => ()
-      }
-      val shNew = widen(newDocs)
-        .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize before the multiple consumers below (see minHashDedup);
-      // the row count also drives the verify's batch-side broadcast decision
-      val batchRows = JobDescription.scoped(sc, "xdedup: batch shingles")(shNew.count())
-      // Batch tokens take the FROZEN reference frequency (unseen tokens get
-      // cnt 0 = rarest) — the shared (cnt, tok) total order the index's own
-      // prefixes were sorted under.
-      val newPrefixes = tokFreq match {
-        // One narrow kernel pass per batch row: look the frequency up in the
-        // broadcast map, sort by (cnt, tok-utf8-bytes) — bit-equal to
-        // sort_array over struct(cnt, tok) (long asc, then binary-collation
-        // string asc; shingles are DISTINCT so equal keys cannot reorder
-        // observable output) — and emit the rare-first prefix slots. The
-        // r15 formulation spent a broadcast BUILD, a lookup join and a
-        // groupBy(id) re-sort exchange on this, PER BATCH.
-        case Some(bc) => prefixKernel(shNew, bc)
-        case None =>
-          // scale-out vocabulary: the r15 shuffle-join chain against the
-          // tok-partitioned cache
-          val exNew = shNew.select(col(idCol), explode(col("sh")).as("tok"))
-          val withCnt = exNew.join(tokenCounts, Seq("tok"), "left")
-            .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-          val sorted = withCnt
-            .groupBy(col(idCol))
-            .agg(sort_array(collect_list(struct(col("cnt"), col("tok")))).as("sh_sorted"))
-          val prefixLen = (size(col("sh_sorted"))
-            - ceil(lit(threshold) * size(col("sh_sorted")) - lit(1e-9)).cast("int") + 1).cast("int")
-          sorted.select(col(idCol), size(col("sh_sorted")).as("sz"),
-            posexplode(transform(slice(col("sh_sorted"), lit(1), prefixLen),
-              x => x.getField("tok"))).as(Seq("pos", "tok")))
-      }
-      // Length + position prunes verbatim from prefixFilterCrossJoinImpl
-      // (completeness-preserving for cross pairs under any shared order,
-      // 1e-9 ceil guards throughout).
-      val pinnedPrefixes = pinPartitions(newPrefixes, col("tok"))
-      val alpha = ceil(lit(threshold / (1 + threshold)) * (col("x.sz") + col("y.sz")) - lit(1e-9))
-      val candidates = pinnedPrefixes.as("x").join(refPrefixes.as("y"),
-          col("x.tok") === col("y.tok")
-            && col("y.sz") >= ceil(lit(threshold) * col("x.sz") - lit(1e-9))
-            && col("x.sz") >= ceil(lit(threshold) * col("y.sz") - lit(1e-9))
-            && alpha <= lit(1) + least(col("x.sz") - col("x.pos") - 1, col("y.sz") - col("y.pos") - 1))
-        .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
-      val (verified, candCache) = JobDescription.scoped(sc, "xdedup: candidates")(
-        verifyAgainstIndex(candidates, shNew, batchRows))
-      (verified.dropDuplicates("a", "b"), Seq(shNew, candCache))
+    private def joinBatchImpl(newDocs: DataFrame): (DataFrame, Seq[DataFrame]) = tier match {
+      case DriverKernel(rk) =>
+        // no batch-side persist, count or candidate frame: the kernel's
+        // per-row candidate set is already (a, b)-distinct
+        val shNew = widen(newDocs).select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
+        (kernelProbe(shNew, idCol, threshold, rk, CrossJaccard), Nil)
+      case d: Distributed =>
+        // the row count also drives the verify's batch-side broadcast decision
+        val sh = JobDescription.scoped(newDocs.sparkSession.sparkContext, "xdedup: batch shingles")(
+          shingleTable(newDocs, idCol, textCol, shingleSize))
+        releaseOnFailure(sh.owned)(distributedProbe(sh, d))
     }
 
-    /** Rare-first prefix rows (id, sz, pos, tok) for one batch, as a single
-      * narrow pass with the frozen vocabulary map — the kernel counterpart
-      * of the broadcast-join + groupBy + sort_array + posexplode chain (see
-      * [[joinBatchImpl]]). Sort order is EXACTLY sort_array's over
-      * struct(cnt: long, tok: string): ascending cnt, ties by the string's
-      * BINARY collation = unsigned UTF-8 byte order.
-      */
-    private def prefixKernel(
-        shNew: DataFrame,
-        bc: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]]): DataFrame = {
-      import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-      val t = threshold
-      val outSchema = StructType(Seq(
-        shNew.schema(idCol),
-        StructField("sz", IntegerType, nullable = false),
-        StructField("pos", IntegerType, nullable = false),
-        StructField("tok", StringType, nullable = true)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      shNew.select(col(idCol), col("sh")).mapPartitions { it =>
-        val m = bc.value
-        it.flatMap { r =>
-          if (r.isNullAt(1)) Iterator.empty
-          else {
-            val id = r.get(0)
-            val sh = r.getSeq[String](1)
-            val n = sh.length
-            if (n == 0) Iterator.empty
-            else {
-              val toks = new Array[(Long, Array[Byte], String)](n)
-              var i = 0
-              while (i < n) {
-                val s = sh(i)
-                val c = m.get(s)
-                toks(i) = (if (c == null) 0L else c.longValue(),
-                  s.getBytes(java.nio.charset.StandardCharsets.UTF_8), s)
-                i += 1
-              }
-              java.util.Arrays.sort(toks, new java.util.Comparator[(Long, Array[Byte], String)] {
-                override def compare(x: (Long, Array[Byte], String),
-                                     y: (Long, Array[Byte], String)): Int = {
-                  if (x._1 != y._1) java.lang.Long.compare(x._1, y._1)
-                  else java.util.Arrays.compareUnsigned(x._2, y._2)
-                }
-              })
-              // same arithmetic as the expression plan: prefixLen =
-              // n - cast(ceil(t*n - 1e-9) as int) + 1, sliced to [1, prefixLen]
-              val prefixLen = n - math.ceil(t * n - 1e-9).toInt + 1
-              val take = math.max(0, math.min(prefixLen, n))
-              Iterator.tabulate(take)(p =>
-                org.apache.spark.sql.Row(id, n, p, toks(p)._3))
-            }
-          }
-        }
-      }(enc)
+    private def distributedProbe(sh: Shingled, d: Distributed): (DataFrame, Seq[DataFrame]) = {
+      val sc = sh.df.sparkSession.sparkContext
+      val newPrefixes = d.freq match {
+        case Left(bc) => pinPartitions(prefixKernel(sh.df, idCol, threshold, bc), col("tok"))
+        case Right(tokenCounts) =>
+          prefixRows(sortedTokens(sh.df, idCol, ex =>
+            ex.join(tokenCounts, Seq("tok"), "left")
+              .withColumn("cnt", coalesce(col("cnt"), lit(0L))), unique = false),
+            idCol, threshold)
+      }
+      val candidates = newPrefixes.as("x").join(d.refPrefixes.as("y"),
+          col("x.tok") === col("y.tok") && jaccardPrunes(threshold))
+        .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
+      val (verified, candCache) = JobDescription.scoped(sc, "xdedup: candidates")(
+        verifyAgainstIndex(candidates, sh.df, sh.rows, d))
+      (verified.dropDuplicates("a", "b"), sh.owned :+ candCache)
     }
 
     /** Per-batch exact-Jaccard verify against the PRE-SORTED, PRE-PARTITIONED
       * reference verify side: the batch side (small by construction in a
       * streaming probe) attaches by broadcast when it fits, and the candidate
       * stream is the only thing exchanged — hash(b) into the reference's
-      * frozen layout. The r15 path re-sorted and re-exchanged the whole
-      * reference shingle table per batch AND double-exchanged the candidates.
-      * Chunk-dial semantics preserved ([[chunkedVerify]]); oversized batches
-      * or chunk slices fall back to the demand-sized two-exchange join
-      * (bounded per-task pair fan-out, the sf3 lesson), still reusing the
-      * pre-sorted right side.
+      * frozen layout. Chunk-dial semantics preserved ([[chunkedVerify]]);
+      * oversized batches or chunk slices fall back to the demand-sized
+      * two-exchange join (bounded per-task pair fan-out, the sf3 lesson),
+      * still reusing the pre-sorted right side.
       */
     private def verifyAgainstIndex(candidates: DataFrame, shNew: DataFrame,
-                                   batchRows: Long): (DataFrame, DataFrame) = {
+                                   batchRows: Long, d: Distributed): (DataFrame, DataFrame) = {
       val spark = candidates.sparkSession
       val left = shNew.select(col(idCol).as("a"), sort_array(col("sh")).as("sh_a"))
       val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cnt = cand.count()
+      val cnt = releaseOnFailure(Seq(cand))(cand.count())
       val k = verifyChunkCount(cnt)
       if (sys.props.get("graft.verify.debug").nonEmpty)
         System.err.println(s"[verify] candidates=$cnt chunks=$k (indexed)")
@@ -904,21 +804,21 @@ object Dedup {
       // broadcast budget for the batch-side shingle arrays (~2-4 KB/row);
       // override with graft.crossindex.broadcastBatchRows
       val leftBroadcastable = batchRows <=
-        longProp("graft.crossindex.broadcastBatchRows").getOrElse(100000L)
+        longProp("graft.crossindex.broadcastBatchRows", min = 0L).getOrElse(100000L)
       // per-task pair fan-out stays within the verify row target when the
       // chunk slice spreads over the reference's frozen partition count
       val perPart = longProp("graft.verify.rowsPerPartition").getOrElse(150000L)
-      val fitsFrozenLayout = perChunk <= perPart * refVerifyParts
+      val fitsFrozenLayout = perChunk <= perPart * d.refVerifyParts
       val result = chunkedVerify(cand, k) { slice =>
         val joined =
           if (leftBroadcastable && fitsFrozenLayout)
             slice.join(org.apache.spark.sql.functions.broadcast(left), "a")
-              .repartition(refVerifyParts, col("b"))
-              .join(refVerify, "b")
+              .repartition(d.refVerifyParts, col("b"))
+              .join(d.refVerify, "b")
           else {
             val n = verifyPartitions(spark, perChunk)
             slice.repartition(n, col("a")).join(left, "a")
-              .repartition(n, col("b")).join(refVerify, "b")
+              .repartition(n, col("b")).join(d.refVerify, "b")
           }
         keepJaccardAtLeast(joined, threshold)
           .select(col("a"), col("b"), col("jaccard"))
@@ -926,43 +826,71 @@ object Dedup {
       (result, cand)
     }
 
-    // release() must stay idempotent (unpersist always was; Broadcast.destroy
-    // throws on a second call), and in tier 1 `refKernel.tokFreq` is the SAME
-    // broadcast instance as `tokFreq` — destroy each broadcast exactly once.
     private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-    def release(): Unit = if (released.compareAndSet(false, true)) {
-      shRef.unpersist(blocking = false)
-      tokenCounts.unpersist(blocking = false)
-      refPrefixes.unpersist(blocking = false)
-      refVerify.unpersist(blocking = false)
-      tokFreq.foreach(_.destroy())
-      refKernel.foreach { rk =>
-        if (!tokFreq.exists(_ eq rk.tokFreq)) rk.tokFreq.destroy()
-        rk.postings.destroy(); rk.refShingles.destroy()
-      }
-    }
+    /** Releases what the tier owns, once; later calls are no-ops. */
+    def release(): Unit = if (released.compareAndSet(false, true)) tier.release()
   }
 
   object PrefixCrossIndex {
-    /** Compact postings list for one token: the reference rows whose
-      * rare-first PREFIX contains it, as parallel arrays (id boxed — the
-      * operator is id-type-generic; sz/pos primitive).
+    /** Where an index keeps its reference. */
+    private[text] sealed trait Tier { def release(): Unit }
+
+    /** Tier 1: the reference's maps, broadcast from the driver. */
+    private[text] final case class DriverKernel(rk: RefKernel) extends Tier {
+      def release(): Unit = rk.destroy()
+    }
+
+    /** Tiers 2 and 3: the reference's rare-first prefix rows (pinned on
+      * tok) and its verify side (b, sorted sh_b) hash-partitioned on b into
+      * `refVerifyParts`, both persisted; `freq` is the frozen vocabulary, a
+      * broadcast map (tier 2) or the persisted token counts (tier 3).
+      * `owned` lists every cache the tier holds, the shingle table's too.
+      */
+    private[text] final case class Distributed(
+        refPrefixes: DataFrame, refVerify: DataFrame, refVerifyParts: Int,
+        freq: Either[org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]],
+          DataFrame],
+        owned: Seq[DataFrame]) extends Tier {
+      def release(): Unit = {
+        owned.foreach(_.unpersist(blocking = false))
+        freq.fold(_.destroy(), _ => ())
+      }
+    }
+
+    /** What a tier-1 probe pairs: one corpus's Jaccard pairs (a < b,
+      * integral ids), Jaccard pairs across two corpora, or ordered
+      * containment pairs (a != b).
+      */
+    private[text] sealed trait Mode extends Serializable
+    private[text] case object SelfJaccard extends Mode
+    private[text] case object CrossJaccard extends Mode
+    private[text] case object Containment extends Mode
+
+    /** Compact postings list for one token: the rows whose rare-first
+      * PREFIX (every token, for containment) contains it, as parallel
+      * arrays (id boxed — the operator is id-type-generic; sz/pos
+      * primitive).
       */
     private[text] final case class Postings(ids: Array[Any], sz: Array[Int], pos: Array[Int])
 
-    /** Tier-1 broadcast index: frozen token frequencies, the token → prefix
-      * postings map, and every reference doc's shingle set (id → tokens).
+    /** Tier-1 broadcast index: frozen token frequencies, the token →
+      * postings map, and every indexed doc's rare-first shingles (id →
+      * tokens).
       */
     private[text] final case class RefKernel(
         tokFreq: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]],
         postings: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, Postings]],
         refShingles: org.apache.spark.broadcast.Broadcast[java.util.HashMap[Any, Array[String]]],
-        refIdField: org.apache.spark.sql.types.StructField)
+        refIdField: org.apache.spark.sql.types.StructField) {
+      def destroy(): Unit = { tokFreq.destroy(); postings.destroy(); refShingles.destroy() }
+    }
 
-    /** Sort `toks` in place-equivalent fashion by (frozen frequency asc,
-      * UTF-8 byte order asc) — the shared rare-first total order. Returns
-      * the sorted token array.
+    /** `toks` sorted by (frozen frequency asc, UTF-8 byte order asc) — the
+      * shared rare-first total order, EXACTLY sort_array's over
+      * struct(cnt: long, tok: string) (binary string collation = unsigned
+      * UTF-8 byte order; shingles are distinct, so equal keys cannot
+      * reorder observable output). Unseen tokens take cnt 0.
       */
     private[text] def rareFirst(toks: scala.collection.Seq[String],
                                 freq: java.util.HashMap[String, java.lang.Long]): Array[String] = {
@@ -988,238 +916,143 @@ object Dedup {
       out
     }
 
-    /** Rare-first prefix length — the same arithmetic as the expression
-      * plan: n - cast(ceil(t*n - 1e-9) as int) + 1, clamped to [0, n].
+    /** Rare-first prefix length — the same arithmetic as [[prefixRows]]:
+      * n - cast(ceil(t*n - 1e-9) as int) + 1, clamped to [0, n].
       */
     private[text] def prefixLen(n: Int, t: Double): Int =
       math.max(0, math.min(n - math.ceil(t * n - 1e-9).toInt + 1, n))
 
-    /** The tier-1 per-batch probe: for each batch row, derive the rare-first
-      * prefix under the frozen order, probe the broadcast postings with the
-      * PPJoin length + position prunes (same ceil/1e-9 arithmetic as the
-      * join conditions), collect the candidate reference ids ONCE each, and
-      * verify with exact Jaccard (i / (|a| + |b| - i) in double — identical
-      * to [[keepJaccardAtLeast]]'s arithmetic). Emits (a, b, jaccard),
-      * (a, b)-distinct by construction.
+    /** Rare-first prefix rows (id, sz, pos, tok) of a shingle table under a
+      * frozen frequency map, as one narrow pass — row for row the output of
+      * [[prefixRows]] over [[sortedTokens]] with the same frequencies. Rows
+      * with a null id are dropped (they pair with nothing).
       */
-    private[text] def kernelProbe(shNew: DataFrame, idCol: String, threshold: Double,
-                                  rk: RefKernel, selfOrdered: Boolean = false): DataFrame = {
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        shNew.schema(idCol).copy(name = "a"),
-        rk.refIdField.copy(name = "b"),
-        org.apache.spark.sql.types.StructField("jaccard",
-          org.apache.spark.sql.types.DoubleType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      val t = threshold
-      val tFrac = threshold / (1 + threshold)
-      shNew.mapPartitions { it =>
-        val freq = rk.tokFreq.value
-        val posts = rk.postings.value
-        val refSh = rk.refShingles.value
+    private[text] def prefixKernel(
+        sh: DataFrame, idCol: String, threshold: Double,
+        freq: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]]
+    ): DataFrame = {
+      import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+      val outSchema = StructType(Seq(
+        sh.schema(idCol),
+        StructField("sz", IntegerType, nullable = false),
+        StructField("pos", IntegerType, nullable = false),
+        StructField("tok", StringType, nullable = true)))
+      sh.select(col(idCol), col("sh")).mapPartitions { it =>
+        val m = freq.value
         it.flatMap { r =>
-          // a null id on either side matches nothing in the expression
-          // plans (the self join's a < b, the cross verify's equi-joins),
-          // so its pairs are dropped here too
           if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
           else {
-            val a = r.get(0)
-            // self-join mode (one corpus on both sides): keep only a < b,
-            // the expression plan's pair-orientation condition — integral
-            // ids only (the tier gate checks), compared as longs like
-            // Catalyst's numeric <
-            val aLong = if (selfOrdered) a.asInstanceOf[Number].longValue() else 0L
-            val sh = r.getSeq[String](1)
-            val n = sh.length
-            if (n == 0) Iterator.empty
-            else {
-              val sorted = rareFirst(sh, freq)
-              val take = prefixLen(n, t)
-              val cands = new java.util.LinkedHashSet[Any]()
-              var p = 0
-              while (p < take) {
-                val post = posts.get(sorted(p))
-                if (post != null) {
-                  var j = 0
-                  val m = post.ids.length
-                  while (j < m) {
-                    val szY = post.sz(j)
-                    // non-null id, pair orientation (self mode), then
-                    // length filter (both directions), then position filter
-                    if (post.ids(j) != null && (!selfOrdered ||
-                          aLong < post.ids(j).asInstanceOf[Number].longValue()) &&
-                        szY >= math.ceil(t * n - 1e-9) &&
-                        n >= math.ceil(t * szY - 1e-9)) {
-                      val alpha = math.ceil(tFrac * (n + szY) - 1e-9)
-                      if (alpha <= 1L + math.min(n - p - 1, szY - post.pos(j) - 1))
-                        cands.add(post.ids(j))
-                    }
-                    j += 1
-                  }
-                }
-                p += 1
-              }
-              if (cands.isEmpty) Iterator.empty
-              else {
-                val set = new java.util.HashSet[String](n * 2)
-                var i = 0
-                while (i < n) { set.add(sorted(i)); i += 1 }
-                val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-                val itc = cands.iterator()
-                while (itc.hasNext) {
-                  val b = itc.next()
-                  val bSh = refSh.get(b)
-                  if (bSh != null) {
-                    var inter = 0
-                    var k = 0
-                    while (k < bSh.length) {
-                      if (set.contains(bSh(k))) inter += 1
-                      k += 1
-                    }
-                    val jac = inter.toDouble /
-                      (n.toDouble + bSh.length.toDouble - inter.toDouble)
-                    if (jac >= t) out += org.apache.spark.sql.Row(a, b, jac)
-                  }
-                }
-                out.iterator
-              }
-            }
+            val sorted = rareFirst(r.getSeq[String](1), m)
+            val n = sorted.length
+            Iterator.tabulate(prefixLen(n, threshold))(p =>
+              org.apache.spark.sql.Row(r.get(0), n, p, sorted(p)))
           }
         }
-      }(enc).toDF("a", "b", "jaccard")
+      }(org.apache.spark.sql.Encoders.row(outSchema))
     }
 
-    /** Tier-1 SELF-join kernel ([[prefixFilterJoin]]'s broadcast gate): one
-      * driver collect of the (already persisted and counted) shingle table
-      * builds the frozen frequency map, the prefix postings, and the
-      * id → shingles map — the same structures [[buildPrefixCrossIndex]]
-      * derives for the streaming cross index — then the pair set is one
-      * narrow [[kernelProbe]] pass in self-ordered mode (a < b, exactly the
-      * expression join's pair orientation). Candidate prunes and the exact
-      * Jaccard verify carry the identical ceil/1e-9 arithmetic, so the
-      * output equals the expression plan's bit-for-bit; candidates are
-      * (a, b)-distinct by construction (LinkedHashSet per probing row), so
-      * the caller's dropDuplicates contract is met without a shuffle.
-      * Broadcasts are released by the ContextCleaner when the result frame
-      * is GC'd (the BruteKernels per-call pattern — the long-lived destroy
-      * discipline is only for the streaming index).
+    /** The one tier-1 probe: for each row of `sh`, derive the rare-first
+      * prefix under the frozen order, scan the postings of each prefix
+      * token, keep each entry passing the mode's prunes ONCE (LinkedHashSet),
+      * and verify it with an exact intersection count. The prunes and scores
+      * carry the distributed plans' arithmetic (ceil with the 1e-9 guard,
+      * double division), so the output equals theirs bit-for-bit:
+      *  - Jaccard modes: [[jaccardPrunes]] (plus a < b as longs in
+      *    [[SelfJaccard]], the expression plan's orientation) and
+      *    i / (|a| + |b| - i) >= t, as [[keepJaccardAtLeast]];
+      *  - [[Containment]]: the one-sided length prune |b| >= ceil(t*|a|)
+      *    and a != b, then C(a->b) = i / |a| >= t, emitted as Spark's
+      *    `round(_, 6)` ([[graft.similarity.BruteKernels.round6]]).
+      * Emits (a, b, jaccard | containment), (a, b)-distinct by construction.
       */
-    private[text] def selfKernelPairs(sh: DataFrame, idCol: String,
-                                      threshold: Double): DataFrame = {
-      val rk = driverKernel(sh, idCol, threshold)
-      kernelProbe(sh, idCol, threshold, rk, selfOrdered = true)
-    }
-
-    /** Tier-1 CROSS kernel ([[prefixFilterCrossJoin]]'s broadcast gate):
-      * the REFERENCE side's maps are driver-built under the (ref frequency,
-      * token-bytes) order — unseen batch tokens sort first (cnt 0), the
-      * completeness argument documented at [[buildPrefixCrossIndex]] — and
-      * the new side probes in one narrow pass. The shared order DIFFERS
-      * from the expression pipeline's union frequency, which changes only
-      * which collisions generate each candidate, never the output: any
-      * single total order applied to both sides is complete, and the
-      * verify (exact Jaccard, identical double arithmetic) decides
-      * membership.
-      */
-    private[text] def crossKernelPairs(shNew: DataFrame, shRef: DataFrame,
-                                       idCol: String, threshold: Double): DataFrame = {
-      val rk = driverKernel(shRef, idCol, threshold)
-      kernelProbe(shNew, idCol, threshold, rk)
-    }
-
-    /** Tier-1 CONTAINMENT kernel ([[containmentPairs]]' broadcast gate):
-      * postings index EVERY token (the expression plan joins a's prefix
-      * against b's FULL token table), the probe applies the one-sided
-      * length prune `|b| >= ceil(t*|a| - 1e-9)` and a != b, and the verify
-      * computes C(a->b) = |a∩b| / |a| with the same double division and
-      * Spark `round(_, 6)` (HALF_UP on the canonical decimal form,
-      * [[graft.similarity.BruteKernels.roundAt]]) as the expression plan.
-      * Emits (a, b, containment), (a, b)-distinct by construction.
-      */
-    private[text] def containmentKernelPairs(sh: DataFrame, idCol: String,
-                                             threshold: Double): DataFrame = {
-      val rk = driverKernel(sh, idCol, threshold, fullPostings = true)
+    private[text] def kernelProbe(sh: DataFrame, idCol: String, threshold: Double,
+                                  rk: RefKernel, mode: Mode): DataFrame = {
+      val containment = mode == Containment
+      val selfOrdered = mode == SelfJaccard
+      val score = if (containment) "containment" else "jaccard"
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         sh.schema(idCol).copy(name = "a"),
-        sh.schema(idCol).copy(name = "b"),
-        org.apache.spark.sql.types.StructField("containment",
+        rk.refIdField.copy(name = "b"),
+        org.apache.spark.sql.types.StructField(score,
           org.apache.spark.sql.types.DoubleType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
       val t = threshold
-      sh.mapPartitions { it =>
+      val tFrac = threshold / (1 + threshold)
+      sh.select(col(idCol), col("sh")).mapPartitions { it =>
         val freq = rk.tokFreq.value
         val posts = rk.postings.value
         val refSh = rk.refShingles.value
         it.flatMap { r =>
-          // a null id matches nothing in the expression plan's a =!= b
+          // a null id matches nothing in the expression plans (a < b,
+          // a =!= b, the verify's equi-joins); the postings hold none
           if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
           else {
             val a = r.get(0)
-            val shA = r.getSeq[String](1)
-            val n = shA.length
-            if (n == 0) Iterator.empty
+            val aLong = if (selfOrdered) a.asInstanceOf[Number].longValue() else 0L
+            val sorted = rareFirst(r.getSeq[String](1), freq)
+            val n = sorted.length
+            val minSz = math.ceil(t * n - 1e-9)
+            val take = prefixLen(n, t)
+            val cands = new java.util.LinkedHashSet[Any]()
+            var p = 0
+            while (p < take) {
+              val post = posts.get(sorted(p))
+              if (post != null) {
+                var j = 0
+                while (j < post.ids.length) {
+                  val b = post.ids(j)
+                  val szY = post.sz(j)
+                  val keep =
+                    if (containment) szY >= minSz && b != a
+                    else (!selfOrdered || aLong < b.asInstanceOf[Number].longValue()) &&
+                      szY >= minSz && n >= math.ceil(t * szY - 1e-9) &&
+                      math.ceil(tFrac * (n + szY) - 1e-9) <=
+                        1L + math.min(n - p - 1, szY - post.pos(j) - 1)
+                  if (keep) cands.add(b)
+                  j += 1
+                }
+              }
+              p += 1
+            }
+            if (cands.isEmpty) Iterator.empty
             else {
-              val sorted = rareFirst(shA, freq)
-              val take = prefixLen(n, t)
-              val cands = new java.util.LinkedHashSet[Any]()
-              var p = 0
-              while (p < take) {
-                val post = posts.get(sorted(p))
-                if (post != null) {
-                  var j = 0
-                  val m = post.ids.length
-                  while (j < m) {
-                    // one-sided length prune + a != b (value equality, the
-                    // expression plan's =!=, which no null id passes)
-                    if (post.sz(j) >= math.ceil(t * n - 1e-9) && post.ids(j) != null &&
-                        post.ids(j) != a)
-                      cands.add(post.ids(j))
-                    j += 1
-                  }
+              val set = new java.util.HashSet[String](n * 2)
+              var i = 0
+              while (i < n) { set.add(sorted(i)); i += 1 }
+              val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+              val itc = cands.iterator()
+              while (itc.hasNext) {
+                val b = itc.next()
+                val bSh = refSh.get(b)
+                var inter = 0
+                var k = 0
+                while (k < bSh.length) {
+                  if (set.contains(bSh(k))) inter += 1
+                  k += 1
                 }
-                p += 1
+                val s =
+                  if (containment) inter.toDouble / n.toDouble
+                  else inter.toDouble / (n.toDouble + bSh.length.toDouble - inter.toDouble)
+                if (s >= t) out += org.apache.spark.sql.Row(a, b,
+                  if (containment) graft.similarity.BruteKernels.round6(s) else s)
               }
-              if (cands.isEmpty) Iterator.empty
-              else {
-                val set = new java.util.HashSet[String](n * 2)
-                var i = 0
-                while (i < n) { set.add(sorted(i)); i += 1 }
-                val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-                val itc = cands.iterator()
-                while (itc.hasNext) {
-                  val b = itc.next()
-                  val bSh = refSh.get(b)
-                  if (bSh != null) {
-                    var inter = 0
-                    var k = 0
-                    while (k < bSh.length) {
-                      if (set.contains(bSh(k))) inter += 1
-                      k += 1
-                    }
-                    val c = inter.toDouble / n.toDouble
-                    if (c >= t)
-                      out += org.apache.spark.sql.Row(a, b,
-                        graft.similarity.BruteKernels.round6(c))
-                  }
-                }
-                out.iterator
-              }
+              out.iterator
             }
           }
         }
-      }(enc).toDF("a", "b", "containment")
+      }(org.apache.spark.sql.Encoders.row(outSchema))
     }
 
-    /** One driver collect of an (id, sh) shingle table → broadcast
-      * [[RefKernel]]: frozen token document frequencies (per-doc shingles
-      * are DISTINCT, so row-count per token == the expression plan's
-      * count(1) over the exploded (id, tok) stream), rare-first prefix
-      * postings (or the FULL token postings for the containment kernel),
-      * and the id → sorted-shingles map.
+    /** The one driver index: one collect of an (id, sh) shingle table →
+      * broadcast [[RefKernel]]. Token document frequencies count every row
+      * (per-doc shingles are DISTINCT, so rows per token == the expression
+      * plan's count over the exploded stream); postings hold each non-null
+      * id's rare-first prefix (every token with `fullPostings`, which the
+      * containment probe needs: it joins a's prefix against b's full token
+      * set). A duplicate non-null id throws.
       */
     private[text] def driverKernel(sh: DataFrame, idCol: String, threshold: Double,
                                    fullPostings: Boolean = false): RefKernel = {
       val sc = sh.sparkSession.sparkContext
-      val idField = sh.schema(idCol)
       val rows = sh.select(col(idCol), col("sh")).collect()
       val freqMap = new java.util.HashMap[String, java.lang.Long]()
       rows.foreach { r =>
@@ -1239,13 +1072,12 @@ object Dedup {
       val postBuild = new java.util.HashMap[String,
         scala.collection.mutable.ArrayBuffer[(Any, Int, Int)]]()
       rows.foreach { r =>
-        if (!r.isNullAt(1)) {
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
           val id = r.get(0)
           val sorted = rareFirst(r.getSeq[String](1), freqMap)
           val n = sorted.length
-          refShMap.put(id, sorted)
-          // fullPostings: index EVERY token (the containment operator joins
-          // a's prefix against b's full token table), else the prefix only
+          val prev = refShMap.put(id, sorted)
+          require(prev == null, s"duplicate $idCol $id")
           val take = if (fullPostings) n else prefixLen(n, threshold)
           var p = 0
           while (p < take) {
@@ -1266,14 +1098,15 @@ object Dedup {
           buf.map(_._1).toArray, buf.map(_._2).toArray, buf.map(_._3).toArray))
       }
       RefKernel(sc.broadcast(freqMap), sc.broadcast(postings),
-        sc.broadcast(refShMap), idField)
+        sc.broadcast(refShMap), sh.schema(idCol))
     }
   }
 
   /** Build a [[PrefixCrossIndex]] over an immutable reference corpus: its
-    * shingle table, token document frequencies, and rare-first prefix
-    * stream are computed ONCE and persisted for every subsequent
-    * [[PrefixCrossIndex.joinBatch]].
+    * token frequencies and rare-first prefixes are derived ONCE for every
+    * subsequent [[PrefixCrossIndex.joinBatch]]. `idCol` must be unique
+    * among the reference's non-null ids: a duplicate throws here on tier 1,
+    * in the first probe on tiers 2 and 3.
     */
   def buildPrefixCrossIndex(refDocs: DataFrame, idCol: String, textCol: String,
                             shingleSize: Int = 3, threshold: Double = 0.5): PrefixCrossIndex =
@@ -1282,113 +1115,68 @@ object Dedup {
 
   private def buildPrefixCrossIndexImpl(refDocs: DataFrame, idCol: String, textCol: String,
                                         shingleSize: Int, threshold: Double): PrefixCrossIndex = {
-    val sc = refDocs.sparkSession.sparkContext
-    val shRef = widen(refDocs)
-      .select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val refRows = shRef.count()
-    val ex = shRef.select(col(idCol), explode(col("sh")).as("tok"))
-    // groupBy(tok) leaves the counts hash-partitioned on tok, and the
-    // persisted InMemoryRelation PRESERVES that outputPartitioning — every
-    // per-batch frequency lookup join then shuffles only the (small) batch
-    // token side, never the vocabulary. Same for refPrefixes below (already
-    // pinned on tok by pinPartitions).
-    val tokenCounts = ex.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vocabRows = tokenCounts.count()
-    // the materializing count doubles as the broadcastability measurement:
-    // ~40 B/row keeps 4M tokens near 160 MB — inside executor broadcast
-    // budgets; beyond that the lookup stays a shuffle join
-    val vocabBroadcastable = vocabRows <=
-      longProp("graft.crossindex.broadcastVocabRows").getOrElse(4000000L)
-    // Frozen vocabulary as a driver map (broadcast once, looked up per batch
-    // token in the prefix kernel) — same budget gate as the r15 broadcast
-    // join it replaces. A scale-out vocabulary keeps the shuffle-join chain.
-    val freqMap =
-      if (vocabBroadcastable) {
-        val m = new java.util.HashMap[String, java.lang.Long](
-          math.max(16, (vocabRows * 4 / 3).toInt))
-        tokenCounts.collect().foreach(r =>
-          m.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1))))
-        m
-      } else null
-    val tokFreq = Option(freqMap).map(sc.broadcast(_))
-    // Tier 1: the whole reference fits the broadcast budget (measured rows;
-    // ~2-4 KB of shingles per doc keeps the default 100k near a few hundred
-    // MB — the guide's workable broadcast range). The postings + shingle-set
-    // maps are derived ON THE DRIVER from one collect of the (persisted)
-    // shingle table under the SAME frozen (freq, token-bytes) order, then
-    // broadcast once; every micro-batch probe is a single narrow kernel
-    // pass. Beyond the gate, tier 2/3 keep the distributed relations.
-    val refKernelGate = longProp("graft.crossindex.broadcastRefRows").getOrElse(100000L)
-    if (vocabBroadcastable && refRows <= refKernelGate) {
-      val t = threshold
-      val refShMap = new java.util.HashMap[Any, Array[String]](
-        math.max(16, (refRows * 4 / 3).toInt))
-      val postBuild = new java.util.HashMap[String,
-        scala.collection.mutable.ArrayBuffer[(Any, Int, Int)]]()
-      shRef.collect().foreach { r =>
-        if (!r.isNullAt(1)) {
-          val id = r.get(0)
-          val sorted = PrefixCrossIndex.rareFirst(r.getSeq[String](1), freqMap)
-          val n = sorted.length
-          refShMap.put(id, sorted)
-          val take = PrefixCrossIndex.prefixLen(n, t)
-          var p = 0
-          while (p < take) {
-            var buf = postBuild.get(sorted(p))
-            if (buf == null) {
-              buf = scala.collection.mutable.ArrayBuffer.empty[(Any, Int, Int)]
-              postBuild.put(sorted(p), buf)
-            }
-            buf += ((id, n, p))
-            p += 1
-          }
-        }
-      }
-      val postings = new java.util.HashMap[String, PrefixCrossIndex.Postings](
-        math.max(16, postBuild.size() * 4 / 3))
-      postBuild.forEach { (tok, buf) =>
-        postings.put(tok, PrefixCrossIndex.Postings(
-          buf.map(_._1).toArray, buf.map(_._2).toArray, buf.map(_._3).toArray))
-      }
-      val refIdField = shRef.schema(idCol)
-      shRef.unpersist(blocking = false)
-      tokenCounts.unpersist(blocking = false)
-      val rk = PrefixCrossIndex.RefKernel(
-        tokFreq.get, sc.broadcast(postings), sc.broadcast(refShMap), refIdField)
-      // distributed relations stay as UNMATERIALIZED plans (never persisted
-      // in this tier); release() on them is a no-op
-      return new PrefixCrossIndex(idCol, textCol, shingleSize, threshold,
-        shRef, tokenCounts, shRef.limit(0), vocabBroadcastable,
-        tokFreq, shRef.limit(0), 1, Some(rk))
+    val sh = shingleTable(refDocs, idCol, textCol, shingleSize)
+    val tier = releaseOnFailure(sh.owned) {
+      if (driverTier(sh.rows, sh.tokens)) {
+        val rk = PrefixCrossIndex.driverKernel(sh.df, idCol, threshold)
+        sh.owned.foreach(_.unpersist(blocking = false)) // the maps hold it all
+        PrefixCrossIndex.DriverKernel(rk)
+      } else distributedTier(sh, idCol, threshold)
     }
-    val sorted = ex.join(tokenCounts, Seq("tok"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("cnt"), col("tok")))).as("sh_sorted"))
-    val prefixLen = (size(col("sh_sorted"))
-      - ceil(lit(threshold) * size(col("sh_sorted")) - lit(1e-9)).cast("int") + 1).cast("int")
-    val refPrefixes = pinPartitions(sorted
-      .select(col(idCol), size(col("sh_sorted")).as("sz"),
-        posexplode(transform(slice(col("sh_sorted"), lit(1), prefixLen),
-          x => x.getField("tok"))).as(Seq("pos", "tok"))),
-      col("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    refPrefixes.count()
-    // Reference VERIFY side, sorted + hash-partitioned on b ONCE: every
-    // batch's exact-Jaccard verify joins into this frozen layout instead of
-    // re-sorting and re-exchanging the full reference per batch. Partition
-    // count is demand-sized from the measured reference row count (the same
-    // rows-not-bytes rule as verifyPartitions).
-    val refVerifyParts = verifyPartitions(refDocs.sparkSession, refRows)
-    val refVerify = shRef
-      .select(col(idCol).as("b"), sort_array(col("sh")).as("sh_b"))
-      .repartition(refVerifyParts, col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    refVerify.count()
-    new PrefixCrossIndex(idCol, textCol, shingleSize, threshold,
-      shRef, tokenCounts, refPrefixes, vocabBroadcastable,
-      tokFreq, refVerify, refVerifyParts, None)
+    new PrefixCrossIndex(idCol, textCol, shingleSize, threshold, tier)
+  }
+
+  /** Tiers 2 and 3 of [[buildPrefixCrossIndex]]; the tier owns the
+    * reference's shingle cache too (the first probe derives the persisted
+    * prefixes from it).
+    */
+  private def distributedTier(sh: Shingled, idCol: String,
+                              threshold: Double): PrefixCrossIndex.Distributed = {
+    val owned = scala.collection.mutable.ArrayBuffer.from(sh.owned)
+    // persisted, and materialized by the first probe (its one consumer)
+    def kept(df: DataFrame): DataFrame = {
+      owned += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+    releaseOnFailure(owned.toSeq) {
+      // Reference VERIFY side, sorted + hash-partitioned on b ONCE: every
+      // batch's verify joins into this frozen layout instead of re-sorting
+      // and re-exchanging the reference. Partition count follows the
+      // reference rows (the rows-not-bytes rule of verifyPartitions); the
+      // groupBy reuses that partitioning and rejects a duplicate id.
+      val refVerifyParts = verifyPartitions(sh.df.sparkSession, sh.rows)
+      val refVerify = kept(sh.df
+        .select(col(idCol).as("b"), col("sh"))
+        .repartition(refVerifyParts, col("b"))
+        .groupBy(col("b")).agg(first(col("sh")).as("sh"), count(lit(1)).as("__n__"))
+        .select(col("b"), uniqueOr(col("b"), col("__n__"), sort_array(col("sh")), idCol).as("sh_b")))
+      // groupBy(tok) leaves the counts hash-partitioned on tok, and the
+      // persisted relation keeps that partitioning: tier 3's per-batch
+      // lookup join then shuffles only the batch tokens. Σ|sh| bounds the
+      // vocabulary, so the counts are persisted and counted only when that
+      // bound passes the gate.
+      val tokenCounts = sh.df.select(explode(col("sh")).as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+      val vocabGate = longProp("graft.crossindex.broadcastVocabRows", min = 0L).getOrElse(4000000L)
+      val vocabRows = if (sh.tokens <= vocabGate) sh.tokens else kept(tokenCounts).count()
+      val freq =
+        if (vocabRows > vocabGate) Right(tokenCounts)
+        else {
+          val m = new java.util.HashMap[String, java.lang.Long](
+            math.max(16, (vocabRows * 4 / 3).toInt))
+          tokenCounts.collect().foreach(r =>
+            m.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1))))
+          tokenCounts.unpersist(blocking = false)
+          owned -= tokenCounts
+          Left(sh.df.sparkSession.sparkContext.broadcast(m))
+        }
+      val refPrefixes = kept(freq match {
+        case Left(bc) => pinPartitions(PrefixCrossIndex.prefixKernel(sh.df, idCol, threshold, bc),
+          col("tok"))
+        case Right(_) => prefixRows(sortedTokens(sh.df, idCol, windowFreq), idCol, threshold)
+      })
+      PrefixCrossIndex.Distributed(refPrefixes, refVerify, refVerifyParts, freq, owned.toSeq)
+    }
   }
 
   /** Asymmetric CONTAINMENT near-dup pairs: ordered pairs (a, b) with
@@ -1401,14 +1189,13 @@ object Dedup {
     * C(a→b) >= t then fewer than t*|a| of a's tokens are outside its
     * rare-first prefix of length |a| - ceil(t*|a|) + 1, so at least one
     * PREFIX token of `a` is shared with b — probing a full token index of
-    * the container side finds every qualifying pair (completeness
-    * argument mirrors [[prefixFilterJoin]]; only the probe side can be
-    * prefix-pruned for containment because |b| is unbounded). A size
+    * the container side finds every qualifying pair (only the probe side
+    * can be prefix-pruned for containment because |b| is unbounded). A size
     * filter (`|b| >= ceil(t*|a|)` — the intersection needs that many
-    * tokens in b) prunes the rest. Shuffles are pinned equi-joins on the
-    * token key; the container-side index is the corpus token table — the
-    * documented skew remedy is the LSH family's: pre-collapse exact dups
-    * first.
+    * tokens in b) prunes the rest. The container-side index is the corpus
+    * token table — the documented skew remedy is the LSH family's:
+    * pre-collapse exact dups first. `idCol` must be unique among non-null
+    * ids (a duplicate throws).
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 3, threshold: Double = 0.8): DataFrame =
@@ -1424,58 +1211,41 @@ object Dedup {
 
   private def containmentPairsImpl(docs: DataFrame, idCol: String, textCol: String,
                                    shingleSize: Int, threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val withShingles = widen(docs).select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = withShingles.count()
-    // Tier-1 broadcast kernel, same gate/escape as prefixFilterJoinImpl
-    // (no id-type restriction: the pair condition is a != b, not an order)
-    if (!sys.props.get("graft.ppjoin.kernel").contains("off") &&
-        nRows <= longProp("graft.ppjoin.broadcastRows").getOrElse(100000L))
-      return (PrefixCrossIndex.containmentKernelPairs(withShingles, idCol, threshold),
-        Seq(withShingles))
-    val exploded = withShingles.select(col(idCol), explode(col("sh")).as("tok"))
-    val withCnt = exploded.withColumn("cnt",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))))
-    val sorted = withCnt
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("cnt"), col("tok")))).as("sh_sorted"))
-    // same 1e-9 ceil guard as prefixFilterJoin (completeness at
-    // non-dyadic thresholds)
-    val prefixLen = (size(col("sh_sorted"))
-      - ceil(lit(threshold) * size(col("sh_sorted")) - lit(1e-9)).cast("int") + 1).cast("int")
-    val prefixes = pinPartitions(sorted
-      .select(col(idCol).as("a"), size(col("sh_sorted")).as("a_sz"),
-        explode(transform(slice(col("sh_sorted"), lit(1), prefixLen),
-          x => x.getField("tok"))).as("tok")),
-      col("tok"))
-    val full = pinPartitions(sorted
-      .select(col(idCol).as("b"), size(col("sh_sorted")).as("b_sz"),
-        explode(transform(col("sh_sorted"), x => x.getField("tok"))).as("tok")),
-      col("tok"))
+    val sh = shingleTable(docs, idCol, textCol, shingleSize)
+    releaseOnFailure(sh.owned)(containmentOf(sh, idCol, threshold))
+  }
+
+  private def containmentOf(sh: Shingled, idCol: String,
+                            threshold: Double): (DataFrame, Seq[DataFrame]) = {
+    if (driverTier(sh.rows, sh.tokens))
+      return (PrefixCrossIndex.kernelProbe(sh.df, idCol, threshold,
+        PrefixCrossIndex.driverKernel(sh.df, idCol, threshold, fullPostings = true),
+        PrefixCrossIndex.Containment), sh.owned)
+    val sorted = sortedTokens(sh.df, idCol, windowFreq)
     // A pair surfaces once PER SHARED PREFIX TOKEN of `a` (the container
     // index is the full token table, so high-containment pairs share many)
     // — dedupe the id-only candidates BEFORE hauling both shingle arrays
     // through the verify joins; unlike prefixFilterJoin's ~5%-dup position
     // filter, duplication here scales with the overlap itself.
-    val candidates = prefixes.join(full,
-        prefixes("tok") === full("tok") && col("a") =!= col("b")
-          && col("b_sz") >= ceil(lit(threshold) * col("a_sz") - lit(1e-9)))
-      .select(col("a"), col("b"))
+    val candidates = prefixRows(sorted, idCol, threshold).as("x")
+      .join(prefixRows(sorted, idCol, threshold, full = true).as("y"),
+        col("x.tok") === col("y.tok") && col(s"x.$idCol") =!= col(s"y.$idCol") &&
+          col("y.sz") >= minSize(threshold, "x"))
+      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
       .dropDuplicates("a", "b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val left = withShingles.select(col(idCol).as("a"), sort_array(col("sh")).as("sh_a"))
-    val right = withShingles.select(col(idCol).as("b"), sort_array(col("sh")).as("sh_b"))
-    val spark = withShingles.sparkSession
+    val left = sh.df.select(col(idCol).as("a"), sort_array(col("sh")).as("sh_a"))
+    val right = sh.df.select(col(idCol).as("b"), sort_array(col("sh")).as("sh_b"))
     // demand-scaled verify parallelism, both exchanges pinned — see
     // [[verifyPairsOwned]] (the sf3 spill cliff was measured HERE: 98 s →
     // 21 s; the persist keeps candidate generation at one execution), and
     // bounded-footprint K-pass chunking past the single-pass disk budget
     // (the sf10 ENOSPC wall — see [[verifyChunkCount]]/[[chunkedVerify]])
-    val cnt = candidates.count()
+    val cnt = releaseOnFailure(Seq(candidates))(candidates.count())
     val k = verifyChunkCount(cnt)
     if (sys.props.get("graft.verify.debug").nonEmpty)
       System.err.println(s"[verify] containment candidates=$cnt chunks=$k")
-    val n = verifyPartitions(spark, (cnt + k - 1) / k)
+    val n = verifyPartitions(sh.df.sparkSession, (cnt + k - 1) / k)
     // early-exit verify: C(a->b) >= t needs an intersection of at least
     // ceil(t * |a|) (one-sided denominator; same ceil guard as alpha)
     val neededC = ceil(lit(threshold) * size(col("sh_a")).cast("double") - lit(1e-9)).cast("int")
@@ -1492,7 +1262,7 @@ object Dedup {
         .dropDuplicates("a", "b")
     }
     val verified = chunkedVerify(candidates, k)(onePass)
-    (verified, Seq(withShingles, candidates))
+    (verified, sh.owned :+ candidates)
   }
 
   /** Connected components of an undirected pair graph (near-dup pairs →

@@ -119,16 +119,14 @@ class DedupSpec extends SparkSpec {
     assert(border == Set((7L, 7L, 0.5)))
   }
 
-  test("PrefixCrossIndex batched joins equal the one-shot exact cross join") {
+  test("PrefixCrossIndex batched joins equal a brute-force cross join") {
     spark.catalog.clearCache()
     // streaming shape: the reference is indexed ONCE (frozen ref-frequency
     // token order), then probed by micro-batch slices; the union over
-    // batches must equal the one-shot exact operator REGARDLESS of batch
-    // boundaries — including the just-at-threshold pair
+    // batches must equal brute force REGARDLESS of batch boundaries —
+    // including the just-at-threshold pair
     val fresh = corpus.where(col("doc_id") % 2 === 0)
     val ref = corpus.where(col("doc_id") % 2 === 1)
-    val oneShot = Dedup.prefixFilterCrossJoinWith(fresh, ref, "doc_id", "text")(
-      _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet)
     val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text")
     try {
       val batched = Seq(
@@ -136,7 +134,7 @@ class DedupSpec extends SparkSpec {
         .flatMap(b => index.joinBatchWith(b)(
           _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect()))
         .toSet
-      assert(batched == oneShot)
+      assert(batched == bruteCrossJaccard(fresh, ref, 0.5) && batched.nonEmpty)
       // boundary pair at exactly the threshold, batch token unseen in ref:
       // {a b c d e f} vs ref {a b c d e f g h i j} -> j = 4/8 = 0.5
       val refSide = Seq((7L, "a b c d e f g h i j"),
@@ -241,13 +239,14 @@ class DedupSpec extends SparkSpec {
     val sc = spark.sparkContext
     val fresh = corpus.where(col("doc_id") % 2 === 0)
     val ref = corpus.where(col("doc_id") % 2 === 1)
-    val prev = sys.props.get("graft.crossindex.broadcastRefRows")
+    val prev = sys.props.get("graft.ppjoin.broadcastRows")
     sc.setJobDescription("caller")
     try Seq(None, Some("0")).foreach { refRows => // tier 1, tier 2
-      refRows.fold(sys.props.remove("graft.crossindex.broadcastRefRows"): Unit)(v =>
-        sys.props("graft.crossindex.broadcastRefRows") = v)
+      refRows.fold(sys.props.remove("graft.ppjoin.broadcastRows"): Unit)(v =>
+        sys.props("graft.ppjoin.broadcastRows") = v)
       val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text")
       try {
+        assert(tierOf(index) == (if (refRows.isEmpty) 1 else 2))
         assert(sc.getLocalProperty("spark.job.description") == "caller")
         assert(index.joinBatch(fresh).count() == 2)
         assert(index.joinBatchWith(fresh)(_.count()) == 2)
@@ -255,14 +254,14 @@ class DedupSpec extends SparkSpec {
       } finally index.release()
     } finally {
       sc.setJobDescription(null)
-      prev.fold(sys.props.remove("graft.crossindex.broadcastRefRows"): Unit)(v =>
-        sys.props("graft.crossindex.broadcastRefRows") = v)
+      prev.fold(sys.props.remove("graft.ppjoin.broadcastRows"): Unit)(v =>
+        sys.props("graft.ppjoin.broadcastRows") = v)
     }
     spark.catalog.clearCache()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  test("PrefixCrossIndex tiers 2 and 3 (forced gates) equal the one-shot join") {
+  test("PrefixCrossIndex tiers 2 and 3 (forced gates) equal a brute-force cross join") {
     spark.catalog.clearCache()
     // the default gates put any test-sized corpus on the tier-1 broadcast
     // kernel; force the distributed tiers so the prefix-kernel + frozen
@@ -270,31 +269,201 @@ class DedupSpec extends SparkSpec {
     // keep their exactness contract too
     val fresh = corpus.where(col("doc_id") % 2 === 0)
     val ref = corpus.where(col("doc_id") % 2 === 1)
-    val oneShot = Dedup.prefixFilterCrossJoinWith(fresh, ref, "doc_id", "text")(
-      _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet)
-    val prevRef = sys.props.get("graft.crossindex.broadcastRefRows")
-    val prevVocab = sys.props.get("graft.crossindex.broadcastVocabRows")
-    def runBatched(): Set[(Long, Long, Double)] = {
+    def runBatched(tier: Int): Set[(Long, Long, Double)] = {
       val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text")
-      try Seq(fresh.where(col("doc_id") <= 2), fresh.where(col("doc_id") > 2))
-        .flatMap(b => index.joinBatchWith(b)(
-          _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect()))
-        .toSet
-      finally { index.release(); index.release() /* idempotent per tier */ }
+      try {
+        assert(tierOf(index) == tier)
+        Seq(fresh.where(col("doc_id") <= 2), fresh.where(col("doc_id") > 2))
+          .flatMap(b => index.joinBatchWith(b)(
+            _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect()))
+          .toSet
+      } finally { index.release(); index.release() /* idempotent per tier */ }
     }
-    try {
-      sys.props("graft.crossindex.broadcastRefRows") = "0" // tier 2
-      assert(runBatched() == oneShot)
-      sys.props("graft.crossindex.broadcastVocabRows") = "0" // tier 3
-      assert(runBatched() == oneShot)
-    } finally {
-      prevRef.fold(sys.props.remove("graft.crossindex.broadcastRefRows"): Unit)(v =>
-        sys.props("graft.crossindex.broadcastRefRows") = v)
-      prevVocab.fold(sys.props.remove("graft.crossindex.broadcastVocabRows"): Unit)(v =>
-        sys.props("graft.crossindex.broadcastVocabRows") = v)
+    val brute = bruteCrossJaccard(fresh, ref, 0.5)
+    assert(brute.nonEmpty)
+    withProps("graft.ppjoin.broadcastRows" -> Some("0")) {
+      assert(runBatched(2) == brute)
+      withProps("graft.crossindex.broadcastVocabRows" -> Some("0"))(assert(runBatched(3) == brute))
     }
     spark.catalog.clearCache()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  /** Runs `body` with the given system properties set (`None` removes one),
+    * restoring every previous value afterwards. */
+  private def withProps[T](kvs: (String, Option[String])*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> sys.props.get(k) }
+    try {
+      kvs.foreach { case (k, v) => v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x) }
+      body
+    } finally prev.foreach { case (k, v) => v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x) }
+  }
+
+  // Hostile corpus for the differential spec (word shingles, shingleSize 1):
+  // a boilerplate phrase in every regular doc (the most frequent tokens),
+  // pairs exactly at jaccard 0.5, 0.8 and the non-dyadic 0.7, containment
+  // exactly at 0.5, 0.7 and 0.8, empty, one-word and null texts, null ids.
+  private val bp = "bp1 bp2 bp3"
+  private def words(p: String, n: Int): String = (1 to n).map(i => s"$p$i").mkString(" ")
+  private val hostile: Seq[(Option[Long], Option[String])] = Seq(
+    Some(1L) -> Some(s"$bp ${words("a", 3)}"),                    // 6 tokens
+    Some(2L) -> Some(s"$bp ${words("a", 3)} ${words("c", 6)}"),   // 12: j(1,2) = 0.5
+    Some(3L) -> Some(s"$bp ${words("e", 5)}"),                    // 8
+    Some(4L) -> Some(s"$bp ${words("e", 5)} f1 f2"),              // 10: j(3,4) = 0.8
+    Some(5L) -> Some(s"$bp ${words("g", 4)} h1"),                 // 8
+    Some(6L) -> Some(s"$bp ${words("g", 4)} k1 k2"),              // 9: j(5,6) = 0.7
+    Some(7L) -> Some(""),
+    Some(8L) -> Some(""),
+    Some(9L) -> Some("solo"),
+    Some(10L) -> Some("solo"),
+    Some(11L) -> None,
+    Some(12L) -> Some(s"$bp ${words("m", 9)}"),
+    Some(13L) -> Some(s"$bp ${words("g", 4)} z1 z2 z3"),          // c(13->5) = 0.7
+    None -> Some(s"$bp ${words("a", 3)}"),
+    None -> Some("solo"))
+
+  /** 1, 2 or 3: the tier a [[Dedup.PrefixCrossIndex]] was built on. */
+  private def tierOf(index: Dedup.PrefixCrossIndex): Int = index.tier match {
+    case _: Dedup.PrefixCrossIndex.DriverKernel => 1
+    case d: Dedup.PrefixCrossIndex.Distributed => if (d.freq.isLeft) 2 else 3
+  }
+
+  /** Brute-force exact cross Jaccard (a = new id, b = ref id, jaccard) over
+    * shingleSize-3 shingles. */
+  private def bruteCrossJaccard(fresh: org.apache.spark.sql.DataFrame,
+                                ref: org.apache.spark.sql.DataFrame,
+                                t: Double): Set[(Long, Long, Double)] = {
+    def sh(df: org.apache.spark.sql.DataFrame): Seq[(Long, Set[String])] =
+      df.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
+        .as[(Long, Seq[String])].collect().toSeq.map { case (id, s) => id -> s.toSet }
+    (for {
+      (a, x) <- sh(fresh); (b, y) <- sh(ref)
+      i = x.intersect(y).size.toDouble
+      j = i / (x.size.toDouble + y.size.toDouble - i) if j >= t
+    } yield (a, b, j)).toSet
+  }
+
+  test("every prefix-join mode and tier is bit-equal to a brute-force reference") {
+    spark.catalog.clearCache()
+    type Out = Seq[(Long, Long, Long)] // (a, b, raw bits of the score)
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    def collectOut(df: org.apache.spark.sql.DataFrame, score: String): Out =
+      df.select(col("a"), col("b"), col(score)).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), bits(r.getDouble(2)))).sorted
+    val docs = hostile.toDF("doc_id", "text")
+    // cross sides with overlapping id namespaces: the odd docs are the new
+    // side; each even doc joins the reference under its odd neighbour's id
+    val fresh = docs.where(col("doc_id") % 2 === 1 || col("doc_id").isNull)
+    val ref = docs.where(col("doc_id") % 2 === 0).withColumn("doc_id", col("doc_id") - 1)
+      .unionByName(Seq[(Option[Long], Option[String])](None -> Some("solo")).toDF("doc_id", "text"))
+    def shingleMap(df: org.apache.spark.sql.DataFrame): Seq[(Long, Set[String])] =
+      df.select(col("doc_id"), Dedup.shingles(col("text"), 1).as("sh")).collect().toSeq
+        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        .map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+        .filter(_._2.nonEmpty)
+    val (shDocs, shFresh, shRef) = (shingleMap(docs), shingleMap(fresh), shingleMap(ref))
+    def jac(x: Set[String], y: Set[String]): Double = {
+      val i = x.intersect(y).size.toDouble
+      i / (x.size.toDouble + y.size.toDouble - i)
+    }
+    def bruteSelf(t: Double): Out = (for {
+      (a, x) <- shDocs; (b, y) <- shDocs if a < b; j = jac(x, y) if j >= t
+    } yield (a, b, bits(j))).sorted
+    def bruteCross(t: Double): Out = (for {
+      (a, x) <- shFresh; (b, y) <- shRef; j = jac(x, y) if j >= t
+    } yield (a, b, bits(j))).sorted
+    def bruteContain(t: Double): Out = (for {
+      (a, x) <- shDocs; (b, y) <- shDocs if a != b
+      c = x.intersect(y).size.toDouble / x.size.toDouble if c >= t
+    } yield (a, b, bits(java.math.BigDecimal.valueOf(c)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()))).sorted
+    val kernelOff = "graft.ppjoin.kernel" -> Some("off")
+    val pastGate = "graft.ppjoin.broadcastRows" -> Some("0")
+    val noVocab = "graft.crossindex.broadcastVocabRows" -> Some("0")
+    val batches = Seq(fresh.where(col("doc_id") <= 3),
+      fresh.where(col("doc_id") > 3 && col("doc_id") <= 9),
+      fresh.where(col("doc_id") > 9 || col("doc_id").isNull))
+    final case class Case(name: String, props: Seq[(String, Option[String])],
+                          run: Double => Out, brute: Double => Out)
+    val cases = Seq(
+      Case("self tier 1", Nil, t => Dedup.prefixFilterJoinWith(docs, "doc_id", "text", 1, t)(
+        collectOut(_, "jaccard")), bruteSelf),
+      Case("self kernel=off", Seq(kernelOff), t => Dedup.prefixFilterJoinWith(docs, "doc_id",
+        "text", 1, t)(collectOut(_, "jaccard")), bruteSelf),
+      Case("containment tier 1", Nil, t => Dedup.containmentPairsWith(docs, "doc_id", "text",
+        1, t)(collectOut(_, "containment")), bruteContain),
+      Case("containment kernel=off", Seq(kernelOff), t => Dedup.containmentPairsWith(docs,
+        "doc_id", "text", 1, t)(collectOut(_, "containment")), bruteContain),
+      Case("cross tier 1", Nil, t => Dedup.prefixFilterCrossJoinWith(fresh, ref, "doc_id",
+        "text", 1, t)(collectOut(_, "jaccard")), bruteCross),
+      Case("cross kernel=off", Seq(kernelOff), t => Dedup.prefixFilterCrossJoinWith(fresh, ref,
+        "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteCross)) ++
+      Seq(1 -> Nil, 2 -> Seq(pastGate), 3 -> Seq(pastGate, noVocab)).map {
+        case (tier, props) =>
+          Case(s"index tier $tier", props, t => {
+            val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text", 1, t)
+            try {
+              assert(tierOf(index) == tier)
+              batches.flatMap(b => index.joinBatchWith(b)(collectOut(_, "jaccard"))).sorted
+            } finally index.release()
+          }, bruteCross)
+      }
+    for (Case(name, props, run, brute) <- cases; t <- Seq(0.5, 0.7, 0.8)) {
+      val expected = brute(t)
+      assert(expected.nonEmpty, s"$name t=$t")
+      val got = withProps(props: _*)(run(t))
+      assert(got == expected, s"$name t=$t")
+    }
+    // the corpus reaches every boundary it is built for
+    assert(bruteSelf(0.8).contains((3L, 4L, bits(0.8))))
+    assert(bruteSelf(0.7).contains((5L, 6L, bits(0.7))))
+    assert(bruteSelf(0.5).contains((1L, 2L, bits(0.5))))
+    assert(bruteCross(0.5).contains((1L, 1L, bits(0.5))))
+    assert(bruteContain(0.7).contains((13L, 5L, bits(0.7))))
+    assert(bruteContain(0.8).contains((4L, 3L, bits(0.8))))
+    spark.catalog.clearCache()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("a duplicate id throws on the driver tier and in the distributed plans") {
+    spark.catalog.clearCache()
+    // two different documents under id 2 (and two null ids, which pair with
+    // nothing and are no duplicate)
+    val docs = Seq[(Option[Long], String)](
+      (Some(1L), "the quick brown fox jumps over the lazy dog tonight"),
+      (Some(2L), "the quick brown fox jumps over the lazy cat tonight"),
+      (Some(2L), "an entirely different sentence about spark and scala engines"),
+      (None, "short text"), (None, "other short text")).toDF("doc_id", "text")
+    val ok = docs.where(col("doc_id") =!= 2 || col("doc_id").isNull)
+    val runs = Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "self" -> (d => Dedup.prefixFilterJoinWith(d, "doc_id", "text")(_.collect())),
+      "containment" -> (d => Dedup.containmentPairsWith(d, "doc_id", "text")(_.collect())),
+      "cross" -> (d => Dedup.prefixFilterCrossJoinWith(ok, d, "doc_id", "text")(_.collect())))
+    for ((tier, props) <- Seq("tier 1" -> Nil,
+           "kernel=off" -> Seq("graft.ppjoin.kernel" -> Some("off")),
+           "tier 3" -> Seq("graft.ppjoin.broadcastRows" -> Some("0"),
+             "graft.crossindex.broadcastVocabRows" -> Some("0")));
+         (mode, run) <- runs) withProps(props: _*) {
+      run(ok) // unique non-null ids pass
+      val e = intercept[Exception](run(docs))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("duplicate doc_id 2")), s"$mode $tier: $e")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("the tier-1 gate routes an oversized token total to the distributed tier") {
+    val heap = 8L << 30
+    val fits = (heap * Dedup.DriverHeapShare / Dedup.DriverBytesPerToken).toLong
+    assert(Dedup.driverTier(rows = 5000, tokens = 260000, maxHeap = heap))
+    assert(Dedup.driverTier(rows = 100000, tokens = fits, maxHeap = heap))
+    // few rows, but too many shingles for the driver's maps
+    assert(!Dedup.driverTier(rows = 10, tokens = fits + 1, maxHeap = heap))
+    assert(!Dedup.driverTier(rows = 100001, tokens = 10, maxHeap = heap))
+    withProps("graft.ppjoin.broadcastRows" -> Some("0"))(
+      assert(!Dedup.driverTier(rows = 1, tokens = 1, maxHeap = heap)))
+    withProps("graft.ppjoin.kernel" -> Some("off"))(
+      assert(!Dedup.driverTier(rows = 1, tokens = 1, maxHeap = heap)))
   }
 
   test("connectedComponents resolves pair graphs into min-labelled clusters") {
@@ -592,26 +761,63 @@ class DedupSpec extends SparkSpec {
     def run[T](thunk: => T): T = thunk
     def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toSeq.mkString("|")).toSet
-    val single = (
-      canon(run(Dedup.prefixFilterJoin(docs, "doc_id", "text", 2, 0.5))),
-      canon(run(Dedup.containmentPairs(docs, "doc_id", "text", 2, 0.6))),
-      canon(run(Dedup.minHashDedup(docs, "doc_id", "text", 2, 64, 32, 0.5))))
-    spark.catalog.clearCache()
-    val prev = sys.props.get("graft.verify.chunks")
-    val chunked = try {
-      sys.props("graft.verify.chunks") = "3"
-      (
+    // the three operators share the one shingle cache of `docs` instead of
+    // asking to cache it again
+    val warnings = cacheWarnings {
+      val single = (
         canon(run(Dedup.prefixFilterJoin(docs, "doc_id", "text", 2, 0.5))),
         canon(run(Dedup.containmentPairs(docs, "doc_id", "text", 2, 0.6))),
         canon(run(Dedup.minHashDedup(docs, "doc_id", "text", 2, 64, 32, 0.5))))
-    } finally {
-      prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-        sys.props("graft.verify.chunks") = v)
       spark.catalog.clearCache()
+      val prev = sys.props.get("graft.verify.chunks")
+      val chunked = try {
+        sys.props("graft.verify.chunks") = "3"
+        (
+          canon(run(Dedup.prefixFilterJoin(docs, "doc_id", "text", 2, 0.5))),
+          canon(run(Dedup.containmentPairs(docs, "doc_id", "text", 2, 0.6))),
+          canon(run(Dedup.minHashDedup(docs, "doc_id", "text", 2, 64, 32, 0.5))))
+      } finally {
+        prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
+          sys.props("graft.verify.chunks") = v)
+        spark.catalog.clearCache()
+      }
+      assert(chunked._1 == single._1 && chunked._1.nonEmpty)
+      assert(chunked._2 == single._2 && chunked._2.nonEmpty)
+      assert(chunked._3 == single._3 && chunked._3.nonEmpty)
     }
-    assert(chunked._1 == single._1 && chunked._1.nonEmpty)
-    assert(chunked._2 == single._2 && chunked._2.nonEmpty)
-    assert(chunked._3 == single._3 && chunked._3.nonEmpty)
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+  }
+
+  /** The `CacheManager` "already cached" WARNs logged while `f` runs. */
+  private def cacheWarnings(f: => Any): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val logger = "org.apache.spark.sql.execution.CacheManager"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val appender = new AbstractAppender("graft-cache-warnings", null, null, true,
+      Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("already cached")) seen.add(msg)
+      }
+    }
+    appender.start()
+    val lc = new LoggerConfig(logger, Level.WARN, true)
+    lc.addAppender(appender, Level.WARN, null)
+    config.addLogger(logger, lc)
+    ctx.updateLoggers()
+    try {
+      f
+      seen.toArray(Array.empty[String]).toSeq
+    } finally {
+      config.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
   }
 
   test("chunked verify releases each pass's shuffles before the next") {
