@@ -39,6 +39,7 @@ object Bench {
     // alongside seconds so a cross-round reader can separate "more rounds"
     // (data shape) from "slower rounds" (plan regression) without re-running.
     val rounds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val decisions = new GraftDecision.Recorder(spark)
     // Local-iteration escape hatch: run only a comma-separated subset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // A typo'd name would otherwise silently bench nothing and print a
@@ -56,13 +57,13 @@ object Bench {
       val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
       var rep = 0
       while (rep < reps && !errors.contains(name)) {
-        graft.text.Dedup.lastRounds.set(-1)
+        decisions.drain() // what a failed rep left behind
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
           samples += (System.nanoTime() - t0) / 1e9
-          if (graft.text.Dedup.lastRounds.get() >= 0)
-            rounds(name) = graft.text.Dedup.lastRounds.get()
+          decisions.drain().filter(_.op == "components").lastOption.foreach(d =>
+            rounds(name) = d.numbers("rounds").toInt)
         } catch {
           case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)

@@ -111,10 +111,7 @@ object Graph {
       // driver GC lets ~iterations x |nodes| of dead blocks pile up in
       // storage memory (the probe measured marginal iteration cost
       // climbing 4x by round 16 before this).
-      val t0 = System.nanoTime()
       val prev = scores.localCheckpoint()
-      if (sys.env.contains("GRAFT_PR_DEBUG"))
-        println(f"[pr-iter] ckpt ${(System.nanoTime() - t0) / 1e9}%.3f s")
       if (lastCkpt != null) lastCkpt.unpersist(blocking = false)
       lastCkpt = prev
       val contribs = rates

@@ -1035,7 +1035,7 @@ object LlmQueries {
         docs(s, dir).select(col("doc_id")), "doc_id", "payload")
       val members = Multimodal.decodeAHash(withBin, "payload")
         .select(col("doc_id"), col("ph_hi").as("hi"), col("ph_lo").as("lo"))
-      Dedup.hammingNearDupPairs(members, "doc_id", maxHamming = 3)._1
+      Dedup.hammingNearDupPairs(members, "doc_id", maxHamming = 3)
     }),
 
     // Perceptual average-hash over REAL decoded BMP bytes; the oracle

@@ -59,13 +59,8 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
   * null element, length mismatch) are skipped identically here; degenerate
   * zero-norm vectors (NaN cosines) follow SQL NaN ordering identically in
   * the selection paths.
-  *
-  * Kill switch: `-Dgraft.brute.kernel=off` falls back to the expression
-  * formulation (the A/B + equivalence-spec hook).
   */
 private[graft] object BruteKernels {
-
-  def enabled: Boolean = !sys.props.get("graft.brute.kernel").contains("off")
 
   final case class SideVec(id: Long, vec: Array[Double], norm: Double)
 

@@ -80,18 +80,15 @@ object Similarity {
                     vecCol: String, k: Int, floor: Double,
                     ceiling: Double): DataFrame = {
     require(floor < ceiling, s"need floor < ceiling, got [$floor, $ceiling)")
-    if (BruteKernels.enabled)
-      // fused kernel (bit-equal by BruteKernelSpec): banded per-partition
-      // top-k heaps inside the scan task; the global TopKByAgg merge below
-      // selects the identical final k (top-k is a semilattice)
-      topK(BruteKernels.hardNegativeCandidates(
-        corpus, queries, idCol, vecCol, k, floor, ceiling), k)
-    else hardNegativesExpr(corpus, queries, idCol, vecCol, k, floor, ceiling)
+    // fused kernel (bit-equal by BruteKernelSpec): banded per-partition
+    // top-k heaps inside the scan task; the global TopKByAgg merge below
+    // selects the identical final k (top-k is a semilattice)
+    topK(BruteKernels.hardNegativeCandidates(
+      corpus, queries, idCol, vecCol, k, floor, ceiling), k)
   }
 
   /** Expression formulation of [[hardNegatives]] — the bit-equality
-    * reference for the kernel path (BruteKernelSpec) and the
-    * `-Dgraft.brute.kernel=off` fallback.
+    * reference for the kernel path (BruteKernelSpec).
     */
   private[similarity] def hardNegativesExpr(corpus: DataFrame, queries: DataFrame,
                                             idCol: String, vecCol: String, k: Int,
@@ -277,9 +274,7 @@ object Similarity {
                                      vecCol: String, threshold: Double): DataFrame = {
     val spark = corpus.sparkSession
     val n = corpus.count()
-    val p = sys.props.get("graft.brute.blocks").flatMap(s => scala.util.Try(s.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(math.min(48L, math.max(16L, n / 4000L)).toInt)
+    val p = graft.GraftConf(spark).bruteBlocks.getOrElse(math.min(48L, math.max(16L, n / 4000L)).toInt)
     val packed = corpus
       .groupBy(pmod(xxhash64(col(idCol)), lit(p.toLong)).as("blk"))
       .agg(collect_list(struct(col(idCol).cast("long").as("id"),
@@ -380,9 +375,10 @@ object Similarity {
     */
   def cosineNearDupPairsAuto(corpus: DataFrame, idCol: String, vecCol: String,
                              threshold: Double): DataFrame = {
-    val planes = adaptivePlanes(corpus.count())
-    if (sys.props.get("graft.verify.debug").nonEmpty)
-      System.err.println(s"[neardup] adaptive planes=$planes")
+    val n = corpus.count()
+    val planes = adaptivePlanes(n)
+    graft.GraftDecision.post(corpus.sparkSession, "neardup.planes", "adaptive",
+      "rows" -> n, "planes" -> planes.toLong)
     cosineNearDupPairs(corpus, idCol, vecCol, threshold, planes)
   }
 
@@ -457,13 +453,12 @@ object Similarity {
         // next pass. Fixed-plane occupancy grows quadratically with
         // corpus — the production dial is more planes, but the operator
         // must stay disk-bounded at any geometry.
-        val embedBudget = graft.text.Dedup.longProp("graft.verify.chunkRows")
-          .getOrElse(30000000L)
-        if (pairMass > embedBudget) {
-          val k = graft.text.Dedup.longProp("graft.verify.chunks").map(_.toInt)
-            .getOrElse(math.min(64L, math.max(1L, (pairMass + embedBudget - 1) / embedBudget)).toInt)
-          if (sys.props.get("graft.verify.debug").nonEmpty)
-            System.err.println(s"[verify] embed pairMass=$pairMass rawMass=$rawMass chunks=$k")
+        val conf = graft.GraftConf(spark)
+        val chunked = pairMass > conf.verifyChunkRows
+        val k = if (chunked) graft.text.Dedup.verifyChunkCount(pairMass, conf) else 1
+        graft.GraftDecision.post(spark, "verify.embed", if (chunked) "chunked" else "single",
+          "pairMass" -> pairMass, "rawMass" -> rawMass, "chunks" -> k.toLong)
+        if (chunked) {
           val n = graft.text.Dedup.verifyPartitions(spark, (pairMass + k - 1) / k, 500000L)
           return graft.text.Dedup.chunkedVerify(rawPairs, k) { slice =>
             scoreVerified(
@@ -536,7 +531,7 @@ object Similarity {
     pairs.count()
     val pairNodes = pairs.select(col("a").as(idCol))
       .union(pairs.select(col("b").as(idCol))).distinct()
-    val (comp, ccRelease, _) = graft.text.Dedup.connectedComponentsImpl(
+    val (comp, ccRelease) = graft.text.Dedup.connectedComponentsImpl(
       pairNodes, pairs.select("a", "b"), idCol, maxRounds = 50)
     // every propagation round ends in an action, so the labels are
     // materialized and the pair cache can be dropped here
@@ -908,17 +903,14 @@ object Similarity {
   def seedQualityScore(corpus: DataFrame, seeds: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        threshold: Double): DataFrame =
-    if (BruteKernels.enabled)
-      // fused row-local kernel (bit-equal by BruteKernelSpec): top-k over
-      // the broadcast seeds + exact decimal mean collapse inside the scan
-      // task — the plan has ZERO exchanges (the expression form shuffled
-      // two corpus-id-keyed aggregates)
-      BruteKernels.seedQuality(corpus, seeds, idCol, vecCol, k, threshold)
-    else seedQualityScoreExpr(corpus, seeds, idCol, vecCol, k, threshold)
+    // fused row-local kernel (bit-equal by BruteKernelSpec): top-k over
+    // the broadcast seeds + exact decimal mean collapse inside the scan
+    // task — the plan has ZERO exchanges (the expression form shuffled
+    // two corpus-id-keyed aggregates)
+    BruteKernels.seedQuality(corpus, seeds, idCol, vecCol, k, threshold)
 
   /** Expression formulation of [[seedQualityScore]] — the bit-equality
-    * reference for the kernel path and the `-Dgraft.brute.kernel=off`
-    * fallback.
+    * reference for the kernel path (BruteKernelSpec).
     */
   private[similarity] def seedQualityScoreExpr(corpus: DataFrame, seeds: DataFrame,
                                                idCol: String, vecCol: String, k: Int,
@@ -1077,27 +1069,22 @@ object Similarity {
                numSubspaces: Int, k: Int, nProbe: Int = 3): DataFrame = {
     require(numSubspaces > 0 && dim % numSubspaces == 0,
       s"dim $dim must divide into $numSubspaces subspaces")
-    if (BruteKernels.enabled) {
-      // fused kernel (bit-equal by BruteKernelSpec): coarse assignment +
-      // residual PQ codes + exact-pico LUT scoring per corpus row in one
-      // scan task; the broadcast LUT/correction tables are precomputed once
-      // from the collected (tiny) sides with the identical arithmetic
-      val cand = BruteKernels.ivfPqCandidates(corpus, queries, centroids,
+    // fused kernel (bit-equal by BruteKernelSpec): coarse assignment +
+    // residual PQ codes + exact-pico LUT scoring per corpus row in one
+    // scan task; the broadcast LUT/correction tables are precomputed once
+    // from the collected (tiny) sides with the identical arithmetic
+    BruteKernels.ivfPqCandidates(corpus, queries, centroids,
         codebook, idCol, vecCol, dim, numSubspaces, k, nProbe)
-      return cand
-        .groupBy(col("query_id"))
-        .agg(TopKByAgg.topKBy(struct(col("score"), col("neighbor_id")), k).as("__top__"))
-        .select(col("query_id"), posexplode(col("__top__")).as(Seq("__pos__", "__e__")))
-        .select(col("query_id"), col("__e__.neighbor_id").as("neighbor_id"),
-          (col("__pos__") + 1).cast("long").as("rank"),
-          round(col("__e__.score"), 6).as("score"))
-    }
-    ivfPqKnnExpr(corpus, queries, centroids, codebook, idCol, vecCol, dim,
-      numSubspaces, k, nProbe)
+      .groupBy(col("query_id"))
+      .agg(TopKByAgg.topKBy(struct(col("score"), col("neighbor_id")), k).as("__top__"))
+      .select(col("query_id"), posexplode(col("__top__")).as(Seq("__pos__", "__e__")))
+      .select(col("query_id"), col("__e__.neighbor_id").as("neighbor_id"),
+        (col("__pos__") + 1).cast("long").as("rank"),
+        round(col("__e__.score"), 6).as("score"))
   }
 
   /** Expression formulation of [[ivfPqKnn]] — the bit-equality reference for
-    * the kernel path and the `-Dgraft.brute.kernel=off` fallback.
+    * the kernel path (BruteKernelSpec).
     */
   private[similarity] def ivfPqKnnExpr(corpus: DataFrame, queries: DataFrame,
                                        centroids: DataFrame, codebook: DataFrame,
@@ -1318,17 +1305,15 @@ object Similarity {
 
   def ivfKnn(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
              idCol: String, vecCol: String, k: Int, nProbe: Int = 3): DataFrame =
-    if (BruteKernels.enabled)
-      // fused kernel (bit-equal by BruteKernelSpec): nearest-cell argmax +
-      // probed-cell scoring + per-partition top-k heaps in one scan task;
-      // the expression form paid one BigDecimal round(_, 9) per
-      // (corpus row x centroid), the kernel only within the proven margin
-      topK(BruteKernels.ivfCandidates(
-        corpus, queries, centroids, idCol, vecCol, k, nProbe), k)
-    else ivfKnnExpr(corpus, queries, centroids, idCol, vecCol, k, nProbe)
+    // fused kernel (bit-equal by BruteKernelSpec): nearest-cell argmax +
+    // probed-cell scoring + per-partition top-k heaps in one scan task;
+    // the expression form paid one BigDecimal round(_, 9) per
+    // (corpus row x centroid), the kernel only within the proven margin
+    topK(BruteKernels.ivfCandidates(
+      corpus, queries, centroids, idCol, vecCol, k, nProbe), k)
 
   /** Expression formulation of [[ivfKnn]] — the bit-equality reference for
-    * the kernel path and the `-Dgraft.brute.kernel=off` fallback.
+    * the kernel path (BruteKernelSpec).
     */
   private[similarity] def ivfKnnExpr(corpus: DataFrame, queries: DataFrame,
                                      centroids: DataFrame, idCol: String, vecCol: String,

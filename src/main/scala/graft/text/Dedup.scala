@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.JobDescription
+import graft.{GraftConf, GraftDecision, JobDescription}
 
 /** Document deduplication operators for large-scale training-data pipelines.
   *
@@ -88,38 +88,22 @@ object Dedup {
     * the stage is CPU-bound, so rows — not bytes — are the right unit.
     * Costs one extra count of the candidate frame (narrow ids; bounded by
     * candidate-gen itself, ~3 s at sf3 vs the ~80 s it saves; at sf0.01 it
-    * is milliseconds). `graft.verify.rowsPerPartition` overrides the
-    * per-partition target; the cap bounds task-launch overhead.
-    */
-  /** `rowsPerPartition <= 0` uses the built-in 150k default (sized for
+    * is milliseconds). The cap bounds task-launch overhead.
+    *
+    * `rowsPerPartition <= 0` uses the built-in 150k default (sized for
     * shingle-array rows of 2-4 KB); payload-light verifies (embedding
-    * vectors, ~0.5 KB/row) pass a larger target. The
-    * `graft.verify.rowsPerPartition` system property, when set, overrides
-    * BOTH — it is the operational escape hatch and must be authoritative
-    * on every verify path, including ones with an explicit target (it was
-    * previously ignored wherever a caller passed one).
+    * vectors, ~0.5 KB/row) pass a larger target. The session's
+    * `spark.graft.verify.rowsPerPartition`, when set, overrides BOTH: an
+    * escape hatch must be authoritative on every verify path.
     */
   private[graft] def verifyPartitions(spark: org.apache.spark.sql.SparkSession,
                                       candRows: Long,
                                       rowsPerPartition: Long = 0L): Int = {
     val base = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val perPart = longProp("graft.verify.rowsPerPartition")
+    val perPart = GraftConf(spark).verifyRowsPerPartition
       .getOrElse(if (rowsPerPartition > 0) rowsPerPartition else 150000L)
     math.max(base, math.min(4096L, (candRows + perPart - 1) / perPart).toInt)
   }
-
-  /** Long system property of at least `min` with malformed-value tolerance:
-    * a typo in an operational knob degrades to the built-in default with a
-    * stderr warning instead of a NumberFormatException on every verify
-    * path. Row gates take `min = 0` (0 = never the gated tier).
-    */
-  private[graft] def longProp(name: String, min: Long = 1L): Option[Long] =
-    sys.props.get(name).flatMap { s =>
-      scala.util.Try(s.trim.toLong).toOption.filter(_ >= min).orElse {
-        System.err.println(s"[dedup] ignoring malformed $name='$s' (want a long >= $min)")
-        None
-      }
-    }
 
   /** Pass count for a bounded-footprint chunked verify: the verify join
     * fans kilobyte payloads out to every candidate pair, and its shuffle
@@ -130,8 +114,8 @@ object Dedup {
     * each pass's shuffles before the next bounds peak disk at ~1/K, at the
     * cost of re-exchanging the (cached) doc-payload side K times. On a
     * disk-constrained cluster the same dial bounds per-executor shuffle
-    * spill. `graft.verify.chunks` forces K; `graft.verify.chunkRows` sets
-    * the per-pass row budget. Default 30M rows/pass, sized by MEASUREMENT
+    * spill. [[GraftConf.verifyChunks]] forces K; [[GraftConf.verifyChunkRows]]
+    * sets the per-pass row budget. Default 30M rows/pass, sized by MEASUREMENT
     * against shingle-array payloads (SCALE.md r14: 75M-row containment
     * passes wrote ~43 GB lz4'd, so ~0.6 KB/row on disk -> 30M rows ~ 17 GB
     * per pass). The chunk checkpoints also pin the verify to ONE execution
@@ -141,11 +125,21 @@ object Dedup {
     * single-consumer ngram query squeaked by. Each extra pass costs one
     * re-exchange of the (cached) doc-payload side — seconds per pass.
     */
-  private[graft] def verifyChunkCount(candRows: Long): Int =
-    longProp("graft.verify.chunks").map(_.toInt).getOrElse {
-      val perChunk = longProp("graft.verify.chunkRows").getOrElse(30000000L)
+  private[graft] def verifyChunkCount(candRows: Long, conf: GraftConf): Int =
+    conf.verifyChunks.getOrElse {
+      val perChunk = conf.verifyChunkRows
       math.min(64L, math.max(1L, (candRows + perChunk - 1) / perChunk)).toInt
     }
+
+  /** [[verifyChunkCount]] under `spark`'s dials, posted as decision `op`
+    * with the candidate figure `mass` it was sized by.
+    */
+  private[graft] def verifyChunks(spark: org.apache.spark.sql.SparkSession, op: String,
+                                  mass: (String, Long)): Int = {
+    val k = verifyChunkCount(mass._2, GraftConf(spark))
+    GraftDecision.post(spark, op, if (k > 1) "chunked" else "single", mass, "chunks" -> k.toLong)
+    k
+  }
 
   /** Run `pass` over K hash-banded slices of the (persisted, counted)
     * candidate frame SEQUENTIALLY: each pass's small verified output is
@@ -170,16 +164,11 @@ object Dedup {
                                     (pass: DataFrame => DataFrame): DataFrame = {
     if (k <= 1) return pass(cand)
     val sc = cand.sparkSession.sparkContext
-    val debug = sys.props.get("graft.verify.debug").nonEmpty
     val outs = (0 until k).map { i =>
-      val t0 = System.nanoTime()
       val before = org.apache.spark.GraftShuffleGc.snapshot(sc)
       val slice = cand.where(pmod(xxhash64(key), lit(k.toLong)) === lit(i.toLong))
       val out = pass(slice).localCheckpoint() // eager: the pass runs HERE
-      val cleaned = org.apache.spark.GraftShuffleGc.cleanNewSince(sc, before)
-      if (debug) System.err.println(
-        f"[chunked-verify] pass ${i + 1}/$k ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-          s"cleaned ${cleaned.size} shuffles")
+      org.apache.spark.GraftShuffleGc.cleanNewSince(sc, before)
       out
     }
     org.apache.spark.sql.graft.ExpressionBridge.flatUnion(outs)
@@ -225,26 +214,6 @@ object Dedup {
     */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
-
-  /** Exact Jaccard for arrays KNOWN element-distinct (shingle sets are, by
-    * [[ShinglesExpr]] construction): one native intersection-count pass —
-    * `|a ∪ b| = |a| + |b| - i` — instead of materializing both the
-    * intersection and union arrays. Same arithmetic, same value as
-    * [[jaccard]] on distinct inputs; ~the whole verify stage at sf1 was the
-    * two array materializations.
-    */
-  def jaccardDistinct(a: Column, b: Column): Column = {
-    val i = IntersectCountExpr.intersectCount(a, b).cast("double")
-    i / (size(a).cast("double") + size(b).cast("double") - i)
-  }
-
-  /** [[jaccardDistinct]] over arrays PRE-SORTED in Spark string order:
-    * allocation-free merge-count kernel — see [[SortedIntersectCountExpr]].
-    */
-  def jaccardSortedDistinct(a: Column, b: Column): Column = {
-    val i = SortedIntersectCountExpr.sortedIntersectCount(a, b).cast("double")
-    i / (size(a).cast("double") + size(b).cast("double") - i)
-  }
 
   /** Adds an exact `jaccard` column over pre-sorted shingle columns
     * `sh_a`/`sh_b` and keeps rows with jaccard >= threshold — via the
@@ -308,9 +277,7 @@ object Dedup {
     val cand = candidates
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cnt = releaseOnFailure(Seq(cand))(cand.count())
-    val k = verifyChunkCount(cnt)
-    if (sys.props.get("graft.verify.debug").nonEmpty)
-      System.err.println(s"[verify] candidates=$cnt chunks=$k")
+    val k = verifyChunks(cand.sparkSession, "verify.jaccard", "candidates" -> cnt)
     val n = verifyPartitions(candidates.sparkSession, (cnt + k - 1) / k)
     val result = chunkedVerify(cand, k) { slice =>
       keepJaccardAtLeast(
@@ -512,7 +479,7 @@ object Dedup {
   /** `body`, unpersisting `owned` if it throws (a duplicate id fails the
     * build or the first action over the candidates).
     */
-  private def releaseOnFailure[T](owned: => Seq[DataFrame])(body: => T): T =
+  private[text] def releaseOnFailure[T](owned: => Seq[DataFrame])(body: => T): T =
     try body catch {
       case e: Throwable =>
         owned.foreach(_.unpersist(blocking = false))
@@ -531,17 +498,32 @@ object Dedup {
 
   /** The one tier-1 gate, for the side built into driver postings (the
     * corpus of a self or containment join, the reference of the cross
-    * index): tier 1 unless `graft.ppjoin.kernel=off`, the side has more
-    * than `graft.ppjoin.broadcastRows` rows (default 100k), or its
-    * estimated map bytes (`tokens` × [[DriverBytesPerToken]]) exceed
-    * [[DriverHeapShare]] of `maxHeap` — ≤100k long documents must not OOM
-    * the driver.
+    * index): tier 1 unless [[GraftConf.ppjoinKernel]] is off, the side
+    * has more than [[GraftConf.ppjoinBroadcastRows]] rows (default 100k),
+    * or its estimated map bytes (`tokens` × [[DriverBytesPerToken]])
+    * exceed [[DriverHeapShare]] of `maxHeap` — ≤100k long documents must
+    * not OOM the driver.
     */
-  private[text] def driverTier(rows: Long, tokens: Long,
+  private[text] def driverTier(rows: Long, tokens: Long, conf: GraftConf,
                                maxHeap: Long = Runtime.getRuntime.maxMemory): Boolean =
-    !sys.props.get("graft.ppjoin.kernel").contains("off") &&
-      rows <= longProp("graft.ppjoin.broadcastRows", min = 0L).getOrElse(100000L) &&
+    conf.ppjoinKernel && rows <= conf.ppjoinBroadcastRows &&
       tokens.toDouble * DriverBytesPerToken <= maxHeap * DriverHeapShare
+
+  /** [[driverTier]] for `sh` (only if `eligible`), posted as decision `op`:
+    * `tier1` or `distributed`, by rows, Σ shingles and estimated driver
+    * bytes against the session's caps.
+    */
+  private def gate(op: String, sh: Shingled, eligible: Boolean = true): Boolean = {
+    val spark = sh.df.sparkSession
+    val conf = GraftConf(spark)
+    val maxHeap = Runtime.getRuntime.maxMemory
+    val tier1 = eligible && driverTier(sh.rows, sh.tokens, conf, maxHeap)
+    GraftDecision.post(spark, op, if (tier1) "tier1" else "distributed",
+      "rows" -> sh.rows, "tokens" -> sh.tokens, "bytes" -> sh.tokens * DriverBytesPerToken,
+      "kernel" -> (if (conf.ppjoinKernel) 1L else 0L), "rowCap" -> conf.ppjoinBroadcastRows,
+      "byteCap" -> (maxHeap * DriverHeapShare).toLong)
+    tier1
+  }
 
   /** `value`, unless `n` > 1 rows share the non-null `id`: then the plan
     * raises an error naming the id — the distributed tiers' unique-id check,
@@ -648,7 +630,7 @@ object Dedup {
            _: org.apache.spark.sql.types.ShortType => true
       case _ => false
     }
-    if (idIntegral && driverTier(sh.rows, sh.tokens))
+    if (gate("ppjoin.self", sh, eligible = idIntegral))
       return (PrefixCrossIndex.kernelProbe(sh.df, idCol, threshold,
         PrefixCrossIndex.driverKernel(sh.df, idCol, threshold), PrefixCrossIndex.SelfJaccard),
         sh.owned)
@@ -716,9 +698,9 @@ object Dedup {
     * Three tiers, chosen at build:
     *  1. the reference passes [[driverTier]]: driver-built postings, and
     *     every batch is one narrow [[PrefixCrossIndex.kernelProbe]] pass;
-    *  2. its vocabulary fits `graft.crossindex.broadcastVocabRows` (default
-    *     4M tokens, ~40 B each): the frequencies are a broadcast map, both
-    *     sides' prefixes come from [[PrefixCrossIndex.prefixKernel]], and
+    *  2. its vocabulary fits [[GraftConf.crossindexBroadcastVocabRows]]
+    *     (default 4M tokens, ~40 B each): the frequencies are a broadcast
+    *     map, both sides' prefixes come from [[PrefixCrossIndex.prefixKernel]], and
     *     the reference prefixes and verify side are persisted once;
     *  3. otherwise the persisted token counts feed the expression chain.
     *
@@ -797,17 +779,12 @@ object Dedup {
       val left = shNew.select(col(idCol).as("a"), sort_array(col("sh")).as("sh_a"))
       val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cnt = releaseOnFailure(Seq(cand))(cand.count())
-      val k = verifyChunkCount(cnt)
-      if (sys.props.get("graft.verify.debug").nonEmpty)
-        System.err.println(s"[verify] candidates=$cnt chunks=$k (indexed)")
+      val k = verifyChunks(spark, "verify.crossindex", "candidates" -> cnt)
       val perChunk = (cnt + k - 1) / k
-      // broadcast budget for the batch-side shingle arrays (~2-4 KB/row);
-      // override with graft.crossindex.broadcastBatchRows
-      val leftBroadcastable = batchRows <=
-        longProp("graft.crossindex.broadcastBatchRows", min = 0L).getOrElse(100000L)
+      val leftBroadcastable = batchRows <= BroadcastBatchRows
       // per-task pair fan-out stays within the verify row target when the
       // chunk slice spreads over the reference's frozen partition count
-      val perPart = longProp("graft.verify.rowsPerPartition").getOrElse(150000L)
+      val perPart = GraftConf(spark).verifyRowsPerPartition.getOrElse(150000L)
       val fitsFrozenLayout = perChunk <= perPart * d.refVerifyParts
       val result = chunkedVerify(cand, k) { slice =>
         val joined =
@@ -833,6 +810,9 @@ object Dedup {
   }
 
   object PrefixCrossIndex {
+    /** Batch rows whose shingle arrays (~2-4 KB/row) the verify broadcasts. */
+    private[text] val BroadcastBatchRows = 100000L
+
     /** Where an index keeps its reference. */
     private[text] sealed trait Tier { def release(): Unit }
 
@@ -1117,7 +1097,7 @@ object Dedup {
                                         shingleSize: Int, threshold: Double): PrefixCrossIndex = {
     val sh = shingleTable(refDocs, idCol, textCol, shingleSize)
     val tier = releaseOnFailure(sh.owned) {
-      if (driverTier(sh.rows, sh.tokens)) {
+      if (gate("ppjoin.crossindex", sh)) {
         val rk = PrefixCrossIndex.driverKernel(sh.df, idCol, threshold)
         sh.owned.foreach(_.unpersist(blocking = false)) // the maps hold it all
         PrefixCrossIndex.DriverKernel(rk)
@@ -1157,8 +1137,11 @@ object Dedup {
       // bound passes the gate.
       val tokenCounts = sh.df.select(explode(col("sh")).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      val vocabGate = longProp("graft.crossindex.broadcastVocabRows", min = 0L).getOrElse(4000000L)
+      val spark = sh.df.sparkSession
+      val vocabGate = GraftConf(spark).crossindexBroadcastVocabRows
       val vocabRows = if (sh.tokens <= vocabGate) sh.tokens else kept(tokenCounts).count()
+      GraftDecision.post(spark, "crossindex.vocab", if (vocabRows > vocabGate) "tier3" else "tier2",
+        "vocabRows" -> vocabRows, "vocabCap" -> vocabGate)
       val freq =
         if (vocabRows > vocabGate) Right(tokenCounts)
         else {
@@ -1168,7 +1151,7 @@ object Dedup {
             m.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1))))
           tokenCounts.unpersist(blocking = false)
           owned -= tokenCounts
-          Left(sh.df.sparkSession.sparkContext.broadcast(m))
+          Left(spark.sparkContext.broadcast(m))
         }
       val refPrefixes = kept(freq match {
         case Left(bc) => pinPartitions(PrefixCrossIndex.prefixKernel(sh.df, idCol, threshold, bc),
@@ -1217,7 +1200,7 @@ object Dedup {
 
   private def containmentOf(sh: Shingled, idCol: String,
                             threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    if (driverTier(sh.rows, sh.tokens))
+    if (gate("ppjoin.containment", sh))
       return (PrefixCrossIndex.kernelProbe(sh.df, idCol, threshold,
         PrefixCrossIndex.driverKernel(sh.df, idCol, threshold, fullPostings = true),
         PrefixCrossIndex.Containment), sh.owned)
@@ -1242,9 +1225,7 @@ object Dedup {
     // bounded-footprint K-pass chunking past the single-pass disk budget
     // (the sf10 ENOSPC wall — see [[verifyChunkCount]]/[[chunkedVerify]])
     val cnt = releaseOnFailure(Seq(candidates))(candidates.count())
-    val k = verifyChunkCount(cnt)
-    if (sys.props.get("graft.verify.debug").nonEmpty)
-      System.err.println(s"[verify] containment candidates=$cnt chunks=$k")
+    val k = verifyChunks(sh.df.sparkSession, "verify.containment", "candidates" -> cnt)
     val n = verifyPartitions(sh.df.sparkSession, (cnt + k - 1) / k)
     // early-exit verify: C(a->b) >= t needs an intersection of at least
     // ceil(t * |a|) (one-sided denominator; same ceil guard as alpha)
@@ -1281,21 +1262,13 @@ object Dedup {
                           idCol: String, maxRounds: Int = 50): DataFrame =
     connectedComponentsImpl(nodes, edges, idCol, maxRounds)._1
 
-  /** Rounds taken by the most recent [[connectedComponents]] call in this
-    * JVM (-1 = never ran). The bench artifact reports rounds alongside
-    * seconds for the iterative dedup queries, so cross-round comparisons
-    * can separate "more rounds" from "slower rounds" without a re-run.
-    * Bench executes queries sequentially; last-write-wins is the intended
-    * read.
-    */
-  val lastRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   /** [[connectedComponents]] internals: returns (result, a release thunk
-    * freeing the final label blocks, converged?). Label propagation needs
-    * O(max component diameter) rounds; when `maxRounds` cuts it short the
-    * labels are PARTIAL (one real cluster can carry several labels), so
-    * non-convergence is loudly logged — callers needing a hard guarantee
-    * check the flag.
+    * freeing the final label blocks). Label propagation needs O(max
+    * component diameter) rounds; when `maxRounds` cuts it short the labels
+    * are PARTIAL (one real cluster can carry several labels), so
+    * non-convergence is loudly logged. The outcome is posted as a
+    * `components` decision, `converged` or `partial`, with the rounds
+    * taken (Bench reports them next to the query's seconds).
     *
     * Every frame that survives a round boundary is `localCheckpoint`ed to a
     * LogicalRDD — including the EDGE frame and the SEED labels, which
@@ -1318,7 +1291,7 @@ object Dedup {
     */
   private[graft] def connectedComponentsImpl(nodes: DataFrame, edges: DataFrame,
                                              idCol: String, maxRounds: Int
-                                            ): (DataFrame, () => Unit, Boolean) = {
+                                            ): (DataFrame, () => Unit) = {
     def cpRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
       df.queryExecution.analyzed.collectFirst {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -1332,9 +1305,7 @@ object Dedup {
     var lastCp: Option[org.apache.spark.rdd.RDD[_]] = cpRdd(labels)
     var round = 0
     var changed = 1L
-    val ccDebug = sys.props.get("graft.cc.debug").nonEmpty
     while (changed > 0 && round < maxRounds) {
-      val roundT0 = System.nanoTime()
       val neighborMin = sym
         .join(labels.select(col("id").as("b"), col("label").as("nlabel")), "b")
         .groupBy(col("a")).agg(min(col("nlabel")).as("nmin"))
@@ -1352,24 +1323,18 @@ object Dedup {
       lastCp = cpRdd(cp)
       labels = cp.drop("__chg__")
       round += 1
-      if (ccDebug) System.err.println(
-        f"[components] round $round: ${(System.nanoTime() - roundT0) / 1e9}%.1f s changed=$changed")
     }
     symRdd.foreach(_.unpersist(blocking = false))
-    lastRounds.set(round)
-    // probe hook: -Dgraft.cc.debug=1 prints the round count (scale probes
-    // verify "same rounds at 10x data" claims against this)
-    if (sys.props.get("graft.cc.debug").nonEmpty)
-      System.err.println(s"[components] converged=${changed == 0L} rounds=$round")
     val converged = changed == 0L
+    GraftDecision.post(nodes.sparkSession, "components", if (converged) "converged" else "partial",
+      "rounds" -> round.toLong, "changed" -> changed, "maxRounds" -> maxRounds.toLong)
     if (!converged)
       System.err.println(s"[components] label propagation did NOT converge in " +
         s"$maxRounds rounds ($changed labels still changing) — a component with " +
         s"diameter > $maxRounds carries PARTIAL labels; raise maxRounds")
     val finalCp = lastCp
     val release = () => finalCp.foreach(_.unpersist(blocking = false))
-    (labels.withColumnRenamed("id", idCol).withColumnRenamed("label", "component"),
-      release, converged)
+    (labels.withColumnRenamed("id", idCol).withColumnRenamed("label", "component"), release)
   }
 
   /** Near-duplicate cluster resolution: exact PPJoin pairs at `threshold`
@@ -1430,7 +1395,7 @@ object Dedup {
     // frames hold a few percent of the corpus instead of all of it.
     val pairNodes = pairs.select(col("a").as(idCol))
       .union(pairs.select(col("b").as(idCol))).distinct()
-    val (comp, ccRelease, _) =
+    val (comp, ccRelease) =
       connectedComponentsImpl(pairNodes, pairs.select("a", "b"), idCol, maxRounds = 50)
     // the component labels are materialized (every round ends in an action),
     // so the pair cache can go too; the final label cache/checkpoint +
@@ -1517,12 +1482,6 @@ object Dedup {
     */
   def wordHash(word: Column): Column = TextHashExpressions.fingerprint(word)
 
-  /** Dropped-work accounting for [[simHashNearDup]]'s bucket cap — computed
-    * and LOGGED whenever the cap engages, so capping is never silent.
-    */
-  final case class SimHashSkewStats(droppedChunkRows: Long, droppedBuckets: Long,
-                                    maxBucketN: Long)
-
   /** SimHash near-duplicate pairs at a Hamming-distance threshold: the
     * 64-bit signature splits into four 16-bit chunks; by pigeonhole, two
     * signatures within Hamming distance 3 agree on at least one whole chunk,
@@ -1541,19 +1500,13 @@ object Dedup {
     *     representative per signature, then fan back out to member pairs.
     * A clone-heavy bucket now costs O(distinct sigs^2) candidates instead of
     * O(docs^2).
+    *
+    * A set `maxBucketSize` is never silent: one aggregation job at call time
+    * measures the work the cap drops, posted as a `simhash.cap` decision.
     */
   def simHashNearDup(docs: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 3,
-                     maxBucketSize: Int = Int.MaxValue): DataFrame =
-    simHashNearDupWithStats(docs, idCol, textCol, maxHamming, maxBucketSize)._1
-
-  /** [[simHashNearDup]] returning the cap's dropped-work stats (None when
-    * `maxBucketSize` is not set). Computing the stats runs one aggregation
-    * job at call time — only on the opt-in capped path.
-    */
-  def simHashNearDupWithStats(docs: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int = 3,
-                              maxBucketSize: Int = Int.MaxValue): (DataFrame, Option[SimHashSkewStats]) = {
+                     maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val members = widen(docs).select(col(idCol), simHash(col(textCol)).as("sh"))
       .select(col(idCol), col("sh.hi").as("hi"), col("sh.lo").as("lo"))
     hammingNearDupPairs(members, idCol, maxHamming, maxBucketSize)
@@ -1568,7 +1521,7 @@ object Dedup {
     */
   def hammingNearDupPairs(members: DataFrame, idCol: String,
                           maxHamming: Int = 3,
-                          maxBucketSize: Int = Int.MaxValue): (DataFrame, Option[SimHashSkewStats]) = {
+                          maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3, "4-chunk banding is only complete for maxHamming <= 3")
     // Same-signature pairs: Hamming 0 by definition, one equi-join on the
     // full signature. Output-inherent cost (these ARE near-dup pairs).
@@ -1588,28 +1541,23 @@ object Dedup {
     // trades the Hamming<=3 completeness GUARANTEE on the capped buckets for
     // bounded work; a signature pair dropped here is only lost if the capped
     // chunk was its sole agreeing chunk. NEVER silent: the dropped mass is
-    // measured and logged (and returned to the caller).
+    // measured and posted.
     val bucketN = {
       import org.apache.spark.sql.expressions.Window
       count(lit(1)).over(Window.partitionBy(col("ci"), col("cv")))
     }
-    val stats =
-      if (maxBucketSize == Int.MaxValue) None
-      else {
-        val counted = chunked.withColumn("__bucket_n__", bucketN)
-        val r = counted.agg(
-          coalesce(sum(when(col("__bucket_n__") > maxBucketSize, 1L)), lit(0L)),
-          coalesce(count_distinct(when(col("__bucket_n__") > maxBucketSize,
-            struct(col("ci"), col("cv")))), lit(0L)),
-          coalesce(max(col("__bucket_n__")), lit(0L))).head()
-        val s = SimHashSkewStats(r.getLong(0), r.getLong(1), r.getLong(2))
-        if (s.droppedChunkRows > 0)
-          System.err.println(s"[simhash] maxBucketSize=$maxBucketSize dropped " +
-            s"${s.droppedChunkRows} signature-chunk rows across ${s.droppedBuckets} " +
-            s"buckets (largest bucket: ${s.maxBucketN} distinct signatures) — " +
-            "pairs whose only agreeing chunk was capped are lost")
-        Some(s)
-      }
+    if (maxBucketSize != Int.MaxValue) {
+      val r = chunked.withColumn("__bucket_n__", bucketN).agg(
+        coalesce(sum(when(col("__bucket_n__") > maxBucketSize, 1L)), lit(0L)),
+        coalesce(count_distinct(when(col("__bucket_n__") > maxBucketSize,
+          struct(col("ci"), col("cv")))), lit(0L)),
+        coalesce(max(col("__bucket_n__")), lit(0L))).head()
+      // pairs whose only agreeing chunk was capped are lost
+      GraftDecision.post(members.sparkSession, "simhash.cap",
+        if (r.getLong(0) > 0) "dropped" else "kept", "maxBucketSize" -> maxBucketSize.toLong,
+        "droppedChunkRows" -> r.getLong(0), "droppedBuckets" -> r.getLong(1),
+        "maxBucketN" -> r.getLong(2))
+    }
     val keyed =
       if (maxBucketSize == Int.MaxValue) chunked
       else chunked.withColumn("__bucket_n__", bucketN)
@@ -1642,9 +1590,7 @@ object Dedup {
     // and `members` — possibly a decode lane — is not recomputed per pass).
     val survivors = {
       val mass = pairMassBound(keyed, col("ci"), col("cv"))
-      val k = verifyChunkCount(mass)
-      if (sys.props.get("graft.verify.debug").nonEmpty)
-        System.err.println(s"[verify] hamming pairMass=$mass chunks=$k")
+      val k = verifyChunks(keyed.sparkSession, "verify.hamming", "pairMass" -> mass)
       if (k <= 1) repPairsFrom(keyed, keyed)
       else {
         val keyedP = keyed
@@ -1665,7 +1611,7 @@ object Dedup {
       .join(mB, Seq("hi_b", "lo_b"))
       .select(least(col("__ma__"), col("__mb__")).as("a"),
         greatest(col("__ma__"), col("__mb__")).as("b"), col("hamming"))
-    (withinPairs.union(crossPairs), stats)
+    withinPairs.union(crossPairs)
   }
 
   /** 64-bit SimHash of a whitespace-tokenized text column, returned as a

@@ -40,7 +40,20 @@ object EditDistance {
     * shuffles before the next.
     */
   def editDistancePairs(docs: DataFrame, idCol: String, textCol: String,
-                        maxDist: Int, keyLen: Int = 32): DataFrame = {
+                        maxDist: Int, keyLen: Int = 32): DataFrame =
+    editDistancePairsImpl(docs, idCol, textCol, maxDist, keyLen)._1
+
+  /** [[editDistancePairs]] releasing the candidate cache it created when
+    * `use` returns — see [[Dedup.minHashDedupWith]].
+    */
+  def editDistancePairsWith[T](docs: DataFrame, idCol: String, textCol: String,
+                               maxDist: Int, keyLen: Int = 32)(use: DataFrame => T): T = {
+    val (result, owned) = editDistancePairsImpl(docs, idCol, textCol, maxDist, keyLen)
+    try use(result) finally owned.foreach(_.unpersist(blocking = false))
+  }
+
+  private def editDistancePairsImpl(docs: DataFrame, idCol: String, textCol: String,
+                                    maxDist: Int, keyLen: Int): (DataFrame, Seq[DataFrame]) = {
     require(maxDist >= 0 && keyLen > 0, s"bad maxDist=$maxDist keyLen=$keyLen")
     val d = docs.select(col(idCol).as("__id__"), col(textCol).as("__text__"),
       length(col(textCol)).as("__len__"),
@@ -63,24 +76,25 @@ object EditDistance {
         levenshtein(col("__ta__"), col("__tb__"), maxDist + 1))
       .where(col("edit_distance") >= 0 && col("edit_distance") <= maxDist)
       .select(col("a"), col("b"), col("edit_distance").cast("bigint"))
-    val cand0 = half("__pk__").unionByName(half("__sk__"))
+    val cand = half("__pk__").unionByName(half("__sk__"))
       .dropDuplicates("a", "b")
     // persist + count the candidate frame once: the count picks the chunk
     // count and sizes the verify exchanges, and the cache keeps candidate
     // generation single-execution across the K passes (same discipline as
-    // Dedup.verifyPairsOwned; released by the per-query cache clear)
-    val cand = cand0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = cand.count()
-    val k = graft.text.Dedup.verifyChunkCount(cnt)
-    if (sys.props.get("graft.verify.debug").nonEmpty)
-      System.err.println(s"[verify] editdistance candidates=$cnt chunks=$k")
-    val n = graft.text.Dedup.verifyPartitions(docs.sparkSession, (cnt + k - 1) / k)
-    graft.text.Dedup.chunkedVerify(cand, k) { slice =>
+    // Dedup.verifyPairsOwned). Persists only a plan not cached yet: a
+    // second call on the same docs shares the first call's cache, which
+    // stays its creator's to release.
+    val owned =
+      if (cand.storageLevel != org.apache.spark.storage.StorageLevel.NONE) Nil
+      else Seq(cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cnt = Dedup.releaseOnFailure(owned)(cand.count())
+    val k = Dedup.verifyChunks(docs.sparkSession, "verify.editdistance", "candidates" -> cnt)
+    val n = Dedup.verifyPartitions(docs.sparkSession, (cnt + k - 1) / k)
+    (Dedup.chunkedVerify(cand, k) { slice =>
       verify(slice.repartition(n, col("a"))
         .join(tA, "a")
         .repartition(n, col("b"))
         .join(tB, "b"))
-    }
+    }, owned)
   }
 }

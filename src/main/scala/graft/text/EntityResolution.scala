@@ -70,16 +70,17 @@ object EntityResolution {
     cross.unionByName(exact)
   }
 
-  /** The value graph [[resolveClusters]] runs components over: one node
-    * per distinct value (`__vid__`, the value itself) and the candidate
-    * edit-distance pairs between them.
+  /** `use` over the value graph [[resolveClusters]] runs components over:
+    * one node per distinct value (`__vid__`, the value itself) and the
+    * candidate edit-distance pairs between them, whose cache is released
+    * when `use` returns.
     */
-  private[text] def valuePairs(records: DataFrame, valueCol: String, maxDist: Int,
-                               keyLen: Int): (DataFrame, DataFrame) = {
+  private[text] def valuePairsWith[T](records: DataFrame, valueCol: String, maxDist: Int,
+                                      keyLen: Int)(use: (DataFrame, DataFrame) => T): T = {
     val distinctVals = records.select(col(valueCol).as("__val__")).distinct()
       .select(col("__val__").as("__vid__"), col("__val__"))
-    (distinctVals.select(col("__vid__")),
-      EditDistance.editDistancePairs(distinctVals, "__vid__", "__val__", maxDist, keyLen))
+    EditDistance.editDistancePairsWith(distinctVals, "__vid__", "__val__", maxDist, keyLen)(
+      use(distinctVals.select(col("__vid__")), _))
   }
 
   /** Full entity resolution: candidate pairs → connected components →
@@ -96,10 +97,12 @@ object EntityResolution {
                       score: Column, maxDist: Int, keyLen: Int = 32): DataFrame = {
     val ids = records.select(col(idCol).as("__eid__"), col(valueCol).as("__val__"),
       score.as("__score__"))
-    val (nodes, edges) = valuePairs(records, valueCol, maxDist, keyLen)
     // Min-label propagation over distinct values; labels are value strings
     // (the cluster's lexicographic-minimum value — an opaque cluster key).
-    val valueComp = Dedup.connectedComponents(nodes, edges, "__vid__")
+    // Every round ends in a checkpoint, so the pairs are consumed when it
+    // returns.
+    val valueComp = valuePairsWith(records, valueCol, maxDist, keyLen)(
+      Dedup.connectedComponents(_, _, "__vid__"))
     // A record with a NULL value links to nothing (null generates no
     // blocking key and no exact match), but must still appear in the
     // output: it is its OWN singleton entity. Handled as a separate lane --

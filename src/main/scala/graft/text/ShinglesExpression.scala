@@ -81,99 +81,20 @@ object ShinglesExpr {
       ShinglesExpr(org.apache.spark.sql.graft.ExpressionBridge.expression(text), n))
 }
 
-/** Native distinct-intersection COUNT over two string arrays — the verify
-  * kernel of every exact-Jaccard pass.
-  *
-  * `size(array_intersect(a, b))` materializes the intersection ARRAY (and
-  * the symmetric `array_union` call a Jaccard needs materializes an even
-  * bigger one) only to take its length; at sf1 the PPJoin verify runs this
-  * over ~6.5M candidate pairs × ~hundred-element arrays and the probe
-  * measured it as the dominant stage (~22 s of a ~35 s join). This
-  * expression computes the count with one hash set over the SMALLER array
-  * and a probe scan over the larger — no output arrays, half the set
-  * inserts — and for arrays that are element-distinct (shingle sets are,
-  * by construction) `|a ∩ b|` also gives `|a ∪ b| = |a| + |b| - i`, so the
-  * full Jaccard needs no second pass. Null elements are skipped (shingle
-  * arrays are containsNull=false; the guard keeps the kernel total).
-  */
-final case class IntersectCountExpr(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    IntersectCountExpr.compute(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.text.IntersectCountExpr.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): IntersectCountExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object IntersectCountExpr {
-
-  def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
-              b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
-    val (small, large) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
-    val n = small.numElements()
-    val set = new java.util.HashSet[UTF8String](math.max(4, n * 2))
-    var i = 0
-    while (i < n) {
-      if (!small.isNullAt(i)) set.add(small.getUTF8String(i))
-      i += 1
-    }
-    var c = 0
-    val m = large.numElements()
-    i = 0
-    while (i < m) {
-      if (!large.isNullAt(i) && set.contains(large.getUTF8String(i))) c += 1
-      i += 1
-    }
-    c
-  }
-
-  def intersectCount(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ExpressionBridge.column(
-      IntersectCountExpr(
-        org.apache.spark.sql.graft.ExpressionBridge.expression(a),
-        org.apache.spark.sql.graft.ExpressionBridge.expression(b)))
-}
-
-/** [[IntersectCountExpr]] for arrays PRE-SORTED in Spark's string order
-  * (`sort_array` / UTF8String binary comparison): a two-pointer merge scan —
-  * zero allocation per pair, no hashing. The sort is paid ONCE per document
-  * row on the shingle-table side of the verify join; the merge runs per
-  * CANDIDATE PAIR (~27x more rows at sf1), which is where allocation-free
-  * matters. Skipping null elements keeps the kernel total on any input;
+/** Native distinct-intersection count over two string arrays PRE-SORTED in
+  * Spark's string order (`sort_array` / UTF8String binary comparison) — the
+  * verify kernel of every exact-Jaccard and containment pass. A two-pointer
+  * merge scan: zero allocation per pair, no hashing, and none of the
+  * intersection and union ARRAYS that `size(array_intersect(a, b))`
+  * materializes only to take their length (the dominant stage of the sf1
+  * PPJoin verify). The sort is paid ONCE per document row on the
+  * shingle-table side of the verify join; the merge runs per CANDIDATE
+  * PAIR. Skipping null elements keeps the kernel total on any input;
   * correctness requires both inputs sorted (callers sort, nothing checks).
-  */
-final case class SortedIntersectCountExpr(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCountExpr.compute(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.text.SortedIntersectCountExpr.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): SortedIntersectCountExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedIntersectCountExpr]] with a per-pair REQUIRED count and early
-  * exit: returns the exact intersection count when it is >= `needed`, and
-  * -1 as soon as the remaining elements cannot reach `needed`
+  *
+  * It takes a per-pair REQUIRED count and exits early: it returns the exact
+  * intersection count when it is >= `needed`, and -1 as soon as the
+  * remaining elements cannot reach `needed`
   * (`c + min(remaining_a, remaining_b) < needed`). Verify stages drop
   * sub-threshold pairs anyway — at sf1 ~99.9% of PPJoin candidates fail
   * verify, and most share only their one colliding prefix token, so the
@@ -231,6 +152,7 @@ object SortedIntersectCountExpr {
     if (c >= needed) c else -1
   }
 
+  /** The exact merge count, [[computeAtLeast]]'s reference. */
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
               b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
     val n = a.numElements()
@@ -250,12 +172,6 @@ object SortedIntersectCountExpr {
     }
     c
   }
-
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ExpressionBridge.column(
-      SortedIntersectCountExpr(
-        org.apache.spark.sql.graft.ExpressionBridge.expression(a),
-        org.apache.spark.sql.graft.ExpressionBridge.expression(b)))
 
   def sortedIntersectAtLeast(a: Column, b: Column, needed: Column): Column =
     org.apache.spark.sql.graft.ExpressionBridge.column(

@@ -8,8 +8,8 @@ package graft.tools
   * A side is one setting:
   *   - `sf=<dir>`: read that scale-factor dir (the other side reads
   *     `SPARK_GRAFT_SF_DIR`, unless it names its own);
-  *   - `spark.<key>=<value>`: a runtime SQL conf, set with `spark.conf`;
-  *   - `graft.<key>=<value>`: an engine dial, set as a system property.
+  *   - `spark.<key>=<value>`: a session conf, set with `spark.conf`; the
+  *     engine's dials are the `spark.graft.*` keys of [[graft.GraftConf]].
   * A value of `-` unsets the key. Before each run every key either side
   * names is put back to its starting value, then the side's one is applied.
   *
@@ -26,8 +26,8 @@ object AbProbe {
     val names = queryCsv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val rounds = roundsArg.toInt
     def parse(side: String): (String, String) = side.split("=", 2) match {
-      case Array(k, v) if k == "sf" || k.startsWith("spark.") || k.startsWith("graft.") => (k, v)
-      case _ => sys.error(s"side '$side' is not sf=<dir>, spark.<key>=<v|-> or graft.<key>=<v|->")
+      case Array(k, v) if k == "sf" || k.startsWith("spark.") => (k, v)
+      case _ => sys.error(s"side '$side' is not sf=<dir> or spark.<key>=<v|->")
     }
     val sides = Seq(parse(sideA), parse(sideB))
     lazy val envSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
@@ -35,14 +35,9 @@ object AbProbe {
     val sfOf = sides.map { case (k, v) => if (k == "sf") v else envSf }
     val spark = graft.GraftSession.local()
     val keys = sides.map(_._1).filter(_ != "sf").distinct
-    val start = keys.map(k =>
-      k -> (if (k.startsWith("spark.")) spark.conf.getOption(k) else sys.props.get(k))).toMap
-    def put(k: String, v: Option[String]): Unit = (k.startsWith("spark."), v) match {
-      case (true, Some(x)) => spark.conf.set(k, x)
-      case (true, None) => spark.conf.unset(k)
-      case (false, Some(x)) => sys.props(k) = x
-      case (false, None) => sys.props.remove(k)
-    }
+    val start = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    def put(k: String, v: Option[String]): Unit =
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     def run(name: String, side: Int): (Double, Long) = {
       start.foreach { case (k, v) => put(k, v) }
       val (k, v) = sides(side)

@@ -263,36 +263,8 @@ class PipelineSpec extends PlanetsFixture {
     * logged while `f` runs. The probe stats a single read path literally
     * and logs a WARN with a stack trace when that fails.
     */
-  private def sinkWarnings(marker: String)(f: => Any): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-    val logger = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val config = ctx.getConfiguration
-    val appender = new AbstractAppender("graft-sink-warnings", null, null, true,
-      Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val msg = e.getMessage.getFormattedMessage
-        if (msg.contains(marker)) seen.add(msg)
-      }
-    }
-    appender.start()
-    val lc = new LoggerConfig(logger, Level.WARN, true)
-    lc.addAppender(appender, Level.WARN, null)
-    config.addLogger(logger, lc)
-    ctx.updateLoggers()
-    try {
-      f
-      seen.toArray(Array.empty[String]).toSeq
-    } finally {
-      config.removeLogger(logger)
-      ctx.updateLoggers()
-      appender.stop()
-    }
-  }
+  private def sinkWarnings(marker: String)(f: => Any): Seq[String] =
+    warnings("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink", marker)(f)
 
   test("a run's message reads log no metadata-directory WARN") {
     val base = freshDir()

@@ -684,15 +684,12 @@ class SimilaritySpec extends SparkSpec {
     assert(blocked == naive)
     assert(blocked.nonEmpty)
     // and with a forced tiny block count the pairing/dedup logic still holds
-    val prev = sys.props.get("graft.brute.blocks")
-    try {
-      sys.props("graft.brute.blocks") = "3"
+    withConf(graft.GraftConf.BruteBlocks -> Some("3")) {
       val blocked3 = Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding",
         threshold = 0.45, bruteForce = true)
         .as[(Long, Long, Double)].collect().toSet
       assert(blocked3 == naive)
-    } finally prev.fold(sys.props.remove("graft.brute.blocks"): Unit)(v =>
-      sys.props("graft.brute.blocks") = v)
+    }
   }
 
   test("firstSharedProbeBucket keeps exactly the min shared probe bucket (exhaustive codes)") {
@@ -740,19 +737,14 @@ class SimilaritySpec extends SparkSpec {
     val base = Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding",
       threshold = 0.45, numPlanes = 4)
       .as[(Long, Long, Double)].collect().toSet
-    val prev = sys.props.get("graft.verify.chunkRows")
-    val chunked = try {
-      // budget = 4 pairs/pass: the occupancy bound trips, the candidate
-      // frame persists + counts, and the verify runs as K released passes
-      sys.props("graft.verify.chunkRows") = "1"
-      Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding",
+    // budget = 1 pair/pass: the occupancy bound trips, and the verify runs
+    // as K released passes
+    val (chunked, taken) = try withConf(graft.GraftConf.VerifyChunkRows -> Some("1")) {
+      decided("verify.embed")(Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding",
         threshold = 0.45, numPlanes = 4)
-        .as[(Long, Long, Double)].collect().toSet
-    } finally {
-      prev.fold(sys.props.remove("graft.verify.chunkRows"): Unit)(v =>
-        sys.props("graft.verify.chunkRows") = v)
-      spark.catalog.clearCache()
-    }
+        .as[(Long, Long, Double)].collect().toSet)
+    } finally spark.catalog.clearCache()
+    assert(taken == Seq("chunked"))
     assert(chunked == base)
     assert(chunked.nonEmpty)
   }

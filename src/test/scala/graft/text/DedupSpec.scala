@@ -1,10 +1,11 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.{GraftConf, GraftDecision, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
 
+  import DedupSpec._
   import spark.implicits._
 
   private val corpus = Seq(
@@ -169,14 +170,15 @@ class DedupSpec extends SparkSpec {
         _.select("a", "b", "containment").as[(Long, Long, Double)].collect().toSet)
     val (kSelf, kCross, kContain) = (runSelf(), runCross(), runContain())
     assert(kSelf.nonEmpty && kCross.nonEmpty && kContain.nonEmpty)
-    val prev = sys.props.get("graft.ppjoin.kernel")
-    try {
-      sys.props("graft.ppjoin.kernel") = "off"
-      assert(runSelf() == kSelf)
-      assert(runCross() == kCross)
-      assert(runContain() == kContain)
-    } finally prev.fold(sys.props.remove("graft.ppjoin.kernel"): Unit)(v =>
-      sys.props("graft.ppjoin.kernel") = v)
+    withConf(kernelOff) {
+      val (_, taken) = tiers {
+        assert(runSelf() == kSelf)
+        assert(runCross() == kCross)
+        assert(runContain() == kContain)
+      }
+      assert(taken == Seq("ppjoin.self" -> "distributed", "ppjoin.crossindex" -> "distributed",
+        "crossindex.vocab" -> "tier2", "ppjoin.containment" -> "distributed"))
+    }
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
@@ -192,16 +194,11 @@ class DedupSpec extends SparkSpec {
     def run(): Set[(Long, Long, Double)] =
       Dedup.prefixFilterJoinWith(withNull, "doc_id", "text", 3, 0.5)(
         _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet)
-    val prev = Seq("graft.ppjoin.broadcastRows", "graft.ppjoin.kernel")
-      .map(k => k -> sys.props.get(k))
-    try {
-      sys.props("graft.ppjoin.broadcastRows") = "1000000" // force tier 1
-      val kernel = run()
-      sys.props("graft.ppjoin.kernel") = "off"
-      assert(kernel == run())
+    withConf(GraftConf.PpjoinBroadcastRows -> Some("1000000")) { // force tier 1
+      val (kernel, taken) = tiers(run())
+      assert(taken == Seq("ppjoin.self" -> "tier1"))
+      withConf(kernelOff)(assert(tiers(run()) == (kernel, Seq("ppjoin.self" -> "distributed"))))
       assert(kernel.map(t => (t._1, t._2)) == Set((1L, 4L)))
-    } finally prev.foreach { case (k, v) =>
-      v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x)
     }
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
@@ -219,17 +216,13 @@ class DedupSpec extends SparkSpec {
       Dedup.prefixFilterCrossJoinWith(docs.where(col("doc_id") === 1 || col("doc_id").isNull),
           docs.where(col("doc_id") === 4 || col("doc_id").isNull), "doc_id", "text")(
         _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet))
-    val prev = Seq("graft.ppjoin.broadcastRows", "graft.ppjoin.kernel")
-      .map(k => k -> sys.props.get(k))
-    try {
-      sys.props("graft.ppjoin.broadcastRows") = "1000000" // force tier 1
-      val kernel = run()
-      sys.props("graft.ppjoin.kernel") = "off"
-      assert(kernel == run())
+    withConf(GraftConf.PpjoinBroadcastRows -> Some("1000000")) { // force tier 1
+      val (kernel, taken) = tiers(run())
+      assert(taken == Seq("ppjoin.containment" -> "tier1", "ppjoin.crossindex" -> "tier1"))
+      withConf(kernelOff)(assert(tiers(run()) == (kernel, Seq("ppjoin.containment" -> "distributed",
+        "ppjoin.crossindex" -> "distributed", "crossindex.vocab" -> "tier2"))))
       assert(kernel._1 == Set((1L, 4L, 1.0), (4L, 1L, 1.0)))
       assert(kernel._2 == Set((1L, 4L, 1.0)))
-    } finally prev.foreach { case (k, v) =>
-      v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x)
     }
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
@@ -239,24 +232,19 @@ class DedupSpec extends SparkSpec {
     val sc = spark.sparkContext
     val fresh = corpus.where(col("doc_id") % 2 === 0)
     val ref = corpus.where(col("doc_id") % 2 === 1)
-    val prev = sys.props.get("graft.ppjoin.broadcastRows")
     sc.setJobDescription("caller")
-    try Seq(None, Some("0")).foreach { refRows => // tier 1, tier 2
-      refRows.fold(sys.props.remove("graft.ppjoin.broadcastRows"): Unit)(v =>
-        sys.props("graft.ppjoin.broadcastRows") = v)
-      val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text")
+    try Seq(None, Some("0")).foreach { refRows => withConf(pastGate._1 -> refRows) { // tier 1, 2
+      val (index, taken) = tiers(Dedup.buildPrefixCrossIndex(ref, "doc_id", "text"))
       try {
         assert(tierOf(index) == (if (refRows.isEmpty) 1 else 2))
+        assert(taken == (if (refRows.isEmpty) Seq("ppjoin.crossindex" -> "tier1")
+          else Seq("ppjoin.crossindex" -> "distributed", "crossindex.vocab" -> "tier2")))
         assert(sc.getLocalProperty("spark.job.description") == "caller")
         assert(index.joinBatch(fresh).count() == 2)
         assert(index.joinBatchWith(fresh)(_.count()) == 2)
         assert(sc.getLocalProperty("spark.job.description") == "caller", refRows)
       } finally index.release()
-    } finally {
-      sc.setJobDescription(null)
-      prev.fold(sys.props.remove("graft.ppjoin.broadcastRows"): Unit)(v =>
-        sys.props("graft.ppjoin.broadcastRows") = v)
-    }
+    }} finally sc.setJobDescription(null)
     spark.catalog.clearCache()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
@@ -270,9 +258,10 @@ class DedupSpec extends SparkSpec {
     val fresh = corpus.where(col("doc_id") % 2 === 0)
     val ref = corpus.where(col("doc_id") % 2 === 1)
     def runBatched(tier: Int): Set[(Long, Long, Double)] = {
-      val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text")
+      val (index, taken) = tiers(Dedup.buildPrefixCrossIndex(ref, "doc_id", "text"))
       try {
         assert(tierOf(index) == tier)
+        assert(taken == Seq("ppjoin.crossindex" -> "distributed", "crossindex.vocab" -> s"tier$tier"))
         Seq(fresh.where(col("doc_id") <= 2), fresh.where(col("doc_id") > 2))
           .flatMap(b => index.joinBatchWith(b)(
             _.select("a", "b", "jaccard").as[(Long, Long, Double)].collect()))
@@ -281,46 +270,26 @@ class DedupSpec extends SparkSpec {
     }
     val brute = bruteCrossJaccard(fresh, ref, 0.5)
     assert(brute.nonEmpty)
-    withProps("graft.ppjoin.broadcastRows" -> Some("0")) {
+    withConf(pastGate) {
       assert(runBatched(2) == brute)
-      withProps("graft.crossindex.broadcastVocabRows" -> Some("0"))(assert(runBatched(3) == brute))
+      withConf(noVocab)(assert(runBatched(3) == brute))
     }
     spark.catalog.clearCache()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  /** Runs `body` with the given system properties set (`None` removes one),
-    * restoring every previous value afterwards. */
-  private def withProps[T](kvs: (String, Option[String])*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> sys.props.get(k) }
-    try {
-      kvs.foreach { case (k, v) => v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x) }
-      body
-    } finally prev.foreach { case (k, v) => v.fold(sys.props.remove(k): Unit)(x => sys.props(k) = x) }
-  }
+  // the dials that force the prefix joins' tiers
+  private val kernelOff = GraftConf.PpjoinKernel -> Some("off")
+  private val pastGate = GraftConf.PpjoinBroadcastRows -> Some("0")
+  private val noVocab = GraftConf.CrossindexBroadcastVocabRows -> Some("0")
 
-  // Hostile corpus for the differential spec (word shingles, shingleSize 1):
-  // a boilerplate phrase in every regular doc (the most frequent tokens),
-  // pairs exactly at jaccard 0.5, 0.8 and the non-dyadic 0.7, containment
-  // exactly at 0.5, 0.7 and 0.8, empty, one-word and null texts, null ids.
-  private val bp = "bp1 bp2 bp3"
-  private def words(p: String, n: Int): String = (1 to n).map(i => s"$p$i").mkString(" ")
-  private val hostile: Seq[(Option[Long], Option[String])] = Seq(
-    Some(1L) -> Some(s"$bp ${words("a", 3)}"),                    // 6 tokens
-    Some(2L) -> Some(s"$bp ${words("a", 3)} ${words("c", 6)}"),   // 12: j(1,2) = 0.5
-    Some(3L) -> Some(s"$bp ${words("e", 5)}"),                    // 8
-    Some(4L) -> Some(s"$bp ${words("e", 5)} f1 f2"),              // 10: j(3,4) = 0.8
-    Some(5L) -> Some(s"$bp ${words("g", 4)} h1"),                 // 8
-    Some(6L) -> Some(s"$bp ${words("g", 4)} k1 k2"),              // 9: j(5,6) = 0.7
-    Some(7L) -> Some(""),
-    Some(8L) -> Some(""),
-    Some(9L) -> Some("solo"),
-    Some(10L) -> Some("solo"),
-    Some(11L) -> None,
-    Some(12L) -> Some(s"$bp ${words("m", 9)}"),
-    Some(13L) -> Some(s"$bp ${words("g", 4)} z1 z2 z3"),          // c(13->5) = 0.7
-    None -> Some(s"$bp ${words("a", 3)}"),
-    None -> Some("solo"))
+  /** `body`'s result and the (op, choice) of every prefix-join tier
+    * decision it posted, in order. */
+  private def tiers[T](body: => T): (T, Seq[(String, String)]) = {
+    val (out, decisions) = GraftDecision.recorded(spark)(body)
+    (out, decisions.filter(d => d.op.startsWith("ppjoin.") || d.op == "crossindex.vocab")
+      .map(d => d.op -> d.choice))
+  }
 
   /** 1, 2 or 3: the tier a [[Dedup.PrefixCrossIndex]] was built on. */
   private def tierOf(index: Dedup.PrefixCrossIndex): Int = index.tier match {
@@ -345,30 +314,14 @@ class DedupSpec extends SparkSpec {
 
   test("every prefix-join mode and tier is bit-equal to a brute-force reference") {
     spark.catalog.clearCache()
-    type Out = Seq[(Long, Long, Long)] // (a, b, raw bits of the score)
-    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
-    def collectOut(df: org.apache.spark.sql.DataFrame, score: String): Out =
-      df.select(col("a"), col("b"), col(score)).collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1), bits(r.getDouble(2)))).sorted
     val docs = hostile.toDF("doc_id", "text")
     // cross sides with overlapping id namespaces: the odd docs are the new
     // side; each even doc joins the reference under its odd neighbour's id
     val fresh = docs.where(col("doc_id") % 2 === 1 || col("doc_id").isNull)
     val ref = docs.where(col("doc_id") % 2 === 0).withColumn("doc_id", col("doc_id") - 1)
       .unionByName(Seq[(Option[Long], Option[String])](None -> Some("solo")).toDF("doc_id", "text"))
-    def shingleMap(df: org.apache.spark.sql.DataFrame): Seq[(Long, Set[String])] =
-      df.select(col("doc_id"), Dedup.shingles(col("text"), 1).as("sh")).collect().toSeq
-        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        .map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
-        .filter(_._2.nonEmpty)
     val (shDocs, shFresh, shRef) = (shingleMap(docs), shingleMap(fresh), shingleMap(ref))
-    def jac(x: Set[String], y: Set[String]): Double = {
-      val i = x.intersect(y).size.toDouble
-      i / (x.size.toDouble + y.size.toDouble - i)
-    }
-    def bruteSelf(t: Double): Out = (for {
-      (a, x) <- shDocs; (b, y) <- shDocs if a < b; j = jac(x, y) if j >= t
-    } yield (a, b, bits(j))).sorted
+    def bruteSelf(t: Double): Out = bruteSelfJaccard(shDocs, t)
     def bruteCross(t: Double): Out = (for {
       (a, x) <- shFresh; (b, y) <- shRef; j = jac(x, y) if j >= t
     } yield (a, b, bits(j))).sorted
@@ -377,30 +330,31 @@ class DedupSpec extends SparkSpec {
       c = x.intersect(y).size.toDouble / x.size.toDouble if c >= t
     } yield (a, b, bits(java.math.BigDecimal.valueOf(c)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()))).sorted
-    val kernelOff = "graft.ppjoin.kernel" -> Some("off")
-    val pastGate = "graft.ppjoin.broadcastRows" -> Some("0")
-    val noVocab = "graft.crossindex.broadcastVocabRows" -> Some("0")
     val batches = Seq(fresh.where(col("doc_id") <= 3),
       fresh.where(col("doc_id") > 3 && col("doc_id") <= 9),
       fresh.where(col("doc_id") > 9 || col("doc_id").isNull))
-    final case class Case(name: String, props: Seq[(String, Option[String])],
+    // `taken`: the choices of the case's tier decisions
+    final case class Case(name: String, confs: Seq[(String, Option[String])], taken: Seq[String],
                           run: Double => Out, brute: Double => Out)
     val cases = Seq(
-      Case("self tier 1", Nil, t => Dedup.prefixFilterJoinWith(docs, "doc_id", "text", 1, t)(
-        collectOut(_, "jaccard")), bruteSelf),
-      Case("self kernel=off", Seq(kernelOff), t => Dedup.prefixFilterJoinWith(docs, "doc_id",
+      Case("self tier 1", Nil, Seq("tier1"), t => Dedup.prefixFilterJoinWith(docs, "doc_id",
         "text", 1, t)(collectOut(_, "jaccard")), bruteSelf),
-      Case("containment tier 1", Nil, t => Dedup.containmentPairsWith(docs, "doc_id", "text",
-        1, t)(collectOut(_, "containment")), bruteContain),
-      Case("containment kernel=off", Seq(kernelOff), t => Dedup.containmentPairsWith(docs,
+      Case("self kernel=off", Seq(kernelOff), Seq("distributed"), t => Dedup.prefixFilterJoinWith(
+        docs, "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteSelf),
+      Case("containment tier 1", Nil, Seq("tier1"), t => Dedup.containmentPairsWith(docs,
         "doc_id", "text", 1, t)(collectOut(_, "containment")), bruteContain),
-      Case("cross tier 1", Nil, t => Dedup.prefixFilterCrossJoinWith(fresh, ref, "doc_id",
-        "text", 1, t)(collectOut(_, "jaccard")), bruteCross),
-      Case("cross kernel=off", Seq(kernelOff), t => Dedup.prefixFilterCrossJoinWith(fresh, ref,
-        "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteCross)) ++
-      Seq(1 -> Nil, 2 -> Seq(pastGate), 3 -> Seq(pastGate, noVocab)).map {
-        case (tier, props) =>
-          Case(s"index tier $tier", props, t => {
+      Case("containment kernel=off", Seq(kernelOff), Seq("distributed"), t =>
+        Dedup.containmentPairsWith(docs, "doc_id", "text", 1, t)(collectOut(_, "containment")),
+        bruteContain),
+      Case("cross tier 1", Nil, Seq("tier1"), t => Dedup.prefixFilterCrossJoinWith(fresh, ref,
+        "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteCross),
+      Case("cross kernel=off", Seq(kernelOff), Seq("distributed", "tier2"), t =>
+        Dedup.prefixFilterCrossJoinWith(fresh, ref, "doc_id", "text", 1, t)(
+          collectOut(_, "jaccard")), bruteCross)) ++
+      Seq((1, Nil, Seq("tier1")), (2, Seq(pastGate), Seq("distributed", "tier2")),
+          (3, Seq(pastGate, noVocab), Seq("distributed", "tier3"))).map {
+        case (tier, confs, taken) =>
+          Case(s"index tier $tier", confs, taken, t => {
             val index = Dedup.buildPrefixCrossIndex(ref, "doc_id", "text", 1, t)
             try {
               assert(tierOf(index) == tier)
@@ -408,11 +362,12 @@ class DedupSpec extends SparkSpec {
             } finally index.release()
           }, bruteCross)
       }
-    for (Case(name, props, run, brute) <- cases; t <- Seq(0.5, 0.7, 0.8)) {
+    for (Case(name, confs, taken, run, brute) <- cases; t <- Seq(0.5, 0.7, 0.8)) {
       val expected = brute(t)
       assert(expected.nonEmpty, s"$name t=$t")
-      val got = withProps(props: _*)(run(t))
+      val (got, decided) = withConf(confs: _*)(tiers(run(t)))
       assert(got == expected, s"$name t=$t")
+      assert(decided.map(_._2) == taken, s"$name t=$t")
     }
     // the corpus reaches every boundary it is built for
     assert(bruteSelf(0.8).contains((3L, 4L, bits(0.8))))
@@ -439,12 +394,13 @@ class DedupSpec extends SparkSpec {
       "self" -> (d => Dedup.prefixFilterJoinWith(d, "doc_id", "text")(_.collect())),
       "containment" -> (d => Dedup.containmentPairsWith(d, "doc_id", "text")(_.collect())),
       "cross" -> (d => Dedup.prefixFilterCrossJoinWith(ok, d, "doc_id", "text")(_.collect())))
-    for ((tier, props) <- Seq("tier 1" -> Nil,
-           "kernel=off" -> Seq("graft.ppjoin.kernel" -> Some("off")),
-           "tier 3" -> Seq("graft.ppjoin.broadcastRows" -> Some("0"),
-             "graft.crossindex.broadcastVocabRows" -> Some("0")));
-         (mode, run) <- runs) withProps(props: _*) {
-      run(ok) // unique non-null ids pass
+    // (the gate's choice, the cross index's vocabulary tier)
+    for ((tier, confs, (gate, vocab)) <- Seq(("tier 1", Nil, ("tier1", Nil)),
+           ("kernel=off", Seq(kernelOff), ("distributed", Seq("tier2"))),
+           ("tier 3", Seq(pastGate, noVocab), ("distributed", Seq("tier3"))));
+         (mode, run) <- runs) withConf(confs: _*) {
+      val (_, taken) = tiers(run(ok)) // unique non-null ids pass
+      assert(taken.map(_._2) == gate +: (if (mode == "cross") vocab else Nil), s"$mode $tier")
       val e = intercept[Exception](run(docs))
       val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
       assert(msgs.exists(m => m != null && m.contains("duplicate doc_id 2")), s"$mode $tier: $e")
@@ -455,15 +411,16 @@ class DedupSpec extends SparkSpec {
   test("the tier-1 gate routes an oversized token total to the distributed tier") {
     val heap = 8L << 30
     val fits = (heap * Dedup.DriverHeapShare / Dedup.DriverBytesPerToken).toLong
-    assert(Dedup.driverTier(rows = 5000, tokens = 260000, maxHeap = heap))
-    assert(Dedup.driverTier(rows = 100000, tokens = fits, maxHeap = heap))
+    val conf = GraftConf(spark)
+    assert(Dedup.driverTier(rows = 5000, tokens = 260000, conf, maxHeap = heap))
+    assert(Dedup.driverTier(rows = 100000, tokens = fits, conf, maxHeap = heap))
     // few rows, but too many shingles for the driver's maps
-    assert(!Dedup.driverTier(rows = 10, tokens = fits + 1, maxHeap = heap))
-    assert(!Dedup.driverTier(rows = 100001, tokens = 10, maxHeap = heap))
-    withProps("graft.ppjoin.broadcastRows" -> Some("0"))(
-      assert(!Dedup.driverTier(rows = 1, tokens = 1, maxHeap = heap)))
-    withProps("graft.ppjoin.kernel" -> Some("off"))(
-      assert(!Dedup.driverTier(rows = 1, tokens = 1, maxHeap = heap)))
+    assert(!Dedup.driverTier(rows = 10, tokens = fits + 1, conf, maxHeap = heap))
+    assert(!Dedup.driverTier(rows = 100001, tokens = 10, conf, maxHeap = heap))
+    withConf(pastGate)(
+      assert(!Dedup.driverTier(rows = 1, tokens = 1, GraftConf(spark), maxHeap = heap)))
+    withConf(kernelOff)(
+      assert(!Dedup.driverTier(rows = 1, tokens = 1, GraftConf(spark), maxHeap = heap)))
   }
 
   test("connectedComponents resolves pair graphs into min-labelled clusters") {
@@ -572,12 +529,7 @@ class DedupSpec extends SparkSpec {
     val single = canon
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val prev = sys.props.get("graft.verify.chunks")
-    val chunked = try {
-      sys.props("graft.verify.chunks") = "3"
-      canon
-    } finally prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-      sys.props("graft.verify.chunks") = v)
+    val chunked = withConf(GraftConf.VerifyChunks -> Some("3"))(canon)
     assert(chunked == single && single.nonEmpty)
     // the chunked path persists the keyed signature frame internally and
     // must release it (passes run eagerly inside the call). The K=3
@@ -612,9 +564,9 @@ class DedupSpec extends SparkSpec {
     val n = 36
     val nodes = (0L until n.toLong).toDF("id")
     val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val (result, release, converged) =
-      Dedup.connectedComponentsImpl(nodes, edges, "id", maxRounds = 50)
-    assert(converged)
+    val ((result, release), taken) =
+      decided("components")(Dedup.connectedComponentsImpl(nodes, edges, "id", maxRounds = 50))
+    assert(taken == Seq("converged"))
     val out = result.as[(Long, Long)].collect().toMap
     assert(out.values.toSet == Set(0L))
     // bounded plan depth: at most ~5 post-checkpoint rounds of lineage
@@ -625,9 +577,9 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents reports non-convergence when maxRounds cuts propagation short") {
     val nodes = (0L to 6L).toDF("id")
     val edges = (0L to 5L).map(i => (i, i + 1)).toDF("a", "b")
-    val (result, release, converged) =
-      Dedup.connectedComponentsImpl(nodes, edges, "id", maxRounds = 2)
-    assert(!converged) // diameter 6 > 2 rounds: labels are partial
+    val ((result, release), taken) =
+      decided("components")(Dedup.connectedComponentsImpl(nodes, edges, "id", maxRounds = 2))
+    assert(taken == Seq("partial")) // diameter 6 > 2 rounds: labels are partial
     assert(result.as[(Long, Long)].collect().toMap.values.toSet != Set(0L))
     release()
   }
@@ -641,13 +593,13 @@ class DedupSpec extends SparkSpec {
     val docs = (clones :+ ((90L, "a quick brown fox jumps over the lazy dog again and again"))
       :+ ((91L, "completely unrelated words about databases query engines and shuffles")))
       .toDF("doc_id", "text")
-    val (capped, stats) = Dedup.simHashNearDupWithStats(docs, "doc_id", "text",
-      maxHamming = 3, maxBucketSize = 1)
+    val (capped, capDecisions) = decided("simhash.cap")(Dedup.simHashNearDup(docs, "doc_id",
+      "text", maxHamming = 3, maxBucketSize = 1))
     val cappedPairs = capped.as[(Long, Long, Long)].collect().toSet
     // all 190 clone-clone pairs intact (doc 90 may legitimately also land at
     // hamming 0 — one-word edits can leave the 64-bit signature unchanged)
     assert(cappedPairs.count(p => p._1 <= 20 && p._2 <= 20 && p._3 == 0L) == 190)
-    assert(stats.nonEmpty)
+    assert(capDecisions.size == 1) // the capped call measured what the cap drops
     // uncapped output is a superset and contains no duplicates
     val full = Dedup.simHashNearDup(docs, "doc_id", "text", maxHamming = 3)
       .as[(Long, Long, Long)].collect()
@@ -695,55 +647,26 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.verifyPartitions(spark, 50_000_000L, 500_000L) == 100)
     // the operational override beats BOTH the default and the explicit
     // target — an escape hatch that some paths ignore is not one
-    val prev = sys.props.get("graft.verify.rowsPerPartition")
-    try {
-      sys.props("graft.verify.rowsPerPartition") = "10000"
+    withConf(GraftConf.VerifyRowsPerPartition -> Some("10000")) {
       assert(Dedup.verifyPartitions(spark, 15_000_000L) == 1500)
       assert(Dedup.verifyPartitions(spark, 15_000_000L, 500_000L) == 1500)
       // cap holds regardless of the override
       assert(Dedup.verifyPartitions(spark, 1_000_000_000_000L, 500_000L) == 4096)
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.verify.rowsPerPartition") = v
-        case None => sys.props.remove("graft.verify.rowsPerPartition")
-      }
-    }
-  }
-
-  test("malformed rowsPerPartition/chunk props degrade to defaults, never throw") {
-    val prevRpp = sys.props.get("graft.verify.rowsPerPartition")
-    val prevChunks = sys.props.get("graft.verify.chunks")
-    try {
-      sys.props("graft.verify.rowsPerPartition") = "not-a-number"
-      // falls back to the explicit target / built-in default
-      assert(Dedup.verifyPartitions(spark, 15_000_000L, 500_000L) == 30)
-      assert(Dedup.verifyPartitions(spark, 15_000_000L) == 100)
-      sys.props("graft.verify.chunks") = "-3"
-      // rejected (must be positive): auto sizing applies
-      assert(Dedup.verifyChunkCount(10_000L) == 1)
-    } finally {
-      prevRpp.fold(sys.props.remove("graft.verify.rowsPerPartition"): Unit)(v =>
-        sys.props("graft.verify.rowsPerPartition") = v)
-      prevChunks.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-        sys.props("graft.verify.chunks") = v)
     }
   }
 
   test("verifyChunkCount: single pass under the budget, K passes above, cap at 64") {
-    assert(Dedup.verifyChunkCount(0L) == 1)
-    assert(Dedup.verifyChunkCount(25_000_000L) == 1)   // under the 30M/pass budget
+    val conf = GraftConf(spark)
+    assert(Dedup.verifyChunkCount(0L, conf) == 1)
+    assert(Dedup.verifyChunkCount(25_000_000L, conf) == 1)   // under the 30M/pass budget
     // sf10 ppjoin measured 77.7M candidates: un-chunked (and twice-executed
     // by pagerank's edge union) it ENOSPC'd this box; 3 checkpointed passes
     // ran the whole query in 98 s (SCALE.md r14)
-    assert(Dedup.verifyChunkCount(77_700_000L) == 3)
-    assert(Dedup.verifyChunkCount(300_000_000L) == 10)
-    assert(Dedup.verifyChunkCount(Long.MaxValue / 2) == 64)
-    val prev = sys.props.get("graft.verify.chunks")
-    try {
-      sys.props("graft.verify.chunks") = "7"
-      assert(Dedup.verifyChunkCount(10L) == 7) // explicit K wins
-    } finally prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-      sys.props("graft.verify.chunks") = v)
+    assert(Dedup.verifyChunkCount(77_700_000L, conf) == 3)
+    assert(Dedup.verifyChunkCount(300_000_000L, conf) == 10)
+    assert(Dedup.verifyChunkCount(Long.MaxValue / 2, conf) == 64)
+    withConf(GraftConf.VerifyChunks -> Some("7"))(
+      assert(Dedup.verifyChunkCount(10L, conf) == 7)) // explicit K wins
   }
 
   test("chunked verify output equals single-pass output (ppjoin, containment, minhash)") {
@@ -769,18 +692,12 @@ class DedupSpec extends SparkSpec {
         canon(run(Dedup.containmentPairs(docs, "doc_id", "text", 2, 0.6))),
         canon(run(Dedup.minHashDedup(docs, "doc_id", "text", 2, 64, 32, 0.5))))
       spark.catalog.clearCache()
-      val prev = sys.props.get("graft.verify.chunks")
-      val chunked = try {
-        sys.props("graft.verify.chunks") = "3"
+      val chunked = try withConf(GraftConf.VerifyChunks -> Some("3")) {
         (
           canon(run(Dedup.prefixFilterJoin(docs, "doc_id", "text", 2, 0.5))),
           canon(run(Dedup.containmentPairs(docs, "doc_id", "text", 2, 0.6))),
           canon(run(Dedup.minHashDedup(docs, "doc_id", "text", 2, 64, 32, 0.5))))
-      } finally {
-        prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-          sys.props("graft.verify.chunks") = v)
-        spark.catalog.clearCache()
-      }
+      } finally spark.catalog.clearCache()
       assert(chunked._1 == single._1 && chunked._1.nonEmpty)
       assert(chunked._2 == single._2 && chunked._2.nonEmpty)
       assert(chunked._3 == single._3 && chunked._3.nonEmpty)
@@ -788,46 +705,12 @@ class DedupSpec extends SparkSpec {
     assert(warnings.isEmpty, warnings.mkString("\n"))
   }
 
-  /** The `CacheManager` "already cached" WARNs logged while `f` runs. */
-  private def cacheWarnings(f: => Any): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-    val logger = "org.apache.spark.sql.execution.CacheManager"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val config = ctx.getConfiguration
-    val appender = new AbstractAppender("graft-cache-warnings", null, null, true,
-      Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val msg = e.getMessage.getFormattedMessage
-        if (msg.contains("already cached")) seen.add(msg)
-      }
-    }
-    appender.start()
-    val lc = new LoggerConfig(logger, Level.WARN, true)
-    lc.addAppender(appender, Level.WARN, null)
-    config.addLogger(logger, lc)
-    ctx.updateLoggers()
-    try {
-      f
-      seen.toArray(Array.empty[String]).toSeq
-    } finally {
-      config.removeLogger(logger)
-      ctx.updateLoggers()
-      appender.stop()
-    }
-  }
-
   test("chunked verify releases each pass's shuffles before the next") {
     spark.catalog.clearCache()
     val sc = spark.sparkContext
     val docs = (0L until 20L).map(i =>
       (i, s"alpha bravo charlie delta echo foxtrot tok${i % 5}")).toDF("doc_id", "text")
-    val prev = sys.props.get("graft.verify.chunks")
-    try {
-      sys.props("graft.verify.chunks") = "4"
+    try withConf(GraftConf.VerifyChunks -> Some("4")) {
       val before = org.apache.spark.GraftShuffleGc.snapshot(sc)
       Dedup.prefixFilterJoinWith(docs, "doc_id", "text", 2, 0.5)(_.count())
       val after = org.apache.spark.GraftShuffleGc.snapshot(sc)
@@ -835,10 +718,61 @@ class DedupSpec extends SparkSpec {
       // what survives is candidate-gen + the final consumption, bounded well
       // under 4x a pass's shuffle count (8+ shuffles/pass if leaked)
       assert((after -- before).size < 20, s"leaked shuffles: ${after -- before}")
-    } finally {
-      prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-        sys.props("graft.verify.chunks") = v)
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
+}
+
+/** The differential references of the prefix joins, shared with the
+  * session-isolation spec.
+  */
+object DedupSpec {
+  import org.apache.spark.sql.DataFrame
+
+  // Hostile corpus for the differential spec (word shingles, shingleSize 1):
+  // a boilerplate phrase in every regular doc (the most frequent tokens),
+  // pairs exactly at jaccard 0.5, 0.8 and the non-dyadic 0.7, containment
+  // exactly at 0.5, 0.7 and 0.8, empty, one-word and null texts, null ids.
+  private val bp = "bp1 bp2 bp3"
+  private def words(p: String, n: Int): String = (1 to n).map(i => s"$p$i").mkString(" ")
+  val hostile: Seq[(Option[Long], Option[String])] = Seq(
+    Some(1L) -> Some(s"$bp ${words("a", 3)}"),                    // 6 tokens
+    Some(2L) -> Some(s"$bp ${words("a", 3)} ${words("c", 6)}"),   // 12: j(1,2) = 0.5
+    Some(3L) -> Some(s"$bp ${words("e", 5)}"),                    // 8
+    Some(4L) -> Some(s"$bp ${words("e", 5)} f1 f2"),              // 10: j(3,4) = 0.8
+    Some(5L) -> Some(s"$bp ${words("g", 4)} h1"),                 // 8
+    Some(6L) -> Some(s"$bp ${words("g", 4)} k1 k2"),              // 9: j(5,6) = 0.7
+    Some(7L) -> Some(""),
+    Some(8L) -> Some(""),
+    Some(9L) -> Some("solo"),
+    Some(10L) -> Some("solo"),
+    Some(11L) -> None,
+    Some(12L) -> Some(s"$bp ${words("m", 9)}"),
+    Some(13L) -> Some(s"$bp ${words("g", 4)} z1 z2 z3"),          // c(13->5) = 0.7
+    None -> Some(s"$bp ${words("a", 3)}"),
+    None -> Some("solo"))
+
+  type Out = Seq[(Long, Long, Long)] // (a, b, raw bits of the score)
+
+  def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  def collectOut(df: DataFrame, score: String): Out =
+    df.select(col("a"), col("b"), col(score)).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), bits(r.getDouble(2)))).sorted
+
+  /** (id, word set) of each non-empty document with an id (shingleSize 1). */
+  def shingleMap(df: DataFrame): Seq[(Long, Set[String])] =
+    df.select(col("doc_id"), Dedup.shingles(col("text"), 1).as("sh")).collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+      .filter(_._2.nonEmpty)
+
+  def jac(x: Set[String], y: Set[String]): Double = {
+    val i = x.intersect(y).size.toDouble
+    i / (x.size.toDouble + y.size.toDouble - i)
+  }
+
+  /** Every pair (a < b) of `sh` with jaccard >= t, by brute force. */
+  def bruteSelfJaccard(sh: Seq[(Long, Set[String])], t: Double): Out = (for {
+    (a, x) <- sh; (b, y) <- sh if a < b; j = jac(x, y) if j >= t
+  } yield (a, b, bits(j))).sorted
 }

@@ -1,9 +1,9 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.NoCacheWarnings
 import org.apache.spark.sql.functions._
 
-class EditDistanceSpec extends SparkSpec {
+class EditDistanceSpec extends NoCacheWarnings {
 
   import spark.implicits._
 
@@ -75,12 +75,9 @@ class EditDistanceSpec extends SparkSpec {
       maxDist = 10, keyLen = 8).collect().map(_.toSeq.mkString("|")).toSet
     val single = canon
     spark.catalog.clearCache()
-    val prev = sys.props.get("graft.verify.chunks")
-    val chunked = try {
-      sys.props("graft.verify.chunks") = "3"
-      canon
-    } finally prev.fold(sys.props.remove("graft.verify.chunks"): Unit)(v =>
-      sys.props("graft.verify.chunks") = v)
+    val (chunked, taken) =
+      withConf(graft.GraftConf.VerifyChunks -> Some("3"))(decided("verify.editdistance")(canon))
+    assert(taken == Seq("chunked"))
     spark.catalog.clearCache()
     assert(chunked == single && single.nonEmpty)
   }

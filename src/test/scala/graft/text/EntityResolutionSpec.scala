@@ -1,10 +1,10 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.NoCacheWarnings
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Join, LogicalPlan}
 
-class EntityResolutionSpec extends SparkSpec {
+class EntityResolutionSpec extends NoCacheWarnings {
 
   import spark.implicits._
 
@@ -63,9 +63,9 @@ class EntityResolutionSpec extends SparkSpec {
     // resolveClusters' OUTPUT plan truncates at the label-propagation
     // checkpoint (connectedComponents cuts lineage to a LogicalRDD each
     // round), so the candidate join is guarded on the pair frame it feeds
-    // into the iteration, built by the same valuePairs call
-    guard(EntityResolution.valuePairs(records, "name", 1, 8)._2
-      .queryExecution.analyzed)
+    // into the iteration, built by the same valuePairsWith call
+    EntityResolution.valuePairsWith(records, "name", 1, 8)((_, pairs) =>
+      guard(pairs.queryExecution.analyzed))
   }
 
   test("resolveClusters: entity id is cluster-min record id, keeper is score argmax") {
