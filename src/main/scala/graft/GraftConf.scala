@@ -11,11 +11,9 @@ import org.apache.spark.sql.SparkSession
 final class GraftConf private (get: String => Option[String]) {
   import GraftConf._
 
-  /** `off` keeps every exact prefix join off tier 1, the cross index too. */
-  def ppjoinKernel: Boolean = !get(PpjoinKernel).contains("off")
-
   /** Row cap of the side a tier-1 prefix join builds into driver postings;
-    * `0` forces the distributed tiers.
+    * `0` forces the distributed tiers of every exact prefix join, the cross
+    * index too.
     */
   def ppjoinBroadcastRows: Long = long(PpjoinBroadcastRows, min = 0L).getOrElse(100000L)
 
@@ -51,7 +49,6 @@ final class GraftConf private (get: String => Option[String]) {
 }
 
 object GraftConf {
-  val PpjoinKernel = "spark.graft.ppjoin.kernel"
   val PpjoinBroadcastRows = "spark.graft.ppjoin.broadcastRows"
   val CrossindexBroadcastVocabRows = "spark.graft.crossindex.broadcastVocabRows"
   val VerifyChunks = "spark.graft.verify.chunks"
@@ -60,8 +57,8 @@ object GraftConf {
   val BruteBlocks = "spark.graft.brute.blocks"
 
   /** Every dial the engine reads. */
-  val keys: Seq[String] = Seq(PpjoinKernel, PpjoinBroadcastRows, CrossindexBroadcastVocabRows,
-    VerifyChunks, VerifyChunkRows, VerifyRowsPerPartition, BruteBlocks)
+  val keys: Seq[String] = Seq(PpjoinBroadcastRows, CrossindexBroadcastVocabRows, VerifyChunks,
+    VerifyChunkRows, VerifyRowsPerPartition, BruteBlocks)
 
   def apply(spark: SparkSession): GraftConf = new GraftConf(spark.conf.getOption)
 }

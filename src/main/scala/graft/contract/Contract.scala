@@ -17,9 +17,14 @@ import graft.rules.Messages
   * statement generator. No per-row interpreter, no serialization boundary —
   * the whole contract stays inside whole-stage codegen and scales linearly.
   *
+  * Each field value is parsed ONCE ([[parse]]): the typed value the cast
+  * projects is the value the messages judge, so a value that passes
+  * validation never casts to a silent NULL.
+  *
   * Error categories follow the reference (ref: core_engine/message.py:67-73):
-  * Blank (missing mandatory), Wrong format (unparseable/regex), Bad value
-  * (constraint violated).
+  * Blank (missing mandatory) and Bad value (a value that does not parse as
+  * its type, or violates a constraint); Wrong format is the warning lane's
+  * category only.
   */
 object Contract {
 
@@ -199,17 +204,17 @@ object Contract {
   }
 
   // ---------------------------------------------------------------- numeric / format regexes
-  private val intRegex = "^[+-]?[0-9]+$"
   private val floatRegex = "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
   // the pydantic v1 bool families (bool_validator): planets.csv.csv's
   // Yes/No booleans must parse with 0 rejections, as its feature asserts
   private val boolTrue = Seq("true", "t", "yes", "y", "on", "1")
   private val boolFalse = Seq("false", "f", "no", "n", "off", "0")
-  private val boolValues = boolTrue ++ boolFalse
   // ref: metadata_parser/domain_types.py:32
   private val postcodeRegex = "^[a-zA-Z]{1,2}[0-9]([a-zA-Z]?|[0-9]?) [0-9][a-zA-Z]{2}$"
   private val orgIdRegex = "^[A-Z0-9]{3,5}$" // ref: domain_types.py:239-255
   private val nullPostcodes = Seq("tba", "tbc", "na", "n/a", "no valid")
+  // the types whose typed value is a number: the only ones bounds apply to
+  private val numericTypes = Set("int", "long", "conint", "float", "double", "decimal", "condecimal")
 
   private def nhsCheckExpr(c: Column): Column = {
     val cleaned = regexp_replace(regexp_replace(c, " ", ""), "-", "")
@@ -239,78 +244,55 @@ object Contract {
 
   // ---------------------------------------------------------------- per-field functions
 
+  /** A field function's failure: condition, message, status, failure kind. */
+  private type FnFailure = (Column, String, String, String)
+
   /** Apply the field's validation/normalisation functions in order
     * (ref: metadata_parser/function_library.py:33-64), each null-passing
     * (ref: function_library.py:8-29 `_nullcheck`). These transform the RAW
-    * value before format checks and before the cast — pydantic validator
-    * semantics. A function whose `error_type` is `warning` never modifies
-    * the value on failure (the reference's wrapper logs and returns the
-    * original, ref: function_wrapper.py:48-181); rejecting error types null
-    * the value and route a message (see [[functionFailures]]).
+    * value before the parse — pydantic validator semantics. Returns the
+    * value and the failures, each evaluated against the value the
+    * PRECEDING functions left (validator chain order) and routed by its
+    * function's error type (ref: function_wrapper.py:48-181 +
+    * models.py:52-93): `record_rejection` -> record-level error,
+    * `file_rejection` -> submission-level error (fails the whole file),
+    * `warning` -> informational record message. A `warning` function never
+    * modifies the value on failure (the reference's wrapper logs and
+    * returns the original); rejecting error types null the value.
     */
-  private def applyFunctions(c0: Column, f: FieldSpec): Column =
-    f.functions.foldLeft(c0) { (v, fn) =>
+  private def applyFunctions(c0: Column, f: FieldSpec): (Column, Seq[FnFailure]) =
+    f.functions.foldLeft((c0, Seq.empty[FnFailure])) { case ((v, failures), fn) =>
       val blank = v.isNull || trim(v) === ""
-      val applied = fn.name match {
+      val warnOnly = fn.errorType == "warning"
+      val (applied, failure): (Column, Option[(Column, String)]) = fn.name match {
         case "normalise" =>
-          if (fn.kwargs.get("capitalize").exists(_.equalsIgnoreCase("true")))
+          (if (fn.kwargs.get("capitalize").exists(_.equalsIgnoreCase("true")))
             concat(upper(substring(v, 1, 1)), lower(substring(v, 2, Int.MaxValue)))
-          else v
+          else v, None)
         case "exclude_word" =>
           val word = fn.kwargs.getOrElse("word", "")
           val hit = instr(lower(v), word.toLowerCase) > 0
-          if (fn.errorType == "warning") v // warn-only: value passes through
-          else when(hit, lit(null).cast(StringType)).otherwise(v)
+          (if (warnOnly) v else when(hit, lit(null).cast(StringType)).otherwise(v),
+            Some(hit -> s"contains excluded word '$word'"))
         case "split" =>
           val sep = fn.kwargs.getOrElse("split_on", ",")
           val keep = fn.kwargs.get("keep").map(_.toInt).getOrElse(0)
-          // out-of-range keep -> null for rejecting error types (the message
-          // is routed by functionFailures); warn-only keeps the raw value
+          // an out-of-range keep nulls the value; warn-only keeps the raw one
           val part = get(split(v, java.util.regex.Pattern.quote(sep)), lit(keep))
-          if (fn.errorType == "warning") when(part.isNull, v).otherwise(part) else part
-        case "static_key" => lit("1")
+          (if (warnOnly) when(part.isNull, v).otherwise(part) else part,
+            Some(part.isNull -> s"cannot be split on '$sep' (part $keep missing)"))
+        case "static_key" => (lit("1"), None) // ignores the input value
         case other =>
           throw new IllegalArgumentException(s"unknown field function: '$other'")
       }
-      if (fn.name == "static_key") applied // static_key ignores the input value
-      else when(blank, v).otherwise(applied)
-    }
-
-  /** Failure conditions of the field's functions, each with its routed
-    * message/status/failure-kind (ref: function_wrapper.py:48-181 +
-    * models.py:52-93): `record_rejection` -> record-level error,
-    * `file_rejection` -> submission-level error (fails the whole file),
-    * `warning` -> informational record message. Conditions are evaluated
-    * against the value as transformed by the PRECEDING functions (validator
-    * chain order).
-    */
-  private def functionFailures(c0: Column, f: FieldSpec): Seq[(Column, String, String, String)] = {
-    val failures = Seq.newBuilder[(Column, String, String, String)]
-    f.functions.foldLeft(c0) { (v, fn) =>
-      val blank = v.isNull || trim(v) === ""
-      val cond = fn.name match {
-        case "exclude_word" =>
-          val word = fn.kwargs.getOrElse("word", "")
-          Some((instr(lower(v), word.toLowerCase) > 0, s"contains excluded word '$word'"))
-        case "split" =>
-          val sep = fn.kwargs.getOrElse("split_on", ",")
-          val keep = fn.kwargs.get("keep").map(_.toInt).getOrElse(0)
-          Some((get(split(v, java.util.regex.Pattern.quote(sep)), lit(keep)).isNull,
-            s"cannot be split on '$sep' (part $keep missing)"))
-        case _ => None // normalise / static_key cannot fail
+      val (status, kind) = fn.errorType match {
+        case "file_rejection" => ("error", "submission")
+        case "warning"        => ("informational", "record")
+        case _                => ("error", "record")
       }
-      cond.foreach { case (hit, msg) =>
-        val (status, failure) = fn.errorType match {
-          case "file_rejection" => ("error", "submission")
-          case "warning"        => ("informational", "record")
-          case _                => ("error", "record")
-        }
-        failures += ((!blank && hit, msg, status, failure))
-      }
-      applyFunctions(v, f.copy(functions = Seq(fn)))
+      (if (fn.name == "static_key") applied else when(blank, v).otherwise(applied),
+        failures ++ failure.map { case (hit, msg) => (!blank && hit, msg, status, kind) })
     }
-    failures.result()
-  }
 
   /** Default applied on blank (ref: models.py:280-282). */
   private def defaulted(c: Column, f: FieldSpec): Column = f.default match {
@@ -322,38 +304,54 @@ object Contract {
     * (ref: models.py:280-282), then the field functions.
     */
   private def effectiveValue(c: Column, f: FieldSpec): Column =
-    applyFunctions(defaulted(c, f), f)
+    applyFunctions(defaulted(c, f), f)._1
 
-  /** Does this stringified value parse as the declared scalar type? */
-  private def formatOk(c: Column, f: FieldSpec): Column = f.typeName match {
-    case "int" | "long" | "conint"         => trim(c).rlike(intRegex)
-    case "float" | "double" | "decimal" | "condecimal" => trim(c).rlike(floatRegex)
-    case "bool"                            => lower(trim(c)).isin(boolValues: _*)
-    case "date" | "conformatteddate" => f.format match {
-      case Some(fmt) => trim(c).rlike(FieldSpec.strptimeToRegex(fmt)) &&
-        try_to_timestamp(trim(c), lit(FieldSpec.strptimeToJava(fmt))).isNotNull
-      case None => trim(c).try_cast(DateType).isNotNull // try_cast: ANSI-mode safe
+  // ---------------------------------------------------------------- the one parse
+
+  /** The ONE parse of a field value: (typed value, valid). The typed value
+    * is what [[cast]] projects and what the bound checks compare; `valid`
+    * is the messages' parse check, so a value that passes validation never
+    * casts to a silent NULL. Valid means a non-null typed value, except
+    * where the type's text grammar is stricter than Spark's cast: floats
+    * keep their regex as the test (`try_cast` also takes `1D`, `inf` and
+    * `NaN`), a decimal is cast only when it passes the same regex (`try_cast`
+    * strips tabs and control characters too), and the string-typed domain
+    * types keep their format or checksum predicate over the trimmed string.
+    * try_cast everywhere (ref: spark_helpers.py:516-621 — TRIM,
+    * regex-guarded TRY_TO_TIMESTAMP): Spark 4's ANSI default makes a plain
+    * cast THROW on unparseable input.
+    */
+  private def parse(c: Column, f: FieldSpec): (Column, Column) = {
+    val t = trim(c)
+    def parsed(v: Column): (Column, Column) = (v, v.isNotNull)
+    def formatted(fmt: String): Column =
+      when(t.rlike(FieldSpec.strptimeToRegex(fmt)),
+        try_to_timestamp(t, lit(FieldSpec.strptimeToJava(fmt))))
+        .otherwise(lit(null).cast(TimestampType))
+    f.typeName match {
+      case "int" | "long" | "conint" => parsed(t.try_cast(LongType))
+      case "float" | "double"        => (t.try_cast(DoubleType), t.rlike(floatRegex))
+      case "decimal" | "condecimal"  => parsed(when(t.rlike(floatRegex),
+        t.try_cast(DecimalType(f.precision.getOrElse(38), f.scale.getOrElse(18)))))
+      case "bool" =>
+        parsed(when(lower(t).isin(boolTrue: _*), lit(true))
+          .when(lower(t).isin(boolFalse: _*), lit(false))
+          .otherwise(lit(null).cast(BooleanType)))
+      case "date" | "conformatteddate" =>
+        parsed(f.format.fold(t.try_cast(DateType))(formatted(_).cast(DateType)))
+      case "datetime"          => parsed(f.format.fold(t.try_cast(TimestampType))(formatted))
+      case "formatteddatetime" => parsed(f.format.fold(flexDatetime(c))(formatted))
+      case "reportingperiodstart" | "reportingperiodend" => parsed(reportingPeriodDate(c, f))
+      case "postcode" =>
+        val norm = postcodeNormExpr(t)
+        (norm, norm.isNull || norm.rlike(postcodeRegex))
+      case "nhsnumber" | "permissivenhsno" => (t, nhsCheckExpr(t))
+      case "time" | "formattedtime" => (t, t.rlike("^\\d{2}:\\d{2}(:\\d{2})?$"))
+      case "orgid"        => (t, t.rlike(orgIdRegex))
+      case "alphanumeric" => (t, t.rlike("^[a-zA-Z0-9]*$"))
+      case "identifier"   => (t, t.rlike("^[a-zA-Z0-9_-]*$"))
+      case _              => (t, lit(true)) // str: any text is well-formed
     }
-    case "datetime" => f.format match {
-      case Some(fmt) => trim(c).rlike(FieldSpec.strptimeToRegex(fmt)) &&
-        try_to_timestamp(trim(c), lit(FieldSpec.strptimeToJava(fmt))).isNotNull
-      case None => trim(c).try_cast(TimestampType).isNotNull
-    }
-    case "formatteddatetime" => f.format match {
-      case Some(fmt) => trim(c).rlike(FieldSpec.strptimeToRegex(fmt)) &&
-        try_to_timestamp(trim(c), lit(FieldSpec.strptimeToJava(fmt))).isNotNull
-      case None => flexDatetime(c).isNotNull
-    }
-    case "time" | "formattedtime" =>
-      trim(c).rlike("^\\d{2}:\\d{2}(:\\d{2})?$")
-    case "nhsnumber" | "permissivenhsno" => nhsCheckExpr(trim(c))
-    case "postcode"    => postcodeNormExpr(trim(c)).isNull || postcodeNormExpr(trim(c)).rlike(postcodeRegex)
-    case "orgid"       => trim(c).rlike(orgIdRegex)
-    case "alphanumeric" => trim(c).rlike("^[a-zA-Z0-9]*$")
-    case "identifier"  => trim(c).rlike("^[a-zA-Z0-9_-]*$")
-    case "reportingperiodstart" | "reportingperiodend" =>
-      reportingPeriodDate(c, f).isNotNull
-    case _             => lit(true) // str: any text is well-formed
   }
 
   // -------------------------------------------------- flexible datetimes
@@ -407,46 +405,50 @@ object Contract {
       .otherwise(lit(null).cast(DateType))
   }
 
-  /** Constraint checks -> Seq of (failCondition, category, message).
-    *
-    * Every check reports category "Bad value" with message "is invalid" —
-    * the reference DISCARDS the pydantic error's own text and renders the
-    * (field, category) error-detail template, whose "Bad value" default is
-    * literally "is invalid" (ref: message.py:68-69 DEFAULT_ERROR_DETAIL,
-    * :262-276 from_validation_error; tests/test_pipeline/
-    * test_spark_pipeline.py pins ErrorMessage "is invalid" for not_ge,
-    * max_length and bool failures alike). Richer per-check text would
-    * diverge from every golden scenario.
+  /** The constraints a parsed value violates, one condition each; `value`
+    * is its typed form, which the bounds compare.
     */
-  private def constraintChecks(c: Column, f: FieldSpec): Seq[(Column, String, String)] = {
+  private def violations(c: Column, value: Column, f: FieldSpec): Seq[Column] = {
     val t = trim(c)
-    val asNum = t.try_cast("decimal(38,10)")
-    val inv = "is invalid"
+    def bound(b: Option[BigDecimal])(out: (Column, Column) => Column): Option[Column] = b.map { v =>
+      require(numericTypes(f.typeName),
+        s"field '${f.name}': ge/le/gt/lt need a numeric type, not '${f.typeName}'")
+      out(value, lit(v.bigDecimal.toPlainString.toDouble))
+    }
     Seq(
-      f.minLength.map(n => (length(t) < n, "Bad value", inv)),
-      f.maxLength.map(n => (length(t) > n, "Bad value", inv)),
-      f.regex.map(r => (!t.rlike(r), "Bad value", inv)),
-      f.ge.map(v => (asNum < v.bigDecimal.toPlainString.toDouble, "Bad value", inv)),
-      f.le.map(v => (asNum > v.bigDecimal.toPlainString.toDouble, "Bad value", inv)),
-      f.gt.map(v => (asNum <= v.bigDecimal.toPlainString.toDouble, "Bad value", inv)),
-      f.lt.map(v => (asNum >= v.bigDecimal.toPlainString.toDouble, "Bad value", inv)),
+      f.minLength.map(n => length(t) < n),
+      f.maxLength.map(n => length(t) > n),
+      f.regex.map(r => !t.rlike(r)),
+      bound(f.ge)(_ < _), bound(f.le)(_ > _), bound(f.gt)(_ <= _), bound(f.lt)(_ >= _),
       // timezone policy for flexible datetimes (ref: domain_types.py:420-428)
       (if (f.typeName == "formatteddatetime" && f.format.isEmpty)
-        f.timezoneTreatment match {
-          case Some("forbid") => Some((flexHasTimezone(c), "Bad value", inv))
-          case Some("require") => Some((!flexHasTimezone(c), "Bad value", inv))
-          case _ => None
+        f.timezoneTreatment.collect {
+          case "forbid"  => flexHasTimezone(c)
+          case "require" => !flexHasTimezone(c)
         }
       else None),
       // reporting periods must sit on month boundaries (ref: domain_types.py:585-611)
-      (if (f.typeName == "reportingperiodstart")
-        Some((dayofmonth(reportingPeriodDate(c, f)) =!= 1, "Bad value", inv))
-      else None),
-      (if (f.typeName == "reportingperiodend")
-        Some((reportingPeriodDate(c, f) =!= last_day(reportingPeriodDate(c, f)),
-          "Bad value", inv))
-      else None)
+      (if (f.typeName == "reportingperiodstart") Some(dayofmonth(value) =!= 1) else None),
+      (if (f.typeName == "reportingperiodend") Some(value =!= last_day(value)) else None)
     ).flatten
+  }
+
+  private def noErrors: Column = array().cast(s"array<$errorStruct>")
+
+  /** The errors of a present value: `err` once if it does not parse, else
+    * once per violated constraint. Every one is "Bad value"/"is invalid":
+    * the reference DISCARDS the pydantic error's own text and renders the
+    * (field, category) error-detail template, whose "Bad value" default is
+    * literally "is invalid" (ref: message.py:68-69 DEFAULT_ERROR_DETAIL,
+    * :253-276 from_validation_error; tests/test_pipeline/
+    * test_spark_pipeline.py pins ErrorMessage "is invalid" for not_ge,
+    * max_length and bool failures alike). "Wrong format" is NEVER an error
+    * category in the contract lane, only the warning default.
+    */
+  private def badValues(c: Column, f: FieldSpec, present: Column, err: Column): Seq[Column] = {
+    val (value, valid) = parse(c, f)
+    (!valid +: violations(c, value, f).map(valid && _))
+      .map(bad => when(present && bad, array(err)).otherwise(noErrors))
   }
 
   /** One error struct in the internal `__errors__` element schema; `loc`
@@ -460,9 +462,19 @@ object Contract {
       lit(status).as("status"), lit(failure).as("failure"),
       (if (loc == null) lit(label) else loc).as("loc"))
 
-  /** All error structs for one field as an array<struct> Column. */
-  private def fieldErrors(f: FieldSpec): Column =
-    fieldErrorsAt(col(s"`${f.name}`"), f, f.name)
+  /** The errors of one array element located at `at` (ref: models.py:198-209
+    * — pydantic validates `each_item` values and list[Model] items
+    * element-wise): a scalar element is skipped when blank and reported
+    * raw; a model element validates each leaf at `<label>.<leaf>`.
+    */
+  private def elementErrors(x: Column, f: FieldSpec, label: String, at: Column): Column =
+    if (f.fields.isEmpty) {
+      val e = effectiveValue(x, f)
+      badValues(e, f, !(e.isNull || trim(e) === ""),
+        errStruct(label, x, "Bad value", lit("is invalid"), loc = at)).reduce(concat(_, _))
+    } else
+      f.fields.map(sub => fieldErrorsAt(x.getField(sub.name), sub, s"$label.${sub.name}",
+        concat(at, lit("." + sub.name)))).reduce(concat(_, _))
 
   /** Errors for a field value at a (possibly nested) location: `label` is the
     * dotted path reported as the error's field (matching the reference's
@@ -473,126 +485,69 @@ object Contract {
     */
   private def fieldErrorsAt(raw: Column, f: FieldSpec, label: String,
                             locAt: Column = null): Column = {
-    val empty = array().cast(s"array<$errorStruct>")
     val locCol = if (locAt == null) lit(label) else locAt
 
-    def mkErr(value: Column, category: String, message: Column,
-              status: String, failure: String, loc: Column = locCol): Column =
-      struct(lit(label).as("field"), lit(category).as("category"),
-        message.as("message"), value.cast(StringType).as("value"),
-        lit(status).as("status"), lit(failure).as("failure"), loc.as("loc"))
-
     def err(value: Column, category: String, message: String,
-            loc: Column = locCol): Column =
-      mkErr(value, category, lit(message), "error", "record", loc)
+            status: String = "error", failure: String = "record"): Column =
+      errStruct(label, value, category, lit(message), status, failure, locCol)
 
-    // warnings carry category "Wrong format" + their own text — the
-    // reference's warning lane (validation.py:106-150 handle_warnings:
-    // category="Wrong format", code from the detail's "Wrong format" key,
-    // message = str(warning)); errors below never use this category
-    def warnErr(value: Column, message: Column): Column =
-      mkErr(value, "Wrong format", message, "informational", "record")
+    // the mandatory Blank lane of an absent array or model
+    def presence(isMissing: Column): Column =
+      if (f.mandatory) when(isMissing, array(err(raw, "Blank", "cannot be blank"))).otherwise(noErrors)
+      else noErrors
 
-    // indexed element location: <loc>.<i> (0-based, like pydantic)
-    def elemLoc(i: Column): Column = concat(locCol, lit("."), i.cast(StringType))
-
-    if (f.isArray && f.fields.isEmpty) {
-      // Per-item validation of scalar arrays (ref: models.py:198-209
-      // `each_item` validators): one error struct per failing element,
-      // located at its element index. transform with the index lambda +
-      // null-filter keeps positions (a pre-filter would renumber them).
+    if (f.isArray) {
+      // In-row arrays ([[validate]] explodes top-level arrays instead, so
+      // there these are arrays inside models): every element checked by
+      // [[elementErrors]] at its indexed location <loc>.<i> (0-based, like
+      // pydantic); transform with the index lambda keeps positions (a
+      // pre-filter would renumber them).
       val isMissing = raw.isNull || size(raw) === 0
-      val nullErr = lit(null).cast(errorStruct)
-      val blank =
-        if (f.mandatory) when(isMissing, array(err(raw, "Blank", "cannot be blank"))).otherwise(empty)
-        else empty
-      val elemBlank = (x: Column) => {
-        val e = effectiveValue(x, f); e.isNull || trim(e) === ""
-      }
-      val fmtFails = when(isMissing, empty).otherwise(
-        filter(transform(raw, (x, i) =>
-          when(!elemBlank(x) && !formatOk(effectiveValue(x, f), f),
-            err(x, "Bad value", "is invalid", elemLoc(i))).otherwise(nullErr)),
-          e => e.isNotNull))
-      val constraintFails = constraintChecks(element_at(raw, 1), f).indices.map { ci =>
-        // rebuild each check against the element lambda variable
-        when(isMissing, empty).otherwise(
-          filter(transform(raw, (x, i) => {
-            val (cond, cat, msg) = constraintChecks(effectiveValue(x, f), f)(ci)
-            when(!elemBlank(x) && formatOk(effectiveValue(x, f), f) && cond,
-              err(x, cat, msg, elemLoc(i))).otherwise(nullErr)
-          }), e => e.isNotNull))
-      }
-      (Seq(blank, fmtFails) ++ constraintFails).reduce(concat(_, _))
-    } else if (f.fields.nonEmpty && f.isArray) {
-      // Arrays of nested models: every element is validated against the
-      // nested spec, each leaf with its own blank/format/constraint checks
-      // (ref: models.py:198-209 — pydantic validates list[Model] items
-      // element-wise), errors reported at the dotted path with the element
-      // index (<label>.<i>.<leaf>).
-      val isMissing = raw.isNull || size(raw) === 0
-      val presence =
-        if (f.mandatory) when(isMissing, array(err(raw, "Blank", "cannot be blank"))).otherwise(empty)
-        else empty
-      val elemErrs = f.fields.map { sub =>
-        when(isMissing, empty).otherwise(
-          flatten(transform(raw, (x, i) =>
-            fieldErrorsAt(x.getField(sub.name), sub, s"$label.${sub.name}",
-              concat(elemLoc(i), lit("." + sub.name))))))
-      }
-      (presence +: elemErrs).reduce(concat(_, _))
+      concat(presence(isMissing), when(isMissing, noErrors).otherwise(
+        flatten(transform(raw, (x, i) =>
+          elementErrors(x, f, label, concat(locCol, lit("."), i.cast(StringType)))))))
     } else if (f.fields.nonEmpty) {
       // Nested model (struct): presence here, then each subfield validated
       // in place with its own spec at the dotted path.
       val isMissing = raw.isNull
-      val presence =
-        if (f.mandatory) when(isMissing, array(err(raw, "Blank", "cannot be blank"))).otherwise(empty)
-        else empty
-      val subErrs = f.fields.map(sub =>
-        when(isMissing, empty).otherwise(
+      (presence(isMissing) +: f.fields.map(sub =>
+        when(isMissing, noErrors).otherwise(
           fieldErrorsAt(raw.getField(sub.name), sub, s"$label.${sub.name}",
-            concat(locCol, lit("." + sub.name)))))
-      (presence +: subErrs).reduce(concat(_, _))
+            concat(locCol, lit("." + sub.name)))))).reduce(concat(_, _))
     } else {
       // Field-function failures, routed by each function's error_type
       // (ref: function_wrapper.py:48-181). A rejecting failure supersedes
       // the downstream Blank error its nulled value would otherwise raise —
       // the reference's validator raises exactly one error per field.
+      // Rejecting failures surface as pydantic errors ("Bad value"/"is
+      // invalid", the wrapper's text discarded like any other ValueError);
+      // warn-only functions ride the warning lane with their own text
+      // (ref: validation.py:106-150).
       val base = defaulted(raw, f)
-      val fnFails = functionFailures(base, f)
+      val (c, fnFails) = applyFunctions(base, f)
       val rejected = fnFails.collect { case (cond, _, "error", _) => cond }
         .reduceOption(_ || _).getOrElse(lit(false))
-      // rejecting function failures surface as pydantic errors ("Bad
-      // value"/"is invalid", the wrapper's text discarded like any other
-      // ValueError); warn-only functions ride the warning lane with their
-      // own text (ref: function_wrapper.py:48-181 + validation.py:106-150)
       val fnErrs = fnFails.map { case (cond, msg, status, failure) =>
         val e =
-          if (status == "informational") mkErr(base, "Wrong format", lit(msg), status, failure)
-          else mkErr(base, "Bad value", lit("is invalid"), status, failure)
-        when(cond, array(e)).otherwise(empty)
+          if (status == "informational") err(base, "Wrong format", msg, status, failure)
+          else err(base, "Bad value", "is invalid", status, failure)
+        when(cond, array(e)).otherwise(noErrors)
       }
-      val c = effectiveValue(raw, f)
       val isMissing = c.isNull || trim(c.cast(StringType)) === ""
       val blank =
         when(isMissing && lit(f.mandatory) && !rejected,
           array(err(c, "Blank", "cannot be blank")))
-          .otherwise(empty)
-      // parse failure = pydantic type/value error -> "Bad value"/"is
-      // invalid" (ref: message.py:253-256 — "Wrong format" is NEVER an
-      // error category in the contract lane, only the warning default)
-      val fmtFail = when(!isMissing && !formatOk(c, f),
-        array(err(c, "Bad value", "is invalid"))).otherwise(empty)
-      val constraints = constraintChecks(c, f).map { case (cond, cat, msg) =>
-        when(!isMissing && formatOk(c, f) && cond, array(err(c, cat, msg)))
-          .otherwise(empty)
-      }
+          .otherwise(noErrors)
+      val bad = badValues(c, f, !isMissing, err(c, "Bad value", "is invalid"))
       // NHS sentinel/test-number warnings: informational, never rejecting —
       // values that PASS the checksum but indicate test data
       // (ref: domain_types.py:44-163 SENTINEL_VALUES / starts-with-9 /
       // palindrome warnings). permissivenhsno keeps the checksum but NOT
       // the warnings unless warn_on_test_numbers opted in (ref:
-      // domain_types.py:166-174).
+      // domain_types.py:166-174). Warnings carry category "Wrong format" +
+      // their own text — the reference's warning lane (validation.py:106-150
+      // handle_warnings: category="Wrong format", code from the detail's
+      // "Wrong format" key, message = str(warning)).
       val warnings =
         if (f.typeName == "nhsnumber" ||
             (f.typeName == "permissivenhsno" && f.warnOnTestNumbers.contains(true))) {
@@ -604,24 +559,23 @@ object Contract {
               .when(cleaned === "0123456789", lit("common example value given for patient-facing forms"))
               .when(cleaned.startsWith("9"), lit("NHS number starts with '9': this indicates a test number"))
               .when(cleaned === reverse(cleaned), lit("NHS number is a palindrome: this indicates a test number"))
-          Seq(when(!isMissing && formatOk(c, f) && reason.isNotNull,
-            array(warnErr(c, concat(lit("NHS number possibly invalid ("), reason, lit(")")))))
-            .otherwise(empty))
+          Seq(when(!isMissing && parse(c, f)._2 && reason.isNotNull,
+            array(errStruct(label, c, "Wrong format",
+              concat(lit("NHS number possibly invalid ("), reason, lit(")")),
+              "informational", "record", locCol)))
+            .otherwise(noErrors))
         } else Nil
-      (Seq(blank, fmtFail) ++ fnErrs ++ constraints ++ warnings).reduce(concat(_, _))
+      (Seq(blank, bad.head) ++ fnErrs ++ bad.tail ++ warnings).reduce(concat(_, _))
     }
   }
 
   /** One projection computing every field's errors; rows with no errors keep
     * an empty array.
     */
-  def withErrors(df: DataFrame, spec: EntitySpec, errorsCol: String = "__errors__"): DataFrame = {
-    val allErrors = spec.fields.map(fieldErrors) match {
-      case Nil => array().cast(s"array<$errorStruct>")
-      case xs  => xs.reduce(concat(_, _))
-    }
-    df.withColumn(errorsCol, allErrors)
-  }
+  def withErrors(df: DataFrame, spec: EntitySpec, errorsCol: String = "__errors__"): DataFrame =
+    df.withColumn(errorsCol,
+      spec.fields.map(f => fieldErrorsAt(col(s"`${f.name}`"), f, f.name))
+        .reduceOption(concat(_, _)).getOrElse(noErrors))
 
   /** Validation messages as a DataFrame in the canonical message schema.
     * Key fields default to the spec's `key_field` (ref: error_utils.py:30-65).
@@ -709,47 +663,21 @@ object Contract {
   /** Error-row frames for one top-level array field: a presence frame (the
     * mandatory Blank lane, evaluated on the un-exploded row) and an element
     * frame (`explode` the array, then run the SAME per-element checks as the
-    * HOF formulation in [[fieldErrorsAt]] — blank elements skipped, format
-    * gate before constraints, raw element as the reported value — as a
-    * plain projection that stays inside whole-stage codegen).
+    * HOF formulation in [[fieldErrorsAt]], [[elementErrors]], as a plain
+    * projection that stays inside whole-stage codegen).
     */
   private def arrayFieldErrorFrames(df: DataFrame, f: FieldSpec,
                                     baseCols: Seq[Column], baseNames: Seq[String]): Seq[DataFrame] = {
     val raw = col(s"`${f.name}`")
-    val empty = array().cast(s"array<$errorStruct>")
     val presence =
       if (f.mandatory)
         Seq(df.where(raw.isNull || size(raw) === 0).select(
           errStruct(f.name, raw, "Blank", lit("cannot be blank")).as("e") +: baseCols: _*))
       else Nil
-
-    val x = col("`__elem__`")
     // posexplode keeps the 0-based element index so locations stay indexed
     // (<field>.<i>[.<leaf>]) like the reference's pydantic loc tuples
-    val pos = col("`__pos__`")
-    val elemLoc = concat(lit(f.name + "."), pos.cast(org.apache.spark.sql.types.StringType))
-    val elemErrArray =
-      if (f.fields.isEmpty) {
-        // scalar each_item: mirror the HOF branch element-for-element
-        val e = effectiveValue(x, f)
-        val elemBlank = e.isNull || trim(e) === ""
-        val okFmt = formatOk(e, f)
-        val fmt = when(!elemBlank && !okFmt,
-          array(errStruct(f.name, x, "Bad value", lit("is invalid"),
-            loc = elemLoc))).otherwise(empty)
-        val constraints = constraintChecks(e, f).map { case (cond, cat, msg) =>
-          when(!elemBlank && okFmt && cond,
-            array(errStruct(f.name, x, cat, lit(msg), loc = elemLoc))).otherwise(empty)
-        }
-        (fmt +: constraints).reduce(concat(_, _))
-      } else {
-        // array of nested models: each leaf validated at its dotted path —
-        // on the exploded element these are ordinary (non-HOF) expressions
-        f.fields.map(sub =>
-          fieldErrorsAt(x.getField(sub.name), sub, s"${f.name}.${sub.name}",
-            concat(elemLoc, lit("." + sub.name))))
-          .reduce(concat(_, _))
-      }
+    val elemErrArray = elementErrors(col("`__elem__`"), f, f.name,
+      concat(lit(f.name + "."), col("`__pos__`").cast(StringType)))
     // Explicit cheap pre-prune: posexplode emits nothing for null/empty
     // arrays, so this drops exactly the rows it would drop — but as an
     // attribute-level predicate it costs nothing and pushes isnotnull into
@@ -802,54 +730,17 @@ object Contract {
   }
 
   // ---------------------------------------------------------------- cast
-  private def targetType(f: FieldSpec): DataType = f.typeName match {
-    case "int" | "long" | "conint"   => LongType
-    case "float" | "double"          => DoubleType
-    case "bool"                      => BooleanType
-    case "date" | "conformatteddate" => DateType
-    case "reportingperiodstart" | "reportingperiodend" => DateType
-    case "datetime" | "formatteddatetime" => TimestampType
-    case "decimal" | "condecimal"    =>
-      DecimalType(f.precision.getOrElse(38), f.scale.getOrElse(18))
-    case _                           => StringType // str + domain/string types + time
-  }
 
   /** Cast statement for one (possibly nested) field over a stringified column
-    * (ref: spark_helpers.py:516-621): TRIM for scalars, regex-guarded
-    * TRY_TO_TIMESTAMP for formatted dates, TRANSFORM for arrays, STRUCT
-    * recursion for models. Failed casts become null; MESSAGES decide
-    * rejection, not the cast.
+    * (ref: spark_helpers.py:516-621): [[parse]]'s typed value for scalars,
+    * TRANSFORM for arrays, STRUCT recursion for models. Failed parses become
+    * null; MESSAGES decide rejection, not the cast.
     */
   private def castExpr(c0: Column, f: FieldSpec): Column =
     if (f.isArray) transform(c0, x => castExpr(x, f.copy(isArray = false)))
     else if (f.fields.nonEmpty)
       struct(f.fields.map(sf => castExpr(c0.getField(sf.name), sf).as(sf.name)): _*)
-    else scalarCast(effectiveValue(c0, f), f)
-
-  private def scalarCast(x: Column, f: FieldSpec): Column = f.typeName match {
-    case "reportingperiodstart" | "reportingperiodend" =>
-      reportingPeriodDate(x, f)
-    case "formatteddatetime" if f.format.isEmpty =>
-      flexDatetime(x)
-    case "date" | "conformatteddate" | "datetime" | "formatteddatetime" =>
-      val parsed = f.format match {
-        case Some(fmt) =>
-          when(trim(x).rlike(FieldSpec.strptimeToRegex(fmt)),
-            try_to_timestamp(trim(x), lit(FieldSpec.strptimeToJava(fmt))))
-            .otherwise(lit(null).cast(TimestampType))
-        case None => trim(x).try_cast(TimestampType)
-      }
-      parsed.cast(targetType(f))
-    case "postcode" => postcodeNormExpr(trim(x))
-    case "bool" =>
-      when(lower(trim(x)).isin(boolTrue: _*), lit(true))
-        .when(lower(trim(x)).isin(boolFalse: _*), lit(false))
-        .otherwise(lit(null).cast(BooleanType))
-    // try_cast everywhere a source value can be malformed: failed casts
-    // must become null (messages decide rejection), and Spark 4's ANSI
-    // default makes plain cast THROW on unparseable input.
-    case _ => trim(x).try_cast(targetType(f))
-  }
+    else parse(effectiveValue(c0, f), f)._1
 
   /** Project the stringified frame to typed columns (one projection). */
   def cast(df: DataFrame, spec: EntitySpec): DataFrame = {

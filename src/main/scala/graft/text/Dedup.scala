@@ -462,19 +462,31 @@ object Dedup {
     * aggregation that also measures rows and Σ |sh| — before the consumers
     * race to populate the same cache blocks (concurrent first-reads of an
     * unmaterialized persist stall each other — measured 50x on the
-    * contract plane). Persists only a plan not cached yet, so calls on one
-    * `docs` frame share a cache and no `With` form releases another's.
+    * contract plane). Persists only a plan not cached yet ([[persistOnce]]),
+    * so calls on one `docs` frame share a cache and no `With` form releases
+    * another's.
     */
   private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
                            shingleSize: Int): Shingled = {
     val df = widen(docs).select(col(idCol), shingles(col(textCol), shingleSize).as("sh"))
-    val owned =
-      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) Nil
-      else Seq(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val owned = persistOnce(df)
     val st = df.agg(count(lit(1)),
       coalesce(sum(when(col("sh").isNotNull, size(col("sh")))), lit(0L))).head()
     Shingled(df, owned, st.getLong(0), st.getLong(1))
   }
+
+  /** `df` persisted, as the list of the caches this call owns: empty when
+    * the plan is cached already (by an earlier call, or by a concurrent one
+    * in another session of the context), whose cache stays its creator's.
+    * The check and the persist hold one lock, so exactly one caller owns a
+    * cache.
+    */
+  private[text] def persistOnce(df: DataFrame): Seq[DataFrame] = PersistLock.synchronized {
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) Nil
+    else Seq(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  }
+
+  private object PersistLock
 
   /** `body`, unpersisting `owned` if it throws (a duplicate id fails the
     * build or the first action over the candidates).
@@ -498,15 +510,15 @@ object Dedup {
 
   /** The one tier-1 gate, for the side built into driver postings (the
     * corpus of a self or containment join, the reference of the cross
-    * index): tier 1 unless [[GraftConf.ppjoinKernel]] is off, the side
-    * has more than [[GraftConf.ppjoinBroadcastRows]] rows (default 100k),
-    * or its estimated map bytes (`tokens` × [[DriverBytesPerToken]])
-    * exceed [[DriverHeapShare]] of `maxHeap` — ≤100k long documents must
-    * not OOM the driver.
+    * index): tier 1 unless the side has more than
+    * [[GraftConf.ppjoinBroadcastRows]] rows (default 100k; `0` keeps every
+    * non-empty side off tier 1) or its estimated map bytes (`tokens` ×
+    * [[DriverBytesPerToken]]) exceed [[DriverHeapShare]] of `maxHeap` —
+    * ≤100k long documents must not OOM the driver.
     */
   private[text] def driverTier(rows: Long, tokens: Long, conf: GraftConf,
                                maxHeap: Long = Runtime.getRuntime.maxMemory): Boolean =
-    conf.ppjoinKernel && rows <= conf.ppjoinBroadcastRows &&
+    rows <= conf.ppjoinBroadcastRows &&
       tokens.toDouble * DriverBytesPerToken <= maxHeap * DriverHeapShare
 
   /** [[driverTier]] for `sh` (only if `eligible`), posted as decision `op`:
@@ -520,8 +532,7 @@ object Dedup {
     val tier1 = eligible && driverTier(sh.rows, sh.tokens, conf, maxHeap)
     GraftDecision.post(spark, op, if (tier1) "tier1" else "distributed",
       "rows" -> sh.rows, "tokens" -> sh.tokens, "bytes" -> sh.tokens * DriverBytesPerToken,
-      "kernel" -> (if (conf.ppjoinKernel) 1L else 0L), "rowCap" -> conf.ppjoinBroadcastRows,
-      "byteCap" -> (maxHeap * DriverHeapShare).toLong)
+      "rowCap" -> conf.ppjoinBroadcastRows, "byteCap" -> (maxHeap * DriverHeapShare).toLong)
     tier1
   }
 

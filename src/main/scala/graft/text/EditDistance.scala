@@ -84,9 +84,7 @@ object EditDistance {
     // Dedup.verifyPairsOwned). Persists only a plan not cached yet: a
     // second call on the same docs shares the first call's cache, which
     // stays its creator's to release.
-    val owned =
-      if (cand.storageLevel != org.apache.spark.storage.StorageLevel.NONE) Nil
-      else Seq(cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val owned = Dedup.persistOnce(cand)
     val cnt = Dedup.releaseOnFailure(owned)(cand.count())
     val k = Dedup.verifyChunks(docs.sparkSession, "verify.editdistance", "candidates" -> cnt)
     val n = Dedup.verifyPartitions(docs.sparkSession, (cnt + k - 1) / k)

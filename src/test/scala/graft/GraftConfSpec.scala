@@ -2,17 +2,17 @@ package graft
 
 import graft.text.{Dedup, DedupSpec}
 
-class GraftConfSpec extends SparkSpec {
+class GraftConfSpec extends NoCacheWarnings {
 
-  test("GraftConf reads exactly the seven dials, from the session that plans") {
-    assert(GraftConf.keys.size == 7 && GraftConf.keys.forall(_.startsWith("spark.graft.")))
+  test("GraftConf reads exactly the six dials, from the session that plans") {
+    assert(GraftConf.keys.size == 6 && GraftConf.keys.forall(_.startsWith("spark.graft.")))
     val other = spark.newSession()
     other.conf.set(GraftConf.PpjoinBroadcastRows, "7")
     assert(GraftConf(other).ppjoinBroadcastRows == 7L)
     assert(GraftConf(spark).ppjoinBroadcastRows == 100000L)
-    withConf(GraftConf.PpjoinKernel -> Some("off")) {
-      assert(!GraftConf(spark).ppjoinKernel)
-      assert(GraftConf(other).ppjoinKernel)
+    withConf(GraftConf.PpjoinBroadcastRows -> Some("0")) {
+      assert(GraftConf(spark).ppjoinBroadcastRows == 0L)
+      assert(GraftConf(other).ppjoinBroadcastRows == 7L)
     }
   }
 

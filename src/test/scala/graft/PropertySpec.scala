@@ -35,6 +35,34 @@ class PropertySpec extends SparkSpec {
         .as[(Long, Double, Boolean)].collect().toSet
       assert(back == rows.toSet)
     }
+    // hostile strings in every typed column: a non-blank value gets a parse
+    // error iff its typed value is NULL — for floats, iff it fails the
+    // float regex (their cast also takes 1D, inf and NaN)
+    val digitRun = Gen.chooseNum(17, 40).flatMap(Gen.listOfN(_, Gen.numChar)).map(_.mkString)
+    val hostile = Gen.oneOf(
+      digitRun, digitRun.map("-" + _), Gen.chooseNum(290, 420).map(e => s"1e$e"),
+      Gen.oneOf("2024-01-01T", "2024-01-01 junk", "2024-01-01 23:30:00-05:00", "2024-02-30"),
+      Gen.oneOf("10:00:00", "23:59", "T10:00"), Gen.oneOf("NaN", "inf", "-Infinity", "1D"),
+      Gen.oneOf("", " ", "  "), Gen.oneOf("yes", "maybe", "\t7", "1.5", "+7", "1e3"))
+    val types = Seq("l" -> "long", "d" -> "double", "b" -> "bool", "t" -> "date", "m" -> "decimal")
+    val floatRe = "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
+    samples(Gen.nonEmptyListOf(Gen.listOfN(types.size, hostile)), 5).foreach { rows =>
+      val df = graft.readers.Readers.addRecordIndex(
+        rows.map { case Seq(l, d, b, t, m) => (l, d, b, t, m) }.toDF(types.map(_._1): _*))
+      val spec = EntitySpec("t", types.map { case (n, t) => FieldSpec(n, t) })
+      val failed = Contract.validate(df, spec).select("RecordIndex", "ErrorLocation")
+        .as[(Long, String)].collect().toSet
+      val raw = df.collect().map(r => r.getAs[Long](Contract.RecordIndexColumn) -> r).toMap
+      for (typed <- Contract.cast(df, spec).collect(); ((n, t), i) <- types.zipWithIndex) {
+        val ri = typed.getAs[Long](Contract.RecordIndexColumn)
+        val v = raw(ri).getString(i)
+        if (v.exists(_ != ' ')) { // Spark's trim strips spaces only
+          val unparsed =
+            if (t == "double") !v.replaceAll("^ +| +$", "").matches(floatRe) else typed.isNullAt(i)
+          assert(failed((ri, n)) == unparsed, s"$t '$v' -> ${typed.get(i)}")
+        }
+      }
+    }
   }
 
   test("minhash signatures are in [0, 2^31-1), fixed-length, deterministic") {

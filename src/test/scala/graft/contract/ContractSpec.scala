@@ -43,6 +43,53 @@ class ContractSpec extends SparkSpec {
       ("d", "Bad value", "is invalid")))
   }
 
+  test("one parse: the cast agrees with the messages where format, cast and bound parses split") {
+    // (field, value, its "Bad value" messages, its cast)
+    val cases = Seq[(FieldSpec, String, Int, Option[String])](
+      (FieldSpec("v", "long"), "99999999999999999999", 1, None),
+      (FieldSpec("v", "decimal"), "123456789012345678901", 1, None),
+      (FieldSpec("v", "float", le = Some(BigDecimal(100))), "1e30", 1, Some("1.0E30")),
+      (FieldSpec("v", "date"), "2024-01-01T", 0, Some("2024-01-01")),
+      (FieldSpec("v", "date"), "10:00:00", 1, None),
+      (FieldSpec("v", "date"), "2024-01-01 23:30:00-05:00", 0, Some("2024-01-01")))
+    for ((f, v, bad, typed) <- cases) {
+      val (df, spec) = (Seq(v).toDF("v"), EntitySpec("e", Seq(f)))
+      val msgs = Contract.validate(df, spec).select("Category", "ErrorMessage")
+        .as[(String, String)].collect().toSeq
+      assert(msgs == Seq.fill(bad)(("Bad value", "is invalid")), s"${f.typeName} '$v'")
+      assert(Option(Contract.cast(df, spec).head().get(0)).map(_.toString) == typed,
+        s"${f.typeName} '$v'")
+    }
+  }
+
+  test("arrays inside models validate per element at indexed locations") {
+    // an array in a struct field and an array in each element of an array
+    // of models: both validated inside the row (not the exploded lane of
+    // top-level arrays)
+    val df = spark.read.json(Seq(
+      """{"id": "1", "inner": {"vals": ["1", "x", " ", "99"]},
+        | "subs": [{"tags": ["7", "y"]}, {"tags": []}, {"tags": ["8", "200"]}]}""".stripMargin
+        .replace("\n", ""),
+      """{"id": "2", "inner": {}, "subs": [{"tags": null}]}""").toDS())
+    val spec = EntitySpec("e", Seq(
+      FieldSpec("id", "long"),
+      FieldSpec("inner", fields = Seq(FieldSpec("vals", "long", isArray = true,
+        mandatory = true, le = Some(BigDecimal(50))))),
+      FieldSpec("subs", isArray = true, fields = Seq(FieldSpec("tags", "long", isArray = true,
+        mandatory = true, le = Some(BigDecimal(100)))))))
+    val got = Contract.validate(df, spec, Seq("id"))
+      .select("Key", "ErrorLocation", "ReportingField", "Category", "ErrorMessage", "Value")
+      .as[(String, String, String, String, String, String)].collect().toSet
+    assert(got == Set(
+      ("1", "inner.vals.1", "1", "Bad value", "is invalid", "x"),
+      ("1", "inner.vals.3", "3", "Bad value", "is invalid", "99"),  // 99 > 50
+      ("1", "subs.0.tags.1", "1", "Bad value", "is invalid", "y"),
+      ("1", "subs.1.tags", "tags", "Blank", "cannot be blank", "[]"),
+      ("1", "subs.2.tags.1", "1", "Bad value", "is invalid", "200"), // 200 > 100
+      ("2", "inner.vals", "vals", "Blank", "cannot be blank", null),
+      ("2", "subs.0.tags", "tags", "Blank", "cannot be blank", null)))
+  }
+
   test("formatted date cast parses the declared format and nulls invalid values") {
     val df = Seq(("31/01/2020"), ("31/02/2020"), ("2020-01-31")).toDF("d")
     val spec = EntitySpec("e", Seq(FieldSpec("d", "date", format = Some("%d/%m/%Y"))))
@@ -308,6 +355,9 @@ class ContractSpec extends SparkSpec {
     val got = msgs.select("ErrorLocation", "Value").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == Set(("s", "abcde"), ("v", "50")))
+    // bounds compare the typed value, so a type without a number has none
+    intercept[IllegalArgumentException](Contract.validate(df,
+      EntitySpec("e", Seq(FieldSpec("s", "str", ge = Some(BigDecimal(0)))))))
   }
 
   test("suggestRules mines types, nullability, and enum candidates") {

@@ -155,7 +155,7 @@ class DedupSpec extends SparkSpec {
   test("prefixFilterJoin tier-1 self kernel is bit-equal to the expression pipeline") {
     spark.catalog.clearCache()
     // the default gate puts any test-sized corpus on the broadcast kernel;
-    // force the expression pipeline and pin both outputs equal — including
+    // force the distributed tiers and pin both outputs equal — including
     // the jaccard doubles (Set equality on Double is bitwise for non-NaN)
     def runSelf(): Set[(Long, Long, Double)] =
       Dedup.prefixFilterJoinWith(corpus, "doc_id", "text", 3, 0.5)(
@@ -170,7 +170,7 @@ class DedupSpec extends SparkSpec {
         _.select("a", "b", "containment").as[(Long, Long, Double)].collect().toSet)
     val (kSelf, kCross, kContain) = (runSelf(), runCross(), runContain())
     assert(kSelf.nonEmpty && kCross.nonEmpty && kContain.nonEmpty)
-    withConf(kernelOff) {
+    withConf(pastGate) {
       val (_, taken) = tiers {
         assert(runSelf() == kSelf)
         assert(runCross() == kCross)
@@ -197,7 +197,7 @@ class DedupSpec extends SparkSpec {
     withConf(GraftConf.PpjoinBroadcastRows -> Some("1000000")) { // force tier 1
       val (kernel, taken) = tiers(run())
       assert(taken == Seq("ppjoin.self" -> "tier1"))
-      withConf(kernelOff)(assert(tiers(run()) == (kernel, Seq("ppjoin.self" -> "distributed"))))
+      withConf(pastGate)(assert(tiers(run()) == (kernel, Seq("ppjoin.self" -> "distributed"))))
       assert(kernel.map(t => (t._1, t._2)) == Set((1L, 4L)))
     }
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
@@ -219,7 +219,7 @@ class DedupSpec extends SparkSpec {
     withConf(GraftConf.PpjoinBroadcastRows -> Some("1000000")) { // force tier 1
       val (kernel, taken) = tiers(run())
       assert(taken == Seq("ppjoin.containment" -> "tier1", "ppjoin.crossindex" -> "tier1"))
-      withConf(kernelOff)(assert(tiers(run()) == (kernel, Seq("ppjoin.containment" -> "distributed",
+      withConf(pastGate)(assert(tiers(run()) == (kernel, Seq("ppjoin.containment" -> "distributed",
         "ppjoin.crossindex" -> "distributed", "crossindex.vocab" -> "tier2"))))
       assert(kernel._1 == Set((1L, 4L, 1.0), (4L, 1L, 1.0)))
       assert(kernel._2 == Set((1L, 4L, 1.0)))
@@ -279,7 +279,6 @@ class DedupSpec extends SparkSpec {
   }
 
   // the dials that force the prefix joins' tiers
-  private val kernelOff = GraftConf.PpjoinKernel -> Some("off")
   private val pastGate = GraftConf.PpjoinBroadcastRows -> Some("0")
   private val noVocab = GraftConf.CrossindexBroadcastVocabRows -> Some("0")
 
@@ -339,18 +338,15 @@ class DedupSpec extends SparkSpec {
     val cases = Seq(
       Case("self tier 1", Nil, Seq("tier1"), t => Dedup.prefixFilterJoinWith(docs, "doc_id",
         "text", 1, t)(collectOut(_, "jaccard")), bruteSelf),
-      Case("self kernel=off", Seq(kernelOff), Seq("distributed"), t => Dedup.prefixFilterJoinWith(
+      Case("self distributed", Seq(pastGate), Seq("distributed"), t => Dedup.prefixFilterJoinWith(
         docs, "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteSelf),
       Case("containment tier 1", Nil, Seq("tier1"), t => Dedup.containmentPairsWith(docs,
         "doc_id", "text", 1, t)(collectOut(_, "containment")), bruteContain),
-      Case("containment kernel=off", Seq(kernelOff), Seq("distributed"), t =>
+      Case("containment distributed", Seq(pastGate), Seq("distributed"), t =>
         Dedup.containmentPairsWith(docs, "doc_id", "text", 1, t)(collectOut(_, "containment")),
         bruteContain),
       Case("cross tier 1", Nil, Seq("tier1"), t => Dedup.prefixFilterCrossJoinWith(fresh, ref,
-        "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteCross),
-      Case("cross kernel=off", Seq(kernelOff), Seq("distributed", "tier2"), t =>
-        Dedup.prefixFilterCrossJoinWith(fresh, ref, "doc_id", "text", 1, t)(
-          collectOut(_, "jaccard")), bruteCross)) ++
+        "doc_id", "text", 1, t)(collectOut(_, "jaccard")), bruteCross)) ++
       Seq((1, Nil, Seq("tier1")), (2, Seq(pastGate), Seq("distributed", "tier2")),
           (3, Seq(pastGate, noVocab), Seq("distributed", "tier3"))).map {
         case (tier, confs, taken) =>
@@ -396,7 +392,7 @@ class DedupSpec extends SparkSpec {
       "cross" -> (d => Dedup.prefixFilterCrossJoinWith(ok, d, "doc_id", "text")(_.collect())))
     // (the gate's choice, the cross index's vocabulary tier)
     for ((tier, confs, (gate, vocab)) <- Seq(("tier 1", Nil, ("tier1", Nil)),
-           ("kernel=off", Seq(kernelOff), ("distributed", Seq("tier2"))),
+           ("tier 2", Seq(pastGate), ("distributed", Seq("tier2"))),
            ("tier 3", Seq(pastGate, noVocab), ("distributed", Seq("tier3"))));
          (mode, run) <- runs) withConf(confs: _*) {
       val (_, taken) = tiers(run(ok)) // unique non-null ids pass
@@ -418,8 +414,6 @@ class DedupSpec extends SparkSpec {
     assert(!Dedup.driverTier(rows = 10, tokens = fits + 1, conf, maxHeap = heap))
     assert(!Dedup.driverTier(rows = 100001, tokens = 10, conf, maxHeap = heap))
     withConf(pastGate)(
-      assert(!Dedup.driverTier(rows = 1, tokens = 1, GraftConf(spark), maxHeap = heap)))
-    withConf(kernelOff)(
       assert(!Dedup.driverTier(rows = 1, tokens = 1, GraftConf(spark), maxHeap = heap)))
   }
 
